@@ -20,18 +20,13 @@ object GraftSession {
     * same knobs apply; only `master` and memory sizing change.
     */
   def configure(b: SparkSession.Builder, cores: String): SparkSession.Builder = {
-    // Route the Materialized memo through its parquet sink face
-    // (Materialized.asTable) when the env asks for it — lets the
-    // bench/probe mains exercise the production memo path without
-    // code changes: SPARK_GRAFT_MATERIALIZED_PATH=/some/base.
+    // Sink base that Materialized memos are promoted to
+    // (Materialized.SinkConfKey): SPARK_GRAFT_MATERIALIZED_PATH=/some/base.
     val withSink = sys.env.get("SPARK_GRAFT_MATERIALIZED_PATH")
       .filter(_.nonEmpty)
       .map(p => b.config(Materialized.SinkConfKey, p)).getOrElse(b)
-    // Hybrid memo face: with BOTH env vars set, memos stay checkpoint-
-    // backed but any memo at/above this many bytes is promoted to the
-    // parquet sink and its blocks released (Materialized.SpillConfKey)
-    // — the middle memory contract between memo (24 g sf10 floor) and
-    // sink (8 g floor, per-read parquet tax).
+    // Promotion threshold in bytes (Materialized.SpillConfKey): unset
+    // or 0 promotes every memo; a nonzero value needs the path as well.
     val withSpill = sys.env.get("SPARK_GRAFT_MATERIALIZED_SPILL_BYTES")
       .filter(_.nonEmpty)
       .map(v => withSink.config(Materialized.SpillConfKey, v)).getOrElse(withSink)

@@ -8,29 +8,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * "materialize pairs once, fan out" production contract, wired into
   * the query registry so the bench/verify processes honor it too.
   *
-  * The near-dup pair graph and its connected-components closure are
-  * consumed by six+ downstream audits (cluster stats/best/size
-  * histogram, PageRank, triangles, k-core, assortativity, degree
-  * histogram). Each audit is individually correct when it recomputes
-  * the chain, but an operator library that *encourages* re-running an
-  * iterative fixpoint per consumer is an anti-pattern at 100 TB: in
-  * production the pair table is written ONCE per corpus snapshot and
-  * every audit reads the materialized table. This object is the
-  * process-local form of that contract: the first consumer pays the
-  * build (an eager `localCheckpoint`, which also cuts the iterative
-  * lineage), every later consumer reuses the executor-resident
-  * blocks. The cluster-scale form is [[asTable]] — write the
-  * intermediate ONCE as a parquet table, serve every consumer
-  * `spark.read` of the sink — which [[of]] routes to automatically
-  * when [[SinkConfKey]] is set; a spec pins sink-backed rows ==
-  * memo-backed rows across the dedup family.
+  * The near-dup pair graph and its connected-components closure feed
+  * six+ downstream audits. Re-running an iterative fixpoint per
+  * consumer is an anti-pattern at 100 TB, where the pair table is
+  * written ONCE per corpus snapshot and every audit reads it. [[of]]
+  * applies one rule per memo ([[memoBuild]]): serve a committed sink
+  * table if one exists; otherwise build an eager `localCheckpoint`
+  * (which also cuts the iterative lineage) and promote it to its
+  * parquet sink table ([[asTable]]) when a sink base is set and the
+  * checkpoint's block footprint reaches the threshold. No sink base
+  * keeps every memo in executor blocks; threshold 0 promotes every
+  * memo. Builders are deterministic (seed-free md5/sort-based), so
+  * neither reuse nor promotion can change an oracle row.
   *
   * Keyed by `spark.sessionUUID` (unique and stable per session — an
-  * identity hash code is neither, and can collide with a dead
-  * session's key after GC), plus data dir and kind, so different
-  * scale factors and test sessions never cross-contaminate; values
-  * are deterministic (every builder here is seed-free md5/sort-based),
-  * so reuse cannot change any oracle row.
+  * identity hash code is neither), data dir, kind, sink base and
+  * threshold, so scale factors, test sessions and routing configs
+  * never cross-contaminate.
   *
   * Concurrency: the map holds lazy cells, not built frames. The
   * mapping function only allocates a cell, so `computeIfAbsent` never
@@ -59,45 +53,38 @@ object Materialized {
   private val cache = new ConcurrentHashMap[String, Cell]()
   private val hooked = ConcurrentHashMap.newKeySet[String]()
 
-  /** Spark conf key: when set to a base directory, [[of]] routes every
-    * memoized intermediate through [[asTable]] — the production face —
-    * instead of the process-local checkpoint memo.
+  /** Spark conf key: base directory for sink tables. Unset: every
+    * memo stays a checkpoint. Set: memos reaching [[SpillConfKey]]
+    * bytes are promoted to parquet under it.
     */
   val SinkConfKey = "spark.graft.materialized.path"
 
-  /** Spark conf key: byte threshold for the HYBRID face. When BOTH
-    * this (> 0) and [[SinkConfKey]] are set, [[of]] keeps each memo
-    * as a process-local checkpoint but PROMOTES any memo whose
-    * measured block footprint reaches the threshold to its parquet
-    * sink table, releasing the blocks — small memos keep executor-
-    * block read speed, big ones stop pinning the heap. This is the
-    * middle memory contract between the all-blocks memo face (fastest,
-    * biggest heap floor) and the all-parquet sink face (8 g floor,
-    * per-read parquet tax). With only [[SinkConfKey]] set the sink
-    * face is unchanged: everything routes to parquet.
+  /** Spark conf key: promotion threshold in plain bytes. The default
+    * 0 promotes every memo; a nonzero value requires [[SinkConfKey]].
     */
   val SpillConfKey = "spark.graft.materialized.spillBytes"
 
   def of(spark: SparkSession, dir: String, kind: String)
         (build: => DataFrame): DataFrame = {
     val sinkBase = spark.conf.get(SinkConfKey, "")
-    // Fail fast on an unparsable or negative threshold: silently
-    // coercing e.g. '8g' to 0 would flip the session from the intended
-    // hybrid face to the full sink face — a silent change of the
-    // documented memory/performance contract.
+    // Fail fast on an unparsable or negative threshold, or one with no
+    // sink to promote to: silently coercing e.g. '8g' to 0 would
+    // promote every memo instead of only the big ones, and a threshold
+    // without a sink base would silently keep every memo in blocks.
     val spillBytes = {
       val raw = spark.conf.get(SpillConfKey, "0").trim
       val parsed = raw.toLongOption.getOrElse(throw new IllegalArgumentException(
         s"$SpillConfKey must be a plain byte count (got '$raw'); " +
           "suffixed forms like '8g' are not parsed — spell out the bytes"))
       if (parsed < 0) throw new IllegalArgumentException(
-        s"$SpillConfKey must be >= 0 (got $parsed); 0 disables the hybrid face")
+        s"$SpillConfKey must be >= 0 (got $parsed); 0 promotes every memo")
+      if (parsed > 0 && sinkBase.isEmpty) throw new IllegalArgumentException(
+        s"$SpillConfKey=$parsed needs $SinkConfKey, the sink base to promote to; " +
+          "set both or neither")
       parsed
     }
-    if (sinkBase.nonEmpty && spillBytes <= 0L)
-      return asTable(spark, dir, kind, sinkBase)(build)
     val uuid = org.apache.spark.sql.GraftSqlShim.sessionUUID(spark)
-    val key = s"$uuid|$dir|$kind"
+    val key = s"$uuid|$dir|$kind|$sinkBase|$spillBytes"
     registerEviction(spark, uuid)
     def builder() = memoBuild(spark, dir, kind, sinkBase, spillBytes, () => build)
     val cell = cache.computeIfAbsent(key, _ => new Cell(() => builder()))
@@ -114,14 +101,11 @@ object Materialized {
     } else df
   }
 
-  /** Build one memo on the checkpoint (or hybrid) face. Plain memo
-    * face: eager localCheckpoint, as always. Hybrid face (sink base +
-    * spill threshold): a sink table already on disk — written by a
-    * prior process or a prior promotion — is served directly with no
-    * build at all; otherwise the memo is built as a checkpoint,
-    * measured, and promoted to the sink iff it reached the threshold
-    * (the write streams from the checkpoint blocks, not a recompute,
-    * and the blocks are released right after).
+  /** Build one memo: serve a committed sink table (from a prior
+    * process or promotion) with no build at all; otherwise build an
+    * eager localCheckpoint and, when a sink base is set and its block
+    * footprint reaches `spillBytes`, promote it — write the sink table
+    * from the checkpoint blocks (not a recompute), then release them.
     */
   private def memoBuild(spark: SparkSession, dir: String, kind: String,
                         sinkBase: String, spillBytes: Long,
@@ -131,7 +115,7 @@ object Materialized {
         s"unreachable: sink table for $kind exists, build must not run"))
     val built = build().localCheckpoint(true)
     if (sinkBase.nonEmpty &&
-        org.apache.spark.sql.GraftSqlShim.checkpointBytes(built).exists(_ >= spillBytes)) {
+        org.apache.spark.sql.GraftSqlShim.checkpointBytes(built).getOrElse(0L) >= spillBytes) {
       val served = asTable(spark, dir, kind, sinkBase)(built)
       org.apache.spark.sql.GraftSqlShim.unpersistCheckpoint(built)
       served
@@ -196,7 +180,7 @@ object Materialized {
   }
 
   /** True iff the sink already holds a COMMITTED table for this memo
-    * (`_SUCCESS` present) — the hybrid face's no-build fast path.
+    * (`_SUCCESS` present) — [[memoBuild]]'s no-build fast path.
     */
   private def sinkTableExists(spark: SparkSession, dir: String,
                               kind: String, base: String): Boolean = {

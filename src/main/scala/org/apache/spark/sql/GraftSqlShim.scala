@@ -24,18 +24,15 @@ object GraftSqlShim {
     spark.asInstanceOf[classic.SparkSession].sessionUUID
 
   /** Storage footprint (memory + disk blocks) of an eagerly
-    * localCheckpointed frame — the measured size the
-    * [[graft.Materialized]] hybrid face routes on. Queries the block
-    * manager MASTER synchronously per block rather than
-    * `getRDDStorageInfo` (which is populated asynchronously via the
-    * listener bus, so right after an eager checkpoint the RDD could be
-    * absent or under-reported and an above-threshold memo would
-    * nondeterministically skip promotion — the exact heap floor the
-    * hybrid face exists to bound). Block puts report to the master
-    * inline (`tellMaster`), so by the time the eager checkpoint action
-    * returns every block is registered. Replicated copies are
-    * deduplicated (max per block, then summed). None when the plan is
-    * not a checkpoint-backed LogicalRDD or no block is registered.
+    * localCheckpointed frame — the size [[graft.Materialized]] compares
+    * with its promotion threshold. Queries the block manager MASTER
+    * synchronously per block: `getRDDStorageInfo` is filled
+    * asynchronously via the listener bus, so right after the checkpoint
+    * it can under-report and nondeterministically skip a promotion.
+    * Block puts report to the master inline (`tellMaster`). Replicated
+    * copies count once (max per block, then summed). None when the
+    * plan is not a checkpoint-backed LogicalRDD or no block is
+    * registered.
     */
   def checkpointBytes(df: Dataset[_]): Option[Long] =
     df.queryExecution.analyzed match {
@@ -53,8 +50,8 @@ object GraftSqlShim {
 
   /** Release a localCheckpointed frame's blocks. Only safe when the
     * frame will never be read again (the checkpoint truncated its
-    * lineage, so the data is unrecoverable afterwards) — the hybrid
-    * memo face calls this after promoting a too-big memo to its
+    * lineage, so the data is unrecoverable afterwards) —
+    * [[graft.Materialized]] calls this after promoting a memo to its
     * parquet sink table, which is what every later read serves.
     */
   def unpersistCheckpoint(df: Dataset[_]): Unit =

@@ -212,6 +212,66 @@ class MaterializedSpec extends SparkSpec {
     }
   }
 
+  test("one memo rule: a threshold with no sink base fails loudly, naming both keys") {
+    spark.conf.set(Materialized.SpillConfKey, "1024")
+    try {
+      val e = intercept[IllegalArgumentException] {
+        Materialized.of(spark, sf0001, "spec_rule_orphan_threshold") {
+          sys.error("must not build: the config is rejected first")
+        }
+      }
+      assert(e.getMessage.contains(Materialized.SpillConfKey) &&
+        e.getMessage.contains(Materialized.SinkConfKey), e.getMessage)
+    } finally spark.conf.unset(Materialized.SpillConfKey)
+  }
+
+  test("one memo rule: setting a sink base later promotes instead of serving the stale checkpoint") {
+    val base = java.nio.file.Files.createTempDirectory("graft_rule_late").toString
+    def make() = Materialized.of(spark, sf0001, "spec_rule_late_sink") {
+      Tables.documents(spark, sf0001).select("doc_id", "text")
+    }
+    val memo = make()
+    val n = memo.count()
+    assert(GraftSqlShim.checkpointBytes(memo).isDefined, "no sink base: memo stays a checkpoint")
+    spark.conf.set(Materialized.SinkConfKey, base)
+    spark.conf.set(Materialized.SpillConfKey, "1")
+    try {
+      val served = make()
+      assert(served.count() === n)
+      assert(GraftSqlShim.checkpointBytes(served).isEmpty,
+        "with a sink base and a reached threshold the memo must be served from parquet")
+      val sinkDir = new java.io.File(base).listFiles()
+        .find(_.getName.startsWith("spec_rule_late_sink"))
+      assert(sinkDir.exists(d => new java.io.File(d, "_SUCCESS").exists()),
+        "promotion must commit the sink table")
+    } finally {
+      spark.conf.unset(Materialized.SinkConfKey)
+      spark.conf.unset(Materialized.SpillConfKey)
+      Materialized.clearSinks()
+    }
+  }
+
+  test("one memo rule: with the default threshold an empty memo is still committed to the sink") {
+    val base = java.nio.file.Files.createTempDirectory("graft_rule_empty").toString
+    spark.conf.set(Materialized.SinkConfKey, base)
+    try {
+      val served = Materialized.of(spark, sf0001, "spec_rule_empty") {
+        Tables.documents(spark, sf0001).select("doc_id")
+          .where(org.apache.spark.sql.functions.col("doc_id") < 0)
+      }
+      assert(served.count() === 0)
+      assert(served.columns.toSeq === Seq("doc_id"))
+      assert(GraftSqlShim.checkpointBytes(served).isEmpty, "empty memo must be served from parquet")
+      val sinkDir = new java.io.File(base).listFiles()
+        .find(_.getName.startsWith("spec_rule_empty"))
+      assert(sinkDir.exists(d => new java.io.File(d, "_SUCCESS").exists()),
+        "threshold 0 must commit even an empty memo")
+    } finally {
+      spark.conf.unset(Materialized.SinkConfKey)
+      Materialized.clearSinks()
+    }
+  }
+
   test("stop/recreate lifecycle: dead-session entries evict, new session rebuilds") {
     val uuid1 = GraftSqlShim.sessionUUID(spark)
     Materialized.of(spark, sf0001, "spec_memo_lifecycle") {
