@@ -16,8 +16,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * text per replica decade).
   *
   * Equivalence argument (the DuckDB oracle keeps the regex spelling):
-  * after Unicode `lower` (delegated to UTF8String.toLowerCase — the
-  * same call Spark's `lower` makes), the keep-class [a-z0-9 ] is pure
+  * after Unicode `lower` (delegated to [[CaseMap.lower]] — the same
+  * ICU calls Spark's `lower` makes with its default ICU case
+  * mappings), the keep-class [a-z0-9 ] is pure
   * ASCII, and UTF-8 continuation/multi-byte lead bytes are all
   * ≥ 0x80, so a byte-level filter keeps exactly the regex's chars;
   * collapse-then-trim ≡ "emit one space between kept runs, never
@@ -53,7 +54,7 @@ case class NormalizeText(child: Expression) extends UnaryExpression {
     compute(input.asInstanceOf[UTF8String])
 
   def compute(input: UTF8String): UTF8String = {
-    val b = input.toLowerCase.getBytes
+    val b = CaseMap.lower(input).getBytes
     val out = new Array[Byte](b.length)
     var n = 0
     var pendingSpace = false

@@ -38,7 +38,7 @@ case class SimHash64(child: Expression)
 object SimHash64 {
   /** Static so generated code can call it without a reference object. */
   def compute(input: UTF8String): Long = {
-    val tokens = input.toString.toLowerCase.split(" ", -1)
+    val tokens = CaseMap.lower(input).toString.split(" ", -1)
     val votes = new Array[Int](64)
     var i = 0
     while (i < tokens.length) {

@@ -31,7 +31,7 @@ case class WinnowFingerprints(child: Expression, k: Int, w: Int)
     compute(input.asInstanceOf[UTF8String])
 
   def compute(input: UTF8String): ArrayData = {
-    val words = input.toString.toLowerCase.split(" ", -1).filter(_.nonEmpty)
+    val words = CaseMap.lower(input).toString.split(" ", -1).filter(_.nonEmpty)
     if (words.length < k) return new GenericArrayData(Array.empty[Any])
     val md = java.security.MessageDigest.getInstance("MD5")
     val nH = words.length - k + 1

@@ -531,7 +531,9 @@ object Dedup {
     * `localCheckpoint` cuts lineage each round so the plan doesn't
     * grow exponentially (on a cluster, use a checkpoint dir).
     * Output covers docs appearing in ≥1 pair; all other docs are
-    * trivially their own singleton group.
+    * trivially their own singleton group. Throws
+    * `IllegalStateException` if `maxIter` rounds end unconverged,
+    * rather than return labels that are not yet components.
     */
   def connectedGroups(pairs: DataFrame, maxIter: Int = 20,
                       checkpoint: DataFrame => DataFrame = _.localCheckpoint(true)): DataFrame = {
@@ -585,6 +587,9 @@ object Dedup {
       prevSum = nextSum
       i += 1
     }
+    if (!converged)
+      throw new IllegalStateException(
+        s"connectedGroups did not converge after $i rounds (maxIter = $maxIter)")
     if (sys.env.contains("GRAFT_CC_DEBUG"))
       System.err.println(s"[cc] converged after $i rounds")
     labels.orderBy("doc_id")

@@ -141,6 +141,19 @@ class PlanAuditSpec extends SparkSpec {
         offenders.mkString("\n"))
   }
 
+  test("no registered query keeps Spark's Lower/Upper in its optimized plan") {
+    // CaseMapRewrite must reach every default-collation case mapping:
+    // one Spark Lower/Upper left anywhere loads the 1.5 s title-case
+    // table of CollationAwareUTF8String in every JVM that runs it.
+    import org.apache.spark.sql.catalyst.expressions.{Lower, Upper}
+    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (_, fn) =>
+      fn(spark, sf0001).queryExecution.optimizedPlan
+        .collectWithSubqueries { case p => p.expressions }.flatten
+        .exists(_.exists { case _: Lower | _: Upper => true; case _ => false })
+    }.map(_._1)
+    assert(offenders.isEmpty, s"Spark's Lower/Upper survived the optimizer in:\n${offenders.mkString("\n")}")
+  }
+
   test("q_pareto_share pre-cuts with TakeOrderedAndProject below its global window") {
     val plan = SparkEntry.queries("q_pareto_share")(spark, sf0001)
       .queryExecution.executedPlan.toString

@@ -3,6 +3,16 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
+object DedupSpec {
+  // crafted edges: unicode uppercase whose lower is non-ascii
+  // (stripped), Kelvin sign (lowers to ascii k, kept), digits,
+  // leading/trailing/multiple spaces, tabs/newlines (stripped, NOT
+  // space), empty and all-stripped strings, multi-byte sequences
+  val edgeTexts: Seq[String] = Seq("", "   ", "\u212A elvin", "\u00C9clair TEST  42",
+    "a\tb\nc", "MiXeD  CaSe   07 ", " !@# $%^ ", "\u4F60\u597D world",
+    "a!b", "A  B\u0301  C")
+}
+
 class DedupSpec extends SparkSpec {
   import spark.implicits._
 
@@ -18,13 +28,7 @@ class DedupSpec extends SparkSpec {
 
   test("NormalizeText is byte-identical to the regex chain it replaces") {
     graft.functions.VectorFunctions.ensureRegistered(spark)
-    // crafted edges: unicode uppercase whose lower is non-ascii
-    // (stripped), Kelvin sign (lowers to ascii k, kept), digits,
-    // leading/trailing/multiple spaces, tabs/newlines (stripped, NOT
-    // space), empty and all-stripped strings, multi-byte sequences
-    val edge = Seq("", "   ", "\u212A elvin", "\u00C9clair TEST  42",
-      "a\tb\nc", "MiXeD  CaSe   07 ", " !@# $%^ ", "\u4F60\u597D world",
-      "a!b", "A  B\u0301  C").zipWithIndex.map { case (s, i) => (i.toLong, s) }
+    val edge = DedupSpec.edgeTexts.zipWithIndex.map { case (s, i) => (i.toLong, s) }
     val corpus = graft.Tables.documents(spark, sf0001)
       .select(col("doc_id"), col("text"))
       .unionByName(edge.toDF("doc_id", "text"))
@@ -319,6 +323,13 @@ class DedupSpec extends SparkSpec {
     val out2 = Dedup.connectedGroups(pairs.repartition(4)).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out2 == out)
+  }
+
+  test("connectedGroups throws when maxIter rounds end unconverged") {
+    val path = (1L until 40L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val e = intercept[IllegalStateException](Dedup.connectedGroups(path, maxIter = 1))
+    assert(e.getMessage.contains("1 rounds"), e.getMessage)
+    assert(Dedup.connectedGroups(path).collect().forall(_.getLong(1) == 1L))
   }
 
   test("md5 twins: identical texts pair at est 1.0; fingerprints deterministic") {
