@@ -71,27 +71,12 @@ object GraftSession {
       // as TIMESTAMP (session tz pinned to UTC above), matching the
       // DuckDB oracle's epoch_us(CAST(ts AS TIMESTAMP)).
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // Split sizing is workload-dependent, so it is an env knob
-      // (SPARK_GRAFT_MAX_PARTITION_BYTES, bytes) with the stock 128 MB
-      // default. Round 13 pinned 16 MB globally to widen CPU-heavy text
-      // scans, but that global knob taxed seven sub-second scan-bound
-      // keys into drift waivers and lowered the winnow pair build's
-      // combine ratio into a decade waiver. Round 14 re-measured on the
-      // regenerated corpus: Spark's own minPartitionNum fallback
-      // (spark.sql.files.minPartitionNum → defaultParallelism) already
-      // caps the effective split at totalBytes/cores, so every sf10
-      // fact/document scan lands cores-wide at the 128 MB conf
-      // (graft.ScanProbe: documents/lineitem/orders/events all 32
-      // partitions) and the measured keys are equal-or-faster than at
-      // 16 MB (unigram_logprob 17.8 s vs 20.7 s, winnow_pairs 10 s vs
-      // 15.9 s isolated at sf10). CPU-bound stages that need a
-      // SPECIFIC clustering width keep their explicit AQE-exempt
-      // repartitions (the unigramLogProb precedent). On a real cluster,
-      // size the env knob to cores×waves against the CPU-heaviest
-      // operator's bytes/sec, not against I/O.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES",
-          (128L * 1024 * 1024).toString))
+      // spark.sql.files.maxPartitionBytes stays at Spark's 128 MB
+      // default: a global 16 MB split (round 13) taxed scan-bound keys,
+      // and Spark's minPartitionNum fallback already caps the split at
+      // totalBytes/cores, so fact scans land cores-wide. Stages that
+      // need a wider exchange than the scan gives repartition
+      // explicitly (graft.Sizing).
       .config("spark.driver.host", "127.0.0.1")
       // custom planner strategy (native as-of join) + SQL functions
       .config("spark.sql.extensions", "graft.GraftExtensions")

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Sizing
 
 /** Deduplication operators over `documents`: exact, canonicalized,
   * MinHash/LSH near-dup (Broder's resemblance sketch + banded LSH),
@@ -307,11 +308,10 @@ object Dedup {
     // shuffle_hash hint matters: the satisfied-distribution sides
     // would otherwise plan as SMJ and re-sort 25M strings.
     import org.apache.spark.sql.expressions.Window
-    val par = documents.sparkSession.sparkContext.defaultParallelism
     val capped = explodedShingles(documents, shingleK)
       .filter(col("sh").isNotNull)
       .select(col("doc_id"), size(col("shingles")).as("n_sh"), col("sh"))
-      .repartition(par, col("sh"))
+      .repartition(Sizing.width(documents), col("sh"))
       .withColumn("_df", count(lit(1)).over(Window.partitionBy("sh")))
       .filter(col("_df") <= maxDf)
     val a = capped.select(col("sh"), col("doc_id").as("doc_a"), col("n_sh").as("na"))
@@ -590,8 +590,6 @@ object Dedup {
     if (!converged)
       throw new IllegalStateException(
         s"connectedGroups did not converge after $i rounds (maxIter = $maxIter)")
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc] converged after $i rounds")
     labels.orderBy("doc_id")
   }
 
@@ -1159,12 +1157,8 @@ object Dedup {
         explode(graft.functions.VectorFunctions.wordShingles(col("text"), shingleK)).as("sh"))
       .filter(col("sh").isNotNull)
       .select(col("source"), xxhash64(col("sh")).as("shh"))
-    // explicit width (ADVICE r16): the keyless-width form inherits
-    // spark.sql.shuffle.partitions AND stays AQE-coalescible, which can
-    // under-partition the exploded-shingle exchange at scale; thread the
-    // session width explicitly like ngramPairCounts does
-    val nPart = documents.sparkSession.sessionState.conf.numShufflePartitions
-    val dist = srcSh.repartition(nPart, col("shh")).dropDuplicates("source", "shh")
+    val dist = srcSh.repartition(Sizing.width(documents), col("shh"))
+      .dropDuplicates("source", "shh")
     dist
       .withColumn("n_sources", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("shh")))
@@ -1510,13 +1504,12 @@ object Dedup {
     val ka = perDoc.select(col("doc_id").as("doc_a"), col("keys").as("ka"))
     val kb = perDoc.select(col("doc_id").as("doc_b"), col("keys").as("kb"))
     // The candidate table is BYTE-small (two ids per row) but each row
-    // costs an array intersection downstream — AQE's size-based
-    // coalescing collapses it to one partition and serializes the
-    // verify onto a single core (measured 2.3 s of the query's 7 s).
-    // An explicit-width repartition is exempt from AQE coalescing:
-    // verify parallelism follows cores, not input bytes.
-    val par = documents.sparkSession.sparkContext.defaultParallelism
-    cand.repartition(par, col("doc_a"), col("doc_b"))
+    // costs an array intersection downstream; left to AQE it coalesced
+    // to one partition and serialized the verify onto a single core
+    // (measured 2.3 s of the query's 7 s). At width = w Spark drops
+    // this repartition as redundant: the dropDuplicates exchange
+    // already hash-partitions on the same keys at that width.
+    cand.repartition(Sizing.width(documents), col("doc_a"), col("doc_b"))
       .join(ka, "doc_a").join(kb, "doc_b")
       .withColumn("inter", size(array_intersect(col("ka"), col("kb"))))
       .withColumn("jaccard",
@@ -1583,8 +1576,7 @@ object Dedup {
     // (measured 7.5 s warm at sf10). Repartition once on fp (computed
     // once, read by both sides) and hint SHUFFLE_HASH: co-partitioned
     // self-join, per-partition build, no sorts, no fact broadcast.
-    val nPart = documents.sparkSession.sessionState.conf.numShufflePartitions
-    val capped = fps.join(rare, "fp").repartition(nPart, col("fp"))
+    val capped = fps.join(rare, "fp").repartition(Sizing.width(documents), col("fp"))
     val a = capped.select(col("fp"), col("doc_id").as("doc_a"))
     val b = capped.select(col("fp"), col("doc_id").as("doc_b"))
     a.join(b.hint("shuffle_hash"), "fp")
@@ -1638,10 +1630,9 @@ object Dedup {
     // need that clustering — the one exchange is computed once and read
     // twice), and hint SHUFFLE_HASH so the co-partitioned self-join
     // skips sort-merge sorts; per-partition build is df-capped.
-    val nPart = documents.sparkSession.sessionState.conf.numShufflePartitions
     val weighted = tok.join(broadcast(idf), "w")
     val docW = weighted.groupBy("doc_id").agg(sum("wt").as("w_total"))
-    val byW = weighted.repartition(nPart, col("w"))
+    val byW = weighted.repartition(Sizing.width(documents), col("w"))
     val a = byW.select(col("w"), col("doc_id").as("doc_a"), col("wt"))
     val b = byW.select(col("w"), col("doc_id").as("doc_b"))
     a.join(b.hint("shuffle_hash"), "w")

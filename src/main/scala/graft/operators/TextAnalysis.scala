@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Sizing
 
 /** Text-analysis operators over the `documents` table: per-doc stats,
   * token counting, quality scoring, fingerprinting, language ID.
@@ -290,22 +291,20 @@ object TextAnalysis {
 
   /** The (doc_id, word, count) pair table behind [[unigramLogProb]] —
     * the memo unit. The explicit-width repartition BEFORE the groupBy
-    * is load-bearing twice over: (a) the pair rows are byte-small, so
-    * a plain groupBy exchange gets AQE-coalesced to a handful of tasks
-    * and the 11.6M-group final aggregate runs near-serial (jstack at
-    * sf10 — 10+ s in one task's findOrInsert); a user repartition with
-    * explicit width is AQE-exempt, and hash(doc_id) SATISFIES the
-    * (doc_id, w) clustering, so the aggregate runs exchange-free at
-    * full width. (b) A checkpoint/memo of this frame freezes the
-    * partitioning, and [[unigramLogProbFrom]]'s final per-doc
-    * aggregate reuses it with no further exchange.
+    * is load-bearing twice over: (a) a plain groupBy exchange was
+    * AQE-coalesced and the 11.6M-group final aggregate ran near-serial
+    * (jstack at sf10 — 10+ s in one task's findOrInsert), while
+    * hash(doc_id) SATISFIES the (doc_id, w) clustering, so the
+    * aggregate runs exchange-free at full width. (b) A checkpoint/memo
+    * of this frame freezes the partitioning, and
+    * [[unigramLogProbFrom]]'s final per-doc aggregate reuses it with
+    * no further exchange.
     */
   private[graft] def unigramPairs(documents: DataFrame): DataFrame = {
-    val nPart = documents.sparkSession.sessionState.conf.numShufflePartitions
     documents
       .select(col("doc_id"), explode(split(col("text"), " ", -1)).as("w"))
       .filter(length(col("w")) > 0)
-      .repartition(nPart, col("doc_id"))
+      .repartition(Sizing.width(documents), col("doc_id"))
       .groupBy("doc_id", "w").agg(count(lit(1)).as("c_dw"))
   }
 
@@ -870,17 +869,20 @@ object TextAnalysis {
     * to 6 decimals before ranking so float noise can't flip ranks
     * between engines.
     */
-  def tfidfTopTerms(documents: DataFrame, k: Int = 3): DataFrame = {
+  def tfidfTopTerms(documents: DataFrame, k: Int = 3): DataFrame =
+    tfidfRanked(documents, k).localCheckpoint(false).orderBy("doc_id", "rnk")
+
+  /** The unsorted top-k rows behind [[tfidfTopTerms]], before its
+    * checkpoint (whose plan no longer shows the window's exchange).
+    */
+  private[graft] def tfidfRanked(documents: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val par = documents.sparkSession.sparkContext.defaultParallelism
     val w = Window.partitionBy("doc_id").orderBy(col("score").desc, col("term"))
     tfidfScored(documents)
-      .repartition(par, col("doc_id"))
+      .repartition(Sizing.width(documents), col("doc_id"))
       .withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= k)
       .select(col("doc_id"), col("term"), col("score"), col("rnk"))
-      .localCheckpoint(false)
-      .orderBy("doc_id", "rnk")
   }
 
   /** The scored (doc_id, term, score) frame behind [[tfidfTopTerms]]
@@ -1237,26 +1239,12 @@ object TextAnalysis {
       // mismatch on this key's diversity counts, since the DuckDB
       // oracle keeps string identity)
       .select(col("source"), col("g.n").as("n"), xxhash64(col("g.gram")).as("gram"))
-    // explicit-width repartition (the unigramPairs idiom): the digest
-    // rows are byte-small, so AQE coalesces a plain groupBy exchange
-    // into a few fat tasks whose per-task hash maps spill at the 8 g
-    // heap; a user repartition is AQE-exempt and satisfies the
-    // (source, n, gram) clustering, so the heavy aggregate runs
-    // exchange-free at full width
-    val nPart = documents.sparkSession.sessionState.conf.numShufflePartitions
-    // width scales with the corpus (1 MB of compressed document bytes
-    // per base partition, capped at 8× the session width): the
-    // exchange-free aggregate holds one hash map per RUNNING task, so
-    // at a fixed concurrency more-but-smaller partitions divide the
-    // resident map bytes by the width factor — the difference between
-    // riding out a pressured 8 g heap and a GC storm when the suite's
-    // neighbors have filled the old gen. Small SFs keep the session
-    // width (no extra scheduling overhead on sub-second runs).
-    val docBytes = documents.queryExecution.optimizedPlan.stats.sizeInBytes
-    val width = (nPart.toLong * math.min(8L,
-      math.max(1L, (docBytes / (nPart.toLong << 20)).toLong))).toInt
+    // the repartition satisfies the (source, n, gram) clustering, so
+    // the heavy aggregate runs exchange-free; a plain groupBy exchange
+    // was AQE-coalesced into a few fat tasks whose hash maps spilled
+    // at the 8 g heap
     grams
-      .repartition(width, col("source"), col("n"), col("gram"))
+      .repartition(Sizing.width(documents), col("source"), col("n"), col("gram"))
       .groupBy("source", "n", "gram").agg(count(lit(1)).as("c"))
       .groupBy("source", "n")
       .agg(sum("c").as("n_total"), count(lit(1)).as("n_distinct"))

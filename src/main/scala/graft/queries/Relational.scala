@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Sizing
 
 /** Relational operator pack: grouped aggregation, multi-way joins,
   * semi/anti joins, window top-k, distinct, set ops, rollup, scalar
@@ -1111,9 +1112,8 @@ object Relational {
     // at sf10 in both shapes, a documented floor (the
     // dedup_prefix_pairs precedent), with the reshape shedding the
     // two sorts and the SMJ group buffers.
-    val par = lineitem.sparkSession.sparkContext.defaultParallelism
     val po = lineitem.select(col("l_orderkey").as("okey"), col("l_partkey").as("part"))
-      .repartition(par, col("okey"))
+      .repartition(Sizing.width(lineitem), col("okey"))
       .dropDuplicates("okey", "part")
     val nOrders = po.select("okey").distinct().agg(count(lit(1)).as("n_orders"))
     val partCnt = po.groupBy("part").agg(count(lit(1)).as("n_p"))
@@ -1175,9 +1175,8 @@ object Relational {
     * into the same stage) and no window sort.
     */
   private[graft] def cappedBaskets(lineitem: DataFrame, maxBasket: Int = 5): DataFrame = {
-    val par = lineitem.sparkSession.sparkContext.defaultParallelism
     lineitem.select(col("l_orderkey").as("okey"), col("l_partkey").as("part"))
-      .repartition(par, col("okey"))
+      .repartition(Sizing.width(lineitem), col("okey"))
       .dropDuplicates("okey", "part")
       .groupBy("okey").agg(collect_list("part").as("ps"))
       .filter(size(col("ps")) <= maxBasket)
@@ -1517,17 +1516,15 @@ object Relational {
     * reduces ~nothing and the naive plan pays two full fact-sized
     * shuffles (pair agg, then part agg) with four hash-map builds —
     * the round-14 verdict's 11.65×/decade key. The explicit-width
-    * repartition on l_partkey (the [[graft.operators.TextAnalysis]]
-    * unigram idiom: AQE-exempt, and hash(l_partkey) SATISFIES both the
-    * (l_partkey, l_suppkey) and the l_partkey clustering) makes both
-    * aggregates exchange-free; the ≤10-row histogram rollup is the
-    * only other shuffle.
+    * repartition on l_partkey ([[graft.Sizing]]; hash(l_partkey)
+    * SATISFIES both the (l_partkey, l_suppkey) and the l_partkey
+    * clustering) makes both aggregates exchange-free; the ≤10-row
+    * histogram rollup is the only other shuffle.
     */
   def singleSourceRisk(lineitem: DataFrame): DataFrame = {
-    val nPart = lineitem.sparkSession.sessionState.conf.numShufflePartitions
     val ps = lineitem
       .select("l_partkey", "l_suppkey")
-      .repartition(nPart, col("l_partkey"))
+      .repartition(Sizing.width(lineitem), col("l_partkey"))
       .groupBy("l_partkey", "l_suppkey")
       .agg(count(lit(1)).as("n_ps"))
     val perPart = ps.groupBy("l_partkey")
