@@ -1503,14 +1503,11 @@ object Dedup {
       .dropDuplicates("doc_a", "doc_b")
     val ka = perDoc.select(col("doc_id").as("doc_a"), col("keys").as("ka"))
     val kb = perDoc.select(col("doc_id").as("doc_b"), col("keys").as("kb"))
-    // The candidate table is BYTE-small (two ids per row) but each row
-    // costs an array intersection downstream; left to AQE it coalesced
-    // to one partition and serialized the verify onto a single core
-    // (measured 2.3 s of the query's 7 s). At width = w Spark drops
-    // this repartition as redundant: the dropDuplicates exchange
-    // already hash-partitions on the same keys at that width.
-    cand.repartition(Sizing.width(documents), col("doc_a"), col("doc_b"))
-      .join(ka, "doc_a").join(kb, "doc_b")
+    // The verify runs on the dropDuplicates exchange's (doc_a, doc_b)
+    // partitioning, w wide before AQE. An explicit repartition on the
+    // same keys at width w is removed by Spark as redundant, so none
+    // is written here.
+    cand.join(ka, "doc_a").join(kb, "doc_b")
       .withColumn("inter", size(array_intersect(col("ka"), col("kb"))))
       .withColumn("jaccard",
         round(col("inter").cast("double") /

@@ -1242,9 +1242,14 @@ object TextAnalysis {
     // the repartition satisfies the (source, n, gram) clustering, so
     // the heavy aggregate runs exchange-free; a plain groupBy exchange
     // was AQE-coalesced into a few fat tasks whose hash maps spilled
-    // at the 8 g heap
+    // at the 8 g heap. The width scales with the corpus up to 8w
+    // (measured at sf10): at a fixed concurrency, smaller partitions
+    // divide the resident map bytes, the difference between riding
+    // out a pressured 8 g heap and a GC storm when the suite's
+    // neighbors have filled the old gen.
     grams
-      .repartition(Sizing.width(documents), col("source"), col("n"), col("gram"))
+      .repartition(Sizing.width(documents, maxScale = 8),
+        col("source"), col("n"), col("gram"))
       .groupBy("source", "n", "gram").agg(count(lit(1)).as("c"))
       .groupBy("source", "n")
       .agg(sum("c").as("n_total"), count(lit(1)).as("n_distinct"))
