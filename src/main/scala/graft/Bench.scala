@@ -50,9 +50,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val wallStart = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.configure(SparkSession.builder(), cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // Warmup exists to trigger codegen/janino/JIT/classloading — that
     // fixed cost dominates timed rounds when paid cold (r6: ~210 s
     // cold vs ~85 s warm for the full set). It runs 4 queries

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Plan-audit main: dumps the formatted plan of every SparkEntry
@@ -13,9 +12,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = if (args.length > 1) args(1) else "/tmp/plans.txt"
-    val spark = GraftSession.configure(SparkSession.builder(),
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val sb = new StringBuilder
     val flags = scala.collection.mutable.ListBuffer[String]()
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

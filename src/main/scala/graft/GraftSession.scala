@@ -82,7 +82,12 @@ object GraftSession {
       .config("spark.sql.extensions", "graft.GraftExtensions")
   }
 
-  def local(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
+  /** The `local[n]` width every graft main runs at:
+    * `SPARK_GRAFT_CPUS`, default 4.
+    */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  def local(cores: String = cpus): SparkSession = {
     val s = configure(SparkSession.builder(), cores).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Debug main: run one named SparkEntry query `reps` times, print row
   * count and per-rep wall time (rep drift exposes JVM-state leaks).
   * `runMain graft.RunQuery <name> [sfDir] [reps]`
@@ -28,9 +26,7 @@ object RunQuery {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val reps = if (args.length > 2) args(2).toInt else 1
-    val spark = GraftSession.configure(SparkSession.builder(),
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val fn = SparkEntry.queries(name)
     val useCount = sys.env.get("SPARK_GRAFT_RUNQUERY_ACTION").contains("count")
     // SPARK_GRAFT_RUNQUERY_EXPLAIN=1: dump the formatted physical plan

@@ -31,9 +31,7 @@ import org.apache.spark.sql.functions._
 object ScaleData {
 
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.configure(SparkSession.builder(),
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     generate(spark, args(0), args(1),
       if (args.length > 2) args(2).toInt else 10,
       if (args.length > 3) 1L << args(3).toInt else 1L << 30,

@@ -86,9 +86,7 @@ object StreamStateProbe {
     // compaction) are the ones worth re-proving at a real decade
     // without paying a 10M-event replay through all 21 probes.
     val sinkOnly = args.length > 2 && args(2) == "sink"
-    val spark = GraftSession.configure(SparkSession.builder(),
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     import spark.implicits._
 
     val events = Tables.events(spark, sfDir)

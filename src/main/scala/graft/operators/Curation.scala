@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   *   1. quality        — [[TextAnalysis.gopherRules]] keep gate
   *   2. exact          — [[Dedup.exact]] digest dedup, keep min doc_id
   *   3. neardup        — [[Dedup.minhashNearDupsMd5]] pairs →
-  *                       [[Dedup.connectedGroups]] → keep each
+  *                       [[Dedup.nonRepresentatives]]: keep each
   *                       cluster's min doc_id
   *   4. decontam       — [[Dedup.decontaminate]]: drop the modulo
   *                       eval stand-in AND train docs sharing an
@@ -71,9 +71,8 @@ object Curation {
     val keep2 = Dedup.exact(d1).select(col("keep_id").as("doc_id")).localCheckpoint(false)
     val d2 = d0.join(keep2, Seq("doc_id"), "left_semi")
 
-    val drops3 = Dedup.connectedGroups(
-        Dedup.minhashNearDupsMd5(d2).select("doc_a", "doc_b"))
-      .filter(col("doc_id") =!= col("group_id")).select("doc_id")
+    val drops3 = Dedup.nonRepresentatives(
+      Dedup.minhashNearDupsMd5(d2).select("doc_a", "doc_b"))
     // the funnel's 8 union branches each reference the survivor chain;
     // without a cut point Spark re-derives the expensive LSH-CC and
     // shingle-join subtrees per branch (exchange reuse only catches

@@ -21,7 +21,7 @@ import graft.Sizing
   *   - LSH banding: candidate pairs come from joining on
   *     (band_idx, band_hash) buckets, so comparison work is
   *     Σ bucket² instead of n² — the standard near-dup shape for
-  *     corpus-scale dedup.
+  *     corpus-scale dedup. The capped bucket join is [[Lsh]].
   *   - SimHash: 64-bit fingerprint via per-bit vote sums in one
   *     explode + groupBy — same partial-agg shape as MinHash.
   *
@@ -151,54 +151,31 @@ object Dedup {
   /** LSH banding over MinHash signatures → candidate near-dup pairs →
     * signature-agreement estimate of Jaccard.
     *
-    * bands × rowsPerBand = numHashes. Docs sharing any band bucket are
-    * candidates; the self-join is on (band_idx, band_hash) so work is
-    * proportional to Σ bucket², not n². Output: pairs with estimated
+    * bands × rowsPerBand = numHashes. Docs sharing any
+    * (band_idx, band_hash) bucket are candidates, capped at
+    * `maxBucket` per bucket ([[Lsh]]). Exact dedup runs before LSH in
+    * [[dedupPipeline]], so identical docs are already gone; the cap
+    * guards near-identical floods. Output: pairs with estimated
     * Jaccard ≥ `threshold`.
-    *
-    * `maxBucket` caps each (band_idx, band_hash) bucket at the
-    * `maxBucket` lowest doc_ids (deterministic) before the self-join —
-    * without it one template-spam band bucket of n docs is n² pairs,
-    * the scale-killer of the whole dedup pipeline at 100 TB. Exact
-    * dedup runs before LSH in [[dedupPipeline]], so identical docs are
-    * already gone; the cap guards near-identical floods. Bounded work,
-    * recall loss confined to over-full buckets — the same standard LSH
-    * degradation [[simhashNearDups]] and cosineNearDupPairs use.
     */
   def minhashNearDups(documents: DataFrame, shingleK: Int = 5, numHashes: Int = 32,
                       bands: Int = 8, threshold: Double = 0.5,
                       maxBucket: Int = 1024): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rowsPerBand = numHashes / bands
     val sigs = minhashSignatures(documents, shingleK, numHashes)
-    val w = Window.partitionBy("band_idx", "band_hash").orderBy("doc_id")
-    val banded = sigs.select(col("doc_id"), col("signature"),
+    val bucket = Seq("band_idx", "band_hash")
+    val banded = Lsh.capBuckets(sigs.select(col("doc_id"), col("signature"),
       explode(transform(sequence(lit(0), lit(bands - 1)),
         b => struct(b.as("band_idx"),
           xxhash64(array_join(transform(
             slice(col("signature"), b * rowsPerBand + 1, lit(rowsPerBand)),
             x => x.cast("string")), ",")).as("band_hash")))).as("band"))
       .select(col("doc_id"), col("signature"),
-        col("band.band_idx").as("band_idx"), col("band.band_hash").as("band_hash"))
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") <= maxBucket)
-      .drop("_rn")
-    val a = banded.select(col("band_idx"), col("band_hash"),
-      col("doc_id").as("doc_a"), col("signature").as("sig_a"))
-    val b = banded.select(col("band_idx"), col("band_hash"),
-      col("doc_id").as("doc_b"), col("signature").as("sig_b"))
-    // score before dedup: the estimate is identical for every banded
-    // copy of a pair, so the dedup shuffle carries 3 scalar columns
-    // instead of two numHashes-long signature arrays
-    a.join(b, Seq("band_idx", "band_hash"))
-      .filter(col("doc_a") < col("doc_b"))
-      .withColumn("est_jaccard",
-        round(size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y), bEq => bEq))
-          .cast("double") / numHashes, 6))
-      .filter(col("est_jaccard") >= threshold)
-      .select("doc_a", "doc_b", "est_jaccard")
-      .dropDuplicates("doc_a", "doc_b")
+        col("band.band_idx").as("band_idx"), col("band.band_hash").as("band_hash")),
+      bucket, "doc_id", maxBucket)
+    Lsh.bucketPairs(banded, banded, bucket, "doc_id", "signature", "est_jaccard",
+        Lsh.agreement(_, _, numHashes), _ >= threshold)
       .orderBy("doc_a", "doc_b")
   }
 
@@ -219,14 +196,12 @@ object Dedup {
     *
     * Pigeonhole banding: split the 64-bit fingerprint into
     * `maxDist + 1` bands — any pair within maxDist bits must agree on
-    * at least one full band, so candidates come from equality joins
-    * on (band_idx, band_bits) and the exact Hamming check
-    * (`bit_count(xor)`, codegen'd) runs only within buckets. Work is
-    * Σ bucket², never n².
+    * at least one full band, so candidates come from the capped
+    * (band_idx, band_bits) bucket join ([[Lsh]]) and the exact Hamming
+    * check (`bit_count(xor)`, codegen'd) runs only within buckets.
     */
   def simhashNearDups(documents: DataFrame, maxDist: Int = 3,
                       maxBucket: Int = 256): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val nBands = maxDist + 1
     val bandBits = 64 / nBands
     val sigs = simhash(documents)
@@ -235,29 +210,14 @@ object Dedup {
         shiftrightunsigned(col("simhash"), bIdx * bandBits)
           .bitwiseAND(lit((1L << bandBits) - 1)).as("band_bits"))
     }
-    // Bucket-size cap: corpora with near-uniform vocabulary (or spam
-    // floods) concentrate band values; an uncapped bucket of n docs
-    // costs n² comparisons. Keep the `maxBucket` lowest doc_ids per
-    // bucket (deterministic) — the standard LSH degradation: bounded
-    // work, recall loss confined to over-full buckets.
-    val w = Window.partitionBy("band_idx", "band_bits").orderBy("doc_id")
-    val banded = sigs.select(col("doc_id"), col("simhash"),
+    val bucket = Seq("band_idx", "band_bits")
+    val banded = Lsh.capBuckets(sigs.select(col("doc_id"), col("simhash"),
       explode(array(bandStructs: _*)).as("band"))
       .select(col("doc_id"), col("simhash"),
-        col("band.band_idx").as("band_idx"), col("band.band_bits").as("band_bits"))
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") <= maxBucket)
-      .drop("_rn")
-    val a = banded.select(col("band_idx"), col("band_bits"),
-      col("doc_id").as("doc_a"), col("simhash").as("sig_a"))
-    val b = banded.select(col("band_idx"), col("band_bits"),
-      col("doc_id").as("doc_b"), col("simhash").as("sig_b"))
-    a.join(b, Seq("band_idx", "band_bits"))
-      .filter(col("doc_a") < col("doc_b"))
-      .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
-      .filter(col("hamming") <= maxDist)
-      .select("doc_a", "doc_b", "hamming")
-      .dropDuplicates("doc_a", "doc_b")
+        col("band.band_idx").as("band_idx"), col("band.band_bits").as("band_bits")),
+      bucket, "doc_id", maxBucket)
+    Lsh.bucketPairs(banded, banded, bucket, "doc_id", "simhash", "hamming",
+        (x, y) => bit_count(x.bitwiseXOR(y)), _ <= maxDist)
       .orderBy("doc_a", "doc_b")
   }
 
@@ -354,11 +314,8 @@ object Dedup {
     val keepExact = exact(documents).select(col("keep_id").as("doc_id"))
     val survivors = documents.join(keepExact, Seq("doc_id"), "left_semi")
     val pairs = minhashNearDupsMd5(survivors).select("doc_a", "doc_b")
-    val nonRepresentatives = connectedGroups(pairs)
-      .filter(col("doc_id") =!= col("group_id"))
-      .select("doc_id")
     survivors.select("doc_id")
-      .join(nonRepresentatives, Seq("doc_id"), "left_anti")
+      .join(nonRepresentatives(pairs), Seq("doc_id"), "left_anti")
       .orderBy("doc_id")
   }
 
@@ -466,9 +423,7 @@ object Dedup {
     val eval_ = banded.filter(isEval).select(col("band_idx"), col("band_key"),
       col("doc_id").as("eval_id"), col("signature").as("sig_e"))
     train.join(eval_, Seq("band_idx", "band_key"))
-      .withColumn("est_jaccard",
-        round(size(filter(zip_with(col("sig_t"), col("sig_e"), (x, y) => x === y), bEq => bEq))
-          .cast("double") / numHashes, 6))
+      .withColumn("est_jaccard", Lsh.agreement(col("sig_t"), col("sig_e"), numHashes))
       .groupBy("doc_id")
       // argmax with deterministic tiebreak: struct max orders by
       // est_jaccard first, then highest eval_id
@@ -593,6 +548,13 @@ object Dedup {
     labels.orderBy("doc_id")
   }
 
+  /** The keep-min rule over a candidate pair list: every doc of a
+    * [[connectedGroups]] component except its minimum — the doc_ids a
+    * near-dup pass drops.
+    */
+  def nonRepresentatives(pairs: DataFrame): DataFrame =
+    connectedGroups(pairs).filter(col("doc_id") =!= col("group_id")).select("doc_id")
+
   // ---- md5-seeded oracle twins --------------------------------------
   //
   // The xxhash64-based MinHash/SimHash above are the production fast
@@ -662,33 +624,20 @@ object Dedup {
   }
 
   /** Oracle twin of [[minhashNearDups]]: md5-hashed shingles, affine
-    * min-sketch mod 2^31-1, banded LSH join, agreement-estimated
-    * Jaccard, and the same deterministic `maxBucket` flood guard.
-    * Signature build here is explode + groupBy (one shuffle with
-    * map-side combine) rather than a custom expression — this
-    * variant exists for cross-engine checkability, not throughput.
+    * min-sketch mod 2^31-1, the same capped banded join ([[Lsh]]) and
+    * agreement-estimated Jaccard. Signature build here is explode +
+    * groupBy (one shuffle with map-side combine) rather than a custom
+    * expression — this variant exists for cross-engine checkability,
+    * not throughput.
     */
   def minhashNearDupsMd5(documents: DataFrame, shingleK: Int = 5, numHashes: Int = 16,
                          bands: Int = 4, threshold: Double = 0.5,
                          maxBucket: Int = 1024): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("band_idx", "band_key").orderBy("doc_id")
-    val banded = md5BandedSignatures(documents, shingleK, numHashes, bands)
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") <= maxBucket)
-      .drop("_rn")
-    val a = banded.select(col("band_idx"), col("band_key"),
-      col("doc_id").as("doc_a"), col("signature").as("sig_a"))
-    val b = banded.select(col("band_idx"), col("band_key"),
-      col("doc_id").as("doc_b"), col("signature").as("sig_b"))
-    a.join(b, Seq("band_idx", "band_key"))
-      .filter(col("doc_a") < col("doc_b"))
-      .withColumn("est_jaccard",
-        round(size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y), bEq => bEq))
-          .cast("double") / numHashes, 6))
-      .filter(col("est_jaccard") >= threshold)
-      .select("doc_a", "doc_b", "est_jaccard")
-      .dropDuplicates("doc_a", "doc_b")
+    val bucket = Seq("band_idx", "band_key")
+    val banded = Lsh.capBuckets(md5BandedSignatures(documents, shingleK, numHashes, bands),
+      bucket, "doc_id", maxBucket)
+    Lsh.bucketPairs(banded, banded, bucket, "doc_id", "signature", "est_jaccard",
+        Lsh.agreement(_, _, numHashes), _ >= threshold)
       .orderBy("doc_a", "doc_b")
   }
 
@@ -926,22 +875,17 @@ object Dedup {
     * 32-bit md5 fingerprint — maxDist+1 bands, any pair within
     * maxDist bits agrees on ≥1 band.
     *
-    * Flood guard: a 32-bit fingerprint with 8-bit bands has only 256
-    * buckets per band, so uncapped the self-join degenerates toward
-    * n²/256 (measured at the 100× decade: ~8.6 min for the CC family
-    * build at 500k docs, vs 2.5 s for the 64-bit production path whose
-    * 16-bit bands keep 65k buckets). `maxBucket` keeps the lowest
-    * `maxBucket` doc_ids per (band_idx, band_bits) bucket before the
-    * self-join — the same deterministic truncation as
-    * [[minhashNearDups]] / [[minhashNearDupsMd5]], mirrored verbatim
-    * in the DuckDB oracle CTE (`row_number() OVER (PARTITION BY
-    * band_idx, band_bits ORDER BY doc_id) <= maxBucket`) so the twin
-    * stays hash-checkable while bounded at Σ min(bucket, cap)².
-    * Production corpora still run [[simhashNearDups]].
+    * The cap matters more here: a 32-bit fingerprint with 8-bit bands
+    * has only 256 buckets per band, so uncapped the self-join
+    * degenerates toward n²/256 (measured at the 100× decade: ~8.6 min
+    * for the CC family build at 500k docs, vs 2.5 s for the 64-bit
+    * production path whose 16-bit bands keep 65k buckets). The DuckDB
+    * oracle CTE mirrors the [[Lsh.capBuckets]] rule verbatim, so the
+    * twin stays hash-checkable. Production corpora still run
+    * [[simhashNearDups]].
     */
   def simhashMd5NearDups(documents: DataFrame, maxDist: Int = 3,
                          maxBucket: Int = 256): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val nBands = maxDist + 1
     require(32 % nBands == 0, "maxDist+1 must divide 32")
     val bandBits = 32 / nBands
@@ -951,24 +895,14 @@ object Dedup {
         shiftrightunsigned(col("simhash32"), bIdx * bandBits)
           .bitwiseAND(lit((1L << bandBits) - 1)).as("band_bits"))
     }
-    val w = Window.partitionBy("band_idx", "band_bits").orderBy("doc_id")
-    val banded = sigs.select(col("doc_id"), col("simhash32"),
+    val bucket = Seq("band_idx", "band_bits")
+    val banded = Lsh.capBuckets(sigs.select(col("doc_id"), col("simhash32"),
       explode(array(bandStructs: _*)).as("band"))
       .select(col("doc_id"), col("simhash32"),
-        col("band.band_idx").as("band_idx"), col("band.band_bits").as("band_bits"))
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") <= maxBucket)
-      .drop("_rn")
-    val a = banded.select(col("band_idx"), col("band_bits"),
-      col("doc_id").as("doc_a"), col("simhash32").as("sig_a"))
-    val b = banded.select(col("band_idx"), col("band_bits"),
-      col("doc_id").as("doc_b"), col("simhash32").as("sig_b"))
-    a.join(b, Seq("band_idx", "band_bits"))
-      .filter(col("doc_a") < col("doc_b"))
-      .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("int"))
-      .filter(col("hamming") <= maxDist)
-      .select("doc_a", "doc_b", "hamming")
-      .dropDuplicates("doc_a", "doc_b")
+        col("band.band_idx").as("band_idx"), col("band.band_bits").as("band_bits")),
+      bucket, "doc_id", maxBucket)
+    Lsh.bucketPairs(banded, banded, bucket, "doc_id", "simhash32", "hamming",
+        (x, y) => bit_count(x.bitwiseXOR(y)).cast("int"), _ <= maxDist)
       .orderBy("doc_a", "doc_b")
   }
 
@@ -1428,7 +1362,6 @@ object Dedup {
   private[graft] def prefixFilterScored(
       documents: DataFrame, threshold: Double,
       sampleMod: Int, maxBucket: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val docs = documents.filter(pmod(col("doc_id"), lit(sampleMod.toLong)) === 0)
     val toks = docs
       .select(col("doc_id"), explode(split(lower(col("text")), " ", -1)).as("tok"))
@@ -1459,11 +1392,7 @@ object Dedup {
         posexplode(col("keys")).as(Seq("pos", "ktok")))
       .filter(col("pos") < col("p"))
       .select(col("doc_id"), col("ktok"), col("len"), col("pos"))
-    val w = Window.partitionBy("ktok").orderBy("doc_id")
-    val capped = prefix
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") <= maxBucket)
-      .drop("_rn")
+    val capped = Lsh.capBuckets(prefix, Seq("ktok"), "doc_id", maxBucket)
     // candidates dedupe on the ID PAIR alone; the token arrays join
     // back once per surviving pair (never ride through the distinct).
     // Two sound prunes run BEFORE the distinct and the verify join:

@@ -584,39 +584,23 @@ object Similarity {
     * codegen'd cosine only within buckets.
     *
     * Scale shape: the signature is a map-only projection
-    * (dimension-generic — no hard-coded dim); the join is on
-    * (table_idx, bucket) so work is Σ bucket², and `maxBucket` caps
-    * any degenerate bucket (identical to the SimHash pigeonhole cap
-    * in [[Dedup.simhashNearDups]]) — bounded work, recall loss
-    * confined to over-full buckets. Scoring happens before the
-    * cross-table pair dedup, so the dedup shuffle carries 3 scalars,
-    * not two embedding arrays.
+    * (dimension-generic — no hard-coded dim); candidates come from the
+    * capped (table_idx, bucket) join of [[Lsh]], scored before the
+    * cross-table pair dedup.
     */
   def cosineNearDupPairs(embeddings: DataFrame, threshold: Double = 0.95,
                          nTables: Int = 4, bitsPerTable: Int = 8,
                          maxBucket: Int = 256): DataFrame = {
     VectorFunctions.ensureRegistered(embeddings.sparkSession)
-    import org.apache.spark.sql.expressions.Window
-    val bucketed = embeddings
+    val bucket = Seq("table_idx", "bucket")
+    val capped = Lsh.capBuckets(embeddings
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
       .select(col("vec_id"), col("v"),
         posexplode(VectorFunctions.hyperplaneSig(col("v"), nTables, bitsPerTable))
-          .as(Seq("table_idx", "bucket")))
-    val w = Window.partitionBy("table_idx", "bucket").orderBy("vec_id")
-    val capped = bucketed
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") <= maxBucket)
-      .drop("_rn")
-    val a = capped.select(col("table_idx"), col("bucket"),
-      col("vec_id").as("vec_a"), col("v").as("va"))
-    val b = capped.select(col("table_idx"), col("bucket"),
-      col("vec_id").as("vec_b"), col("v").as("vb"))
-    a.join(b, Seq("table_idx", "bucket"))
-      .filter(col("vec_a") < col("vec_b"))
-      .select(col("vec_a"), col("vec_b"),
-        round(VectorFunctions.cosineSim(col("va"), col("vb")), 6).as("cos_sim"))
-      .filter(col("cos_sim") >= threshold)
-      .dropDuplicates("vec_a", "vec_b")
+          .as(Seq("table_idx", "bucket"))),
+      bucket, "vec_id", maxBucket)
+    Lsh.bucketPairs(capped, capped, bucket, "vec_id", "v", "cos_sim",
+        (x, y) => round(VectorFunctions.cosineSim(x, y), 6), _ >= threshold)
       .orderBy("vec_a", "vec_b")
   }
 

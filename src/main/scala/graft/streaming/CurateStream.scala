@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
-import graft.operators.{Dedup, TextAnalysis}
+import graft.operators.{Dedup, Lsh, TextAnalysis}
 
 /** Streaming ingest-to-sink curation: the continuously-ingesting face
   * of [[graft.operators.Curation.curatePipeline]]'s document stages —
@@ -27,16 +27,15 @@ import graft.operators.{Dedup, TextAnalysis}
   *                  collisions (a batch-sized set), then the batch
   *                  anti-joins that broadcast — the corpus-sized state
   *                  never shuffles;
-  *   3. near-dup  — the SAME banded md5-MinHash candidate generation
-  *                  as the batch op ([[Dedup.md5BandedSignatures]], so
-  *                  stream and batch agree bit-for-bit on signatures
-  *                  and band keys). Candidates are (seen ∪ batch) ×
-  *                  batch band collisions with the batch side
-  *                  BROADCAST (the band state never shuffles), scored
-  *                  with the identical signature-agreement formula and
-  *                  threshold, then resolved with the batch op's
-  *                  connected-components keep-min rule over the
-  *                  candidate graph;
+  *   3. near-dup  — the SAME code as the batch op: banded md5-MinHash
+  *                  signatures ([[Dedup.md5BandedSignatures]]), the
+  *                  pair kernel and agreement score
+  *                  ([[graft.operators.Lsh]]) and the keep-min rule
+  *                  ([[Dedup.nonRepresentatives]]), so stream and batch
+  *                  agree bit-for-bit by construction. Candidates are
+  *                  (seen ∪ batch) × batch band collisions with the
+  *                  batch side BROADCAST (the band state never
+  *                  shuffles) and no bucket cap;
   *   4. sink      — survivors append to `outDir/docs/batch_id=<id>`,
   *                  band + digest state to `outDir/_state/...`, and a
   *                  per-batch shard-manifest DELTA (content-addressed
@@ -92,37 +91,16 @@ object CurateStream {
   private val digestStateSchema = StructType(Seq(
     StructField("digest", StringType)))
 
+  private val docsSchema = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("source", StringType),
+    StructField("lang", StringType),
+    StructField("text", StringType)))
+
   private val manifestDeltaSchema = StructType(Seq(
     StructField("shard_id", LongType),
     StructField("n_docs", LongType),
     StructField("n_chars", LongType)))
-
-  /** State as of the START of `batchId`: every prior batch's rows,
-    * and ONLY prior batches' — a replayed/restarted batch must not
-    * read its own (or a later failed attempt's) earlier state write,
-    * or its docs self-collide and the replay emits an empty survivor
-    * set instead of an identical one. The filter is on the batch_id
-    * PARTITION column, so it prunes directories, not rows.
-    */
-  private def readStateOr(spark: SparkSession, path: String, batchId: Long,
-                          schema: StructType): DataFrame = {
-    // "no state yet" is decided by an explicit existence check, NOT by
-    // catching AnalysisException: a catch-all there turns schema drift
-    // or a corrupted state table into a silently-empty state frame —
-    // dedup disabled, duplicates admitted, no error anywhere. Missing
-    // path → empty frame (the only legitimate first-batch case); any
-    // other analysis error propagates and fails the batch loudly.
-    StateCompaction.assertReadable(spark, path)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    else
-      spark.read.schema(
-          schema.add(StructField("batch_id", LongType))).parquet(path)
-        .filter(col("batch_id") < batchId)
-        .select(schema.fieldNames.map(col).toSeq: _*)
-  }
 
   /** Shard id for a text row — the content-addressed assignment of
     * `curatePipeline` stage 7 / [[graft.operators.Multimodal.shardManifest]]:
@@ -146,7 +124,7 @@ object CurateStream {
       .outputMode(OutputMode.Append())
       // DURABLE checkpoint, co-located with the sink by default: with
       // a temp checkpoint a restarted stream resets batchId to 0, so
-      // readStateOr's batch_id<batchId prune hides ALL prior state
+      // the state reads' batch_id<batchId prune hides ALL prior state
       // (duplicates re-admitted) and the batch_id=0 docs/state/
       // manifest dirs are overwritten (silent loss). The per-batch
       // idempotent-overwrite contract only gives exactly-once when
@@ -193,7 +171,8 @@ object CurateStream {
     val withDig = d1.withColumn("digest", md5(col("text")))
     val batchKeep = withDig.groupBy("digest").agg(min("doc_id").as("doc_id"))
       .localCheckpoint(false)
-    val seenDig = readStateOr(spark, s"$outDir/_state/digests", batchId, digestStateSchema)
+    val seenDig = StateCompaction.readTable(spark, s"$outDir/_state/digests",
+      digestStateSchema, batchId)
     val digHits = seenDig
       .join(broadcast(batchKeep.select("digest")), Seq("digest"), "left_semi")
     val fresh = batchKeep.join(broadcast(digHits), Seq("digest"), "left_anti")
@@ -201,28 +180,19 @@ object CurateStream {
     val d2 = withDig.join(fresh.select("doc_id"), Seq("doc_id"), "left_semi")
       .drop("digest")
 
-    // 3. near-dup: identical banded signatures as the batch op; the
-    // candidate join probes (seen ∪ batch) with the batch side
-    // broadcast; scoring and keep-min CC match minhashNearDupsMd5.
+    // 3. near-dup: identical banded signatures and pair kernel as the
+    // batch op, uncapped; the candidate join probes (seen ∪ batch) with
+    // the batch side broadcast, then the same keep-min rule.
     val bb = Dedup.md5BandedSignatures(d2, shingleK, numHashes, bands)
       .select("doc_id", "signature", "band_idx", "band_key")
       .localCheckpoint(false)
-    val seenBands = readStateOr(spark, s"$outDir/_state/bands", batchId, bandStateSchema)
-    val aSide = seenBands.unionByName(bb)
-      .select(col("band_idx"), col("band_key"),
-        col("doc_id").as("doc_a"), col("signature").as("sig_a"))
-    val bSide = bb.select(col("band_idx"), col("band_key"),
-      col("doc_id").as("doc_b"), col("signature").as("sig_b"))
-    val pairs = aSide.join(broadcast(bSide), Seq("band_idx", "band_key"))
-      .filter(col("doc_a") < col("doc_b"))
-      .withColumn("est_jaccard",
-        round(size(filter(zip_with(col("sig_a"), col("sig_b"),
-          (x, y) => x === y), bEq => bEq)).cast("double") / numHashes, 6))
-      .filter(col("est_jaccard") >= threshold)
+    val seenBands = StateCompaction.readTable(spark, s"$outDir/_state/bands",
+      bandStateSchema, batchId)
+    val pairs = Lsh.bucketPairs(seenBands.unionByName(bb), broadcast(bb),
+        Seq("band_idx", "band_key"), "doc_id", "signature", "est_jaccard",
+        Lsh.agreement(_, _, numHashes), _ >= threshold)
       .select("doc_a", "doc_b")
-      .dropDuplicates("doc_a", "doc_b")
-    val comp = Dedup.connectedGroups(pairs)
-    val drops = comp.filter(col("group_id") =!= col("doc_id")).select("doc_id")
+    val drops = Dedup.nonRepresentatives(pairs)
     val d3 = d2.join(drops, Seq("doc_id"), "left_anti")
       .localCheckpoint(false)
 
@@ -240,19 +210,32 @@ object CurateStream {
     ()
   }
 
-  /** The accepted corpus so far (doc_id, source, lang, text). */
+  /** The accepted corpus so far (doc_id, source, lang, text); empty
+    * before the first micro-batch commits.
+    */
   def sinkDocs(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(s"$outDir/docs").drop("batch_id")
+    StateCompaction.readTable(spark, s"$outDir/docs", docsSchema)
 
   /** The current shard manifest: an nShards-row sum over the per-batch
-    * deltas — reading it never rescans the corpus.
+    * deltas — reading it never rescans the corpus. Empty before the
+    * first micro-batch commits.
     */
-  def sinkManifest(spark: SparkSession, outDir: String): DataFrame = {
-    StateCompaction.assertReadable(spark, s"$outDir/manifest_delta")
-    spark.read.parquet(s"$outDir/manifest_delta")
+  def sinkManifest(spark: SparkSession, outDir: String): DataFrame =
+    StateCompaction.readTable(spark, s"$outDir/manifest_delta", manifestDeltaSchema)
       .groupBy("shard_id")
       .agg(sum("n_docs").as("n_docs"), sum("n_chars").as("n_chars"))
       .orderBy("shard_id")
+
+  /** Recovery-only sweep over the three state tables — finishes or
+    * discards any crashed compaction attempt without starting a new
+    * one. The cadenced stream calls this at the top of every
+    * micro-batch; cheap (a few existence checks) when there is nothing
+    * to heal.
+    */
+  def heal(spark: SparkSession, outDir: String): Unit = {
+    StateCompaction.recoverTable(spark, s"$outDir/_state/digests")
+    StateCompaction.recoverTable(spark, s"$outDir/_state/bands")
+    StateCompaction.recoverTable(spark, s"$outDir/manifest_delta")
   }
 
   /** Compact the three per-batch state changelogs — the maintenance
@@ -280,18 +263,6 @@ object CurateStream {
     * reading a half-deleted changelog. The `docs/` sink itself is data,
     * not state, and is never compacted.
     */
-  /** Recovery-only sweep over the three state tables — finishes or
-    * discards any crashed compaction attempt without starting a new
-    * one. The cadenced stream calls this at the top of every
-    * micro-batch; cheap (a few existence checks) when there is nothing
-    * to heal.
-    */
-  def heal(spark: SparkSession, outDir: String): Unit = {
-    StateCompaction.recoverTable(spark, s"$outDir/_state/digests")
-    StateCompaction.recoverTable(spark, s"$outDir/_state/bands")
-    StateCompaction.recoverTable(spark, s"$outDir/manifest_delta")
-  }
-
   def compact(spark: SparkSession, outDir: String): Unit = {
     StateCompaction.compactTable(spark, s"$outDir/_state/digests",
       digestStateSchema, _.distinct())

@@ -70,24 +70,6 @@ object GroupStream {
     StructField("doc_id", LongType),
     StructField("root", LongType)))
 
-  /** State as of the START of `batchId` — prior batches only, so a
-    * replayed batch recomputes from the same state it first saw
-    * (batch_id is the partition column; the filter prunes dirs).
-    */
-  private def readStateOr(spark: SparkSession, path: String,
-                          batchId: Long): DataFrame = {
-    StateCompaction.assertReadable(spark, path)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], rootSchema)
-    else
-      spark.read.schema(rootSchema.add(StructField("batch_id", LongType)))
-        .parquet(path)
-        .filter(col("batch_id") < batchId)
-        .select(col("doc_id"), col("root"))
-  }
-
   /** Start the incremental-CC stream over `pairs` (columns doc_a,
     * doc_b). See object scaladoc for the state contract.
     */
@@ -132,7 +114,7 @@ object GroupStream {
     // corpus-sized changelog (batch node set broadcast), then a
     // batch-sized aggregate — min(root) IS the latest root because
     // merges only ever lower a doc's root
-    val log = readStateOr(spark, s"$outDir/_state/roots", batchId)
+    val log = StateCompaction.readTable(spark, s"$outDir/_state/roots", rootSchema, batchId)
     val touched = log.join(broadcast(nodes), Seq("doc_id"), "left_semi")
       .groupBy("doc_id").agg(min("root").as("root"))
       .localCheckpoint(false)
@@ -180,23 +162,12 @@ object GroupStream {
     * semantics as [[Dedup.connectedGroups]]. One corpus-sized groupBy
     * at read time (bucket the changelog by doc_id in production to
     * make it shuffle-free); roots only decrease, so min(root) is the
-    * latest value without any batch_id tie-breaking. Before the first
-    * micro-batch commits, the changelog directory does not exist —
-    * same guard as [[readStateOr]], empty frame instead of an
-    * AnalysisException.
+    * latest value without any batch_id tie-breaking. Empty before the
+    * first micro-batch commits ([[StateCompaction.readTable]]).
     */
-  def sinkGroups(spark: SparkSession, outDir: String): DataFrame = {
-    StateCompaction.assertReadable(spark, s"$outDir/_state/roots")
-    val p = new org.apache.hadoop.fs.Path(s"$outDir/_state/roots")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        StructType(Seq(StructField("doc_id", LongType),
-          StructField("group_id", LongType))))
-    else
-      spark.read.parquet(p.toString)
-        .groupBy("doc_id").agg(min("root").as("group_id"))
-  }
+  def sinkGroups(spark: SparkSession, outDir: String): DataFrame =
+    StateCompaction.readTable(spark, s"$outDir/_state/roots", rootSchema)
+      .groupBy("doc_id").agg(min("root").as("group_id"))
 
   /** Changelog compaction — the maintenance operation the object
     * scaladoc prescribes, made executable: every batch dir STRICTLY
@@ -204,7 +175,7 @@ object GroupStream {
     * single baseline dir `batch_id=<maxId-1>`. Correctness rides the
     * same monotonicity as every read: roots only ever decrease, so
     * min-over-prior-rows IS the state as of the start of batch
-    * `maxId` — [[readStateOr]] for any future batch and
+    * `maxId` — the state read of any future batch and
     * [[sinkGroups]] read identical values before and after (the
     * replay spec pins this). The newest dir is NEVER touched: it is
     * the only batch Structured Streaming can replay after a crash

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -124,6 +124,34 @@ object StateCompaction {
     }
   }
 
+  /** The one read face of a `batch_id=<id>` changelog: its rows as
+    * `schema`, from batches strictly below `beforeBatch` (all batches
+    * by default). A streaming batch reads state as of its own START —
+    * a replayed or restarted batch must not read its own (or a later
+    * failed attempt's) earlier write, or its docs self-collide and the
+    * replay emits an empty survivor set instead of an identical one.
+    * `batch_id` is the partition column, so the filter prunes dirs.
+    *
+    * "No table yet" (before the first micro-batch commits) is decided
+    * by an explicit existence check and gives an empty `schema` frame.
+    * It is NOT decided by catching AnalysisException: a catch-all
+    * there would turn schema drift or a corrupted table into a
+    * silently-empty frame — dedup disabled, duplicates admitted, no
+    * error anywhere. Any other analysis error propagates.
+    */
+  def readTable(spark: SparkSession, tablePath: String, schema: StructType,
+                beforeBatch: Long = Long.MaxValue): DataFrame = {
+    assertReadable(spark, tablePath)
+    val table = new Path(tablePath)
+    if (!fsOf(spark, table).exists(table))
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else
+      spark.read.schema(schema.add(StructField("batch_id", LongType)))
+        .parquet(tablePath)
+        .filter(col("batch_id") < beforeBatch)
+        .select(schema.fieldNames.map(col).toSeq: _*)
+  }
+
   /** Recovery-only entry: finish or discard a prior crashed compaction
     * of `tablePath` without starting a new one. The cadence-triggered
     * sinks ([[CurateStream]]/[[GroupStream]] with `compactEvery > 0`)
@@ -160,11 +188,7 @@ object StateCompaction {
     if (ids.size <= 2) return
     val maxId = ids.max
     val tmp = tmpDir(table)
-    val baseline = reduce(
-      spark.read.schema(schema.add(StructField("batch_id", LongType)))
-        .parquet(tablePath)
-        .filter(col("batch_id") < maxId)
-        .select(schema.fieldNames.map(col).toSeq: _*))
+    val baseline = reduce(readTable(spark, tablePath, schema, maxId))
     baseline.write.mode("overwrite").parquet(tmp.toString)
     writeTarget(fs, tmp, maxId - 1) // commit point
     fs.create(markerPath(table), true).close()

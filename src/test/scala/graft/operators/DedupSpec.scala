@@ -101,7 +101,8 @@ class DedupSpec extends SparkSpec {
     // 20 identical docs share EVERY band bucket — uncapped that is
     // C(20,2)=190 pairs (n² in the flood size); with maxBucket=4 only
     // the 4 lowest doc_ids survive per bucket → exactly C(4,2)=6
-    // pairs, always among ids 1..4.
+    // pairs, always among ids 1..4. The SimHash pair builders share
+    // the same cap: identical docs have identical fingerprints.
     val base = (1 to 40).map(i => s"w$i").mkString(" ")
     val flood = docs((1L to 20L).map(_ -> base): _*)
     assert(Dedup.minhashNearDups(flood).count() == 190L)
@@ -111,6 +112,14 @@ class DedupSpec extends SparkSpec {
     val cappedMd5 = Dedup.minhashNearDupsMd5(flood, maxBucket = 4).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(cappedMd5 == capped)
+    assert(Dedup.simhashNearDups(flood).count() == 190L)
+    assert(Dedup.simhashMd5NearDups(flood).count() == 190L)
+    val cappedSim = Dedup.simhashNearDups(flood, maxBucket = 4).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(cappedSim == capped)
+    val cappedSimMd5 = Dedup.simhashMd5NearDups(flood, maxBucket = 4).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(cappedSimMd5 == capped)
   }
 
   test("minhashBandHistogram: flood bucket sizes and implied pair costs are exact") {

@@ -178,4 +178,14 @@ class CurateStreamSpec extends SparkSpec {
       == CurateStream.manifestOf(expected)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
   }
+
+  test("sinkDocs and sinkManifest before any committed batch return empty frames, not errors") {
+    val fresh = java.nio.file.Files.createTempDirectory("curate_stream_empty_").toString
+    val docs = CurateStream.sinkDocs(spark, fresh)
+    assert(docs.columns.toSeq == Seq("doc_id", "source", "lang", "text"))
+    assert(docs.count() == 0)
+    val manifest = CurateStream.sinkManifest(spark, fresh)
+    assert(manifest.columns.toSeq == Seq("shard_id", "n_docs", "n_chars"))
+    assert(manifest.count() == 0)
+  }
 }

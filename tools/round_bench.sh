@@ -8,7 +8,8 @@
 # banks BENCH_LOCAL_<round>.json from the per-query detail, and runs
 # the drift gate against the newest previous BENCH_LOCAL_*.json (or an
 # explicit baseline). Exits non-zero when the gate fails, so the recipe
-# cannot silently skip it.
+# cannot silently skip it. SPARK_GRAFT_CPUS passes through when set;
+# unset, Bench runs at GraftSession's default width.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -17,7 +18,6 @@ OUT="BENCH_LOCAL_${ROUND}.json"
 BASELINE="${2:-$(ls -1 BENCH_LOCAL_r*.json 2>/dev/null | grep -v "$OUT" | sort | tail -1 || true)}"
 
 SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}" \
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
 SPARK_GRAFT_BENCH_BUDGET_S="${SPARK_GRAFT_BENCH_BUDGET_S:-1200}" \
 SPARK_GRAFT_BENCH_FULL_ITERS="${SPARK_GRAFT_BENCH_FULL_ITERS:-3}" \
 SPARK_GRAFT_BENCH_ITERS="${SPARK_GRAFT_BENCH_ITERS:-5}" \
