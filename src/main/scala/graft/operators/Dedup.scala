@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructField, StructType}
 import graft.Sizing
 
 /** Deduplication operators over `documents`: exact, canonicalized,
@@ -267,7 +270,6 @@ object Dedup {
     // the same Σ min(df, maxDf)² work in executor-sized memory. The
     // shuffle_hash hint matters: the satisfied-distribution sides
     // would otherwise plan as SMJ and re-sort 25M strings.
-    import org.apache.spark.sql.expressions.Window
     val capped = explodedShingles(documents, shingleK)
       .filter(col("sh").isNotNull)
       .select(col("doc_id"), size(col("shingles")).as("n_sh"), col("sh"))
@@ -301,14 +303,15 @@ object Dedup {
   /** The complete dedup pipeline in one call — what a corpus-curation
     * job actually runs: exact dedup (drop byte-identical copies, keep
     * lowest doc_id), minhash banded-LSH near-dup pairs over the
-    * survivors, Hash-Min connected components to resolve transitive
-    * groups, then keep each group's min doc_id. Returns the final
-    * kept doc_id set.
+    * survivors, connected components to resolve transitive groups,
+    * then keep each group's min doc_id. Returns the final kept doc_id
+    * set.
     *
     * Every stage is the already-bounded building block: digest
-    * groupBy (one shuffle), Σ bucket² banded self-join, O(log
-    * diameter) CC rounds, one anti join. Text crosses the wire only
-    * into the shingle explode — never into CC or the final anti join.
+    * groupBy (one shuffle), Σ bucket² banded self-join, one
+    * contract-then-check CC round on near-dup clusters, one anti
+    * join. Text crosses the wire only into the shingle explode —
+    * never into CC or the final anti join.
     */
   def pipelineKeepSet(documents: DataFrame): DataFrame = {
     val keepExact = exact(documents).select(col("keep_id").as("doc_id"))
@@ -477,18 +480,40 @@ object Dedup {
     * under-dedup: A~B and B~C must collapse to one group even when
     * A~C was never emitted.
     *
-    * Algorithm: Hash-Min label propagation — each round every node
-    * takes the min label among itself and its neighbors (one
-    * shuffle-join + one min-agg per round), until a round changes
-    * nothing. Rounds needed = component diameter; near-dup clusters
-    * are shallow (dense blobs, not paths), so this converges in a few
-    * rounds at any corpus size — the standard MapReduce-CC shape.
-    * `localCheckpoint` cuts lineage each round so the plan doesn't
-    * grow exponentially (on a cluster, use a checkpoint dir).
-    * Output covers docs appearing in ≥1 pair; all other docs are
-    * trivially their own singleton group. Throws
-    * `IllegalStateException` if `maxIter` rounds end unconverged,
-    * rather than return labels that are not yet components.
+    * Algorithm: contract, then check (after Kiveris et al., SoCC
+    * 2014: rounds cost more than data, so contract locally before any
+    * global round). Each round:
+    *   1. contract — a union-find over each partition of the edge
+    *      list maps every node it sees to the min of its local
+    *      component, its root; one `groupBy(node)` keeps the smallest
+    *      root as the node's label. A label is a member of its node's
+    *      component and ≤ the node;
+    *   2. check — the star edges (node, root) connect exactly what the
+    *      input edges connect, so the labels are final iff they agree
+    *      at both ends of every star edge. One window keyed by root
+    *      compares each root's label with its members' labels and
+    *      keeps the label pairs that differ. If that set is empty,
+    *      each component carries one label, and a label that is a
+    *      member and ≤ every member is the minimum;
+    *   3. otherwise the open label pairs are the next round's edges
+    *      (the same components over far fewer nodes), and one left
+    *      join relabels the nodes with that round's labels.
+    * A round is one materialization (the groupBy and the window
+    * shuffles) plus a one-job emptiness check; each task's union-find
+    * holds its partition's distinct nodes in memory. In a clique every
+    * member shares a partition with an edge to the minimum, so dense
+    * near-dup clusters resolve in the first round, with no join.
+    * Each later round lowers at least one label, so the loop ends;
+    * the slow case is a long path spread one edge per partition.
+    * Round one has no join and the relabel join can only build its
+    * right side, so AQE plans the same shape on every run.
+    *
+    * Output covers docs appearing in ≥1 pair, ordered by doc_id; all
+    * other docs are trivially their own singleton group. Ids must be
+    * integral (they cross the union-find as longs); the output keeps
+    * their type and nullability. Throws `IllegalStateException` if
+    * `maxIter` rounds end unconverged, rather than return labels that
+    * are not yet components.
     */
   def connectedGroups(pairs: DataFrame, maxIter: Int = 20,
                       checkpoint: DataFrame => DataFrame = _.localCheckpoint(true)): DataFrame = {
@@ -498,59 +523,85 @@ object Dedup {
     // spark.sparkContext.setCheckpointDir on durable storage, so a
     // lost executor replays one round from the reliable copy instead
     // of losing the chain.
-    val edges = checkpoint(
-      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
-    var labels = checkpoint(
-      edges.select(col("src").as("doc_id")).distinct()
-        .select(col("doc_id"), col("doc_id").as("group_id")))
-    // Convergence signal: labels only ever DECREASE under min
-    // propagation, so Σ group_id is strictly monotone until fixpoint —
-    // one scalar agg per round instead of a join-and-count. (Tried:
-    // riding the sum on the checkpoint job as an `observe`d metric —
-    // measurably SLOWER, the async listener-bus delivery costs more
-    // than this sub-scan of a few hundred checkpointed label rows.)
-    def labelSum(df: DataFrame): Long =
-      df.agg(coalesce(sum("group_id"), lit(0L))).collect().head.getLong(0)
-    // one neighbor-min propagation step (as a plan, not an action)
-    def minNbr(l: DataFrame): DataFrame =
-      l.union(edges
-          .join(l.select(col("doc_id").as("dst"), col("group_id")), "dst")
-          .select(col("src").as("doc_id"), col("group_id")))
-        .groupBy("doc_id").agg(min("group_id").as("group_id"))
-    var prevSum = labelSum(labels)
-    var converged = false
-    var i = 0
+    val id = pairs.select(col("doc_a").as("id"))
+      .union(pairs.select(col("doc_b").as("id"))).schema.head
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(id.dataType),
+      s"connectedGroups needs integral ids, got ${id.dataType}")
+    // nodes keep the input ids' nullability, so the output schema does
+    val stars = Encoders.row(StructType(
+      Seq("node", "root").map(StructField(_, LongType, id.nullable))))
+    // One round, contract then check, in one materialization. Each
+    // node sends its label to itself and to every root it reached, so
+    // a root's window holds its own label beside its members'. Rows
+    // a node sent to itself carry the labels; rows whose label is
+    // above their window's min are the open label pairs.
+    def round(edges: DataFrame): (DataFrame, DataFrame) = {
+      val t = checkpoint(
+        edges.select(col("src").cast("long"), col("dst").cast("long"))
+          .mapPartitions(unionFindStars)(stars)
+          .groupBy("node").agg(min("root").as("label"), collect_set("root").as("roots"))
+          .select(col("node"), col("label"),
+            explode(array_union(array(col("node")), col("roots"))).as("key"))
+          .select(col("node"), col("label"), (col("key") === col("node")).as("own"),
+            min("label").over(Window.partitionBy("key")).as("key_min"))
+          .filter(col("own") || col("label") =!= col("key_min")))
+      (t.filter(col("own")).select("node", "label"),
+        t.filter(col("label") =!= col("key_min"))
+          .select(col("label").as("src"), col("key_min").as("dst")))
+    }
+    // one job however many partitions: each task reports whether its
+    // partition holds a row
+    def isEmpty(df: DataFrame): Boolean =
+      !df.queryExecution.toRdd.mapPartitions(rows => Iterator(rows.hasNext)).collect().contains(true)
+    var (labels, open) = round(pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
+    var converged = isEmpty(open)
+    var i = 1
     while (!converged && i < maxIter) {
-      // TWO propagation steps fused into one materialized plan, then a
-      // pointer jump (follow the label's own label — path compression)
-      // over the MATERIALIZED step so the self-join reads it twice for
-      // free. Fusing halves the checkpoint/scheduling barriers per
-      // label-distance doubled — at sf0.1 the loop is pure job
-      // overhead (hundreds of label rows), and on a cluster fewer
-      // materialization barriers is the same win; the recompute-on-
-      // failure window stays one round. Jump + double-step keeps
-      // rounds at O(log diameter).
-      val step = checkpoint(minNbr(minNbr(labels)))
-      val next = checkpoint(step
-        .join(step.select(col("doc_id").as("_g"), col("group_id").as("_gl")),
-          col("group_id") === col("_g"), "left")
-        .select(col("doc_id"), coalesce(col("_gl"), col("group_id")).as("group_id")))
-      val nextSum = labelSum(next)
-      labels = next
-      converged = nextSum == prevSum
-      prevSum = nextSum
+      val (next, nextOpen) = round(open)
+      labels = checkpoint(labels
+        .join(next.select(col("node").as("label"), col("label").as("next")), Seq("label"), "left")
+        .select(col("node"), coalesce(col("next"), col("label")).as("label")))
+      open = nextOpen
+      converged = isEmpty(open)
       i += 1
     }
     if (!converged)
       throw new IllegalStateException(
         s"connectedGroups did not converge after $i rounds (maxIter = $maxIter)")
-    labels.orderBy("doc_id")
+    labels.select(col("node").cast(id.dataType).as("doc_id"),
+        col("label").cast(id.dataType).as("group_id"))
+      .orderBy("doc_id")
+  }
+
+  /** One partition's union-find over (src, dst) edges: each node it
+    * sees, paired with the min of its local component. Union by min
+    * keeps every root its component's minimum; path halving keeps
+    * `find` short.
+    */
+  private def unionFindStars(edges: Iterator[Row]): Iterator[Row] = {
+    val parent = mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var y = x
+      while (parent(y) != y) { parent(y) = parent(parent(y)); y = parent(y) }
+      y
+    }
+    edges.foreach { e =>
+      val a = e.getLong(0)
+      val b = e.getLong(1)
+      if (!parent.contains(a)) parent(a) = a
+      if (!parent.contains(b)) parent(b) = b
+      val ra = find(a)
+      val rb = find(b)
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keys.toArray.iterator.map(x => Row(x, find(x)))
   }
 
   /** The keep-min rule over a candidate pair list: every doc of a
     * [[connectedGroups]] component except its minimum — the doc_ids a
-    * near-dup pass drops.
+    * near-dup pass drops. The one keep-min rule of `pipelineKeepSet`,
+    * `Curation.curatePipeline` and `CurateStream`; on their near-dup
+    * clusters it costs one contract-then-check round.
     */
   def nonRepresentatives(pairs: DataFrame): DataFrame =
     connectedGroups(pairs).filter(col("doc_id") =!= col("group_id")).select("doc_id")
@@ -833,7 +884,6 @@ object Dedup {
     * exchange — then one partial→final agg back onto doc_id.
     */
   def passageDupRate(documents: DataFrame, w: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val occ = Window.partitionBy("chunk")
     explodedPassages(documents, w)
       .withColumn("n_occ", count(lit(1)).over(occ))
@@ -855,7 +905,6 @@ object Dedup {
     * re-assembly is one groupBy(doc_id) with an ordered collect.
     */
   def passageDedup(documents: DataFrame, w: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val firstOcc = Window.partitionBy("chunk").orderBy("doc_id", "i")
     explodedPassages(documents, w)
       .withColumn("rn", row_number().over(firstOcc))
@@ -1148,8 +1197,8 @@ object Dedup {
     * [[keepBestByFingerprint]] only handles EXACT fingerprint
     * groups. The "keep the longest copy" rule preserves the
     * least-truncated variant of a mirrored page. Groups come from
-    * the proven simhash-band + Hash-Min chain; the argmax is one
-    * group-partitioned window over the (docs-in-clusters)-sized
+    * the proven simhash-band + [[connectedGroups]] chain; the argmax
+    * is one group-partitioned window over the (docs-in-clusters)-sized
     * group table.
     */
   def clusterRepresentatives(documents: DataFrame): DataFrame =
@@ -1159,7 +1208,6 @@ object Dedup {
     * table (see [[graft.Materialized]] — compute CC once, fan out).
     */
   def clusterRepresentatives(documents: DataFrame, groups: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("group_id")
       .orderBy(col("n_chars").desc, col("doc_id"))
     groups.join(documents.select(col("doc_id"), col("n_chars")), Seq("doc_id"))
@@ -1266,7 +1314,7 @@ object Dedup {
     * per-cluster [[clusterRepresentatives]] table ("mostly pairs, or
     * a few thousand-doc template farms?"), which is what decides
     * whether keep-one dedup or cluster-cap sampling is the right
-    * removal policy. One Hash-Min CC ([[connectedGroups]]) then two
+    * removal policy. One CC ([[connectedGroups]]) then two
     * bounded aggregates (|groups| rows, then |distinct sizes| rows).
     * Docs with no near-dup edge are singletons and out of scope, as
     * in every CC consumer here.

@@ -608,11 +608,12 @@ object Similarity {
     * near-duplicate PAIRS from the banded hyperplane LSH
     * ([[cosineNearDupPairs]] — Σ bucket² candidate generation, never
     * n²) resolved into connected components
-    * ([[Dedup.connectedGroups]] — Hash-Min label propagation), so
-    * transitively-linked paraphrase clusters collapse to one group id
-    * (= min member). Downstream keeps one representative per group.
-    * Both legs are the already-scale-argued building blocks; the
-    * composition adds no new shuffle shape.
+    * ([[Dedup.connectedGroups]] — per-partition union-find, then a
+    * label check: one round of four Spark jobs when the clusters are
+    * dense), so transitively-linked paraphrase clusters collapse to
+    * one group id (= min member). Downstream keeps one representative
+    * per group. Both legs are the already-scale-argued building
+    * blocks; the composition adds no new shuffle shape.
     */
   def semanticGroups(embeddings: DataFrame, threshold: Double = 0.2): DataFrame =
     semanticGroupsOfPairs(cosineNearDupPairs(embeddings, threshold))

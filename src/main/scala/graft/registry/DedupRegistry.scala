@@ -401,7 +401,7 @@ private[graft] trait DedupRegistry extends RegistryShared {
 
   /** Oracle for [[graft.operators.Dedup.connectedGroups]] over the md5
     * SimHash near-dup pairs: transitive closure via a recursive CTE,
-    * group id = min reachable doc (exactly the Hash-Min fixpoint).
+    * group id = min reachable doc (exactly the component minimum).
     */
   /** The simhash-band → reachability chain shared by the CC oracles:
     * ends with a `grp(doc_id, group_id)` CTE (must be opened with

@@ -23,7 +23,7 @@ private[graft] trait SimilarityRegistry {
 
   // CC closure over the shared pair table, memoized like the dedup
   // family's groups_* kinds (DedupRegistry precedent): without this,
-  // every consumer call re-runs the iterative Hash-Min — on the sink
+  // every consumer call re-runs the CC rounds — on the sink
   // face that re-reads the pair PARQUET and re-checkpoints the edge
   // table per call (the round-14 verdict's sim_semantic_groups sink
   // tax, +4.7 s/iteration at sf10); as a memo the closure is built
@@ -217,7 +217,7 @@ private[graft] trait SimilarityRegistry {
 
   /** Oracle for [[graft.operators.Similarity.semanticGroups]]: the
     * LSH candidate pairs above, closed transitively by a recursive
-    * CTE with group id = min reachable vec (the Hash-Min fixpoint).
+    * CTE with group id = min reachable vec (the component minimum).
     */
   private def semanticGroupsOracle: String =
     s"""WITH RECURSIVE $cosineNearDupBaseCte,

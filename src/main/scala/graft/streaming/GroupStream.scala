@@ -11,10 +11,7 @@ import graft.operators.Dedup
   * [[Dedup.connectedGroups]] — near-dup candidate PAIRS arrive forever
   * (e.g. the band-collision output of [[CurateStream]]'s stage 3, or
   * any LSH/similarity pair feed) and the doc→group mapping is kept
-  * current after every micro-batch. This was the one batch dedup
-  * stage with no streaming twin: exact dedup streams via digests,
-  * near-dup candidate generation streams via band state, but group
-  * RESOLUTION previously required a full-corpus batch CC rerun.
+  * current after every micro-batch, without a full-corpus CC rerun.
   *
   * State design — a sink-resident root CHANGELOG, not a keyed state
   * store. Union-find is inherently cross-key (merging components
@@ -37,7 +34,9 @@ import graft.operators.Dedup
   *   2. batch edges collapse to ROOT-level edges (two broadcast
   *      joins against the touched-root map) and
   *      [[Dedup.connectedGroups]] runs on that root graph — work is
-  *      O(batch), independent of corpus size;
+  *      O(batch), independent of corpus size, and a batch whose
+  *      merges are near-dup clusters resolves in one contract-then-
+  *      check round;
   *   3. the resulting `old_root → new_root` remap (merged components
   *      only) rewrites members: one more MAP-ONLY changelog scan
   *      against the broadcast remap finds every doc whose current
@@ -71,7 +70,13 @@ object GroupStream {
     StructField("root", LongType)))
 
   /** Start the incremental-CC stream over `pairs` (columns doc_a,
-    * doc_b). See object scaladoc for the state contract.
+    * doc_b, read as longs) into `outDir`: each micro-batch runs the four
+    * steps of the object scaladoc and appends one idempotent
+    * `_state/roots/batch_id=<id>` dir, so [[sinkGroups]] equals
+    * [[Dedup.connectedGroups]] over every pair seen so far.
+    * `compactEvery > 0` compacts the changelog after every
+    * `compactEvery` batches ([[compact]]); the checkpoint defaults to
+    * `outDir/_checkpoint`, durable beside the sink.
     */
   def groupsToSink(pairs: DataFrame, outDir: String,
                    checkpointDir: Option[String] = None,
