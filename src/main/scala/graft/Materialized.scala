@@ -21,6 +21,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * memo. Builders are deterministic (seed-free md5/sort-based), so
   * neither reuse nor promotion can change an oracle row.
   *
+  * A memo holds a row SET, in any order, in every face: the memo build
+  * drops the builder's top global sort, and a sink table reads back
+  * in file-listing order. Every consumer either sorts what it presents
+  * or reads the rows as a set (joins, aggregates,
+  * [[graft.operators.Dedup.connectedGroups]]).
+  *
   * Keyed by `spark.sessionUUID` (unique and stable per session — an
   * identity hash code is neither), data dir, kind, sink base and
   * threshold, so scale factors, test sessions and routing configs
@@ -106,6 +112,9 @@ object Materialized {
     * eager localCheckpoint and, when a sink base is set and its block
     * footprint reaches `spillBytes`, promote it — write the sink table
     * from the checkpoint blocks (not a recompute), then release them.
+    * A memo is a row set: the builder's global sort at its top (under
+    * Projects and Filters too) is dropped unexecuted, so the checkpoint
+    * job runs no range-partitioning sample or sort.
     */
   private def memoBuild(spark: SparkSession, dir: String, kind: String,
                         sinkBase: String, spillBytes: Long,
@@ -113,7 +122,7 @@ object Materialized {
     if (sinkBase.nonEmpty && sinkTableExists(spark, dir, kind, sinkBase))
       return asTable(spark, dir, kind, sinkBase)(sys.error(
         s"unreachable: sink table for $kind exists, build must not run"))
-    val built = build().localCheckpoint(true)
+    val built = org.apache.spark.sql.GraftSqlShim.withoutTopSort(build()).localCheckpoint(true)
     if (sinkBase.nonEmpty &&
         org.apache.spark.sql.GraftSqlShim.checkpointBytes(built).getOrElse(0L) >= spillBytes) {
       val served = asTable(spark, dir, kind, sinkBase)(built)

@@ -135,6 +135,8 @@ object VectorFunctions {
   private val dotName = "graft_dot"
   private val minhashName = "graft_minhash"
   private val simhashName = "graft_simhash"
+  private val minhashMd5Name = "graft_minhash_md5"
+  private val simhashMd5Name = "graft_simhash_md5"
   private val shinglesName = "graft_shingles"
   private val hyperName = "graft_hyperplanes"
   private val winnowName = "graft_winnow"
@@ -161,6 +163,11 @@ object VectorFunctions {
         literalInt(exprs(1), "shingleK"), literalInt(exprs(2), "numHashes")), "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       simhashName, exprs => SimHash64(exprs.head), "built-in")
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      minhashMd5Name, exprs => Md5MinHashSignature(exprs.head,
+        literalInt(exprs(1), "shingleK"), literalInt(exprs(2), "numHashes")), "built-in")
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      simhashMd5Name, exprs => Md5SimHash32(exprs.head), "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       shinglesName, exprs => WordShingles(exprs.head,
         literalInt(exprs(1), "shingleK")), "built-in")
@@ -192,6 +199,13 @@ object VectorFunctions {
       org.apache.spark.sql.functions.lit(numHashes))
 
   def simhash64(text: Column): Column = call_function(simhashName, text)
+
+  def minhashSigMd5(text: Column, shingleK: Int, numHashes: Int): Column =
+    call_function(minhashMd5Name, text,
+      org.apache.spark.sql.functions.lit(shingleK),
+      org.apache.spark.sql.functions.lit(numHashes))
+
+  def simhashMd5(lowered: Column): Column = call_function(simhashMd5Name, lowered)
 
   def wordShingles(text: Column, shingleK: Int): Column =
     call_function(shinglesName, text, org.apache.spark.sql.functions.lit(shingleK))

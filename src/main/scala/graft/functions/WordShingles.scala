@@ -24,22 +24,7 @@ case class WordShingles(child: Expression, k: Int)
     compute(input.asInstanceOf[UTF8String])
 
   def compute(input: UTF8String): ArrayData = {
-    val words = input.toString.split(" ", -1)
-    if (words.length < k) return new GenericArrayData(Array.empty[Any])
-    val seen = new java.util.LinkedHashSet[String]()
-    val sb = new java.lang.StringBuilder
-    var i = 0
-    while (i + k <= words.length) {
-      sb.setLength(0)
-      var j = 0
-      while (j < k) {
-        if (j > 0) sb.append(' ')
-        sb.append(words(i + j))
-        j += 1
-      }
-      seen.add(sb.toString)
-      i += 1
-    }
+    val seen = WordShingles.distinct(input, k)
     val out = new Array[Any](seen.size)
     val it = seen.iterator()
     var n = 0
@@ -54,4 +39,28 @@ case class WordShingles(child: Expression, k: Int)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+object WordShingles {
+  /** The distinct k-word shingles of `split(input, " ", -1)` in order
+    * of first occurrence; empty when the text has fewer than k words.
+    */
+  def distinct(input: UTF8String, k: Int): java.util.LinkedHashSet[String] = {
+    val seen = new java.util.LinkedHashSet[String]()
+    val words = input.toString.split(" ", -1)
+    val sb = new java.lang.StringBuilder
+    var i = 0
+    while (i + k <= words.length) {
+      sb.setLength(0)
+      var j = 0
+      while (j < k) {
+        if (j > 0) sb.append(' ')
+        sb.append(words(i + j))
+        j += 1
+      }
+      seen.add(sb.toString)
+      i += 1
+    }
+    seen
+  }
 }

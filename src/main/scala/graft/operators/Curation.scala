@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   *
   * Stages, in order (each consumes the previous stage's survivors):
   *   0. raw            — the corpus as read
-  *   1. quality        — [[TextAnalysis.gopherRules]] keep gate
+  *   1. quality        — [[TextAnalysis.gopherKeep]]'s keep gate
   *   2. exact          — [[Dedup.exact]] digest dedup, keep min doc_id
   *   3. neardup        — [[Dedup.minhashNearDupsMd5]] pairs →
   *                       [[Dedup.nonRepresentatives]]: keep each
@@ -64,11 +64,11 @@ object Curation {
     // The stage OPERATORS still read the text they filter, unchanged.
     val meta = d0.select(col("doc_id"), ntok.as("n_tok")).localCheckpoint(false)
 
-    val keep1 = TextAnalysis.gopherRules(d0).filter(col("keep"))
+    val keep1 = TextAnalysis.gopherKeep(d0).filter(col("keep") && col("doc_id").isNotNull)
       .select("doc_id").localCheckpoint(false)
     val d1 = d0.join(keep1, Seq("doc_id"), "left_semi")
 
-    val keep2 = Dedup.exact(d1).select(col("keep_id").as("doc_id")).localCheckpoint(false)
+    val keep2 = Dedup.exactKeepIds(d1).localCheckpoint(false)
     val d2 = d0.join(keep2, Seq("doc_id"), "left_semi")
 
     val drops3 = Dedup.nonRepresentatives(

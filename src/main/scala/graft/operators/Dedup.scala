@@ -16,20 +16,21 @@ import graft.Sizing
   *   - exact / canonical dedup: hash-groupBy on a digest — one
   *     shuffle keyed by the digest, map-side combine, no text
   *     comparison after the hash.
-  *   - MinHash: explode distinct shingles → groupBy(doc_id) with one
-  *     `min` aggregate per hash function. Partial aggregation means
-  *     the shuffle carries docs × numHashes longs, not shingles; the
-  *     per-row expressions are all codegen'd built-ins (xxhash64,
-  *     pmod) — no interpreted higher-order functions on the hot path.
+  *   - MinHash: one per-row expression hashes each document's
+  *     distinct shingles and keeps one min per hash function — a
+  *     map-only projection, no exchange at any scale.
   *   - LSH banding: candidate pairs come from joining on
   *     (band_idx, band_hash) buckets, so comparison work is
   *     Σ bucket² instead of n² — the standard near-dup shape for
   *     corpus-scale dedup. The capped bucket join is [[Lsh]].
-  *   - SimHash: 64-bit fingerprint via per-bit vote sums in one
-  *     explode + groupBy — same partial-agg shape as MinHash.
+  *   - SimHash: fingerprint from per-bit vote sums over the token
+  *     hashes, again one per-row expression with no exchange.
   *
   * All hash seeds are compile-time deterministic (splitmix64) so
   * signatures are reproducible across runs, partitionings, clusters.
+  * The md5 oracle twins (below) use the same shapes with md5 token
+  * hashes ([[graft.functions.Md5MinHashSignature]],
+  * [[graft.functions.Md5SimHash32]]).
   *
   * Why not `org.apache.spark.ml.feature.MinHashLSH` (SURVEY §7.1
   * suggested trying it first): it consumes `ml.linalg.Vector`
@@ -52,6 +53,12 @@ object Dedup {
       .groupBy(md5(col("text")).as("text_hash"))
       .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_copies"))
       .orderBy("keep_id")
+
+  /** [[exact]]'s keep ids as an unsorted `doc_id` set: the input of a
+    * semi-join, where a sort would be work no one reads.
+    */
+  private[graft] def exactKeepIds(documents: DataFrame): DataFrame =
+    documents.groupBy(md5(col("text"))).agg(min("doc_id").as("doc_id")).select("doc_id")
 
   /** Normalization-then-dedup: case-fold, collapse whitespace runs,
     * strip non-alphanumerics, THEN digest — catches the near-exact
@@ -310,11 +317,13 @@ object Dedup {
     * Every stage is the already-bounded building block: digest
     * groupBy (one shuffle), Σ bucket² banded self-join, one
     * contract-then-check CC round on near-dup clusters, one anti
-    * join. Text crosses the wire only into the shingle explode —
-    * never into CC or the final anti join.
+    * join. Text never crosses the wire: the sketches are map-side,
+    * and only ids reach CC and the final anti join. The exact keep
+    * ids are materialized once (lazily, a narrow id set), so CC's
+    * round and the final anti join read one digest groupBy.
     */
   def pipelineKeepSet(documents: DataFrame): DataFrame = {
-    val keepExact = exact(documents).select(col("keep_id").as("doc_id"))
+    val keepExact = exactKeepIds(documents).localCheckpoint(false)
     val survivors = documents.join(keepExact, Seq("doc_id"), "left_semi")
     val pairs = minhashNearDupsMd5(survivors).select("doc_a", "doc_b")
     survivors.select("doc_id")
@@ -509,11 +518,14 @@ object Dedup {
     * right side, so AQE plans the same shape on every run.
     *
     * Output covers docs appearing in ≥1 pair, ordered by doc_id; all
-    * other docs are trivially their own singleton group. Ids must be
-    * integral (they cross the union-find as longs); the output keeps
-    * their type and nullability. Throws `IllegalStateException` if
-    * `maxIter` rounds end unconverged, rather than return labels that
-    * are not yet components.
+    * other docs are trivially their own singleton group. The pairs are
+    * read as a set: a global sort on the input, at its top or under
+    * Projects and Filters (a sorted pair operator's `.select(…)`), is
+    * dropped unexecuted. Ids must be integral (they cross the
+    * union-find as longs); the output keeps their type and
+    * nullability. Throws `IllegalStateException` if `maxIter` rounds
+    * end unconverged, rather than return labels that are not yet
+    * components.
     */
   def connectedGroups(pairs: DataFrame, maxIter: Int = 20,
                       checkpoint: DataFrame => DataFrame = _.localCheckpoint(true)): DataFrame = {
@@ -553,7 +565,8 @@ object Dedup {
     // partition holds a row
     def isEmpty(df: DataFrame): Boolean =
       !df.queryExecution.toRdd.mapPartitions(rows => Iterator(rows.hasNext)).collect().contains(true)
-    var (labels, open) = round(pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
+    var (labels, open) = round(org.apache.spark.sql.GraftSqlShim.withoutTopSort(pairs)
+      .select(col("doc_a").as("src"), col("doc_b").as("dst")))
     var converged = isEmpty(open)
     var i = 1
     while (!converged && i < maxIter) {
@@ -609,61 +622,41 @@ object Dedup {
   // ---- md5-seeded oracle twins --------------------------------------
   //
   // The xxhash64-based MinHash/SimHash above are the production fast
-  // path (custom map-only expressions, Spark-native hashing) — but
-  // Spark's seeded xxhash64 is not reproducible in other engines, so
-  // those queries can only be spec-pinned, never oracle-hashed. These
-  // twins swap the token hash for md5 (universal) with arithmetic
-  // chosen to stay exact in 64-bit signed math in ANY engine:
+  // path, but Spark's seeded xxhash64 is not reproducible in other
+  // engines, so those queries can only be spec-pinned, never
+  // oracle-hashed. These twins swap the token hash for md5 (universal)
+  // with arithmetic chosen to stay exact in 64-bit signed math in ANY
+  // engine:
   //   - MinHash: h = first 7 hex chars of md5(shingle) < 2^28; affine
   //     family (a·h + b) mod M with M = 2^31-1 and a,b < 2^31 keeps
-  //     every intermediate < 2^59 — no wrap, no HUGEINT needed.
+  //     every intermediate < 2^59 — no wrap, no HUGEINT needed;
   //   - SimHash: 32-bit fingerprint from the first 8 hex chars of
   //     md5(token) — bit votes and the final Σ 2^bit fit comfortably.
-  // Same pipeline shape as the fast path (shingle → min-sketch →
-  // banded LSH join; token votes → pigeonhole bands), so a green
+  // Both sketches are the same map-only per-row expressions as the fast
+  // path ([[graft.functions.Md5MinHashSignature]],
+  // [[graft.functions.Md5SimHash32]]): each document is hashed once,
+  // with no exchange before the banding. The DuckDB oracle spells out
+  // the explode + groupBy formulation of the same values, so a green
   // CORRECTNESS row here hash-validates the whole dedup pipeline
   // end-to-end against an independent engine.
 
-  private[graft] val Md5M = 2147483647L // 2^31 - 1 (prime)
-
-  private def splitmix64(seed: Long): Long = {
-    var z = seed + 0x9E3779B97F4A7C15L
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
-  }
-
-  /** Affine coefficients for the md5 MinHash family — compile-time
-    * deterministic, embedded as literals in the DuckDB oracle SQL.
-    */
-  private[graft] val md5A: Array[Long] =
-    Array.tabulate(16)(i => (splitmix64(1000L + 2 * i) & Long.MaxValue) % (Md5M - 1) + 1)
-  private[graft] val md5B: Array[Long] =
-    Array.tabulate(16)(i => (splitmix64(1001L + 2 * i) & Long.MaxValue) % Md5M)
-
-  /** 28-bit shingle hash: first 7 hex chars of md5, as a long. */
-  private def md5Hash28(c: Column): Column =
-    conv(substring(md5(c.cast("binary")), 1, 7), 16, 10).cast("long")
-
   /** Shared md5-MinHash banded-signature builder: per doc, the
-    * numHashes affine min-sketch plus one row per LSH band with its
+    * numHashes affine min-sketch ([[graft.functions.Md5MinHashSignature]],
+    * a map-only projection) plus one row per LSH band with its
     * concatenated band key — the candidate-generation half of every
     * md5-twin LSH op ([[minhashNearDupsMd5]] self-join,
-    * [[decontaminateNearDup]] train×eval join).
+    * [[decontaminateNearDup]] train×eval join, the curation stream's
+    * probe). One row per input row: no exchange between the scan and
+    * the band explode.
     */
   private[graft] def md5BandedSignatures(documents: DataFrame, shingleK: Int,
                                          numHashes: Int, bands: Int): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    require(numHashes <= md5A.length, s"at most ${md5A.length} hash functions")
     val rowsPerBand = numHashes / bands
-    val withH = explodedShingles(documents, shingleK)
-      .select(col("doc_id"), md5Hash28(col("sh")).as("h")) // null sh (short doc) → null h
-    val minCols = (0 until numHashes).map(i =>
-      min(pmod(col("h") * md5A(i) + md5B(i), lit(Md5M))).as(s"_s$i"))
-    val sigs = withH.groupBy("doc_id")
-      .agg(minCols.head, minCols.tail: _*)
-      .select(col("doc_id"),
-        array((0 until numHashes).map(i => coalesce(col(s"_s$i"), lit(Md5M))): _*).as("signature"))
+    graft.functions.VectorFunctions.ensureRegistered(documents.sparkSession)
+    val sigs = documents.select(col("doc_id"),
+      graft.functions.VectorFunctions.minhashSigMd5(col("text"), shingleK, numHashes)
+        .as("signature"))
     sigs.select(col("doc_id"), col("signature"),
       explode(transform(sequence(lit(0), lit(bands - 1)),
         bnd => struct(bnd.as("band_idx"),
@@ -675,11 +668,11 @@ object Dedup {
   }
 
   /** Oracle twin of [[minhashNearDups]]: md5-hashed shingles, affine
-    * min-sketch mod 2^31-1, the same capped banded join ([[Lsh]]) and
-    * agreement-estimated Jaccard. Signature build here is explode +
-    * groupBy (one shuffle with map-side combine) rather than a custom
-    * expression — this variant exists for cross-engine checkability,
-    * not throughput.
+    * min-sketch mod 2^31-1 ([[md5BandedSignatures]], map-only), the
+    * same capped banded join ([[Lsh]]) and agreement-estimated
+    * Jaccard. Sorted by (doc_a, doc_b); consumers that read the pairs
+    * as a set ([[connectedGroups]], a [[graft.Materialized]] memo) skip
+    * that sort.
     */
   def minhashNearDupsMd5(documents: DataFrame, shingleK: Int = 5, numHashes: Int = 16,
                          bands: Int = 4, threshold: Double = 0.5,
@@ -820,25 +813,23 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** Oracle twin of [[simhash]]: 32-bit fingerprint, md5 token hash.
-    * Explode tokens → 32 vote sums in one partial-agg shuffle →
-    * Σ 2^bit. (The 32-wide generated aggregate is fine here; the
-    * production path stays the zero-shuffle [[simhash]] expression.)
+  /** Oracle twin of [[simhash]]: a 32-bit fingerprint from md5 token
+    * hashes, one (doc_id, simhash32) row per document, sorted by
+    * doc_id. The fingerprint is [[graft.functions.Md5SimHash32]] over
+    * `lower(text)`, a map-only projection; a null-text document has no
+    * tokens and no row.
     */
-  def simhashMd5(documents: DataFrame): DataFrame = {
-    val withH = documents
-      .select(col("doc_id"), explode(split(lower(col("text")), " ", -1)).as("tok"))
+  def simhashMd5(documents: DataFrame): DataFrame =
+    simhashMd5Unsorted(documents).orderBy("doc_id")
+
+  /** [[simhashMd5]]'s rows before the sort, for the banding and top-k
+    * consumers that read them as a set.
+    */
+  private def simhashMd5Unsorted(documents: DataFrame): DataFrame = {
+    graft.functions.VectorFunctions.ensureRegistered(documents.sparkSession)
+    documents.filter(col("text").isNotNull)
       .select(col("doc_id"),
-        conv(substring(md5(col("tok").cast("binary")), 1, 8), 16, 10).cast("long").as("h"))
-    val voteCols = (0 until 32).map(bit =>
-      sum(when(shiftrightunsigned(col("h"), bit).bitwiseAND(lit(1L)) === lit(1L), lit(1))
-        .otherwise(lit(-1))).as(s"_v$bit"))
-    withH.groupBy("doc_id")
-      .agg(voteCols.head, voteCols.tail: _*)
-      .select(col("doc_id"),
-        (0 until 32).map(bit => when(col(s"_v$bit") > 0, lit(1L << bit)).otherwise(lit(0L)))
-          .reduce(_ + _).as("simhash32"))
-      .orderBy("doc_id")
+        graft.functions.VectorFunctions.simhashMd5(lower(col("text"))).as("simhash32"))
   }
 
   /** Per-document word-window passages: text split into consecutive
@@ -931,14 +922,15 @@ object Dedup {
     * production path whose 16-bit bands keep 65k buckets). The DuckDB
     * oracle CTE mirrors the [[Lsh.capBuckets]] rule verbatim, so the
     * twin stays hash-checkable. Production corpora still run
-    * [[simhashNearDups]].
+    * [[simhashNearDups]]. The fingerprints are banded unsorted: no
+    * exchange runs between the scan and the band explode.
     */
   def simhashMd5NearDups(documents: DataFrame, maxDist: Int = 3,
                          maxBucket: Int = 256): DataFrame = {
     val nBands = maxDist + 1
     require(32 % nBands == 0, "maxDist+1 must divide 32")
     val bandBits = 32 / nBands
-    val sigs = simhashMd5(documents)
+    val sigs = simhashMd5Unsorted(documents)
     val bandStructs = (0 until nBands).map { bIdx =>
       struct(lit(bIdx).as("band_idx"),
         shiftrightunsigned(col("simhash32"), bIdx * bandBits)
@@ -1424,17 +1416,20 @@ object Dedup {
     // join) — materialize once: the frame is mod-sample-sized
     // (|docs|/sampleMod rows of token arrays), and without the
     // checkpoint each reference re-runs the explode+distinct+df-join
-    // chain (measured 3× of the query's cost at sf0.1). LAZY: blocks
-    // persist at the first action's first compute and the other two
-    // references read them; an eager checkpoint here would run the
-    // chain at DataFrame-CONSTRUCTION time, charging plan-only
-    // consumers (explain, plan audits) full execution.
+    // chain (measured 3× of the query's cost at sf0.1). EAGER: under
+    // AQE even a lazy checkpoint runs the chain's shuffle stages at
+    // construction, and its last stage then ran inside the consumers'
+    // concurrent jobs. The first of those to finish cut the lineage
+    // the others were still computing, so their tasks reported into
+    // metrics already garbage-collected (DAGScheduler "non-existent
+    // accumulator" errors, seen under GC pressure) and two jobs could
+    // compute the same partition twice.
     val perDoc = keyed.groupBy("doc_id")
       .agg(array_sort(collect_list(col("key"))).as("keys"))
       .select(col("doc_id"), col("keys"), size(col("keys")).as("len"))
       .withColumn("p",
         col("len") - ceil(col("len") * threshold).cast("int") + 1)
-      .localCheckpoint(false)
+      .localCheckpoint(true)
     val prefix = perDoc
       .select(col("doc_id"), col("p"), col("len"),
         posexplode(col("keys")).as(Seq("pos", "ktok")))
@@ -1495,7 +1490,7 @@ object Dedup {
 
   def simhashHammingTopK(documents: DataFrame, k: Int = 5,
                          nQueries: Int = 10): DataFrame = {
-    val fp = simhashMd5(documents)
+    val fp = simhashMd5Unsorted(documents)
     val q = fp.filter(col("doc_id") < nQueries)
       .select(col("doc_id").as("qid"), col("simhash32").as("qfp"))
     val scored = fp.select(col("doc_id").as("cid"), col("simhash32").as("cfp"))

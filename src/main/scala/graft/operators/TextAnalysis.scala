@@ -1495,26 +1495,44 @@ object TextAnalysis {
   def gopherRules(documents: DataFrame,
                   minWords: Int = 5, maxWords: Int = 100000,
                   minMeanLen: Double = 3.0, maxMeanLen: Double = 10.0,
-                  minAlphaFrac: Double = 0.8, minStopHits: Int = 2): DataFrame = {
-    val docs = documents.select(col("doc_id"),
-      filter(split(col("text"), " ", -1), w => length(w) > 0).as("ws"))
-    val scored = docs.select(
-      col("doc_id"),
-      size(col("ws")).as("n_words"),
-      aggregate(col("ws"), lit(0L), (acc, w) => acc + length(w)).as("sum_len"),
-      size(filter(col("ws"), w => w.rlike("[A-Za-z]"))).as("n_alpha"),
-      size(filter(col("ws"), w => w.isInCollection(gopherStopwords))).as("n_stop"))
+                  minAlphaFrac: Double = 0.8, minStopHits: Int = 2): DataFrame =
+    gopherScored(documents.select("doc_id", "text"), minWords, maxWords,
+        minMeanLen, maxMeanLen, minAlphaFrac, minStopHits)
+      .select("doc_id", "n_words", "mean_word_len", "frac_alpha", "n_stop", "keep")
+      .orderBy("doc_id")
+
+  /** `documents` with [[gopherRules]]' `keep` column appended, row for
+    * row: the quality gate as a map-only projection, for pipelines
+    * that filter on it instead of joining the gate's id set back.
+    */
+  def gopherKeep(documents: DataFrame): DataFrame =
+    gopherScored(documents).select(documents.columns.map(col) :+ col("keep"): _*)
+
+  /** `documents`' columns followed by the rule statistics and `keep`,
+    * in two projections over the once-materialized word array.
+    */
+  private def gopherScored(documents: DataFrame,
+                           minWords: Int = 5, maxWords: Int = 100000,
+                           minMeanLen: Double = 3.0, maxMeanLen: Double = 10.0,
+                           minAlphaFrac: Double = 0.8, minStopHits: Int = 2): DataFrame = {
+    val in = documents.columns.map(col).toSeq
+    val docs = documents.select(in :+
+      filter(split(col("text"), " ", -1), w => length(w) > 0).as("_ws"): _*)
+    val scored = docs.select(in ++ Seq(
+      size(col("_ws")).as("n_words"),
+      aggregate(col("_ws"), lit(0L), (acc, w) => acc + length(w)).as("sum_len"),
+      size(filter(col("_ws"), w => w.rlike("[A-Za-z]"))).as("n_alpha"),
+      size(filter(col("_ws"), w => w.isInCollection(gopherStopwords))).as("n_stop")): _*)
     val meanLen = col("sum_len").cast("double") / col("n_words")
     val alphaFrac = col("n_alpha").cast("double") / col("n_words")
-    scored.select(
-      col("doc_id"), col("n_words"),
+    scored.select(in ++ Seq(
+      col("n_words"),
       when(col("n_words") > 0, round(meanLen, 4)).as("mean_word_len"),
       when(col("n_words") > 0, round(alphaFrac, 6)).as("frac_alpha"),
       col("n_stop"),
       (col("n_words") >= minWords && col("n_words") <= maxWords &&
         meanLen >= minMeanLen && meanLen <= maxMeanLen &&
-        alphaFrac >= minAlphaFrac && col("n_stop") >= minStopHits).as("keep"))
-      .orderBy("doc_id")
+        alphaFrac >= minAlphaFrac && col("n_stop") >= minStopHits).as("keep")): _*)
   }
 
   /** Language × source composition: per (source, lang) cell, doc and

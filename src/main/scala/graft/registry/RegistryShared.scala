@@ -24,11 +24,11 @@ private[graft] trait RegistryShared {
     * the identical integer arithmetic.
     */
   protected def minhashPairCtes(src: String): String = {
-    import graft.operators.Dedup
+    import graft.functions.Md5MinHashSignature.{A, B, M}
     val n = 16; val bands = 4; val rpb = n / bands
     val minCols = (0 until n).map(i =>
-      s"min((h * ${Dedup.md5A(i)} + ${Dedup.md5B(i)}) % ${Dedup.Md5M}) AS s$i").mkString(",\n               ")
-    val sigList = (0 until n).map(i => s"coalesce(s$i, ${Dedup.Md5M})").mkString("[", ", ", "]")
+      s"min((h * ${A(i)} + ${B(i)}) % $M) AS s$i").mkString(",\n               ")
+    val sigList = (0 until n).map(i => s"coalesce(s$i, $M)").mkString("[", ", ", "]")
     val bandArms = (0 until bands).map { bnd =>
       val key = (bnd * rpb until (bnd + 1) * rpb).map(i => s"sig[${i + 1}]")
         .mkString("concat_ws(',', ", ", ", ")")

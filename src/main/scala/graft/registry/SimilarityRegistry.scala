@@ -35,7 +35,8 @@ private[graft] trait SimilarityRegistry {
 
   protected def simQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "sim_knn_graph" -> ((s, d) => Similarity.knnGraph(Tables.embeddings(s, d))),
-    "sim_semantic_groups" -> ((s, d) => semanticGroupsShared(s, d)),
+    "sim_semantic_groups" -> ((s, d) =>
+      semanticGroupsShared(s, d).orderBy(org.apache.spark.sql.functions.col("vec_id"))),
     "sim_l2_topk" -> ((s, d) => Similarity.l2TopK(Tables.embeddings(s, d))),
     "sim_dim_stats" -> ((s, d) => Similarity.dimensionStats(Tables.embeddings(s, d))),
     "sim_top_component" -> ((s, d) => Similarity.topComponent(Tables.embeddings(s, d))),

@@ -19,7 +19,8 @@ import graft.operators.{Dedup, Lsh, TextAnalysis}
   *
   * Per micro-batch (`foreachBatch` — the escape hatch that hands each
   * finalized micro-batch to ordinary DataFrame code):
-  *   1. quality   — [[TextAnalysis.gopherRules]] keep gate (map-only);
+  *   1. quality   — [[TextAnalysis.gopherKeep]]'s keep column, a
+  *                  map-only filter (no join back to the doc ids);
   *   2. exact     — keep the batch-min doc_id per md5(text) digest,
   *                  then drop digests already accepted in prior
   *                  batches. The digest-state probe is two MAP-ONLY
@@ -161,9 +162,10 @@ object CurateStream {
     val spark = batch.sparkSession
     val d0 = batch.select(col("doc_id"), col("source"), col("lang"), col("text"))
 
-    // 1. quality gate (map-only)
-    val keep1 = TextAnalysis.gopherRules(d0).filter(col("keep")).select("doc_id")
-    val d1 = d0.join(keep1, Seq("doc_id"), "left_semi")
+    // 1. quality gate (map-only); a null doc_id is dropped, as the
+    // batch funnel's semi-join on doc_id drops it
+    val d1 = TextAnalysis.gopherKeep(d0)
+      .filter(col("keep") && col("doc_id").isNotNull).drop("keep")
 
     // 2. exact dedup: batch-min per digest, minus already-seen digests.
     // Both state joins broadcast the BATCH side so the corpus-sized

@@ -1,6 +1,6 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Sort}
 
 /** Minimal shim into `private[sql]` plan construction, needed to wrap
   * graft's custom logical operators (e.g. AsOfJoinPlan) in a
@@ -14,6 +14,25 @@ object GraftSqlShim {
 
   def analyzedPlan(df: Dataset[_]): LogicalPlan =
     df.queryExecution.analyzed
+
+  /** `df` without the global sort at its top, looking through
+    * deterministic Projects and Filters: the same rows, for a consumer
+    * that reads them as a set ([[graft.Materialized]]'s memo build,
+    * `Dedup.connectedGroups`' input). Spark's `EliminateSorts` does
+    * this under joins and aggregates, but not under a checkpoint or a
+    * `mapPartitions`. Any other top is returned as is.
+    */
+  def withoutTopSort(df: DataFrame): DataFrame = {
+    def strip(p: LogicalPlan): Option[LogicalPlan] = p match {
+      case Sort(_, true, child, _) => Some(strip(child).getOrElse(child))
+      case pr: Project if pr.projectList.forall(_.deterministic) =>
+        strip(pr.child).map(c => pr.copy(child = c))
+      case f: Filter if f.condition.deterministic =>
+        strip(f.child).map(c => f.copy(child = c))
+      case _ => None
+    }
+    strip(df.queryExecution.analyzed).map(ofRows(df.sparkSession, _)).getOrElse(df)
+  }
 
   /** `SparkSession.sessionUUID` is `private[sql]` — unique and stable
     * per session, unlike an identity hash code (which a new session

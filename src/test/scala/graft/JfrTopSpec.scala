@@ -29,7 +29,13 @@ class JfrTopSpec extends AnyFunSuite {
     val busy = new Thread(() => {
       val end = System.nanoTime + 1000000000L
       var x = 0L
-      while (System.nanoTime < end) x = x * 31 + 7
+      // read the clock once per million steps: a sample that lands in
+      // the clock call cannot walk the stack and is dropped, and a loop
+      // that mostly reads the clock recorded no sample at all in some runs
+      while (System.nanoTime < end) {
+        var i = 0
+        while (i < 1000000) { x = x * 31 + 7; i += 1 }
+      }
       if (x == 42) println(x)
     }, "Executor task launch worker for task 0.0 in stage 0.0 (TID 0)")
     busy.start()

@@ -853,6 +853,23 @@ class TextAnalysisSpec extends SparkSpec {
     assert(out(5L) == ((0, None, None, 0, false)))
   }
 
+  test("gopherKeep appends gopherRules' keep to every input row with no exchange") {
+    val docs = Tables.documents(spark, sf0001)
+    val kept = TextAnalysis.gopherKeep(docs)
+    assert(kept.columns.toSeq == docs.columns.toSeq :+ "keep")
+    assert(kept.count() == docs.count())
+    val expected = TextAnalysis.gopherRules(docs).select("doc_id", "keep")
+      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+    assert(expected.values.toSet == Set(true, false))
+    assert(kept.select("doc_id", "keep").collect()
+      .map(r => r.getLong(0) -> r.getBoolean(1)).toMap == expected)
+    // through AQE's wrapper, which a join would plan
+    val plan = kept.queryExecution.executedPlan
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    assert(helper.collect(plan) {
+      case e: org.apache.spark.sql.execution.exchange.Exchange => e }.isEmpty, plan.toString)
+  }
+
   test("readabilityBySource: vowel-run syllables, sentence floor, zero-word docs dropped") {
     val d = Seq(
       ("a", "The cat sat. The cat ran!"), // 6 words, 2 sentences, 6 vowel runs
