@@ -4,11 +4,36 @@ import java.nio.file.{Files, Paths}
 
 /** Plan-audit main: dumps the formatted plan of every SparkEntry
   * query (at the given SF dir) to one file for review — the
-  * `.explain("formatted")` loop from the build brief, automated.
-  * Flags obviously-wrong shapes (cartesian products, nested-loop
-  * joins) in a trailing summary.
+  * `.explain("formatted")` loop, automated. Flags obviously-wrong
+  * shapes (cartesian products, nested-loop joins) in a trailing
+  * summary.
+  *
+  * The dump is [[normalize]]d, so the dumps of two source trees
+  * compare with plain `diff`: any line that differs is a plan that
+  * moved.
+  *
+  * Usage: `runMain graft.Explain [sfDir] [outFile]`.
   */
 object Explain {
+  /** `plan` without the counters that differ from run to run on the
+    * same plan: expression ids (`doc_id#123L` → `doc_id#L`), exchange
+    * `plan_id`s, the suffixes of higher-order-function lambda
+    * variables (`x_12` → `x_`), checkpoint RDD ids and their call-site
+    * line numbers (`MapPartitionsRDD[176] at localCheckpoint at
+    * Graph.scala:167` → `MapPartitionsRDD[] at localCheckpoint at
+    * Graph.scala`), and the JVM names of lambdas and aggregator
+    * instances (`Multimodal$$$Lambda$5911/0x00007f15…@66dee88a` →
+    * `Multimodal$$$Lambda@`).
+    */
+  def normalize(plan: String): String =
+    plan.replaceAll("#\\d+", "#")
+      .replaceAll("plan_id=\\d+", "plan_id=")
+      .replaceAll("\\b([xyz])_\\d+\\b", "$1_")
+      .replaceAll("RDD\\[\\d+\\]", "RDD[]")
+      .replaceAll("(\\.scala):\\d+", "$1")
+      .replaceAll("\\$Lambda\\$\\d+/0x\\p{XDigit}+", "\\$Lambda")
+      .replaceAll("(?<=[\\w$])@\\p{XDigit}{1,8}\\b", "@")
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = if (args.length > 1) args(1) else "/tmp/plans.txt"
@@ -20,7 +45,7 @@ object Explain {
         val df = fn(spark, sfDir)
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
-        sb.append(s"\n${"=" * 70}\n== $name\n${"=" * 70}\n$plan")
+        sb.append(s"\n${"=" * 70}\n== $name\n${"=" * 70}\n${normalize(plan)}")
         if (plan.contains("CartesianProduct") && !name.startsWith("sim_"))
           flags += s"$name: CartesianProduct"
         if (plan.contains("BroadcastNestedLoopJoin") && !name.startsWith("sim_"))

@@ -20,6 +20,12 @@ import graft.plans.AsOfJoinStrategy
   * `CollationAwareUTF8String`, whose static initializer builds an
   * `initcap`-only title-case table over every code point: a
   * 1.4-1.5 s stall in the first lowercasing task of every JVM.
+  *
+  * The SQL functions are `graft_cosine` and `graft_dot`, the only
+  * kernels callable from SQL. DataFrame code reaches every kernel,
+  * these two included, through [[graft.functions.VectorFunctions]]'
+  * column builders, which construct the expression nodes directly and
+  * look nothing up in a function registry.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

@@ -99,7 +99,6 @@ object StreamStateProbe {
     val docRows = docsDf
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3)))
       .sortBy(_._1).toSeq
-    graft.functions.VectorFunctions.ensureRegistered(spark)
 
     val twinsBody: String = if (sinkOnly) "" else {
     // 1. sessionGaps: keyed state is exactly one entry per user

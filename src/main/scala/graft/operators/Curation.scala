@@ -58,17 +58,17 @@ object Curation {
     val ntok = size(split(col("text"), " ", -1)).cast("long")
     // The funnel ROWS only need (count, Σ tokens) of each stage's
     // survivors — tokenize the corpus ONCE into a narrow per-doc count
-    // table (a few MB of longs, same lazy-checkpoint treatment as the
+    // table (a few MB of longs, same eager-checkpoint treatment as the
     // survivor-ID sets) instead of re-splitting the full text per stage
     // row: the sf10 plan held one tokenize scan per funnel row, 7 total.
     // The stage OPERATORS still read the text they filter, unchanged.
-    val meta = d0.select(col("doc_id"), ntok.as("n_tok")).localCheckpoint(false)
+    val meta = d0.select(col("doc_id"), ntok.as("n_tok")).localCheckpoint(true)
 
     val keep1 = TextAnalysis.gopherKeep(d0).filter(col("keep") && col("doc_id").isNotNull)
-      .select("doc_id").localCheckpoint(false)
+      .select("doc_id").localCheckpoint(true)
     val d1 = d0.join(keep1, Seq("doc_id"), "left_semi")
 
-    val keep2 = Dedup.exactKeepIds(d1).localCheckpoint(false)
+    val keep2 = Dedup.exactKeepIds(d1).localCheckpoint(true)
     val d2 = d0.join(keep2, Seq("doc_id"), "left_semi")
 
     val drops3 = Dedup.nonRepresentatives(
@@ -78,20 +78,21 @@ object Curation {
     // shingle-join subtrees per branch (exchange reuse only catches
     // identical exchanges, not the whole chain). Checkpointing just
     // the narrow survivor-ID sets (a few thousand longs) makes every
-    // later stage a cheap semi-join against the one scan. Lazy
-    // (eager=false) so merely constructing the frame stays free —
-    // materialization happens on the first action and is reused after.
+    // later stage a cheap semi-join against the one scan. Eager: a lazy
+    // cut runs its last stage inside the first consumers' concurrent
+    // jobs, and each of them computes the blocks (the same race as
+    // `Dedup.prefixFilterScored`'s cut).
     val ids3 = d2.join(drops3, Seq("doc_id"), "left_anti")
-      .select("doc_id").localCheckpoint(false)
+      .select("doc_id").localCheckpoint(true)
     val d3 = d2.join(ids3, Seq("doc_id"), "left_semi")
 
     val keep4 = Dedup.decontaminate(d3, evalModulo, shingleK)
       .filter(!col("contaminated")).select("doc_id")
-    val ids4 = ids3.join(keep4, Seq("doc_id"), "left_semi").localCheckpoint(false)
+    val ids4 = ids3.join(keep4, Seq("doc_id"), "left_semi").localCheckpoint(true)
     val d4 = d2.join(ids4, Seq("doc_id"), "left_semi")
 
     val keep5 = TextAnalysis.mixResample(d4, scale).select("doc_id")
-    val ids5 = ids4.join(keep5, Seq("doc_id"), "left_semi").localCheckpoint(false)
+    val ids5 = ids4.join(keep5, Seq("doc_id"), "left_semi").localCheckpoint(true)
     val d5 = d2.join(ids5, Seq("doc_id"), "left_semi")
 
     // Funnel rows aggregate the narrow `meta` table semi-joined with the

@@ -74,7 +74,6 @@ object Dedup {
     * 16-byte digests.
     */
   def exactNormalized(documents: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(documents.sparkSession)
     documents
       .select(col("doc_id"),
         md5(graft.functions.VectorFunctions.normalizeText(col("text")))
@@ -133,7 +132,6 @@ object Dedup {
     * than k words keep one null-shingle row (explode_outer).
     */
   private[graft] def explodedShingles(documents: DataFrame, k: Int): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(documents.sparkSession)
     documents
       .select(col("doc_id"),
         graft.functions.VectorFunctions.wordShingles(col("text"), k).as("shingles"))
@@ -153,7 +151,6 @@ object Dedup {
     * distinct set, same seeds, same xxhash64).
     */
   def minhashSignatures(documents: DataFrame, shingleK: Int = 5, numHashes: Int = 32): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(documents.sparkSession)
     documents.select(col("doc_id"),
       graft.functions.VectorFunctions.minhashSig(col("text"), shingleK, numHashes).as("signature"))
   }
@@ -197,7 +194,6 @@ object Dedup {
     * janino compiles of the 64-wide generated aggregate).
     */
   def simhash(documents: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(documents.sparkSession)
     documents.select(col("doc_id"),
       graft.functions.VectorFunctions.simhash64(col("text")).as("simhash"))
   }
@@ -507,8 +503,9 @@ object Dedup {
     *   3. otherwise the open label pairs are the next round's edges
     *      (the same components over far fewer nodes), and one left
     *      join relabels the nodes with that round's labels.
-    * A round is one materialization (the groupBy and the window
-    * shuffles) plus a one-job emptiness check; each task's union-find
+    * A round is one eager `localCheckpoint` (the groupBy and the
+    * window shuffles, held in executor-local blocks with the lineage
+    * cut) plus a one-job emptiness check; each task's union-find
     * holds its partition's distinct nodes in memory. In a clique every
     * member shares a partition with an edge to the minimum, so dense
     * near-dup clusters resolve in the first round, with no join.
@@ -527,14 +524,7 @@ object Dedup {
     * end unconverged, rather than return labels that are not yet
     * components.
     */
-  def connectedGroups(pairs: DataFrame, maxIter: Int = 20,
-                      checkpoint: DataFrame => DataFrame = _.localCheckpoint(true)): DataFrame = {
-    // `checkpoint` materializes a round and cuts lineage. Default:
-    // localCheckpoint (executor-local blocks — right for local mode
-    // and tests). On a cluster pass `df => df.checkpoint(true)` with
-    // spark.sparkContext.setCheckpointDir on durable storage, so a
-    // lost executor replays one round from the reliable copy instead
-    // of losing the chain.
+  def connectedGroups(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     val id = pairs.select(col("doc_a").as("id"))
       .union(pairs.select(col("doc_b").as("id"))).schema.head
     require(Seq(ByteType, ShortType, IntegerType, LongType).contains(id.dataType),
@@ -548,15 +538,15 @@ object Dedup {
     // a node sent to itself carry the labels; rows whose label is
     // above their window's min are the open label pairs.
     def round(edges: DataFrame): (DataFrame, DataFrame) = {
-      val t = checkpoint(
-        edges.select(col("src").cast("long"), col("dst").cast("long"))
-          .mapPartitions(unionFindStars)(stars)
-          .groupBy("node").agg(min("root").as("label"), collect_set("root").as("roots"))
-          .select(col("node"), col("label"),
-            explode(array_union(array(col("node")), col("roots"))).as("key"))
-          .select(col("node"), col("label"), (col("key") === col("node")).as("own"),
-            min("label").over(Window.partitionBy("key")).as("key_min"))
-          .filter(col("own") || col("label") =!= col("key_min")))
+      val t = edges.select(col("src").cast("long"), col("dst").cast("long"))
+        .mapPartitions(unionFindStars)(stars)
+        .groupBy("node").agg(min("root").as("label"), collect_set("root").as("roots"))
+        .select(col("node"), col("label"),
+          explode(array_union(array(col("node")), col("roots"))).as("key"))
+        .select(col("node"), col("label"), (col("key") === col("node")).as("own"),
+          min("label").over(Window.partitionBy("key")).as("key_min"))
+        .filter(col("own") || col("label") =!= col("key_min"))
+        .localCheckpoint(true)
       (t.filter(col("own")).select("node", "label"),
         t.filter(col("label") =!= col("key_min"))
           .select(col("label").as("src"), col("key_min").as("dst")))
@@ -571,9 +561,10 @@ object Dedup {
     var i = 1
     while (!converged && i < maxIter) {
       val (next, nextOpen) = round(open)
-      labels = checkpoint(labels
+      labels = labels
         .join(next.select(col("node").as("label"), col("label").as("next")), Seq("label"), "left")
-        .select(col("node"), coalesce(col("next"), col("label")).as("label")))
+        .select(col("node"), coalesce(col("next"), col("label")).as("label"))
+        .localCheckpoint(true)
       open = nextOpen
       converged = isEmpty(open)
       i += 1
@@ -653,7 +644,6 @@ object Dedup {
                                          numHashes: Int, bands: Int): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rowsPerBand = numHashes / bands
-    graft.functions.VectorFunctions.ensureRegistered(documents.sparkSession)
     val sigs = documents.select(col("doc_id"),
       graft.functions.VectorFunctions.minhashSigMd5(col("text"), shingleK, numHashes)
         .as("signature"))
@@ -826,7 +816,6 @@ object Dedup {
     * consumers that read them as a set.
     */
   private def simhashMd5Unsorted(documents: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(documents.sparkSession)
     documents.filter(col("text").isNotNull)
       .select(col("doc_id"),
         graft.functions.VectorFunctions.simhashMd5(lower(col("text"))).as("simhash32"))
@@ -1091,7 +1080,6 @@ object Dedup {
     */
   def lexicalVsSemantic(documents: DataFrame, embeddings: DataFrame,
                         pairs: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(documents.sparkSession)
     val vecs = embeddings.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     pairs
       .join(vecs.select(col("vec_id").as("doc_a"), col("v").as("va")), Seq("doc_a"))
@@ -1126,7 +1114,6 @@ object Dedup {
     * map-side to a sources-sized final exchange.
     */
   def ngramNovelty(documents: DataFrame, shingleK: Int = 5): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(documents.sparkSession)
     val srcSh = documents
       .select(col("source"),
         explode(graft.functions.VectorFunctions.wordShingles(col("text"), shingleK)).as("sh"))
@@ -1531,7 +1518,6 @@ object Dedup {
     */
   def winnowPairs(documents: DataFrame, k: Int = 4, w: Int = 4,
                   minShared: Int = 2, maxDf: Int = 1000): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(documents.sparkSession)
     val fps = documents
       .select(col("doc_id"),
         explode(graft.functions.VectorFunctions.winnowFps(col("text"), k, w))

@@ -1624,7 +1624,7 @@ object EventOps {
     val scored = vecs.select(col("user_id").as("cid"), col("v").as("cv"))
       .join(broadcast(q), col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"),
-        round(graft.operators.Similarity.cosine(col("qv"), col("cv")), 6)
+        round(graft.functions.VectorFunctions.cosineSim(col("qv"), col("cv")), 6)
           .as("cos_sim"))
     val w = Window.partitionBy("qid").orderBy(desc("cos_sim"), col("cid"))
     scored.withColumn("rnk", row_number().over(w).cast("long"))

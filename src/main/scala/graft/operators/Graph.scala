@@ -22,36 +22,37 @@ object Graph {
     * Per iteration: one hash join (edges × current ranks, both keyed
     * on the node id) and one partial-agg shuffle summing incoming
     * contributions — the standard MapReduce-PageRank shape, O(|E|)
-    * per round with no driver-side data movement. `checkpoint` (same
-    * pluggable hook as [[Dedup.connectedGroups]]) materializes the
-    * edge list once and each round's rank table, cutting lineage so
-    * the plan stays flat; node count rides a 1-row broadcast cross
+    * per round with no driver-side data movement. An eager
+    * `localCheckpoint` materializes the edge list once and each
+    * round's rank table, cutting lineage so the plan stays flat (as
+    * in [[Dedup.connectedGroups]]); node count rides a 1-row broadcast cross
     * join (the audited scalar pattern). Dangling nodes cannot exist
     * here: every node of an undirected pair list has out-degree ≥ 1.
     */
-  def pageRank(pairs: DataFrame, iters: Int = 3, damping: Double = 0.85,
-               checkpoint: DataFrame => DataFrame = _.localCheckpoint(true)): DataFrame = {
-    val edges = checkpoint(
-      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-        .distinct())
+  def pageRank(pairs: DataFrame, iters: Int = 3, damping: Double = 0.85): DataFrame = {
+    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+      .distinct()
+      .localCheckpoint(true)
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     val nodes = edges.select(col("src").as("node")).distinct()
     val nN = nodes.agg(count(lit(1)).as("n"))
-    var pr = checkpoint(nodes.crossJoin(broadcast(nN))
-      .select(col("node"), (lit(1.0) / col("n")).as("pr"), col("n")))
+    var pr = nodes.crossJoin(broadcast(nN))
+      .select(col("node"), (lit(1.0) / col("n")).as("pr"), col("n"))
+      .localCheckpoint(true)
     for (_ <- 1 to iters) {
       val contrib = edges
         .join(pr.select(col("node").as("src"), col("pr")), Seq("src"))
         .join(deg, Seq("src"))
         .select(col("dst").as("node"), (col("pr") / col("deg")).as("c"))
         .groupBy("node").agg(sum("c").as("in_sum"))
-      pr = checkpoint(pr.select(col("node"), col("n"))
+      pr = pr.select(col("node"), col("n"))
         .join(contrib, Seq("node"), "left")
         .select(col("node"),
           ((lit(1.0) - lit(damping)) / col("n") +
             lit(damping) * coalesce(col("in_sum"), lit(0.0))).as("pr"),
-          col("n")))
+          col("n"))
+        .localCheckpoint(true)
     }
     pr.select(col("node"), round(col("pr"), 6).as("pagerank")).orderBy("node")
   }
@@ -163,12 +164,11 @@ object Graph {
     * alive set, one partial-agg count — O(|E|) a round, alive-set
     * lineage cut per round, no driver data movement.
     */
-  def kCorePeel(pairs: DataFrame, k: Int = 2, rounds: Int = 3,
-                checkpoint: DataFrame => DataFrame = _.localCheckpoint(true)): DataFrame = {
-    val edges = checkpoint(
-      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-        .distinct()) // duplicate pair rows must not inflate degrees
+  def kCorePeel(pairs: DataFrame, k: Int = 2, rounds: Int = 3): DataFrame = {
+    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+      .distinct() // duplicate pair rows must not inflate degrees
+      .localCheckpoint(true)
     var alive = edges.select(col("src").as("node")).distinct()
     var peeledParts = List.empty[DataFrame]
     for (r <- 1 to rounds) {
@@ -181,7 +181,7 @@ object Graph {
         .select(col("node"), coalesce(col("deg"), lit(0L)).as("deg"))
       peeledParts ::= withDeg.filter(col("deg") < k)
         .select(col("node"), lit(r).as("peeled_round"))
-      alive = checkpoint(withDeg.filter(col("deg") >= k).select("node"))
+      alive = withDeg.filter(col("deg") >= k).select("node").localCheckpoint(true)
     }
     val survivors = alive.select(col("node"), lit(0).as("peeled_round"))
     (peeledParts :+ survivors).reduce(_ unionByName _).orderBy("node")

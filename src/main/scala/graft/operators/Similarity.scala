@@ -30,18 +30,6 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Cosine similarity of two already-materialized double-array
-    * columns. Higher-order built-ins (codegen-adjacent, no UDF); for
-    * the absolute hot path a custom codegen Expression is the
-    * documented promotion (SURVEY §7.2) — measure first.
-    */
-  private[graft] def cosine(a: Column, b: Column): Column = {
-    val dot = aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-    val na = aggregate(a, lit(0.0), (acc, x) => acc + x * x)
-    val nb = aggregate(b, lit(0.0), (acc, x) => acc + x * x)
-    dot / (sqrt(na) * sqrt(nb))
-  }
-
   private def asDouble(c: Column): Column = c.cast("array<double>")
 
   /** Per-query top-k finisher over `(qid, cid, cos_sim)` scored rows,
@@ -76,7 +64,6 @@ object Similarity {
                           score: (Column, Column) => Column,
                           scoreName: String,
                           excludeSameLabel: Boolean): DataFrame = {
-    VectorFunctions.ensureRegistered(embeddings.sparkSession)
     val corpus = embeddings.select(
       (Seq(col("vec_id").as("cid"), asDouble(col("embedding")).as("cv")) ++
         (if (excludeSameLabel) Seq(col("label").as("cl")) else Nil)): _*)
@@ -140,7 +127,6 @@ object Similarity {
     */
   def knnGraph(embeddings: DataFrame, k: Int = 5, samplePct: Int = 25,
                maxPanel: Int = 512): DataFrame = {
-    VectorFunctions.ensureRegistered(embeddings.sparkSession)
     val sampled = embeddings
       .filter(pmod(conv(substring(md5(col("vec_id").cast("string")), 1, 4), 16, 10)
         .cast("long"), lit(100L)).cast("int") < samplePct)
@@ -366,10 +352,8 @@ object Similarity {
     * centroids, map-only). Persist/bucket this at scale — it is the
     * "index build".
     */
-  def ivfAssign(embeddings: DataFrame, nCells: Int = 16, iters: Int = 0): DataFrame = {
-    VectorFunctions.ensureRegistered(embeddings.sparkSession)
+  def ivfAssign(embeddings: DataFrame, nCells: Int = 16, iters: Int = 0): DataFrame =
     assignToCells(embeddings, centroids(embeddings, nCells, iters))
-  }
 
   /** ANN top-k: per query, search only the nProbe cells whose
     * centroids are most similar to the query. Join on cell_id bounds
@@ -378,7 +362,6 @@ object Similarity {
     */
   def ivfTopK(embeddings: DataFrame, k: Int = 5, nQueries: Int = 10,
               nCells: Int = 16, nProbe: Int = 4, iters: Int = 0): DataFrame = {
-    VectorFunctions.ensureRegistered(embeddings.sparkSession)
     import org.apache.spark.sql.expressions.Window
     val cents = centroids(embeddings, nCells, iters)
     val assigned = assignToCells(embeddings, cents)
@@ -591,7 +574,6 @@ object Similarity {
   def cosineNearDupPairs(embeddings: DataFrame, threshold: Double = 0.95,
                          nTables: Int = 4, bitsPerTable: Int = 8,
                          maxBucket: Int = 256): DataFrame = {
-    VectorFunctions.ensureRegistered(embeddings.sparkSession)
     val bucket = Seq("table_idx", "bucket")
     val capped = Lsh.capBuckets(embeddings
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
@@ -689,7 +671,6 @@ object Similarity {
   def ivfProbeSweep(embeddings: DataFrame, k: Int = 5, nQueries: Int = 10,
                     nCells: Int = 16,
                     levels: Seq[Int] = Seq(1, 2, 4, 8)): DataFrame = {
-    VectorFunctions.ensureRegistered(embeddings.sparkSession)
     import org.apache.spark.sql.expressions.Window
     val spark = embeddings.sparkSession
     import spark.implicits._
@@ -738,7 +719,6 @@ object Similarity {
     * assignment, total rides the 1-row broadcast scalar pattern.
     */
   def ivfCellBalance(embeddings: DataFrame, nCells: Int = 16): DataFrame = {
-    VectorFunctions.ensureRegistered(embeddings.sparkSession)
     val counts = assignToCells(embeddings, seedCentroids(embeddings, nCells))
       .groupBy("cell_id").agg(count(lit(1)).as("n_vectors"))
     counts.crossJoin(broadcast(counts.agg(sum("n_vectors").as("total"))))
@@ -758,7 +738,6 @@ object Similarity {
     * every IVF op; the report agg is nCells keys.
     */
   def ivfCellCohesion(embeddings: DataFrame, nCells: Int = 16): DataFrame = {
-    VectorFunctions.ensureRegistered(embeddings.sparkSession)
     import org.apache.spark.sql.expressions.Window
     val scored = embeddings
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
@@ -837,7 +816,6 @@ object Similarity {
     * keyed aggregate — no corpus shuffle.
     */
   def labelMargin(embeddings: DataFrame): DataFrame = {
-    VectorFunctions.ensureRegistered(embeddings.sparkSession)
     val centroids = labelCentroids(embeddings)
       .groupBy("label")
       .agg(array_sort(collect_list(struct(col("pos"), col("mean_v")))).as("cs"))
@@ -964,7 +942,7 @@ object Similarity {
       .orderBy("_h").limit(maxSide)
       .select(col("vec_id").as("idb"), asDouble(col("embedding")).as("vb"))
     val scored = broadcast(a).join(b, col("ida") =!= col("idb"))
-      .select(round(cosine(col("va"), col("vb")), 6).as("cs"))
+      .select(round(VectorFunctions.cosineSim(col("va"), col("vb")), 6).as("cs"))
     val binned = scored
       .select(least(floor(col("cs") * nBins), lit(nBins - 1)).cast("int").as("bucket"))
       .groupBy("bucket").agg(count(lit(1)).as("n_pairs"))
@@ -1062,7 +1040,7 @@ object Similarity {
       .select(col("vec_id").as("cid"), asDouble(col("embedding")).as("cv"))
       .crossJoin(broadcast(q))
       .select(col("cid"), col("cv"),
-        round(cosine(col("cv"), col("qv")), 6).as("rel"))
+        round(VectorFunctions.cosineSim(col("cv"), col("qv")), 6).as("rel"))
       .orderBy(desc("rel"), col("cid")).limit(nCand)
       .localCheckpoint(true)
     val pairs = cands.select(col("cid").as("aid"), col("cv").as("av"),
@@ -1070,7 +1048,7 @@ object Similarity {
       .crossJoin(broadcast(cands.select(col("cid").as("bid"), col("cv").as("bv"))))
       .filter(col("aid") =!= col("bid"))
       .select(col("aid"), col("arel"), col("bid"),
-        round(cosine(col("av"), col("bv")), 6).as("sim"))
+        round(VectorFunctions.cosineSim(col("av"), col("bv")), 6).as("sim"))
       .localCheckpoint(true)
     var selected = cands.orderBy(desc("rel"), col("cid")).limit(1)
       .select(col("cid"), col("rel"), lit(1).as("step"), col("rel").as("mmr_score"))

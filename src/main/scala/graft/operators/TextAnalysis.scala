@@ -1193,7 +1193,6 @@ object TextAnalysis {
     * equivalence argument.
     */
   def charEntropy(documents: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(documents.sparkSession)
     documents
       .filter(length(col("text")) > 0)
       .select(col("doc_id"),
@@ -1227,7 +1226,6 @@ object TextAnalysis {
     * oracle. No join, no window, no global sort.
     */
   def ngramDiversity(documents: DataFrame, maxN: Int = 3): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(documents.sparkSession)
     val grams = documents
       .select(col("source"),
         explode(graft.functions.VectorFunctions.wordNgrams(col("text"), maxN)).as("g"))

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
@@ -555,7 +556,6 @@ object EventStreams {
   def streamingNearDupFlags(docs: DataFrame, maxDist: Int = 3,
                             maxBucket: Int = 256): Dataset[NearDupFlag] = {
     val spark = docs.sparkSession
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     import spark.implicits._
     val nBands = maxDist + 1
     val bandBits = 64 / nBands
@@ -801,10 +801,19 @@ object EventStreams {
     else
       streamingSemanticDupFlagsInt8(vecs, threshold, nTables, bitsPerTable, maxBucket)
 
+  /** A state-side cosine, HALF_UP-rounded to 6 places like the batch
+    * column's `round(_, 6)`, through the kernel's own body
+    * ([[graft.functions.CosineSimilarity.compute]]).
+    */
+  private def cosine6(a: Array[Double], b: Array[Double]): Double =
+    BigDecimal(graft.functions.CosineSimilarity.compute(
+      ArrayData.toArrayData(a), ArrayData.toArrayData(b)))
+      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
   /** Full-precision-state form of [[streamingSemanticDupFlags]] — the
     * spec-reference twin (emitted cosines equal the batch column
-    * bit-for-bit: same index-ordered accumulation loop as the codegen
-    * expression, same HALF_UP `round(_, 6)`). Opt-in via
+    * bit-for-bit: the same kernel body, same HALF_UP `round(_, 6)`,
+    * see `cosine6`). Opt-in via
     * `fullPrecisionState = true`; the int8 path is the default since
     * round 11.
     */
@@ -813,7 +822,6 @@ object EventStreams {
       nTables: Int = 4, bitsPerTable: Int = 8,
       maxBucket: Int = 256): Dataset[SemanticDupFlag] = {
     val spark = vecs.sparkSession
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     import spark.implicits._
     val bucketed = vecs
       .select(col("vec_id"), col("v"),
@@ -821,14 +829,6 @@ object EventStreams {
           nTables, bitsPerTable)).as(Seq("table_idx", "bucket")))
       .select(col("table_idx"), col("bucket"), col("vec_id"), col("v"))
       .as[BucketedVec]
-    def cosine(a: Array[Double], b: Array[Double]): Double = {
-      val n = math.min(a.length, b.length)
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      while (i < n) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      BigDecimal(dot / (math.sqrt(na) * math.sqrt(nb)))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    }
     bucketed
       .groupByKey(d => (d.table_idx, d.bucket))
       .flatMapGroupsWithState[Vector[(Long, Array[Double])], SemanticDupFlag](
@@ -840,7 +840,7 @@ object EventStreams {
           it.toSeq.sortBy(_.vec_id).foreach { d =>
             bucket.foreach { case (prevId, prevV) =>
               if (prevId != d.vec_id) {
-                val cs = cosine(prevV, d.v)
+                val cs = cosine6(prevV, d.v)
                 if (cs >= threshold)
                   out += SemanticDupFlag(d.vec_id, d.table_idx, prevId, cs)
               }
@@ -878,7 +878,6 @@ object EventStreams {
                                     nTables: Int = 4, bitsPerTable: Int = 8,
                                     maxBucket: Int = 256): Dataset[SemanticDupFlag] = {
     val spark = vecs.sparkSession
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     import spark.implicits._
     val bucketed = vecs
       .select(col("vec_id"), col("v"),
@@ -886,14 +885,6 @@ object EventStreams {
           nTables, bitsPerTable)).as(Seq("table_idx", "bucket")))
       .select(col("table_idx"), col("bucket"), col("vec_id"), col("v"))
       .as[BucketedVec]
-    def cosine(a: Array[Double], b: Array[Double]): Double = {
-      val n = math.min(a.length, b.length)
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      while (i < n) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      BigDecimal(dot / (math.sqrt(na) * math.sqrt(nb)))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    }
     def quantize(v: Array[Double]): (Array[Byte], Double, Double) = {
       var mn = Double.MaxValue; var mx = Double.MinValue
       var i = 0
@@ -926,7 +917,7 @@ object EventStreams {
           it.toSeq.sortBy(_.vec_id).foreach { d =>
             bucket.foreach { case (prevId, prevQ, mn, sc) =>
               if (prevId != d.vec_id) {
-                val cs = cosine(dequantize(prevQ, mn, sc), d.v)
+                val cs = cosine6(dequantize(prevQ, mn, sc), d.v)
                 if (cs >= threshold)
                   out += SemanticDupFlag(d.vec_id, d.table_idx, prevId, cs)
               }

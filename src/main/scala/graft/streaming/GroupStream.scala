@@ -104,16 +104,18 @@ object GroupStream {
   private[graft] def groupBatch(batch: Dataset[Row], batchId: Long,
                                 outDir: String): Unit = {
     val spark = batch.sparkSession
+    // every cut is eager: a lazy one is computed again by each
+    // concurrent job that reads it before the first one finishes
     val e = batch
       .select(col("doc_a").cast("long").as("doc_a"),
         col("doc_b").cast("long").as("doc_b"))
       .filter(col("doc_a") =!= col("doc_b"))
       .dropDuplicates("doc_a", "doc_b")
-      .localCheckpoint(false)
+      .localCheckpoint(true)
     val nodes = e.select(col("doc_a").as("doc_id"))
       .union(e.select(col("doc_b").as("doc_id")))
       .distinct()
-      .localCheckpoint(false)
+      .localCheckpoint(true)
 
     // 1. current roots of touched docs: map-only probe of the
     // corpus-sized changelog (batch node set broadcast), then a
@@ -122,11 +124,11 @@ object GroupStream {
     val log = StateCompaction.readTable(spark, s"$outDir/_state/roots", rootSchema, batchId)
     val touched = log.join(broadcast(nodes), Seq("doc_id"), "left_semi")
       .groupBy("doc_id").agg(min("root").as("root"))
-      .localCheckpoint(false)
+      .localCheckpoint(true)
     val prov = nodes.join(touched, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("root"), col("doc_id")).as("prov_root"))
-      .localCheckpoint(false)
+      .localCheckpoint(true)
 
     // 2. root-level union graph + batch-bounded CC (keep-min rule —
     // identical group_id convention to the batch operator)
@@ -141,7 +143,7 @@ object GroupStream {
     val remap = Dedup.connectedGroups(rootEdges)
       .filter(col("group_id") =!= col("doc_id"))
       .select(col("doc_id").as("old_root"), col("group_id").as("new_root"))
-      .localCheckpoint(false)
+      .localCheckpoint(true)
 
     // 3. members of merged components: second map-only changelog scan
     // (remap broadcast); only CURRENT roots can match (see scaladoc)

@@ -1,16 +1,29 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Sort}
 
-/** Minimal shim into `private[sql]` plan construction, needed to wrap
-  * graft's custom logical operators (e.g. AsOfJoinPlan) in a
-  * DataFrame. This is the standard extension-library pattern: one
-  * file in the org.apache.spark.sql package exposing exactly the two
-  * internals the library needs, nothing else.
+/** Minimal shim into `private[sql]` plan and column construction:
+  * wrapping graft's custom logical operators (e.g. AsOfJoinPlan) in a
+  * DataFrame, and graft's Catalyst kernels in a Column. This is the
+  * standard extension-library pattern: one file in the
+  * org.apache.spark.sql package exposing exactly the internals the
+  * library needs, nothing else.
   */
 object GraftSqlShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** A Column over a Catalyst expression: how
+    * [[graft.functions.VectorFunctions]]' builders put a kernel node
+    * into a plan without a function registry lookup.
+    */
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+
+  /** The (possibly unresolved) Catalyst expression behind a Column, to
+    * become a kernel node's child.
+    */
+  def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
   def analyzedPlan(df: Dataset[_]): LogicalPlan =
     df.queryExecution.analyzed

@@ -1,0 +1,32 @@
+package graft
+
+import graft.operators.{Curation, Dedup}
+import graft.streaming.GroupStream
+
+/** Checkpoint cuts that several jobs read are computed once: a lazy
+  * `localCheckpoint` read by concurrent jobs is computed by each of
+  * them, and the BlockManager warns when the second copy of a block
+  * arrives.
+  */
+class EagerCutSpec extends SparkSpec {
+  import spark.implicits._
+
+  test("groupBatch and curatePipeline store each checkpoint block once") {
+    val pairs = Dedup.minhashNearDupsMd5(Tables.documents(spark, sf0001))
+      .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(pairs.length > 10, s"need real pairs, got ${pairs.length}")
+    val (first, second) = pairs.splitAt(pairs.length / 2)
+    val outDir = java.nio.file.Files.createTempDirectory("eager_cut_").toString
+    var funnel = 0
+    val twice = countLogs(e =>
+      e.getLoggerName == "org.apache.spark.storage.BlockManager" &&
+        e.getMessage.getFormattedMessage.contains("already exists on this machine")) {
+      GroupStream.groupBatch(first.toDF("doc_a", "doc_b"), 0L, outDir)
+      GroupStream.groupBatch(second.toDF("doc_a", "doc_b"), 1L, outDir)
+      funnel = Curation.curatePipeline(Tables.documents(spark, sf0001)).collect().length
+    }
+    assert(funnel == 8)
+    assert(GroupStream.sinkGroups(spark, outDir).count() > 0)
+    assert(twice === 0, "a checkpoint block was computed twice")
+  }
+}

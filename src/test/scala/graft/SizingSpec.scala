@@ -6,9 +6,6 @@ import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{
   ENSURE_REQUIREMENTS, REPARTITION_BY_NUM, ShuffleExchangeExec}
-import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
-import org.apache.logging.log4j.core.appender.AbstractAppender
-import org.apache.logging.log4j.core.config.Property
 import graft.operators.{Dedup, TextAnalysis}
 import graft.queries.Relational
 
@@ -105,30 +102,20 @@ class SizingSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // DAGScheduler logs this ERROR when a finished task's metric
     // updates name an accumulator the driver has already collected:
     // the task outlived every reference to its plan
-    val failed = new java.util.concurrent.atomic.AtomicInteger(0)
-    val appender = new AbstractAppender("accumulator-errors", null, null, true,
-        Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        if (e.getLoggerName == "org.apache.spark.scheduler.DAGScheduler" &&
-            e.getMessage.getFormattedMessage.startsWith("Failed to update accumulator"))
-          failed.incrementAndGet()
+    val failed = countLogs(e =>
+      e.getLoggerName == "org.apache.spark.scheduler.DAGScheduler" &&
+        e.getMessage.getFormattedMessage.startsWith("Failed to update accumulator")) {
+      val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val gc = new Thread(() => while (!stop.get) { System.gc(); Thread.sleep(20) })
+      gc.setDaemon(true)
+      gc.start()
+      try Seq(1, 7, 1, 7).foreach(w => closing(w)(rows(_, "dedup_prefix_pairs")))
+      finally {
+        stop.set(true)
+        gc.join()
+      }
     }
-    appender.start()
-    val logs = LoggerContext.getContext(false)
-    logs.getConfiguration.getRootLogger.addAppender(appender, null, null)
-    logs.updateLoggers()
-    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val gc = new Thread(() => while (!stop.get) { System.gc(); Thread.sleep(20) })
-    gc.setDaemon(true)
-    gc.start()
-    try Seq(1, 7, 1, 7).foreach(w => closing(w)(rows(_, "dedup_prefix_pairs")))
-    finally {
-      stop.set(true)
-      gc.join()
-      logs.getConfiguration.getRootLogger.removeAppender(appender.getName)
-      logs.updateLoggers()
-    }
-    assert(failed.get === 0, "tasks reported into garbage-collected accumulators")
+    assert(failed === 0, "tasks reported into garbage-collected accumulators")
   }
 
   test("ngramDiversity: rows are identical where its scaled width differs from w") {

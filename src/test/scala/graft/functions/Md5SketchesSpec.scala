@@ -24,17 +24,6 @@ import graft.operators.Dedup
   */
 class Md5SketchesSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
-  private def withConfs[T](confs: (String, String)*)(body: => T): T = {
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach { case (k, p) => p.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-  }
-
-  private val interpreted = Seq(
-    "spark.sql.codegen.wholeStage" -> "false",
-    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
-
   // null, empty, fewer than k words, repeated shingles, runs of
   // spaces, tabs, non-ASCII (ß lowers to itself and uppers to SS)
   private val edgeTexts: Seq[String] = Seq(
@@ -89,7 +78,6 @@ class Md5SketchesSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     df.collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
 
   test("Md5MinHashSignature equals the explode + groupBy min-sketch, codegen on and off") {
-    VectorFunctions.ensureRegistered(spark)
     for ((name, docs) <- inputs; (k, n) <- Seq((5, 16), (2, 8))) {
       val expected = byId(refMinhash(docs, k, n))
       assert(expected.nonEmpty)

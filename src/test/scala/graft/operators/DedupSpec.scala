@@ -27,7 +27,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("NormalizeText is byte-identical to the regex chain it replaces") {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val edge = DedupSpec.edgeTexts.zipWithIndex.map { case (s, i) => (i.toLong, s) }
     val corpus = graft.Tables.documents(spark, sf0001)
       .select(col("doc_id"), col("text"))

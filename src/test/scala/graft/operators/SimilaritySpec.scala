@@ -1,10 +1,24 @@
 package graft.operators
 
 import graft.{SparkSpec, Tables}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+
+object SimilaritySpec {
+  /** Cosine as three higher-order aggregates: the bit-for-bit
+    * reference for [[graft.functions.CosineSimilarity]].
+    */
+  def cosine(a: Column, b: Column): Column = {
+    val dot = aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
+    val na = aggregate(a, lit(0.0), (acc, x) => acc + x * x)
+    val nb = aggregate(b, lit(0.0), (acc, x) => acc + x * x)
+    dot / (sqrt(na) * sqrt(nb))
+  }
+}
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
+  import SimilaritySpec.cosine
 
   private def emb(rows: (Long, Seq[Float])*) =
     rows.toDF("vec_id", "embedding")
@@ -12,20 +26,19 @@ class SimilaritySpec extends SparkSpec {
   test("cosine: known vectors") {
     val d = Seq((Seq(1.0, 0.0), Seq(0.0, 1.0)), (Seq(1.0, 2.0), Seq(2.0, 4.0)))
       .toDF("a", "b")
-    val out = d.select(Similarity.cosine(col("a"), col("b")).as("c")).collect().map(_.getDouble(0))
+    val out = d.select(cosine(col("a"), col("b")).as("c")).collect().map(_.getDouble(0))
     assert(math.abs(out(0) - 0.0) < 1e-12)
     assert(math.abs(out(1) - 1.0) < 1e-12)
   }
 
   test("codegen CosineSimilarity matches the higher-order-function formulation bit-for-bit") {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val e = Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val paired = e.select(col("vec_id"), col("v"))
       .crossJoin(e.select(col("vec_id").as("id2"), col("v").as("v2")))
       .filter(col("vec_id") < col("id2")).limit(200)
     val diffs = paired.select(
-      Similarity.cosine(col("v"), col("v2")).as("hof"),
+      cosine(col("v"), col("v2")).as("hof"),
       graft.functions.VectorFunctions.cosineSim(col("v"), col("v2")).as("cg"))
       .filter(col("hof") =!= col("cg")).count()
     assert(diffs == 0L)
@@ -226,7 +239,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("codegen InnerProduct matches a sequential fold bit-for-bit; SQL-visible") {
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val e = Tables.embeddings(spark, sf0001)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val paired = e.crossJoin(e.select(col("vec_id").as("id2"), col("v").as("v2")))
