@@ -18,21 +18,23 @@ object Explain {
   /** `plan` without the counters that differ from run to run on the
     * same plan: expression ids (`doc_id#123L` → `doc_id#L`), exchange
     * `plan_id`s, the suffixes of higher-order-function lambda
-    * variables (`x_12` → `x_`), checkpoint RDD ids and their call-site
-    * line numbers (`MapPartitionsRDD[176] at localCheckpoint at
-    * Graph.scala:167` → `MapPartitionsRDD[] at localCheckpoint at
-    * Graph.scala`), and the JVM names of lambdas and aggregator
-    * instances (`Multimodal$$$Lambda$5911/0x00007f15…@66dee88a` →
-    * `Multimodal$$$Lambda@`).
+    * variables (`lambda x_12` → `lambda x_`), checkpoint RDD ids and
+    * their call-site line numbers (`MapPartitionsRDD[176] at
+    * localCheckpoint at Graph.scala:167` → `MapPartitionsRDD[] at
+    * localCheckpoint at Graph.scala`), and the JVM names of lambdas
+    * and of package-qualified class instances
+    * (`graft.operators.Multimodal$$$Lambda$5911/0x00007f15…@66dee88a`
+    * → `graft.operators.Multimodal$$$Lambda@`). A column or literal
+    * such as `x_1` or `a@cafe` is kept as it is.
     */
   def normalize(plan: String): String =
     plan.replaceAll("#\\d+", "#")
       .replaceAll("plan_id=\\d+", "plan_id=")
-      .replaceAll("\\b([xyz])_\\d+\\b", "$1_")
+      .replaceAll("(lambda [xyz])_\\d+\\b", "$1_")
       .replaceAll("RDD\\[\\d+\\]", "RDD[]")
       .replaceAll("(\\.scala):\\d+", "$1")
       .replaceAll("\\$Lambda\\$\\d+/0x\\p{XDigit}+", "\\$Lambda")
-      .replaceAll("(?<=[\\w$])@\\p{XDigit}{1,8}\\b", "@")
+      .replaceAll("(\\b[a-z]\\w*(?:\\.[a-z]\\w*)*\\.[A-Z][\\w$]*)@\\p{XDigit}{1,8}\\b", "$1@")
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")

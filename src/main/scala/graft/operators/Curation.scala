@@ -48,6 +48,12 @@ import org.apache.spark.sql.functions._
   * share work through Spark's exchange reuse. A production run would
   * persist each stage's survivor ids (the [[graft.Materialized]]
   * parquet face) instead of recomputing the chain per consumer.
+  *
+  * Building the frame runs Spark jobs: the per-doc token counts and
+  * the survivor-id sets of stages 1-5 are eager `localCheckpoint`s,
+  * so `curatePipeline` computes them before it returns, and a caller
+  * that only reads the plan ([[graft.Explain]], `PlanAuditSpec`) pays
+  * for them too.
   */
 object Curation {
 

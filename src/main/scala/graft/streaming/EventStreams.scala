@@ -803,11 +803,12 @@ object EventStreams {
 
   /** A state-side cosine, HALF_UP-rounded to 6 places like the batch
     * column's `round(_, 6)`, through the kernel's own body
-    * ([[graft.functions.CosineSimilarity.compute]]).
+    * ([[graft.functions.CosineSimilarity.compute]]). Callers convert
+    * each vector to `ArrayData` once (the bucket once per group call,
+    * an incoming vector once), not once per pair.
     */
-  private def cosine6(a: Array[Double], b: Array[Double]): Double =
-    BigDecimal(graft.functions.CosineSimilarity.compute(
-      ArrayData.toArrayData(a), ArrayData.toArrayData(b)))
+  private def cosine6(a: ArrayData, b: ArrayData): Double =
+    BigDecimal(graft.functions.CosineSimilarity.compute(a, b))
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** Full-precision-state form of [[streamingSemanticDupFlags]] — the
@@ -836,17 +837,21 @@ object EventStreams {
         (_: (Int, Long), it: Iterator[BucketedVec],
          state: GroupState[Vector[(Long, Array[Double])]]) =>
           var bucket = state.getOption.getOrElse(Vector.empty)
+          var scored = bucket.map { case (id, v) => (id, ArrayData.toArrayData(v)) }
           val out = Vector.newBuilder[SemanticDupFlag]
           it.toSeq.sortBy(_.vec_id).foreach { d =>
-            bucket.foreach { case (prevId, prevV) =>
+            val v = ArrayData.toArrayData(d.v)
+            scored.foreach { case (prevId, prevV) =>
               if (prevId != d.vec_id) {
-                val cs = cosine6(prevV, d.v)
+                val cs = cosine6(prevV, v)
                 if (cs >= threshold)
                   out += SemanticDupFlag(d.vec_id, d.table_idx, prevId, cs)
               }
             }
-            if (bucket.size < maxBucket)
+            if (bucket.size < maxBucket) {
               bucket = bucket :+ (d.vec_id, d.v)
+              scored = scored :+ (d.vec_id, v)
+            }
           }
           state.update(bucket)
           out.result().iterator
@@ -900,11 +905,11 @@ object EventStreams {
       }
       (q, mn, sc)
     }
-    def dequantize(q: Array[Byte], mn: Double, sc: Double): Array[Double] = {
+    def dequantize(q: Array[Byte], mn: Double, sc: Double): ArrayData = {
       val v = new Array[Double](q.length)
       var i = 0
       while (i < q.length) { v(i) = mn + (q(i) + 128) * sc; i += 1 }
-      v
+      ArrayData.toArrayData(v)
     }
     bucketed
       .groupByKey(d => (d.table_idx, d.bucket))
@@ -913,11 +918,13 @@ object EventStreams {
         (_: (Int, Long), it: Iterator[BucketedVec],
          state: GroupState[Vector[(Long, Array[Byte], Double, Double)]]) =>
           var bucket = state.getOption.getOrElse(Vector.empty)
+          var scored = bucket.map { case (id, q, mn, sc) => (id, dequantize(q, mn, sc)) }
           val out = Vector.newBuilder[SemanticDupFlag]
           it.toSeq.sortBy(_.vec_id).foreach { d =>
-            bucket.foreach { case (prevId, prevQ, mn, sc) =>
+            val v = ArrayData.toArrayData(d.v)
+            scored.foreach { case (prevId, prevV) =>
               if (prevId != d.vec_id) {
-                val cs = cosine6(dequantize(prevQ, mn, sc), d.v)
+                val cs = cosine6(prevV, v)
                 if (cs >= threshold)
                   out += SemanticDupFlag(d.vec_id, d.table_idx, prevId, cs)
               }
@@ -925,6 +932,7 @@ object EventStreams {
             if (bucket.size < maxBucket) {
               val (q, mn, sc) = quantize(d.v)
               bucket = bucket :+ ((d.vec_id, q, mn, sc))
+              scored = scored :+ ((d.vec_id, dequantize(q, mn, sc)))
             }
           }
           state.update(bucket)
