@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** End-to-end training-data curation pipeline: the composition a real
@@ -26,8 +26,8 @@ import org.apache.spark.sql.functions._
   *                       surviving corpus, as a real run would)
   *   6. pack           — [[TextAnalysis.packSequences]]: n_units =
   *                       number of (source, pack_id) packs
-  *   7. shard          — content-addressed shard assignment (same md5
-  *                       arithmetic as [[Multimodal.shardManifest]]):
+  *   7. shard          — content-addressed shard assignment
+  *                       ([[shardId]], as [[Multimodal.shardManifest]]):
   *                       n_units = distinct shards touched
   *
   * Output: one row per stage — (stage_idx, stage, n_units, n_docs,
@@ -56,6 +56,15 @@ import org.apache.spark.sql.functions._
   * for them too.
   */
 object Curation {
+
+  /** Content-addressed shard of `content` (a string or binary
+    * column): its first 8 md5 hex chars mod `nShards`, so placement is
+    * reproducible on any cluster, independent of row order or ids.
+    * Stage 7 below, [[graft.streaming.CurateStream]]'s manifest and
+    * [[Multimodal.shardManifest]] all place rows with it.
+    */
+  def shardId(content: Column, nShards: Int): Column =
+    pmod(conv(substring(md5(content), 1, 8), 16, 10).cast("long"), lit(nShards.toLong))
 
   def curatePipeline(documents: DataFrame, budget: Int = 2048,
                      nShards: Int = 16, scale: Double = 0.5,
@@ -124,8 +133,7 @@ object Curation {
       .select(lit(6).cast("int").as("stage_idx"), lit("pack").as("stage"),
         col("n_units"), col("n_docs"), col("n_tokens"))
     val shardRow = d5
-      .select(pmod(conv(substring(md5(col("text")), 1, 8), 16, 10).cast("long"),
-        lit(nShards.toLong)).as("shard_id"))
+      .select(shardId(col("text"), nShards).as("shard_id"))
       .distinct()
       .observe("curate_s7_shard", count(lit(1)).as("n_rows"))
       .agg(count(lit(1)).as("n_units"))

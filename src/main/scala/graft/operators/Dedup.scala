@@ -108,24 +108,6 @@ object Dedup {
       approx_count_distinct(md5(col("text")), rsd).as("n_distinct_est"),
       (count(lit(1)) - approx_count_distinct(md5(col("text")), rsd)).as("n_dupes_est"))
 
-  /** k-word shingles from a *materialized* words-array column. The
-    * lambda only references the bound array (cheap); callers must
-    * materialize `split` into its own projection first — inlining the
-    * split here would re-evaluate it per element under interpreted
-    * higher-order-function eval.
-    */
-  private[graft] def shinglesFromWords(words: Column, k: Int): Column =
-    when(size(words) < k, array().cast("array<string>"))
-      .otherwise(transform(
-        sequence(lit(0), size(words) - k),
-        i => array_join(slice(words, i + 1, lit(k)), " ")))
-
-  /** Convenience for tests / small inputs: shingles straight from a
-    * text column.
-    */
-  private[graft] def wordShingles(text: Column, k: Int): Column =
-    shinglesFromWords(split(text, " ", -1), k)
-
   /** (doc_id, shingle) rows — distinct shingles per doc via the
     * per-row [[graft.functions.WordShingles]] expression (one JVM
     * pass, no interpreted lambdas), then an explode. Docs shorter
@@ -227,36 +209,29 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** Exact n-gram Jaccard for pairs sharing ≥1 shingle: explode
-    * distinct shingles, self-join on the shingle (blocking — no full
-    * crossJoin), count intersections, Jaccard from |A|+|B|-|A∩B|.
+  /** The candidate table the whole n-gram metric family shares:
+    * (doc_a, doc_b, na, nb, inter) for every pair sharing ≥1
+    * df-capped shingle — explode distinct shingles, self-join on the
+    * shingle (blocking, no full crossJoin), count intersections.
+    * Jaccard ([[jaccardFromCounts]]) and containment
+    * ([[containmentFromCounts]]) are metric-only projections over the
+    * SAME counts, so the registry materializes this frame once
+    * ([[graft.Materialized]]) and both keys (plus the graph audit
+    * family via the Jaccard edges) read it, instead of each re-running
+    * the blocking join. The second-decade bench caught containment
+    * paying the full build that Jaccard had already memoized (40.5 s
+    * vs 0.09 s at sf10) — same work, built twice.
     *
     * Document-frequency cap: the shingle self-join costs Σ df² over
     * shingles, so ONE corpus-common shingle ("of the and of the",
     * boilerplate headers) with df = millions is an n²-scale bucket.
-    * Shingles with df > `maxDf` are dropped before the join (one
-    * extra shuffle-agg on the already-exploded rows) — bounded work
-    * Σ min(df, maxDf)²; the Jaccard of a pair is then a lower bound
-    * whenever a dropped shingle was shared (denominators |A|, |B|
-    * stay uncapped). At the default, sf-test corpora are unaffected
-    * (no shingle reaches df 1000), so exact values — and the DuckDB
-    * oracle, which applies the identical cap — are unchanged.
-    */
-  def ngramJaccardPairs(documents: DataFrame, shingleK: Int = 5, threshold: Double = 0.2,
-                        maxDf: Int = 1000): DataFrame =
-    jaccardFromCounts(ngramPairCounts(documents, shingleK, maxDf), threshold)
-      .orderBy("doc_a", "doc_b")
-
-  /** The pre-threshold candidate table the whole n-gram metric family
-    * shares: (doc_a, doc_b, na, nb, inter) for every pair sharing ≥1
-    * df-capped shingle. ALL the Σ min(df, maxDf)² join work lives
-    * here; Jaccard and containment are then metric-only projections
-    * over the SAME counts — so the registry materializes this frame
-    * once ([[graft.Materialized]]) and both keys (plus the graph
-    * audit family via the Jaccard edges) read it, instead of each
-    * re-running the blocking join. The second-decade bench caught
-    * containment paying the full build that Jaccard had already
-    * memoized (40.5 s vs 0.09 s at sf10) — same work, built twice.
+    * Shingles with df > `maxDf` are dropped before the join — bounded
+    * work Σ min(df, maxDf)²; a pair's `inter` (and so its Jaccard) is
+    * then a lower bound whenever a dropped shingle was shared
+    * (`na`, `nb` stay uncapped). At the default, sf-test corpora are
+    * unaffected (no shingle reaches df 1000), so exact values — and
+    * the DuckDB oracle, which applies the identical cap — are
+    * unchanged.
     */
   def ngramPairCounts(documents: DataFrame, shingleK: Int = 5,
                       maxDf: Int = 1000): DataFrame = {
@@ -287,7 +262,9 @@ object Dedup {
       .agg(count(lit(1)).as("inter"))
   }
 
-  /** Jaccard = inter / (|A| ∪ |B|) over [[ngramPairCounts]] rows. */
+  /** Exact n-gram Jaccard = inter / (|A| + |B| − inter) over
+    * [[ngramPairCounts]] rows, kept at ≥ `threshold`.
+    */
   def jaccardFromCounts(counts: DataFrame, threshold: Double = 0.2): DataFrame =
     counts
       .withColumn("jaccard",
@@ -295,7 +272,15 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "inter", "jaccard")
 
-  /** Broder containment = inter / min(|A|, |B|) over the same counts. */
+  /** Shingle CONTAINMENT pairs: Broder's inter / min(|A|, |B|) over
+    * the same [[ngramPairCounts]] rows — the "doc A is (mostly)
+    * inside doc B" detector Jaccard structurally misses: a
+    * quote-plus-commentary page scores near 1.0 containment but low
+    * Jaccard because the union is dominated by the larger doc. The
+    * standard companion metric for nested-duplicate and
+    * quote-extraction detection (Broder's containment comes from the
+    * same resemblance paper as MinHash/Jaccard).
+    */
   def containmentFromCounts(counts: DataFrame, threshold: Double = 0.6): DataFrame =
     counts
       .withColumn("containment",
@@ -326,21 +311,6 @@ object Dedup {
       .join(nonRepresentatives(pairs), Seq("doc_id"), "left_anti")
       .orderBy("doc_id")
   }
-
-  /** Shingle CONTAINMENT pairs: inter / min(|A|,|B|) — the "doc A is
-    * (mostly) inside doc B" detector Jaccard structurally misses: a
-    * quote-plus-commentary page scores near 1.0 containment but low
-    * Jaccard because the union is dominated by the larger doc. The
-    * standard companion metric for nested-duplicate and
-    * quote-extraction detection (Broder's containment from the same
-    * resemblance paper as MinHash/Jaccard). Identical plan shape and
-    * cost to [[ngramJaccardPairs]] — df-capped blocking, Σ min(df,
-    * cap)² candidate work, one grouped count per surviving pair.
-    */
-  def ngramContainmentPairs(documents: DataFrame, shingleK: Int = 5,
-                            threshold: Double = 0.6, maxDf: Int = 1000): DataFrame =
-    containmentFromCounts(ngramPairCounts(documents, shingleK, maxDf), threshold)
-      .orderBy("doc_a", "doc_b")
 
   /** Edit-distance near-duplicates: pairs whose (truncated) texts are
     * within `maxDist` Levenshtein edits, blocked on a shared prefix —
@@ -688,18 +658,10 @@ object Dedup {
     * candidate docs FIRST (distinct-id hash join — candidate sets are
     * pair-bounded), so the quadratic truth computation touches only
     * what LSH surfaced. Pairs sharing no shingle define truth = 0.
-    */
-  def minhashEstErrorMd5(documents: DataFrame, shingleK: Int = 5, numHashes: Int = 16,
-                         bands: Int = 4, threshold: Double = 0.5): DataFrame =
-    minhashEstErrorMd5(documents,
-      minhashNearDupsMd5(documents, shingleK, numHashes, bands, threshold),
-      shingleK, numHashes)
-
-  /** [[minhashEstErrorMd5]] over a pre-materialized candidate-pair
-    * table (the production entry point — see [[graft.Materialized]]):
-    * `pairs` must carry (doc_a, doc_b, est_jaccard) built with the
-    * same `shingleK`/`numHashes` so the exact-Jaccard truth leg
-    * audits the estimator that actually produced them.
+    * `pairs` carries (doc_a, doc_b, est_jaccard) from
+    * [[minhashNearDupsMd5]] built with the same `shingleK`/`numHashes`,
+    * so the exact-Jaccard truth leg audits the estimator that actually
+    * produced them.
     */
   def minhashEstErrorMd5(documents: DataFrame, pairs: DataFrame,
                          shingleK: Int, numHashes: Int): DataFrame = {
@@ -740,14 +702,6 @@ object Dedup {
     * group-keyed aggregate joined to doc metadata (never the text).
     * Docs in no pair are singleton groups by definition and excluded,
     * matching [[connectedGroups]]' contract.
-    */
-  def clusterStats(documents: DataFrame): DataFrame =
-    clusterStats(documents, connectedGroups(minhashNearDupsMd5(documents)))
-
-  /** [[clusterStats]] over a pre-materialized `groups` table — the
-    * production entry point: compute the CC closure once per corpus
-    * snapshot, fan every cluster audit out from it
-    * (see [[graft.Materialized]]).
     */
   def clusterStats(documents: DataFrame, groups: DataFrame): DataFrame = {
     groups.join(documents.select("doc_id", "n_chars"), Seq("doc_id"))
@@ -968,18 +922,10 @@ object Dedup {
     * pilot SF before committing band/hash parameters to a 100 TB
     * dedup. Truth comes from the bounded shingle self-join, candidates
     * from the banded LSH join; the comparison is one two-key hash
-    * join and three 1-row aggregates.
-    */
-  def lshRecallAudit(documents: DataFrame, shingleK: Int = 5, numHashes: Int = 16,
-                     bands: Int = 4): DataFrame =
-    lshRecallAudit(documents, ngramJaccardPairs(documents, shingleK),
-      shingleK, numHashes, bands)
-
-  /** [[lshRecallAudit]] with a pre-materialized exact-Jaccard truth
-    * table (the production entry point — see [[graft.Materialized]]):
-    * the candidate leg still runs at threshold 0 (recall needs the
-    * uncut candidate set), but the expensive shingle self-join truth
-    * is reused from the shared pair build.
+    * join and three 1-row aggregates. `truthPairs` carries the exact
+    * (doc_a, doc_b) truth pairs ([[jaccardFromCounts]]); the candidate
+    * leg runs at threshold 0, since recall needs the uncut candidate
+    * set.
     */
   def lshRecallAudit(documents: DataFrame, truthPairs: DataFrame,
                      shingleK: Int, numHashes: Int, bands: Int): DataFrame = {
@@ -1001,18 +947,11 @@ object Dedup {
     * near-dup of a training doc sitting in your own test split
     * inflates eval exactly the same way). Cells are unordered split
     * pairs with a `leaks` flag on the off-diagonal; pair generation
-    * is the capped banded LSH join, the split tags are pure modulo
-    * arithmetic on the pair ids (no second scan of the corpus).
+    * is the capped banded LSH join ([[minhashNearDupsMd5]]), the split
+    * tags are pure modulo arithmetic on the pair ids, so no corpus scan
+    * happens here at all.
     */
-  def splitLeakage(documents: DataFrame): DataFrame =
-    splitLeakageOfPairs(minhashNearDupsMd5(documents))
-
-  /** [[splitLeakage]] over a pre-materialized near-dup pair table —
-    * the production entry point (see [[graft.Materialized]]): the
-    * split tags are modulo arithmetic on the pair ids alone, so no
-    * corpus scan happens here at all.
-    */
-  def splitLeakageOfPairs(pairs: DataFrame): DataFrame = {
+  def splitLeakage(pairs: DataFrame): DataFrame = {
     def split(c: Column): Column =
       when(pmod(c, lit(10)) < 8, "train")
         .when(pmod(c, lit(10)) === 8, "val").otherwise("test")
@@ -1034,15 +973,8 @@ object Dedup {
     * A" decisions (within-source cells sit on the diagonal). Pair
     * generation is the banded LSH join; the doc→source attachment is
     * two joins against a (doc_id, source) projection — the text
-    * itself never moves.
-    */
-  def crossSourceNearDups(documents: DataFrame): DataFrame =
-    crossSourceNearDups(documents, minhashNearDupsMd5(documents))
-
-  /** [[crossSourceNearDups]] over a pre-materialized near-dup pair
-    * table — the production entry point (see [[graft.Materialized]]):
-    * only the two id→source attach joins and the |sources|²-bounded
-    * rollup run here.
+    * itself never moves. `pairs` carries (doc_a, doc_b, est_jaccard)
+    * from [[minhashNearDupsMd5]].
     */
   def crossSourceNearDups(documents: DataFrame, pairs: DataFrame): DataFrame = {
     val src = documents.select(col("doc_id"), col("source"))
@@ -1071,15 +1003,7 @@ object Dedup {
     * on both sides drop (inner joins) — coverage is reported by the
     * row count vs `dedup_minhash_md5`.
     */
-  def lexicalVsSemantic(documents: DataFrame, embeddings: DataFrame): DataFrame =
-    lexicalVsSemantic(documents, embeddings, minhashNearDupsMd5(documents))
-
-  /** [[lexicalVsSemantic]] over a pre-materialized near-dup pair
-    * table — the production entry point (see [[graft.Materialized]]):
-    * only the two id→vector attach joins and the cosine run here.
-    */
-  def lexicalVsSemantic(documents: DataFrame, embeddings: DataFrame,
-                        pairs: DataFrame): DataFrame = {
+  def lexicalVsSemantic(embeddings: DataFrame, pairs: DataFrame): DataFrame = {
     val vecs = embeddings.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     pairs
       .join(vecs.select(col("vec_id").as("doc_a"), col("v").as("va")), Seq("doc_a"))
@@ -1134,7 +1058,7 @@ object Dedup {
 
   /** Shingle document-frequency histogram (log₂ buckets): how many
     * distinct 5-shingles occur in 1 doc, 2–3, 4–7, … — the
-    * calibration table for the `maxDf` caps on [[ngramJaccardPairs]]
+    * calibration table for the `maxDf` caps on [[ngramPairCounts]]
     * and [[Dedup]]'s other df-capped joins (the join cost is
     * Σ min(df, maxDf)², so this histogram IS the cost model: read it,
     * pick the cap at the knee, know exactly what pair mass you
@@ -1179,12 +1103,6 @@ object Dedup {
     * the proven simhash-band + [[connectedGroups]] chain; the argmax
     * is one group-partitioned window over the (docs-in-clusters)-sized
     * group table.
-    */
-  def clusterRepresentatives(documents: DataFrame): DataFrame =
-    clusterRepresentatives(documents, connectedGroups(simhashMd5NearDups(documents)))
-
-  /** [[clusterRepresentatives]] over a pre-materialized `groups`
-    * table (see [[graft.Materialized]] — compute CC once, fan out).
     */
   def clusterRepresentatives(documents: DataFrame, groups: DataFrame): DataFrame = {
     val w = Window.partitionBy("group_id")
@@ -1275,36 +1193,17 @@ object Dedup {
       .groupBy("est_jaccard").agg(count(lit(1)).as("n_pairs"))
       .orderBy("est_jaccard")
 
-  /** Hamming top-k retrieval over the 32-bit md5 SimHash
-    * fingerprints: for each query doc (doc_id < nQueries), the k
-    * nearest corpus docs by fingerprint Hamming distance — the
-    * bridge from dedup fingerprints to cheap retrieval (a 4-byte
-    * code per doc answers "roughly similar" without touching text
-    * or embeddings; Manku et al. 2007's lookup face). Fingerprints
-    * are computed ONCE, the query side broadcasts, scoring is
-    * map-only `bit_count(xor)` (codegen'd), and the per-query top-k
-    * is the bounded-heap partial aggregate
-    * ([[graft.functions.Aggregators.TopKPairs]] on similarity =
-    * 32 − hamming, ties to the lower doc_id) — candidates reduce
-    * map-side, nothing fact-scale crosses the shuffle.
-    */
-  /** Component-size histogram over a near-dup pair list: number of
-    * connected clusters at each size — the distribution view of the
+  /** Component-size histogram over near-dup `groups`
+    * ([[connectedGroups]] output): number of connected clusters at
+    * each size — the distribution view of the
     * per-cluster [[clusterRepresentatives]] table ("mostly pairs, or
     * a few thousand-doc template farms?"), which is what decides
     * whether keep-one dedup or cluster-cap sampling is the right
-    * removal policy. One CC ([[connectedGroups]]) then two
-    * bounded aggregates (|groups| rows, then |distinct sizes| rows).
-    * Docs with no near-dup edge are singletons and out of scope, as
-    * in every CC consumer here.
+    * removal policy. Two bounded aggregates (|groups| rows, then
+    * |distinct sizes| rows). Docs with no near-dup edge are
+    * singletons and out of scope, as in every CC consumer here.
     */
-  def clusterSizeHistogram(pairs: DataFrame): DataFrame =
-    clusterSizeHistogramOfGroups(connectedGroups(pairs))
-
-  /** [[clusterSizeHistogram]] over a pre-materialized `groups` table
-    * (see [[graft.Materialized]] — compute CC once, fan out).
-    */
-  def clusterSizeHistogramOfGroups(groups: DataFrame): DataFrame =
+  def clusterSizeHistogram(groups: DataFrame): DataFrame =
     groups
       .groupBy("group_id").agg(count(lit(1)).as("group_size"))
       .groupBy("group_size").agg(count(lit(1)).as("n_groups"))
@@ -1333,62 +1232,17 @@ object Dedup {
     * filter (min len ≥ t·max len — exhaustive for Jaccard ≥ t, so
     * size-mismatched pairs drop before any set arithmetic), dedupe
     * on the bare ID pair, and the token arrays join back once per
-    * surviving pair.
+    * surviving pair. Output: unsorted (doc_a, doc_b, jaccard) rows.
     *
-    * Checkpoints LAZILY before the presentation sort (the range-
-    * partitioner's sampling pass would otherwise re-run the whole
-    * verify stage — measured as a clean 2×); lazy, not eager, so
-    * merely CONSTRUCTING this frame (plan audits, explain) runs
-    * nothing — the first action materializes the blocks and the
-    * sort's sampling pass reads them.
-    *
-    * The registry serves this key and its bands twin from ONE
-    * [[graft.Materialized]] memo of [[prefixFilterScored]] — the
-    * dedup-family "materialize pairs once, fan out" contract — so the
-    * expensive candidate+verify chain builds once per (session, dir).
+    * The registry serves the pair key and its bands twin
+    * ([[prefixFilterPairBands]]) from ONE [[graft.Materialized]] memo
+    * of this frame — the dedup-family "materialize pairs once, fan
+    * out" contract — so the expensive candidate+verify chain builds
+    * once per (session, dir), and the pair key's presentation sort
+    * samples the memo's blocks instead of re-running the verify stage.
     */
-  def prefixFilterPairs(documents: DataFrame, threshold: Double = 0.6,
-                        sampleMod: Int = 5, maxBucket: Int = 1024): DataFrame =
-    prefixFilterScored(documents, threshold, sampleMod, maxBucket)
-      .localCheckpoint(false)
-      .orderBy("doc_a", "doc_b")
-
-  /** Count-only audit twin of [[prefixFilterPairs]]: the same scored
-    * pair table, finished as per-band pair COUNTS (0.05-wide
-    * similarity bands) instead of the pair list. On this corpus the
-    * pair list itself is the cost floor — 57% of in-replica pairs
-    * genuinely match at J ≥ 0.6 (28.4M result rows at sf10), so the
-    * emitting key's warm time measures output volume, not plan
-    * quality. The twin decouples the plan-health audit from that
-    * floor by BOTH skipping the full-width presentation sort AND
-    * (in the registry) reading the shared [[graft.Materialized]]
-    * memo of the scored table instead of rebuilding candidate
-    * generation — the ≤17-row rollup costs one memo scan, so the
-    * number it reports moves only when the memo build's PLAN
-    * regresses. Banding is integer arithmetic on the round-6 jaccard
-    * (`round(j·1e6) div 50000`), identical in both engines, so band
-    * edges cannot flip on float noise.
-    */
-  def prefixFilterPairBands(documents: DataFrame, threshold: Double = 0.6,
-                            sampleMod: Int = 5, maxBucket: Int = 1024): DataFrame =
-    prefixBandsOf(prefixFilterScored(documents, threshold, sampleMod, maxBucket))
-
-  /** The ≤17-row band rollup of [[prefixFilterPairBands]] over an
-    * already-built scored pair table — the piece the registry runs
-    * against the shared memo.
-    */
-  private[graft] def prefixBandsOf(scored: DataFrame): DataFrame =
-    scored
-      .withColumn("j_band", expr("cast(round(jaccard * 1e6) as bigint) div 50000"))
-      .groupBy("j_band")
-      .agg(count(lit(1)).as("n_pairs"),
-        min(col("jaccard")).as("min_j"),
-        max(col("jaccard")).as("max_j"))
-      .orderBy("j_band")
-
-  private[graft] def prefixFilterScored(
-      documents: DataFrame, threshold: Double,
-      sampleMod: Int, maxBucket: Int): DataFrame = {
+  def prefixFilterScored(documents: DataFrame, threshold: Double,
+                         sampleMod: Int, maxBucket: Int): DataFrame = {
     val docs = documents.filter(pmod(col("doc_id"), lit(sampleMod.toLong)) === 0)
     val toks = docs
       .select(col("doc_id"), explode(split(lower(col("text")), " ", -1)).as("tok"))
@@ -1475,6 +1329,44 @@ object Dedup {
       .select("doc_a", "doc_b", "jaccard")
   }
 
+  /** Count-only audit twin of the prefix-filter pair key: the scored
+    * pair table ([[prefixFilterScored]]), finished as per-band pair
+    * COUNTS (0.05-wide similarity bands) instead of the pair list. On
+    * this corpus the pair list itself is the cost floor — 57% of
+    * in-replica pairs genuinely match at J ≥ 0.6 (28.4M result rows
+    * at sf10), so the emitting key's warm time measures output
+    * volume, not plan quality. The twin decouples the plan-health audit from that
+    * floor by BOTH skipping the full-width presentation sort AND
+    * (in the registry) reading the shared [[graft.Materialized]]
+    * memo of the scored table instead of rebuilding candidate
+    * generation — the ≤17-row rollup costs one memo scan, so the
+    * number it reports moves only when the memo build's PLAN
+    * regresses. Banding is integer arithmetic on the round-6 jaccard
+    * (`round(j·1e6) div 50000`), identical in both engines, so band
+    * edges cannot flip on float noise.
+    */
+  def prefixFilterPairBands(scored: DataFrame): DataFrame =
+    scored
+      .withColumn("j_band", expr("cast(round(jaccard * 1e6) as bigint) div 50000"))
+      .groupBy("j_band")
+      .agg(count(lit(1)).as("n_pairs"),
+        min(col("jaccard")).as("min_j"),
+        max(col("jaccard")).as("max_j"))
+      .orderBy("j_band")
+
+  /** Hamming top-k retrieval over the 32-bit md5 SimHash
+    * fingerprints: for each query doc (doc_id < nQueries), the k
+    * nearest corpus docs by fingerprint Hamming distance — the
+    * bridge from dedup fingerprints to cheap retrieval (a 4-byte
+    * code per doc answers "roughly similar" without touching text
+    * or embeddings; Manku et al. 2007's lookup face). Fingerprints
+    * are computed ONCE, the query side broadcasts, scoring is
+    * map-only `bit_count(xor)` (codegen'd), and the per-query top-k
+    * is the bounded-heap partial aggregate
+    * ([[graft.functions.Aggregators.TopKPairs]] on similarity =
+    * 32 − hamming, ties to the lower doc_id) — candidates reduce
+    * map-side, nothing fact-scale crosses the shuffle.
+    */
   def simhashHammingTopK(documents: DataFrame, k: Int = 5,
                          nQueries: Int = 10): DataFrame = {
     val fp = simhashMd5Unsorted(documents)
@@ -1502,7 +1394,7 @@ object Dedup {
     * keeping ~2/(w+1) of positions, so the candidate join runs on a
     * winnowed set several times smaller than the full shingle table.
     * The local-min selection is position-sensitive where plain
-    * [[ngramJaccardPairs]] is set-based: winnowing is the
+    * [[jaccardFromCounts]] is set-based: winnowing is the
     * plagiarism/passage-copy detector, Jaccard the near-dup scorer.
     * Hashes are md5-derived 28-bit ints (the engine-portable
     * convention), so both engines pick identical minima; docs with
@@ -1545,7 +1437,7 @@ object Dedup {
     * vocabulary: tokens with df ≤ `maxDf` carry weight ln(N/df)
     * (rounded to 6 so both engines sum identical doubles), and pair
     * similarity is Σ_{A∩B} w / Σ_{A∪B} w — the weighted set measure
-    * (Chum et al. 2008) that plain [[ngramJaccardPairs]] miscounts
+    * (Chum et al. 2008) that plain [[jaccardFromCounts]] miscounts
     * when near-dups differ only in boilerplate: shared rare tokens
     * dominate, shared stopwords barely move the score. The df cap
     * serves double duty — the standard Σ min(df,maxDf)² pair-count

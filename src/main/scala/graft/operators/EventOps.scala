@@ -1940,6 +1940,14 @@ object EventOps {
       .orderBy("t_hours")
   }
 
+  /** The A/B arm (0 or 1) of a user: the first 4 md5 hex chars of
+    * `user_id` mod 2 — a deterministic 50/50 split, reproducible on
+    * any cluster, that every experiment readout below shares.
+    */
+  private val abArm: Column =
+    pmod(conv(substring(md5(col("user_id").cast("string")), 1, 4), 16, 10)
+      .cast("long"), lit(2L))
+
   /** A/B experiment readout over a deterministic 50/50 hash split of
     * users (md5 arithmetic, the [[TextAnalysis.hashSample]]
     * primitive — reproducible on any cluster, no RNG): per-arm n,
@@ -1959,9 +1967,7 @@ object EventOps {
     val perUser = events.groupBy("user_id")
       .agg(round(sum(when(col("event_type") === "purchase", col("value"))
         .otherwise(0.0)), 6).as("m"))
-      .select(col("m"),
-        pmod(conv(substring(md5(col("user_id").cast("string")), 1, 4), 16, 10)
-          .cast("long"), lit(2L)).as("grp"))
+      .select(col("m"), abArm.as("grp"))
     val wide = perUser.agg(
       count(when(col("grp") === 0, lit(1))).as("n_a"),
       count(when(col("grp") === 1, lit(1))).as("n_b"),
@@ -2003,9 +2009,7 @@ object EventOps {
     val perUser = events.groupBy("user_id")
       .agg(round(sum(when(col("event_type") === "purchase", col("value"))
         .otherwise(0.0)), 6).as("m"))
-      .select(col("m"),
-        pmod(conv(substring(md5(col("user_id").cast("string")), 1, 4), 16, 10)
-          .cast("long"), lit(2L)).as("grp"))
+      .select(col("m"), abArm.as("grp"))
     val grid = perUser.agg(percentile(col("m"),
       array((1 until nBins).map(i => lit(i.toDouble / nBins)): _*)).as("thr"))
       .select(explode(col("thr")).as("t")).distinct()
@@ -2104,9 +2108,7 @@ object EventOps {
         tsBucket(dayUs).as("day"))
     val bounds = e.agg(min("day").as("d0"), max("day").as("d1"))
     val eb = e.crossJoin(broadcast(bounds))
-      .withColumn("grp",
-        pmod(conv(substring(md5(col("user_id").cast("string")), 1, 4), 16, 10)
-          .cast("long"), lit(2L)))
+      .withColumn("grp", abArm)
       .withColumn("is_post", col("day") >= expr("(d0 + d1 + 1) div 2"))
     val cells = eb.filter(col("event_type") === "purchase").agg(
       sum(when(col("grp") === 0 && !col("is_post"), col("value"))
@@ -2150,9 +2152,7 @@ object EventOps {
       .agg(round(sum(when(col("event_type") === "purchase", col("value"))
         .otherwise(0.0)), 6).as("m"),
         max(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("conv"))
-      .select(col("m"), col("conv"),
-        pmod(conv(substring(md5(col("user_id").cast("string")), 1, 4), 16, 10)
-          .cast("long"), lit(2L)).as("grp"))
+      .select(col("m"), col("conv"), abArm.as("grp"))
     val s = perUser.agg(
       count(when(col("grp") === 0, lit(1))).as("n_a"),
       count(when(col("grp") === 1, lit(1))).as("n_b"),
@@ -2193,9 +2193,7 @@ object EventOps {
     val perUser = events.groupBy("user_id")
       .agg(max(when(col("event_type") === "purchase", 1L).otherwise(0L))
         .as("conv"))
-      .select(col("conv"),
-        pmod(conv(substring(md5(col("user_id").cast("string")), 1, 4), 16, 10)
-          .cast("long"), lit(2L)).as("grp"))
+      .select(col("conv"), abArm.as("grp"))
     val s = perUser.agg(
       count(when(col("grp") === 0, lit(1))).as("n_a"),
       count(when(col("grp") === 1, lit(1))).as("n_b"),
@@ -2241,9 +2239,7 @@ object EventOps {
           col("value")).otherwise(0.0)), 6).as("x"),
         round(sum(when(col("event_type") === "purchase" && col("is_post"),
           col("value")).otherwise(0.0)), 6).as("y"))
-      .select(col("x"), col("y"),
-        pmod(conv(substring(md5(col("user_id").cast("string")), 1, 4), 16, 10)
-          .cast("long"), lit(2L)).as("grp"))
+      .select(col("x"), col("y"), abArm.as("grp"))
     val s = perUser.agg(
       count(lit(1)).as("n"),
       count(when(col("grp") === 0, lit(1))).as("n_a"),
@@ -2288,9 +2284,7 @@ object EventOps {
       .agg(count(lit(1)).as("n_events"),
         round(sum(when(col("event_type") === "purchase", col("value"))
           .otherwise(0.0)), 6).as("m"))
-      .select(col("n_events"), col("m"),
-        pmod(conv(substring(md5(col("user_id").cast("string")), 1, 4), 16, 10)
-          .cast("long"), lit(2L)).as("grp"))
+      .select(col("n_events"), col("m"), abArm.as("grp"))
     val thr = perUser.agg(percentile(col("n_events").cast("double"),
       array((1 until nSegments).map(i => lit(i.toDouble / nSegments)): _*))
       .as("thr"))
@@ -2384,10 +2378,10 @@ object EventOps {
       .select(col("user_id"), col("event_id").as("pid"),
         col("ts_us").as("pts"), col("value"))
     val t = e.filter(col("event_type") =!= "purchase")
-      .select(col("user_id"), col("event_id").as("tid"),
+      .select(col("user_id").as("t_user"), col("event_id").as("tid"),
         col("ts_us").as("tts"), col("event_type").as("channel"))
     val j = p.join(t,
-      p("user_id") === t("user_id") && col("tts") < col("pts") &&
+      col("user_id") === col("t_user") && col("tts") < col("pts") &&
         col("pts") - col("tts") <= lookUs, "left")
       .select(col("pid"), col("value"), col("tid"), col("tts"), col("channel"))
     val byP = Window.partitionBy("pid")

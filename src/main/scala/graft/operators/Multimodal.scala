@@ -225,9 +225,8 @@ object Multimodal {
     * report each shard's asset count, byte total, and modality mix —
     * the table a dataloader fleet reads to schedule shard downloads,
     * and the balance check run before committing a shard count.
-    * Content-hash assignment (md5 of the payload, same digest
-    * arithmetic as [[graft.operators.TextAnalysis.hashSample]])
-    * makes placement reproducible on any cluster, independent of row
+    * Content-hash assignment ([[Curation.shardId]] of the payload,
+    * the rule the text curation stages use) makes placement reproducible on any cluster, independent of row
     * order or doc ids — re-ingesting the same bytes lands in the
     * same shard. Map-only assignment; the report agg is nShards
     * keys; the actual shard write is
@@ -237,8 +236,7 @@ object Multimodal {
   def shardManifest(documents: DataFrame, nShards: Int = 16): DataFrame =
     asMedia(documents)
       .select(
-        pmod(conv(substring(md5(col("payload")), 1, 8), 16, 10).cast("long"),
-          lit(nShards.toLong)).as("shard_id"),
+        Curation.shardId(col("payload"), nShards).as("shard_id"),
         col("meta.media_type").as("media_type"),
         col("meta.n_bytes").as("n_bytes"))
       .groupBy("shard_id")

@@ -38,8 +38,8 @@ object Similarity {
     * reduces each partition's candidates to k pairs BEFORE the
     * exchange, so the shuffle carries n_partitions × k rows per query
     * instead of every scored row. The window formulation this
-    * replaces ([[topKPerQueryWindow]], kept for the differential
-    * spec) shuffled |corpus| × |queries| rows onto ≤ |queries|
+    * replaces (kept in `SimilaritySpec` as the differential
+    * reference) shuffled |corpus| × |queries| rows onto ≤ |queries|
     * partition keys — a scale-killer when queries are few.
     */
   private def topKPerQuery(scored: DataFrame, k: Int,
@@ -76,18 +76,6 @@ object Similarity {
       else joined.filter(col("qid") =!= col("cid"))
     filtered.select(col("qid"), col("cid"),
       round(score(col("qv"), col("cv")), 6).as(scoreName))
-  }
-
-  /** The pre-round-4 window finisher — identical results, kept only
-    * as the differential oracle for [[topKPerQuery]].
-    */
-  private[graft] def topKPerQueryWindow(scored: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("cid"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("qid", "rnk", "cid", "cos_sim")
-      .orderBy("qid", "rnk")
   }
 
   /** Scored candidate rows for [[bruteForceTopK]] (shared with the
@@ -594,21 +582,23 @@ object Similarity {
     * label check: one round of four Spark jobs when the clusters are
     * dense), so transitively-linked paraphrase clusters collapse to
     * one group id (= min member). Downstream keeps one representative
-    * per group. Both legs are the already-scale-argued building
-    * blocks; the composition adds no new shuffle shape.
+    * per group. `pairs` is the [[cosineNearDupPairs]] output; both
+    * legs are the already-scale-argued building blocks, and the
+    * composition adds no new shuffle shape.
     */
-  def semanticGroups(embeddings: DataFrame, threshold: Double = 0.2): DataFrame =
-    semanticGroupsOfPairs(cosineNearDupPairs(embeddings, threshold))
-
-  /** [[semanticGroups]] over a pre-materialized near-dup pair table —
-    * the production entry point (see [[graft.Materialized]]): only
-    * the CC fixpoint runs here, the LSH join is reused.
-    */
-  def semanticGroupsOfPairs(pairs: DataFrame): DataFrame =
+  def semanticGroups(pairs: DataFrame): DataFrame =
     Dedup.connectedGroups(
         pairs.select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
       .select(col("doc_id").as("vec_id"), col("group_id"))
       .orderBy("vec_id")
+
+  /** The default cutoff grid of [[thresholdSweep]]. Its minimum, 0.2,
+    * is the threshold the registry's shared `pairs_cosine_lsh` memo is
+    * mined at, so every cutoff counts the full candidate set; a lower
+    * cutoff needs pairs mined at that cutoff or below.
+    */
+  val defaultSweepGrid: Seq[Double] = Seq(0.2, 0.25, 0.3, 0.35, 0.4, 0.45,
+    0.5, 0.55, 0.6, 0.65, 0.7, 0.75, 0.8, 0.85, 0.9)
 
   /** Near-dup threshold calibration curve: pair count at every
     * candidate cosine cutoff — the report a curator reads BEFORE
@@ -623,26 +613,12 @@ object Similarity {
     * the range join is a bounded nested loop (≤ |grid| fan-out per
     * pair — the audited pattern), collapsing straight into a
     * 15-group partial aggregate. LEFT join keeps zero-count rows so
-    * the curve's tail is explicit.
+    * the curve's tail is explicit. `pairs` must be mined at (or
+    * below) `thresholds.min`, so the cumulative counts describe the
+    * full candidate set.
     */
-  /** One shared default grid: `thresholds.min` is part of the pair-
-    * mining contract below, so the two entry points must not drift.
-    */
-  val defaultSweepGrid: Seq[Double] = Seq(0.2, 0.25, 0.3, 0.35, 0.4, 0.45,
-    0.5, 0.55, 0.6, 0.65, 0.7, 0.75, 0.8, 0.85, 0.9)
-
-  def thresholdSweep(embeddings: DataFrame,
-                     thresholds: Seq[Double] = defaultSweepGrid): DataFrame =
-    thresholdSweepOfPairs(cosineNearDupPairs(embeddings, threshold = thresholds.min),
-      thresholds)
-
-  /** [[thresholdSweep]] over a pre-materialized candidate-pair table
-    * (the production entry point — see [[graft.Materialized]]):
-    * `pairs` must be mined at (or below) `thresholds.min` so the
-    * cumulative counts describe the full candidate set.
-    */
-  def thresholdSweepOfPairs(pairs: DataFrame,
-                            thresholds: Seq[Double] = defaultSweepGrid): DataFrame = {
+  def thresholdSweep(pairs: DataFrame,
+                     thresholds: Seq[Double] = defaultSweepGrid): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
     val grid = thresholds.toDF("threshold")

@@ -276,42 +276,16 @@ object TextAnalysis {
     * to the frequency table and the per-doc mean re-weights by the
     * in-doc count (Σ c·log p / Σ c ≡ the instance average). Scores
     * round to 6 decimals so double-sum order never shows.
+    *
+    * `pairs` is the [[unigramPairs]] table. It feeds BOTH the
+    * frequency build and the scoring join, so the registry routes it
+    * through [[graft.Materialized]] and the tokenize+combine chain
+    * runs once (the round-13 ADVICE: a per-query lazy checkpoint
+    * stacked one more session-lifetime executor-block pin onto the
+    * suite-context heap floor; as a memo it is built once and bounded,
+    * and on the sink face it lives in parquet, off-heap entirely).
     */
-  def unigramLogProb(documents: DataFrame): DataFrame =
-    // lazy localCheckpoint: the pair table feeds BOTH the frequency
-    // build and the scoring join — without it the tokenize+combine
-    // chain runs twice (blocks spill to disk under pressure, so this
-    // is safe at the 8 g default heap). The registry instead routes
-    // the pair table through [[graft.Materialized]] (the round-13
-    // ADVICE: this per-query checkpoint stacked one more session-
-    // lifetime executor-block pin onto the suite-context heap floor;
-    // as a memo it is built once and bounded, and on the production
-    // sink face it lives in parquet, off-heap entirely).
-    unigramLogProbFrom(unigramPairs(documents).localCheckpoint(false))
-
-  /** The (doc_id, word, count) pair table behind [[unigramLogProb]] —
-    * the memo unit. The explicit-width repartition BEFORE the groupBy
-    * is load-bearing twice over: (a) a plain groupBy exchange was
-    * AQE-coalesced and the 11.6M-group final aggregate ran near-serial
-    * (jstack at sf10 — 10+ s in one task's findOrInsert), while
-    * hash(doc_id) SATISFIES the (doc_id, w) clustering, so the
-    * aggregate runs exchange-free at full width. (b) A checkpoint/memo
-    * of this frame freezes the partitioning, and
-    * [[unigramLogProbFrom]]'s final per-doc aggregate reuses it with
-    * no further exchange.
-    */
-  private[graft] def unigramPairs(documents: DataFrame): DataFrame = {
-    documents
-      .select(col("doc_id"), explode(split(col("text"), " ", -1)).as("w"))
-      .filter(length(col("w")) > 0)
-      .repartition(Sizing.width(documents), col("doc_id"))
-      .groupBy("doc_id", "w").agg(count(lit(1)).as("c_dw"))
-  }
-
-  /** Frequency build + scoring over a (possibly memoized) pair table
-    * from [[unigramPairs]].
-    */
-  private[graft] def unigramLogProbFrom(pairs: DataFrame): DataFrame = {
+  def unigramLogProb(pairs: DataFrame): DataFrame = {
     val freqs = pairs.groupBy("w").agg(sum("c_dw").as("cnt"))
     val freqsWithTotal =
       freqs.crossJoin(broadcast(freqs.agg(sum("cnt").as("n_total"))))
@@ -333,6 +307,25 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
+  /** The (doc_id, word, count) pair table behind [[unigramLogProb]] —
+    * the memo unit. The explicit-width repartition BEFORE the groupBy
+    * is load-bearing twice over: (a) a plain groupBy exchange was
+    * AQE-coalesced and the 11.6M-group final aggregate ran near-serial
+    * (jstack at sf10 — 10+ s in one task's findOrInsert), while
+    * hash(doc_id) SATISFIES the (doc_id, w) clustering, so the
+    * aggregate runs exchange-free at full width. (b) A checkpoint/memo
+    * of this frame freezes the partitioning, and
+    * [[unigramLogProb]]'s final per-doc aggregate reuses it with
+    * no further exchange.
+    */
+  def unigramPairs(documents: DataFrame): DataFrame = {
+    documents
+      .select(col("doc_id"), explode(split(col("text"), " ", -1)).as("w"))
+      .filter(length(col("w")) > 0)
+      .repartition(Sizing.width(documents), col("doc_id"))
+      .groupBy("doc_id", "w").agg(count(lit(1)).as("c_dw"))
+  }
+
   /** Bigram-LM fluency score — the order-2 upgrade of
     * [[unigramLogProb]]: per-doc average log P(w2|w1) under add-1
     * smoothing, where c(w1) is the count of bigrams starting with w1
@@ -346,18 +339,13 @@ object TextAnalysis {
     * shuffle each (bigram-vocabulary-sized); V is a 1-row aggregate
     * cross-joined against the CONTEXT table (bounded); scoring joins
     * stream the corpus against vocabulary-sized build sides.
-    */
-  def bigramLogProb(documents: DataFrame): DataFrame =
-    bigramLogProbScores(documents).orderBy("doc_id")
-
-  /** The unordered per-doc score frame behind [[bigramLogProb]] —
-    * the bigram-LM build (extraction + both count shuffles + scoring
-    * joins) in one place, so the registry can memoize it through
-    * [[graft.Materialized]] and serve BOTH the per-doc key and the
-    * per-source rollup ([[pplBySourceOf]]) from one build (round-12
+    *
+    * Unsorted: the registry memoizes this frame through
+    * [[graft.Materialized]] and serves BOTH the per-doc key and the
+    * per-source rollup ([[pplBySource]]) from one build (round-12
     * finding: each key rebuilding the LM cost ~43 s at sf10, twice).
     */
-  private[graft] def bigramLogProbScores(documents: DataFrame): DataFrame = {
+  def bigramLogProb(documents: DataFrame): DataFrame = {
     val toks = documents
       .select(col("doc_id"), split(col("text"), " ", -1).as("ws0"))
       .select(col("doc_id"), filter(col("ws0"), w => length(w) > 0).as("ws"))
@@ -613,18 +601,10 @@ object TextAnalysis {
 
   /** Corpus-LM fluency rolled up per source: the acquisition-level
     * quality comparison ("which crawl/feed is garbled") on top of the
-    * per-doc [[bigramLogProb]] score. One extra broadcast-sized join
-    * (doc_id → source) and a |sources|-row aggregate.
+    * per-doc [[bigramLogProb]] `scores`. One extra broadcast-sized
+    * join (doc_id → source) and a |sources|-row aggregate.
     */
-  def pplBySource(documents: DataFrame): DataFrame =
-    pplBySourceOf(bigramLogProbScores(documents), documents)
-
-  /** The rollup of [[pplBySource]] over an already-built per-doc
-    * score frame — what the registry runs against the shared
-    * [[graft.Materialized]] memo so the bigram LM builds once.
-    */
-  private[graft] def pplBySourceOf(scores: DataFrame,
-                                   documents: DataFrame): DataFrame =
+  def pplBySource(scores: DataFrame, documents: DataFrame): DataFrame =
     scores
       .join(documents.select("doc_id", "source"), Seq("doc_id"))
       .groupBy("source")
@@ -750,22 +730,15 @@ object TextAnalysis {
     * both engines sample identically, the hash still pins every
     * scored row). Training still sees the full train split — the
     * profile must match the fast path's bit-for-bit.
+    *
+    * Unsorted: the registry memoizes this prediction frame through
+    * [[graft.Materialized]] and serves BOTH the per-doc key and the
+    * confusion-matrix rollup ([[langConfusionMatrix]]) from one build
+    * (each key rebuilding the profile + scoring join cost ~15 s at
+    * sf10, twice per suite).
     */
   def languageIdRelational(documents: DataFrame, profileSize: Int = 300,
-                           trainModulo: Int = 8, scoreModulo: Int = 8): DataFrame =
-    languageIdRelationalScores(documents, profileSize, trainModulo, scoreModulo)
-      .orderBy("doc_id")
-
-  /** The unordered prediction frame behind [[languageIdRelational]] —
-    * train + score + argmax in one place, so the registry can memoize
-    * it through [[graft.Materialized]] and serve BOTH the per-doc key
-    * and the confusion-matrix rollup ([[langConfusionOf]]) from one
-    * build (each key rebuilding the profile + scoring join cost ~15 s
-    * at sf10, twice per suite).
-    */
-  private[graft] def languageIdRelationalScores(
-      documents: DataFrame, profileSize: Int = 300,
-      trainModulo: Int = 8, scoreModulo: Int = 8): DataFrame = {
+                           trainModulo: Int = 8, scoreModulo: Int = 8): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = documents
       .select(col("doc_id"), col("lang"), lower(col("text")).as("t"))
@@ -820,12 +793,6 @@ object TextAnalysis {
     when(length(t) < 3, array().cast("array<string>"))
       .otherwise(transform(sequence(lit(1), length(t) - 2),
         i => array_join(slice(chars, i, lit(3)), "")))
-
-  /** Convenience for tests / small inputs (inlines the char split —
-    * fine for tiny data, wrong for the corpus path).
-    */
-  private[graft] def trigrams(t: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    trigramsFromChars(t, split(t, "", -1))
 
   /** Lowercased alphabetic tokens, one row per (doc, token). The
     * shared front end of the term-weighting operators below.
@@ -1288,16 +1255,9 @@ object TextAnalysis {
     * classifier from "runs" into "measured" (precision/recall per
     * language read straight off the matrix). Adds one tiny
     * (langs × langs)-key aggregate on the classifier's scored
-    * holdout.
+    * holdout `scores`.
     */
-  def langConfusionMatrix(documents: DataFrame): DataFrame =
-    langConfusionOf(languageIdRelationalScores(documents))
-
-  /** The rollup of [[langConfusionMatrix]] over an already-built
-    * prediction frame — what the registry runs against the shared
-    * [[graft.Materialized]] memo so the classifier builds once.
-    */
-  private[graft] def langConfusionOf(scores: DataFrame): DataFrame =
+  def langConfusionMatrix(scores: DataFrame): DataFrame =
     scores
       .groupBy("true_lang", "pred_lang")
       .agg(count(lit(1)).as("n"),

@@ -1133,6 +1133,25 @@ object Relational {
       .limit(k)
   }
 
+  /** The capped (okey, parts-array) basket table behind
+    * [[copurchaseLiftCapped]] — the memo unit. The cap changes the
+    * OPTIMAL PLAN, not just the volume: once a basket fits in
+    * ≤ maxBasket elements, the self-join disappears — baskets
+    * aggregate to arrays on the okey clustering (exchange-free after
+    * the repartition) and each array emits its own C(|basket|, 2)
+    * pairs map-only into the pair-count shuffle. No okey-keyed join
+    * at all, so none of the uncapped key's per-task hash builds
+    * (which OOM the 8 g default heap when a basket-filter join fuses
+    * into the same stage) and no window sort.
+    */
+  def cappedBaskets(lineitem: DataFrame, maxBasket: Int = 5): DataFrame = {
+    lineitem.select(col("l_orderkey").as("okey"), col("l_partkey").as("part"))
+      .repartition(Sizing.width(lineitem), col("okey"))
+      .dropDuplicates("okey", "part")
+      .groupBy("okey").agg(collect_list("part").as("ps"))
+      .filter(size(col("ps")) <= maxBasket)
+  }
+
   /** [[copurchaseLift]] with a basket-size cap — the 100×-safe face
     * of the suite's one adjudicated pair-volume floor. The uncapped
     * key's cost is Σ C(basket, 2): linear in RESULT volume, but a
@@ -1149,47 +1168,17 @@ object Relational {
     * KEPT orders, so lift stays a probability ratio within the
     * analyzed population. The uncapped [[copurchaseLift]] stays as
     * the exact audit.
+    *
+    * `baskets` is the [[cappedBaskets]] table, read three times (order
+    * count, part counts, pair explode); the registry routes it through
+    * [[graft.Materialized]], so the dedup + array aggregate runs once.
+    * The per-row pair HOF runs interpreted, but over ≤ cap elements
+    * per row — bounded by the same C(cap, 2) the plan is named for.
+    * collect_list order is nondeterministic; least/greatest normalizes
+    * each pair, so the emitted SET is exact.
     */
-  def copurchaseLiftCapped(lineitem: DataFrame, maxBasket: Int = 5,
-                           minPairs: Int = 2, k: Int = 200): DataFrame =
-    // direct (un-memoized) form: a lazy checkpoint here, because three
-    // consumers (order count, part counts, pair explode) would each
-    // re-run the dedup + array agg above the reused exchange. The
-    // registry routes the basket table through [[graft.Materialized]]
-    // instead — a per-call lazy checkpoint in a registry key is the
-    // block-pinning anti-pattern the round-13 ADVICE named (every
-    // bench iteration pins a fresh copy until the driver GC's the RDD)
-    copurchaseLiftCappedFrom(
-      cappedBaskets(lineitem, maxBasket).localCheckpoint(false),
-      minPairs, k)
-
-  /** The capped (okey, parts-array) basket table behind
-    * [[copurchaseLiftCapped]] — the memo unit. The cap changes the
-    * OPTIMAL PLAN, not just the volume: once a basket fits in
-    * ≤ maxBasket elements, the self-join disappears — baskets
-    * aggregate to arrays on the okey clustering (exchange-free after
-    * the repartition) and each array emits its own C(|basket|, 2)
-    * pairs map-only into the pair-count shuffle. No okey-keyed join
-    * at all, so none of the uncapped key's per-task hash builds
-    * (which OOM the 8 g default heap when a basket-filter join fuses
-    * into the same stage) and no window sort.
-    */
-  private[graft] def cappedBaskets(lineitem: DataFrame, maxBasket: Int = 5): DataFrame = {
-    lineitem.select(col("l_orderkey").as("okey"), col("l_partkey").as("part"))
-      .repartition(Sizing.width(lineitem), col("okey"))
-      .dropDuplicates("okey", "part")
-      .groupBy("okey").agg(collect_list("part").as("ps"))
-      .filter(size(col("ps")) <= maxBasket)
-  }
-
-  /** Lift report over a (possibly memoized) capped basket table from
-    * [[cappedBaskets]]. The per-row pair HOF runs interpreted, but
-    * over ≤ cap elements per row — bounded by the same C(cap, 2) the
-    * plan is named for. collect_list order is nondeterministic;
-    * least/greatest normalizes each pair, so the emitted SET is exact.
-    */
-  private[graft] def copurchaseLiftCappedFrom(baskets: DataFrame,
-                                              minPairs: Int = 2, k: Int = 200): DataFrame = {
+  def copurchaseLiftCapped(baskets: DataFrame, minPairs: Int = 2,
+                           k: Int = 200): DataFrame = {
     val nOrders = baskets.agg(count(lit(1)).as("n_orders"))
     val partCnt = baskets.select(explode(col("ps")).as("part"))
       .groupBy("part").agg(count(lit(1)).as("n_p"))

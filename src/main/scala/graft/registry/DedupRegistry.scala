@@ -92,12 +92,11 @@ private[graft] trait DedupRegistry extends RegistryShared {
     "dedup_lsh_recall" -> ((s, d) =>
       Dedup.lshRecallAudit(Tables.documents(s, d), ngramPairsShared(s, d),
         shingleK = 5, numHashes = 16, bands = 4)),
-    "dedup_split_leakage" -> ((s, d) => Dedup.splitLeakageOfPairs(minhashPairsShared(s, d))),
+    "dedup_split_leakage" -> ((s, d) => Dedup.splitLeakage(minhashPairsShared(s, d))),
     "dedup_band_plan" -> ((s, _) => Dedup.lshBandPlan(s)),
     "dedup_kcore" -> ((s, d) => operators.Graph.kCorePeel(ngramPairsShared(s, d))),
     "dedup_lex_vs_sem" -> ((s, d) =>
-      Dedup.lexicalVsSemantic(Tables.documents(s, d), Tables.embeddings(s, d),
-        minhashPairsShared(s, d))),
+      Dedup.lexicalVsSemantic(Tables.embeddings(s, d), minhashPairsShared(s, d))),
     "dedup_ngram_novelty" -> ((s, d) => Dedup.ngramNovelty(Tables.documents(s, d))),
     "dedup_shingle_df_hist" -> ((s, d) => Dedup.shingleDfHistogram(Tables.documents(s, d))),
     "dedup_cluster_best" -> ((s, d) =>
@@ -127,9 +126,9 @@ private[graft] trait DedupRegistry extends RegistryShared {
       prefixScoredShared(s, d)
         .orderBy(org.apache.spark.sql.functions.col("doc_a"),
           org.apache.spark.sql.functions.col("doc_b"))),
-    "dedup_prefix_pair_bands" -> ((s, d) => Dedup.prefixBandsOf(prefixScoredShared(s, d))),
+    "dedup_prefix_pair_bands" -> ((s, d) => Dedup.prefixFilterPairBands(prefixScoredShared(s, d))),
     "dedup_cluster_size_hist" -> ((s, d) =>
-      Dedup.clusterSizeHistogramOfGroups(simhashGroupsShared(s, d))),
+      Dedup.clusterSizeHistogram(simhashGroupsShared(s, d))),
     "dedup_assortativity" -> ((s, d) => operators.Graph.assortativity(ngramPairsShared(s, d))),
     "dedup_weighted_jaccard" -> ((s, d) => Dedup.weightedJaccardPairs(Tables.documents(s, d))),
     "dedup_winnow_pairs" -> ((s, d) => Dedup.winnowPairs(Tables.documents(s, d))),
@@ -245,8 +244,9 @@ private[graft] trait DedupRegistry extends RegistryShared {
   }
 
 
-  /** Shared CTE re-deriving [[graft.operators.Dedup.ngramJaccardPairs]]
-    * (5-gram shingles, df ≤ 1000, jaccard ≥ 0.2) as the `pp` pair
+  /** Shared CTE re-deriving the `pairs_ngram` memo
+    * ([[graft.operators.Dedup.jaccardFromCounts]]: 5-gram shingles,
+    * df ≤ 1000, jaccard ≥ 0.2) as the `pp` pair
     * table — the edge source for the graph-analytics oracles
     * (`dedup_pagerank`, `dedup_triangles`).
     */
@@ -705,7 +705,7 @@ private[graft] trait DedupRegistry extends RegistryShared {
         |FROM p a JOIN p b ON a.block = b.block AND a.doc_id < b.doc_id
         |WHERE levenshtein(a.head, b.head) <= 5
         |ORDER BY doc_a, doc_b""".stripMargin,
-    // exact word-shingle Jaccard — mirrors Dedup.ngramJaccardPairs
+    // exact word-shingle Jaccard — mirrors Dedup.jaccardFromCounts
     // (k=5 distinct shingles, df<=1000 cap, threshold on the rounded
     // value) with DuckDB list lambdas.
     "dedup_ngram_jaccard" ->

@@ -57,7 +57,7 @@ private[graft] trait RelationalRegistry {
     "q_copurchase_lift" -> ((s, d) => Relational.copurchaseLift(Tables.lineitem(s, d))),
     // basket table memoized: a per-call lazy checkpoint would pin a
     // fresh block copy per bench iteration (round-13 ADVICE pattern)
-    "q_copurchase_lift_capped" -> ((s, d) => Relational.copurchaseLiftCappedFrom(
+    "q_copurchase_lift_capped" -> ((s, d) => Relational.copurchaseLiftCapped(
       Materialized.of(s, d, "copurchase_baskets")(
         Relational.cappedBaskets(Tables.lineitem(s, d))))),
     "q_histogram" -> ((s, d) => Relational.priceHistogram(Tables.orders(s, d))),

@@ -31,7 +31,7 @@ private[graft] trait SimilarityRegistry {
   // its own parquet table (sink face).
   private def semanticGroupsShared(s: SparkSession, d: String): DataFrame =
     Materialized.of(s, d, "groups_cosine_lsh")(
-      Similarity.semanticGroupsOfPairs(cosinePairsShared(s, d)))
+      Similarity.semanticGroups(cosinePairsShared(s, d)))
 
   protected def simQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "sim_knn_graph" -> ((s, d) => Similarity.knnGraph(Tables.embeddings(s, d))),
@@ -64,7 +64,7 @@ private[graft] trait SimilarityRegistry {
         .orderBy(org.apache.spark.sql.functions.col("vec_a"),
           org.apache.spark.sql.functions.col("vec_b"))),
     "sim_threshold_sweep" -> ((s, d) =>
-      Similarity.thresholdSweepOfPairs(cosinePairsShared(s, d))),
+      Similarity.thresholdSweep(cosinePairsShared(s, d))),
     "sim_label_centroids" -> ((s, d) => Similarity.labelCentroids(Tables.embeddings(s, d))),
     "sim_outliers" -> ((s, d) => Similarity.labelOutliers(Tables.embeddings(s, d))),
     "sim_hard_negatives" -> ((s, d) => Similarity.hardNegatives(Tables.embeddings(s, d))),

@@ -18,14 +18,14 @@ private[graft] trait TextRegistry extends RegistryShared {
   // at sf10, twice per suite (round-12 finding)
   private def bigramScoresShared(s: SparkSession, d: String): DataFrame =
     Materialized.of(s, d, "bigram_doc_logprob")(
-      TextAnalysis.bigramLogProbScores(Tables.documents(s, d)))
+      TextAnalysis.bigramLogProb(Tables.documents(s, d)))
   // same contract for the n-gram language classifier: the prediction
   // frame (train + profile + scoring join + argmax) is the memo unit
   // shared by the per-doc key and the confusion-matrix rollup —
   // before the split each key rebuilt it (~15 s at sf10, twice)
   private def langRelShared(s: SparkSession, d: String): DataFrame =
     Materialized.of(s, d, "langid_rel")(
-      TextAnalysis.languageIdRelationalScores(Tables.documents(s, d)))
+      TextAnalysis.languageIdRelational(Tables.documents(s, d)))
 
   protected def textQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "text_curate_pipeline" -> ((s, d) => Curation.curatePipeline(Tables.documents(s, d))),
@@ -36,7 +36,7 @@ private[graft] trait TextRegistry extends RegistryShared {
     "text_vocab_overlap" -> ((s, d) => TextAnalysis.sourceVocabOverlap(Tables.documents(s, d))),
     "text_token_count" -> ((s, d) => TextAnalysis.tokenCount(Tables.documents(s, d))),
     "text_lang_confusion" -> ((s, d) =>
-      TextAnalysis.langConfusionOf(langRelShared(s, d))),
+      TextAnalysis.langConfusionMatrix(langRelShared(s, d))),
     "text_code_detect" -> ((s, d) => TextAnalysis.codeDetect(Tables.documents(s, d))),
     "text_gopher_rules" -> ((s, d) => TextAnalysis.gopherRules(Tables.documents(s, d))),
     "text_lang_source_mix" -> ((s, d) => TextAnalysis.langSourceMix(Tables.documents(s, d))),
@@ -62,7 +62,7 @@ private[graft] trait TextRegistry extends RegistryShared {
     "text_pmi_bigrams" -> ((s, d) => TextAnalysis.pmiBigrams(Tables.documents(s, d))),
     "text_dsir_weights" -> ((s, d) => TextAnalysis.dsirWeights(Tables.documents(s, d))),
     "text_ppl_by_source" -> ((s, d) =>
-      TextAnalysis.pplBySourceOf(bigramScoresShared(s, d), Tables.documents(s, d))),
+      TextAnalysis.pplBySource(bigramScoresShared(s, d), Tables.documents(s, d))),
     "text_zipf_slope" -> ((s, d) => TextAnalysis.zipfSlope(Tables.documents(s, d))),
     "text_inverted_index" -> ((s, d) => TextAnalysis.invertedIndex(Tables.documents(s, d))),
     "text_pii_scrub" -> ((s, d) => TextAnalysis.piiScrub(Tables.documents(s, d))),
@@ -74,7 +74,7 @@ private[graft] trait TextRegistry extends RegistryShared {
     // checkpoint stacked a session-lifetime heap pin per CALL in suite
     // context; the memo builds it once, and the sink face keeps it in
     // parquet instead of executor blocks)
-    "text_unigram_logprob" -> ((s, d) => TextAnalysis.unigramLogProbFrom(
+    "text_unigram_logprob" -> ((s, d) => TextAnalysis.unigramLogProb(
       Materialized.of(s, d, "unigram_pairs")(
         TextAnalysis.unigramPairs(Tables.documents(s, d))))),
     "text_tfidf" -> ((s, d) => TextAnalysis.tfidfTopTerms(Tables.documents(s, d))),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
-import graft.operators.{Dedup, Lsh, TextAnalysis}
+import graft.operators.{Curation, Dedup, Lsh, TextAnalysis}
 
 /** Streaming ingest-to-sink curation: the continuously-ingesting face
   * of [[graft.operators.Curation.curatePipeline]]'s document stages —
@@ -40,7 +40,7 @@ import graft.operators.{Dedup, Lsh, TextAnalysis}
   *   4. sink      — survivors append to `outDir/docs/batch_id=<id>`,
   *                  band + digest state to `outDir/_state/...`, and a
   *                  per-batch shard-manifest DELTA (content-addressed
-  *                  md5 shard assignment, the same arithmetic as
+  *                  shard assignment, [[Curation.shardId]] as in
   *                  [[graft.operators.Curation.curatePipeline]] stage
   *                  7) to `outDir/manifest_delta/batch_id=<id>` — the
   *                  current manifest is the nShards-row sum over
@@ -102,14 +102,6 @@ object CurateStream {
     StructField("shard_id", LongType),
     StructField("n_docs", LongType),
     StructField("n_chars", LongType)))
-
-  /** Shard id for a text row — the content-addressed assignment of
-    * `curatePipeline` stage 7 / [[graft.operators.Multimodal.shardManifest]]:
-    * first 8 md5 hex chars mod nShards, reproducible on any cluster.
-    */
-  private def shardId(nShards: Int) =
-    pmod(conv(substring(md5(col("text")), 1, 8), 16, 10).cast("long"),
-      lit(nShards.toLong)).as("shard_id")
 
   /** Start the ingest-to-sink curation stream over `docs` (columns
     * doc_id, source, lang, text). See object scaladoc for semantics;
@@ -204,7 +196,8 @@ object CurateStream {
       .parquet(s"$outDir/_state/digests/batch_id=$batchId")
     bb.write.mode("overwrite")
       .parquet(s"$outDir/_state/bands/batch_id=$batchId")
-    d3.select(shardId(nShards), length(col("text")).cast("long").as("n_chars"))
+    d3.select(Curation.shardId(col("text"), nShards).as("shard_id"),
+        length(col("text")).cast("long").as("n_chars"))
       .groupBy("shard_id")
       .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("n_chars"))
       .write.mode("overwrite")
@@ -275,15 +268,4 @@ object CurateStream {
       _.groupBy("shard_id").agg(sum("n_docs").as("n_docs"),
         sum("n_chars").as("n_chars")))
   }
-
-  /** Batch-side manifest twin: the same shard arithmetic over an
-    * arbitrary document frame — what the replay spec compares the
-    * streamed manifest against.
-    */
-  def manifestOf(documents: DataFrame, nShards: Int = 16): DataFrame =
-    documents
-      .select(shardId(nShards), length(col("text")).cast("long").as("n_chars"))
-      .groupBy("shard_id")
-      .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("n_chars"))
-      .orderBy("shard_id")
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, EventOps, Graph, Multimodal, Similarity, TextAnalysis}
+import graft.operators.{Dedup, DedupSpec, EventOps, Graph, Multimodal, Similarity, TextAnalysis}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -29,7 +29,7 @@ class EmptyInputSpec extends SparkSpec {
     assert(Dedup.exactStats(noDocs).collect().head.getLong(0) == 0L)
     assert(Dedup.minhashNearDups(noDocs).count() == 0)
     assert(Dedup.simhashNearDups(noDocs).count() == 0)
-    assert(Dedup.ngramJaccardPairs(noDocs).count() == 0)
+    assert(DedupSpec.jaccardPairs(noDocs).count() == 0)
     assert(Dedup.minhashNearDupsMd5(noDocs).count() == 0)
     assert(Dedup.simhashMd5NearDups(noDocs).count() == 0)
     assert(Dedup.keepBestByFingerprint(noDocs).count() == 0)
@@ -105,13 +105,15 @@ class EmptyInputSpec extends SparkSpec {
     assert(TextAnalysis.invertedIndex(noDocs).count() == 0)
     assert(TextAnalysis.zipfSlope(noDocs).count() == 1) // 1-row report, null slope
     assert(Similarity.hardNegatives(noEmb).count() == 0)
-    assert(Dedup.minhashEstErrorMd5(noDocs).count() == 0)
+    assert(Dedup.minhashEstErrorMd5(noDocs, Dedup.minhashNearDupsMd5(noDocs), 5, 16)
+      .count() == 0)
     assert(Graph.pageRank(Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")).count() == 0)
     assert(EventOps.lastTouchAttribution(noEvents).count() == 0)
     assert(TextAnalysis.dsirWeights(noDocs).count() == 0)
-    assert(TextAnalysis.pplBySource(noDocs).count() == 0)
+    assert(TextAnalysis.pplBySource(TextAnalysis.bigramLogProb(noDocs), noDocs).count() == 0)
     assert(EventOps.rfm(noEvents).count() == 0)
-    assert(Dedup.clusterStats(noDocs).count() == 0)
+    assert(Dedup.clusterStats(noDocs,
+      Dedup.connectedGroups(Dedup.minhashNearDupsMd5(noDocs))).count() == 0)
     assert(Dedup.boundaryOverlapPairs(noDocs).count() == 0)
     assert(Similarity.mipsTopK(noEmb).count() == 0)
     assert(EventOps.funnelSteps(noEvents).count() == 3) // 3 steps × 0 users
@@ -122,7 +124,7 @@ class EmptyInputSpec extends SparkSpec {
   test("round-7 operators: empty inputs → empty/zero-report results") {
     import graft.queries.Relational
     assert(Dedup.minhashBandHistogram(noDocs).count() == 0)
-    assert(Dedup.crossSourceNearDups(noDocs).count() == 0)
+    assert(Dedup.crossSourceNearDups(noDocs, Dedup.minhashNearDupsMd5(noDocs)).count() == 0)
     assert(Graph.degreeHistogram(Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")).count() == 0)
     assert(TextAnalysis.typeTokenRatio(noDocs).count() == 0)
     assert(TextAnalysis.jsdSourceDrift(noDocs).count() == 0)
@@ -146,7 +148,7 @@ class EmptyInputSpec extends SparkSpec {
     assert(EventOps.timeToConvert(noEvents).collect().head.getLong(0) == 0L)
     assert(EventOps.sessionDurationPercentiles(noEvents).collect().head.getLong(0) == 0L)
     // 1-row recall report over an empty truth set
-    assert(Dedup.lshRecallAudit(noDocs).count() == 1)
+    assert(Dedup.lshRecallAudit(noDocs, DedupSpec.jaccardPairs(noDocs), 5, 16, 4).count() == 1)
     assert(Multimodal.frameEntropy(noDocs).count() == 0)
     val noOrders = Seq.empty[(Long, Double, String)]
       .toDF("o_orderkey", "o_totalprice", "o_orderpriority")
@@ -171,7 +173,7 @@ class EmptyInputSpec extends SparkSpec {
     assert(Similarity.ivfProbeSweep(noEmb).count() == 0)
     assert(Similarity.ivfCellBalance(noEmb).count() == 0)
     assert(Similarity.labelMargin(noEmb).count() == 0)
-    assert(Dedup.lexicalVsSemantic(noDocs, noEmb).count() == 0)
+    assert(Dedup.lexicalVsSemantic(noEmb, Dedup.minhashNearDupsMd5(noDocs)).count() == 0)
     assert(Dedup.lshBandPlan(spark).count() == 35) // generated grid, input-free
     assert(Graph.kCorePeel(Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")).count() == 0)
     assert(Multimodal.modalityMix(noDocs).count() == 0)
@@ -194,7 +196,8 @@ class EmptyInputSpec extends SparkSpec {
     assert(EventOps.forecastBacktest(noEvents).collect().head.getLong(0) == 0L)
     assert(EventOps.conversionWindowSweep(noEvents).count() == 0)
     assert(Multimodal.payloadSizeOutliers(noDocs).count() == 0)
-    assert(Dedup.clusterRepresentatives(noDocs).count() == 0)
+    assert(Dedup.clusterRepresentatives(noDocs,
+      Dedup.connectedGroups(Dedup.simhashMd5NearDups(noDocs))).count() == 0)
     assert(Dedup.dupRateByLength(noDocs).count() == 0)
     assert(Similarity.knnLabelHomophily(noEmb).count() == 0)
     assert(Similarity.radiusSearch(noEmb).count() == 0)
@@ -226,10 +229,10 @@ class EmptyInputSpec extends SparkSpec {
     assert(Dedup.estJaccardHistogram(noDocs).count() == 0)
     assert(Dedup.simhashHammingTopK(noDocs).count() == 0)
     assert(EventOps.sessionGapHistogram(noEvents).count() == 0)
-    assert(Dedup.prefixFilterPairs(noDocs).count() == 0)
+    assert(DedupSpec.prefixPairs(noDocs).count() == 0)
     assert(EventOps.changepointCusum(noEvents).count() == 0)
-    assert(Dedup.clusterSizeHistogram(
-      Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")).count() == 0)
+    assert(Dedup.clusterSizeHistogram(Dedup.connectedGroups(
+      Seq.empty[(Long, Long)].toDF("doc_a", "doc_b"))).count() == 0)
     assert(TextAnalysis.bigramEntropyRate(noDocs).count() == 0)
     // 1-row fit/funnel reports over zero inputs
     assert(EventOps.retentionFit(noEvents).collect().head.getLong(0) == 0L)

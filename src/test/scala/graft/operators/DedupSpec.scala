@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 object DedupSpec {
@@ -11,6 +12,22 @@ object DedupSpec {
   val edgeTexts: Seq[String] = Seq("", "   ", "\u212A elvin", "\u00C9clair TEST  42",
     "a\tb\nc", "MiXeD  CaSe   07 ", " !@# $%^ ", "\u4F60\u597D world",
     "a!b", "A  B\u0301  C")
+
+  /** The `dedup_ngram_jaccard` key's composition, with its parameters
+    * open: Jaccard over the df-capped shingle counts, sorted by pair.
+    */
+  def jaccardPairs(documents: DataFrame, shingleK: Int = 5, threshold: Double = 0.2,
+                   maxDf: Int = 1000): DataFrame =
+    Dedup.jaccardFromCounts(Dedup.ngramPairCounts(documents, shingleK, maxDf), threshold)
+      .orderBy("doc_a", "doc_b")
+
+  /** The `dedup_prefix_pairs` key's composition, with its parameters
+    * open: the prefix-filter scored pairs, sorted by pair.
+    */
+  def prefixPairs(documents: DataFrame, threshold: Double = 0.6, sampleMod: Int = 5,
+                  maxBucket: Int = 1024): DataFrame =
+    Dedup.prefixFilterScored(documents, threshold, sampleMod, maxBucket)
+      .orderBy("doc_a", "doc_b")
 }
 
 class DedupSpec extends SparkSpec {
@@ -57,11 +74,11 @@ class DedupSpec extends SparkSpec {
 
   test("wordShingles produces k-grams; short text → empty") {
     val d = Seq((1L, "a b c d")).toDF("doc_id", "text")
-    val sh = d.select(Dedup.wordShingles(col("text"), 3).as("s"))
+    val sh = d.select(graft.functions.VectorFunctions.wordShingles(col("text"), 3).as("s"))
       .collect().head.getSeq[String](0)
     assert(sh == Seq("a b c", "b c d"))
     val short = Seq((1L, "a b")).toDF("doc_id", "text")
-    assert(short.select(Dedup.wordShingles(col("text"), 3).as("s"))
+    assert(short.select(graft.functions.VectorFunctions.wordShingles(col("text"), 3).as("s"))
       .collect().head.getSeq[String](0).isEmpty)
   }
 
@@ -137,7 +154,8 @@ class DedupSpec extends SparkSpec {
     val base = (1 to 40).map(i => s"w$i").mkString(" ")
     val other = (1 to 40).map(i => s"q$i").mkString(" ")
     val d = docs(1L -> base, 2L -> base, 3L -> other)
-    val r = Dedup.lshRecallAudit(d).collect().head
+    val r = Dedup.lshRecallAudit(d, DedupSpec.jaccardPairs(d), shingleK = 5, numHashes = 16,
+      bands = 4).collect().head
     val (nTruth, nFound, nCand, recall) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))
     // identical docs share every band → the one true pair is found
@@ -150,7 +168,7 @@ class DedupSpec extends SparkSpec {
     val other = (1 to 40).map(i => s"z$i").mkString(" ")
     // ids 1,2 → train/train; 7 (train) & 9 (test) share text → leak
     val d = docs(1L -> base, 2L -> base, 7L -> other, 9L -> other)
-    val out = Dedup.splitLeakage(d).collect()
+    val out = Dedup.splitLeakage(Dedup.minhashNearDupsMd5(d)).collect()
       .map(r => (r.getString(0), r.getString(1)) -> ((r.getLong(2), r.getBoolean(3)))).toMap
     assert(out(("train", "train")) == ((1L, false)), out.toString)
     assert(out(("test", "train")) == ((1L, true)), out.toString)
@@ -163,7 +181,7 @@ class DedupSpec extends SparkSpec {
       (3L, base, "crawlB"),                        // B-B and A-B dups
       (4L, (1 to 40).map(i => s"z$i").mkString(" "), "crawlA"))
       .toDF("doc_id", "text", "source")
-    val out = Dedup.crossSourceNearDups(d).collect()
+    val out = Dedup.crossSourceNearDups(d, Dedup.minhashNearDupsMd5(d)).collect()
       .map(r => (r.getString(0), r.getString(1)) -> ((r.getLong(2), r.getDouble(3)))).toMap
     // pairs: (1,2) A-B, (1,3) A-B, (2,3) B-B — all est_jaccard 1.0
     assert(out(("crawlA", "crawlB")) == ((2L, 1.0)), out.toString)
@@ -197,7 +215,7 @@ class DedupSpec extends SparkSpec {
     val d = docs(
       1L -> "a b c d e f",   // shingles(3): {abc,bcd,cde,def} n=4
       2L -> "a b c d e g")   // {abc,bcd,cde,deg} n=4, inter=3, union=5
-    val out = Dedup.ngramJaccardPairs(d, shingleK = 3, threshold = 0.1).collect()
+    val out = DedupSpec.jaccardPairs(d, shingleK = 3, threshold = 0.1).collect()
     assert(out.length == 1)
     val r = out.head
     assert((r.getLong(0), r.getLong(1), r.getLong(2)) == (1L, 2L, 3L))
@@ -211,16 +229,16 @@ class DedupSpec extends SparkSpec {
     // pair survives (they share nothing else).
     val n = 12
     val d = docs((1 to n).map(i => i.toLong -> s"of the and tail$i more$i words$i"): _*)
-    val uncapped = Dedup.ngramJaccardPairs(d, shingleK = 3, threshold = 0.0, maxDf = 1000)
+    val uncapped = DedupSpec.jaccardPairs(d, shingleK = 3, threshold = 0.0, maxDf = 1000)
     assert(uncapped.count() == n.toLong * (n - 1) / 2)
-    val capped = Dedup.ngramJaccardPairs(d, shingleK = 3, threshold = 0.0, maxDf = n - 1)
+    val capped = DedupSpec.jaccardPairs(d, shingleK = 3, threshold = 0.0, maxDf = n - 1)
     assert(capped.count() == 0)
     // cap leaves rare-shingle pairs untouched (denominator stays uncapped)
     val d2 = docs(
       1L -> "of the and x y z",
       2L -> "of the and x y w",
       3L -> "of the and p q r")
-    val cappedPairs = Dedup.ngramJaccardPairs(d2, shingleK = 3, threshold = 0.0, maxDf = 2)
+    val cappedPairs = DedupSpec.jaccardPairs(d2, shingleK = 3, threshold = 0.0, maxDf = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     // "of the and"/"the and x" df=3/2... only doc1-doc2 share rare shingles
     assert(cappedPairs.map(p => (p._1, p._2)) == Set((1L, 2L)))
@@ -361,11 +379,12 @@ class DedupSpec extends SparkSpec {
     val small = (1 to 10).map(i => s"w$i").mkString(" ")
     val large = ((1 to 10).map(i => s"w$i") ++ (1 to 60).map(i => s"x$i")).mkString(" ")
     val d = docs(1L -> small, 2L -> large)
-    val cont = Dedup.ngramContainmentPairs(d, threshold = 0.6).collect()
+    val cont = Dedup.containmentFromCounts(Dedup.ngramPairCounts(d), threshold = 0.6)
+      .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(3)))
     assert(cont.toSeq == Seq((1L, 2L, 1.0)), cont.mkString(","))
     // the same pair is far below any useful Jaccard threshold
-    val jac = Dedup.ngramJaccardPairs(d, threshold = 0.2).collect()
+    val jac = DedupSpec.jaccardPairs(d, threshold = 0.2).collect()
     assert(jac.isEmpty)
   }
 
@@ -398,7 +417,8 @@ class DedupSpec extends SparkSpec {
     val t = "the quick brown fox jumps over the lazy dog again and again"
     val d = docs(1L -> t, 2L -> t,
       3L -> "completely different text that shares nothing at all with those")
-    val out = Dedup.minhashEstErrorMd5(d).collect()
+    val out = Dedup.minhashEstErrorMd5(d, Dedup.minhashNearDupsMd5(d), shingleK = 5,
+      numHashes = 16).collect()
       .map(r => ((r.getLong(0), r.getLong(1)),
         (r.getDouble(2), r.getDouble(3), r.getDouble(4)))).toMap
     assert(out.contains((1L, 2L)), out.keySet.toString)
@@ -412,7 +432,8 @@ class DedupSpec extends SparkSpec {
     val d = Seq((1L, t, 66L), (2L, t, 66L), (3L, t + " x", 68L),
       (4L, "entirely unrelated words that never overlap with anything else", 62L))
       .toDF("doc_id", "text", "n_chars")
-    val out = Dedup.clusterStats(d).collect()
+    val out = Dedup.clusterStats(d, Dedup.connectedGroups(Dedup.minhashNearDupsMd5(d)))
+      .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     // docs 1,2,3 band together transitively; doc 4 is a singleton (excluded)
     assert(out.length == 1, out.mkString(","))
@@ -462,7 +483,8 @@ class DedupSpec extends SparkSpec {
       (1L, t1, 10L), (2L, t1, 50L), (3L, t1, 20L), // group 1: rep = doc 2 (longest)
       (4L, t2, 30L), (5L, t2, 30L))                // group 4: tie → doc 4
       .toDF("doc_id", "text", "n_chars")
-    val out = Dedup.clusterRepresentatives(d).collect()
+    val out = Dedup.clusterRepresentatives(d,
+        Dedup.connectedGroups(Dedup.simhashMd5NearDups(d))).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(out.toSeq == Seq((1L, 3L, 2L, 50L), (4L, 2L, 4L, 30L)), out.toSeq.toString)
   }
@@ -496,7 +518,7 @@ class DedupSpec extends SparkSpec {
       (3L, Array(1.0f, 0.0f)), (4L, Array(0.0f, 1.0f))   // orthogonal → cos 0
       // docs 5/6 have no embeddings → their pair drops
     ).toDF("vec_id", "embedding")
-    val out = Dedup.lexicalVsSemantic(d, e).collect()
+    val out = Dedup.lexicalVsSemantic(e, Dedup.minhashNearDupsMd5(d)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
     assert(out.toSeq == Seq((1L, 2L, 1.0, 1.0), (3L, 4L, 1.0, 0.0)), out.toSeq.toString)
   }
@@ -537,7 +559,7 @@ class DedupSpec extends SparkSpec {
       0L -> "apple banana cherry date elder",      // j(0,5) = 4/6 ≈ 0.667 ≥ 0.6
       5L -> "apple banana cherry date fig",
       10L -> "apple zebra yak xylo walrus venus")  // j with 0: 1/10 = 0.1
-    val out = Dedup.prefixFilterPairs(d, threshold = 0.6, sampleMod = 1).collect()
+    val out = DedupSpec.prefixPairs(d, threshold = 0.6, sampleMod = 1).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(out.toSeq == Seq((0L, 5L, 0.666667)), out.toSeq.toString)
   }
@@ -547,7 +569,7 @@ class DedupSpec extends SparkSpec {
     val d = docs((0L to 19L).map { i =>
       i -> ((0 to 5).map(j => s"w${(i + j) % 12}").mkString(" "))
     }: _*)
-    val found = Dedup.prefixFilterPairs(d, threshold = 0.5, sampleMod = 1).collect()
+    val found = DedupSpec.prefixPairs(d, threshold = 0.5, sampleMod = 1).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val toks = d.collect().map(r => r.getLong(0) -> r.getString(1).split(" ").toSet).toMap
     val truth = (for {
@@ -563,9 +585,11 @@ class DedupSpec extends SparkSpec {
     val d = docs((0L to 19L).map { i =>
       i -> ((0 to 5).map(j => s"w${(i + j) % 12}").mkString(" "))
     }: _*)
-    val pairs = Dedup.prefixFilterPairs(d, threshold = 0.5, sampleMod = 1).collect()
+    val pairs = DedupSpec.prefixPairs(d, threshold = 0.5, sampleMod = 1).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val bands = Dedup.prefixFilterPairBands(d, threshold = 0.5, sampleMod = 1).collect()
+    val bands = Dedup.prefixFilterPairBands(
+        Dedup.prefixFilterScored(d, threshold = 0.5, sampleMod = 1, maxBucket = 1024))
+      .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
     // same integer band arithmetic as the operator: round(j*1e6) / 50000
     val expected = pairs.groupBy(p => math.round(p._3 * 1e6) / 50000)

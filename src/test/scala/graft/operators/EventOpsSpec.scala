@@ -1260,6 +1260,21 @@ class EventOpsSpec extends SparkSpec {
     assert(out("error")._1 == 10L && out("error")._3 > 1.0, out("error").toString)
   }
 
+  test("attribution keys join purchases to touches with no trivially true predicate") {
+    // attributionModels' touch side names its user column apart from
+    // the purchase side's: a join on two same-named columns of one
+    // projected frame is an equality Spark can only resolve by plan id,
+    // and it warns that the predicate looks trivially true
+    var rows = 0L
+    val trivial = countLogs(_.getMessage.getFormattedMessage
+        .contains("Constructing trivially true equals predicate")) {
+      for (key <- Seq("ev_attribution", "ev_attribution_models"))
+        rows += graft.SparkEntry.queries(key)(spark, sf0001).collect().length
+    }
+    assert(rows > 0)
+    assert(trivial === 0)
+  }
+
   test("dqChecks: null columns are counted as nulls, not crashes") {
     import spark.implicits._
     val events = Seq((1L, "2024-01-01 10:00:00", 1L, "view", 1.0))

@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.{SparkSpec, Tables}
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 object SimilaritySpec {
@@ -14,11 +15,23 @@ object SimilaritySpec {
     val nb = aggregate(b, lit(0.0), (acc, x) => acc + x * x)
     dot / (sqrt(na) * sqrt(nb))
   }
+
+  /** The per-query top-k finisher as a row_number window over
+    * `(qid, cid, cos_sim)` rows: the reference for the bounded-heap
+    * aggregate behind [[Similarity.bruteForceTopK]].
+    */
+  def topKPerQueryWindow(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("qid").orderBy(col("cos_sim").desc, col("cid"))
+    scored.withColumn("rnk", row_number().over(w))
+      .filter(col("rnk") <= k)
+      .select("qid", "rnk", "cid", "cos_sim")
+      .orderBy("qid", "rnk")
+  }
 }
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
-  import SimilaritySpec.cosine
+  import SimilaritySpec.{cosine, topKPerQueryWindow}
 
   private def emb(rows: (Long, Seq[Float])*) =
     rows.toDF("vec_id", "embedding")
@@ -199,10 +212,10 @@ class SimilaritySpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
     assert(rows(Similarity.bruteForceTopK(e, k = 5, nQueries = 10)) ==
-      rows(Similarity.topKPerQueryWindow(scored, 5)))
+      rows(topKPerQueryWindow(scored, 5)))
     // and across partitionings (merge path of the aggregator)
     assert(rows(Similarity.bruteForceTopK(e.repartition(13), k = 5, nQueries = 10)) ==
-      rows(Similarity.topKPerQueryWindow(scored, 5)))
+      rows(topKPerQueryWindow(scored, 5)))
   }
 
   test("semanticGroups: planted clusters collapse to min-id groups; singleton excluded") {
@@ -215,7 +228,8 @@ class SimilaritySpec extends SparkSpec {
     val e = (Seq(0, 1, 2).map(i => (i.toLong, clusterA(i))) ++
       Seq(10, 11).map(i => (i.toLong, clusterB(i))) :+ (20L, lone))
       .toDF("vec_id", "embedding")
-    val out = Similarity.semanticGroups(e, threshold = 0.9).collect()
+    val out = Similarity.semanticGroups(Similarity.cosineNearDupPairs(e, threshold = 0.9))
+      .collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(out == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 10L -> 10L, 11L -> 10L),
       out.toString)
@@ -302,7 +316,9 @@ class SimilaritySpec extends SparkSpec {
       (1L, Array.tabulate(64)(j => if (j == 0) 1.0f else 0.0f).toSeq),
       (2L, Array.tabulate(64)(j => if (j == 0) 1.0f else 0.0f).toSeq),
       (3L, Array.tabulate(64)(j => if (j == 1) 1.0f else 0.0f).toSeq))
-    val rows = Similarity.thresholdSweep(e).collect()
+    val pairs = Similarity.cosineNearDupPairs(e,
+      threshold = Similarity.defaultSweepGrid.min)
+    val rows = Similarity.thresholdSweep(pairs).collect()
       .map(r => (r.getDouble(0), r.getLong(1)))
     assert(rows.length == 15, "every cutoff reported, including zero-count ones")
     assert(rows.map(_._1).sameElements(rows.map(_._1).sorted))

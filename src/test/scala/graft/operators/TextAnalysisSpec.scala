@@ -17,7 +17,8 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("trigrams of short strings") {
     val d = Seq((1L, "abcd"), (2L, "ab")).toDF("id", "t")
-    val out = d.select(col("id"), TextAnalysis.trigrams(col("t")).as("g"))
+    val out = d.select(col("id"),
+        TextAnalysis.trigramsFromChars(col("t"), split(col("t"), "", -1)).as("g"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     assert(out(1L) == Seq("abc", "bcd"))
     assert(out(2L) == Seq())
@@ -181,7 +182,7 @@ class TextAnalysisSpec extends SparkSpec {
       (2L, "the qzx the wvy"),       // half rare
       (3L, "the the the the"))       // duplicate of 1 (boosts 'the' freq)
       .toDF("doc_id", "text")
-    val out = TextAnalysis.unigramLogProb(d).collect()
+    val out = TextAnalysis.unigramLogProb(TextAnalysis.unigramPairs(d)).collect()
       .map(r => r.getLong(0) -> (r.getDouble(1), r.getLong(2))).toMap
     assert(out(1L)._1 > out(2L)._1, s"common-word doc should score higher: $out")
     assert(out(1L) == out(3L))
@@ -213,7 +214,7 @@ class TextAnalysisSpec extends SparkSpec {
     val fast = TextAnalysis.languageId(docs).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
       .filter(_._1 % 8 == 1)
-    val rel = TextAnalysis.languageIdRelational(docs).collect()
+    val rel = TextAnalysis.languageIdRelational(docs).orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
     assert(fast.toSeq == rel.toSeq)
   }
@@ -242,7 +243,7 @@ class TextAnalysisSpec extends SparkSpec {
   test("bigramLogProb: add-1 smoothed conditional log-probs, exact on a tiny corpus") {
     val d = Seq((1L, "a b a b"), (2L, "b a"), (3L, "solo"))
       .toDF("doc_id", "text")
-    val out = TextAnalysis.bigramLogProb(d).collect()
+    val out = TextAnalysis.bigramLogProb(d).orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toList
     // cb: (a,b)=2, (b,a)=2; c(a)=c(b)=2; V=2 contexts
     // every bigram scores ln((2+1)/(2+2)) = ln(0.75)
@@ -503,9 +504,9 @@ class TextAnalysisSpec extends SparkSpec {
       (2L, "a b c d e f", "s1"),
       (3L, "x y x y", "s2")
     ).toDF("doc_id", "text", "source")
-    val perDoc = TextAnalysis.bigramLogProb(d).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val out = TextAnalysis.pplBySource(d).collect()
+    val scores = TextAnalysis.bigramLogProb(d)
+    val perDoc = scores.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val out = TextAnalysis.pplBySource(scores, d).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
     assert(out("s1")._1 == 2L && out("s2")._1 == 1L)
     assert(math.abs(out("s1")._2 - (perDoc(1L) + perDoc(2L)) / 2) < 1e-6)
@@ -577,7 +578,7 @@ class TextAnalysisSpec extends SparkSpec {
     val rel = TextAnalysis.languageIdRelational(docs).collect()
       .map(r => (r.getString(1), r.getString(2)))
     val expected = rel.groupBy(identity).map { case (k, vs) => k -> vs.length.toLong }
-    val got = TextAnalysis.langConfusionMatrix(docs).collect()
+    val got = TextAnalysis.langConfusionMatrix(TextAnalysis.languageIdRelational(docs)).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(got == expected, s"got=$got expected=$expected")
     assert(got.values.sum == rel.length.toLong)

@@ -362,14 +362,15 @@ class RelationalSpec extends SparkSpec {
     val bot = (1L to 7L).map(p => (4L, 1000L + p))
     val li = (Seq((1L, 100L), (1L, 200L), (2L, 100L), (2L, 200L), (3L, 100L), (3L, 300L)) ++ bot)
       .toDF("l_orderkey", "l_partkey")
-    val capped = Relational.copurchaseLiftCapped(li, maxBasket = 5, minPairs = 2).collect()
+    val baskets = Relational.cappedBaskets(li, maxBasket = 5)
+    val capped = Relational.copurchaseLiftCapped(baskets, minPairs = 2).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getDouble(3))))
     assert(capped.length == 1, capped.mkString(","))
     assert(capped.head == (((100L, 200L), (2L, 1.0))), capped.head.toString)
     // the bot order's C(7,2)=21 pairs would all have n_ab=1 < minPairs
     // anyway — prove the cap (not minPairs) is what excluded them by
     // rerunning with minPairs=1: no 1000-series part may appear
-    val capped1 = Relational.copurchaseLiftCapped(li, maxBasket = 5, minPairs = 1).collect()
+    val capped1 = Relational.copurchaseLiftCapped(baskets, minPairs = 1).collect()
     assert(capped1.forall(r => r.getLong(0) < 1000L && r.getLong(1) < 1000L))
     // sanity: uncapped with minPairs=1 DOES surface the bot pairs
     val un1 = Relational.copurchaseLift(li, minPairs = 1).collect()

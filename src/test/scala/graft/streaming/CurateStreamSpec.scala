@@ -19,6 +19,17 @@ import org.apache.spark.sql.functions._
 class CurateStreamSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The batch manifest of `documents`: the streamed manifest's shard
+    * arithmetic ([[Curation.shardId]]) summed per shard in one pass.
+    */
+  private def manifestOf(documents: DataFrame, nShards: Int = 16): DataFrame =
+    documents
+      .select(Curation.shardId(col("text"), nShards).as("shard_id"),
+        length(col("text")).cast("long").as("n_chars"))
+      .groupBy("shard_id")
+      .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("n_chars"))
+      .orderBy("shard_id")
+
   private def expectedSurvivors(docs: DataFrame): DataFrame = {
     // stage-for-stage the document half of Curation.curatePipeline
     val d0 = docs.select(col("doc_id"), col("source"), col("lang"), col("text"))
@@ -70,7 +81,7 @@ class CurateStreamSpec extends SparkSpec {
     // manifest: nShards-row delta sum == batch arithmetic over survivors
     val streamed = CurateStream.sinkManifest(spark, outDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val batchMan = CurateStream.manifestOf(expected)
+    val batchMan = manifestOf(expected)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(streamed == batchMan)
     assert(streamed.map(_._2).sum == expIds.size.toLong)
@@ -175,7 +186,7 @@ class CurateStreamSpec extends SparkSpec {
         s"batch-only=${(expIds -- gotIds).take(5)}")
     assert(CurateStream.sinkManifest(spark, outDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-      == CurateStream.manifestOf(expected)
+      == manifestOf(expected)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
   }
 
