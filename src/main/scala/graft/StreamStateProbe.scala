@@ -2,9 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress}
 import org.apache.spark.sql.functions.{col, concat_ws, lit}
 import graft.operators.EventOps
-import graft.streaming.EventStreams
+import graft.streaming.{CurateStream, EventStreams, GroupStream}
 
 /** Measures Structured Streaming STATE-STORE size for the heaviest
   * streaming twins against their design bounds — the evidence behind
@@ -56,23 +57,33 @@ object StreamStateProbe {
 
   private case class Probe(rows: Seq[Long], mem: Seq[Long])
 
-  private def run[T](spark: SparkSession, name: String, chunks: Int,
-                     data: Seq[T], start: MemoryStream[T] =>
-      org.apache.spark.sql.streaming.DataStreamWriter[_])
-      (implicit enc: org.apache.spark.sql.Encoder[T]): Probe = {
+  /** Feed `data` in `chunks` micro-batches to the query `start` runs
+    * over a fresh MemoryStream: the progress of every batch that read
+    * input.
+    */
+  private def feed[T](spark: SparkSession, chunks: Int, data: Seq[T])(
+      start: MemoryStream[T] => StreamingQuery)
+      (implicit enc: org.apache.spark.sql.Encoder[T]): Seq[StreamingQueryProgress] = {
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = MemoryStream[T]
-    val q = start(mem).queryName(name).start()
+    val q = start(mem)
     try {
       data.grouped(math.max(1, data.length / chunks + 1)).foreach { chunk =>
         mem.addData(chunk: _*)
         q.processAllAvailable()
       }
-      val progress = q.recentProgress.toSeq
-        .filter(p => p.stateOperators.nonEmpty && p.numInputRows > 0)
-      Probe(progress.map(_.stateOperators.head.numRowsTotal),
-        progress.map(_.stateOperators.head.memoryUsedBytes))
+      q.recentProgress.toSeq.filter(_.numInputRows > 0)
     } finally q.stop()
+  }
+
+  private def run[T](spark: SparkSession, name: String, chunks: Int,
+                     data: Seq[T], start: MemoryStream[T] =>
+      org.apache.spark.sql.streaming.DataStreamWriter[_])
+      (implicit enc: org.apache.spark.sql.Encoder[T]): Probe = {
+    val progress = feed(spark, chunks, data)(m => start(m).queryName(name).start())
+      .filter(_.stateOperators.nonEmpty)
+    Probe(progress.map(_.stateOperators.head.numRowsTotal),
+      progress.map(_.stateOperators.head.memoryUsedBytes))
   }
 
   def main(args: Array[String]): Unit = {
@@ -367,7 +378,7 @@ object StreamStateProbe {
 
     // 16. curateToSink: the ingest-to-sink funnel keeps NO state-store
     // state at all — corpus-growing dedup state lives in the parquet
-    // sink (_state/digests, _state/bands), partitioned by batch_id so
+    // sink's digest and band changelogs, partitioned by batch_id so
     // per-batch reads prune to prior batches' directories. Bounds:
     //   - stateOperators empty in every progress row;
     //   - sink digest rows == distinct md5 over quality-passing docs
@@ -377,25 +388,18 @@ object StreamStateProbe {
     //   - one batch_id directory per micro-batch (the partition-prune
     //     unit the batch_id < batchId state filter relies on).
     val curDir = java.nio.file.Files.createTempDirectory("probe_curate").toString
-    val (curBatches, curStoreRows) = {
-      implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val memC = MemoryStream[(Long, String, String, String)]
-      val qc = graft.streaming.CurateStream.curateToSink(
-        memC.toDF().toDF("doc_id", "source", "lang", "text"), curDir)
-      try {
-        docRows.grouped(math.max(1, docRows.length / chunks + 1)).foreach { chunk =>
-          memC.addData(chunk: _*)
-          qc.processAllAvailable()
-        }
-        val prog = qc.recentProgress.toSeq.filter(_.numInputRows > 0)
-        (prog.size, prog.map(p => p.stateOperators.map(_.numRowsTotal).sum).sum)
-      } finally qc.stop()
-    }
+    val cur = new CurateStream.SinkTables(curDir)
+    def docStream(m: MemoryStream[(Long, String, String, String)]) =
+      m.toDF().toDF("doc_id", "source", "lang", "text")
+    val curProg = feed(spark, chunks, docRows)(m =>
+      CurateStream.curateToSink(docStream(m), curDir))
+    val curBatches = curProg.size
+    val curStoreRows = curProg.map(_.stateOperators.map(_.numRowsTotal).sum).sum
     check(curStoreRows == 0,
       s"curateToSink keeps $curStoreRows state-store rows — state must live in the sink")
-    val curDig = spark.read.parquet(s"$curDir/_state/digests").count()
-    val curBands = spark.read.parquet(s"$curDir/_state/bands").count()
-    val curDocs = graft.streaming.CurateStream.sinkDocs(spark, curDir).count()
+    val curDig = cur.digests.read(spark).count()
+    val curBands = cur.bands.read(spark).count()
+    val curDocs = CurateStream.sinkDocs(spark, curDir).count()
     val expDig = graft.operators.TextAnalysis.gopherKeep(docsDf)
       .filter(col("keep") && col("doc_id").isNotNull)
       .select(org.apache.spark.sql.functions.md5(col("text"))).distinct().count()
@@ -405,39 +409,34 @@ object StreamStateProbe {
       s"curateToSink band rows $curBands != 4 x digest rows $curDig")
     check(curDocs <= curDig,
       s"curateToSink accepted docs $curDocs > admitted digests $curDig")
-    val curDirs = Option(new java.io.File(s"$curDir/_state/digests").listFiles())
-      .map(_.count(_.getName.startsWith("batch_id="))).getOrElse(0)
+    val curDirs = cur.digests.batchIds(spark).size
     check(curDirs == curBatches,
       s"curateToSink digest state has $curDirs batch_id dirs != $curBatches batches")
 
-    // 16b. curate-state compaction (round 15): collapse digests/bands/
-    // manifest_delta to baseline + newest and re-verify every read
+    // 16b. curate-state compaction (round 15): collapse the three state
+    // changelogs to baseline + newest and re-verify every read
     // face. The per-batch cost a production stream pays is ONE full
     // scan of each state table (the map-only probe side), so the
     // timed full-scan of digests+bands pre/post compact IS the
     // per-batch scan cost delta the verdict asked to measure.
     def timedStateScan(): (Long, Long) = {
       val t0 = System.nanoTime()
-      val n = spark.read.parquet(s"$curDir/_state/digests").count() +
-        spark.read.parquet(s"$curDir/_state/bands").count()
+      val n = cur.digests.read(spark).count() + cur.bands.read(spark).count()
       (n, (System.nanoTime() - t0) / 1000000L)
     }
-    val curManPre = graft.streaming.CurateStream.sinkManifest(spark, curDir)
+    val curManPre = CurateStream.sinkManifest(spark, curDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val (curScanRowsPre, curScanMsPre) = timedStateScan()
-    graft.streaming.CurateStream.compact(spark, curDir)
+    CurateStream.compact(spark, curDir)
     val (curScanRowsPost, curScanMsPost) = timedStateScan()
     check(curScanRowsPost == curScanRowsPre,
       s"curate compaction changed state row count: $curScanRowsPre -> $curScanRowsPost")
-    check(graft.streaming.CurateStream.sinkDocs(spark, curDir).count() == curDocs,
+    check(CurateStream.sinkDocs(spark, curDir).count() == curDocs,
       "curate compaction changed the accepted-doc count")
-    val curManPost = graft.streaming.CurateStream.sinkManifest(spark, curDir)
+    val curManPost = CurateStream.sinkManifest(spark, curDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     check(curManPost == curManPre, "curate compaction changed the shard manifest")
-    val curDirsC = Seq("_state/digests", "_state/bands", "manifest_delta").map { t =>
-      Option(new java.io.File(s"$curDir/$t").listFiles())
-        .map(_.count(_.getName.startsWith("batch_id="))).getOrElse(0)
-    }
+    val curDirsC = cur.state.map(_.batchIds(spark).size)
     check(curDirsC.forall(d => d <= 2 || curBatches <= 2),
       s"curate compaction left $curDirsC batch_id dirs (want baseline + newest)")
 
@@ -453,33 +452,19 @@ object StreamStateProbe {
     //     count, accepted docs, shard manifest.
     val cadEvery = 3
     val cadDir = java.nio.file.Files.createTempDirectory("probe_curate_cad").toString
-    val cadBatches = {
-      implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val memC = MemoryStream[(Long, String, String, String)]
-      val qc = graft.streaming.CurateStream.curateToSink(
-        memC.toDF().toDF("doc_id", "source", "lang", "text"), cadDir,
-        compactEvery = cadEvery)
-      try {
-        docRows.grouped(math.max(1, docRows.length / chunks + 1)).foreach { chunk =>
-          memC.addData(chunk: _*)
-          qc.processAllAvailable()
-        }
-        qc.recentProgress.toSeq.count(_.numInputRows > 0)
-      } finally qc.stop()
-    }
-    val cadDirs = Seq("_state/digests", "_state/bands", "manifest_delta").map { t =>
-      Option(new java.io.File(s"$cadDir/$t").listFiles())
-        .map(_.count(_.getName.startsWith("batch_id="))).getOrElse(0)
-    }
+    val cad = new CurateStream.SinkTables(cadDir)
+    val cadBatches = feed(spark, chunks, docRows)(m =>
+      CurateStream.curateToSink(docStream(m), cadDir, compactEvery = cadEvery)).size
+    val cadDirs = cad.state.map(_.batchIds(spark).size)
     check(cadDirs.forall(_ <= 1 + cadEvery),
       s"cadenced curate left $cadDirs batch_id dirs (> baseline + $cadEvery)")
     check(cadBatches <= cadEvery || cadDirs.forall(_ < cadBatches),
       s"cadenced curate never compacted: $cadDirs dirs over $cadBatches batches")
-    check(spark.read.parquet(s"$cadDir/_state/digests").count() == expDig,
+    check(cad.digests.read(spark).count() == expDig,
       "cadenced curate digest count diverges from the uncadenced run")
-    check(graft.streaming.CurateStream.sinkDocs(spark, cadDir).count() == curDocs,
+    check(CurateStream.sinkDocs(spark, cadDir).count() == curDocs,
       "cadenced curate accepted-doc count diverges from the uncadenced run")
-    val cadMan = graft.streaming.CurateStream.sinkManifest(spark, cadDir)
+    val cadMan = CurateStream.sinkManifest(spark, cadDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     check(cadMan == curManPre,
       "cadenced curate shard manifest diverges from the uncadenced run")
@@ -495,29 +480,21 @@ object StreamStateProbe {
     //     batch — the union-by-min rewrite amortization, observed);
     //   - one batch_id directory per micro-batch.
     val grpDir = java.nio.file.Files.createTempDirectory("probe_groups").toString
+    val grpRoots = GroupStream.roots(grpDir)
     val grpPairsDf = graft.operators.Dedup.minhashNearDupsMd5(docsDf)
       .select("doc_a", "doc_b")
     val grpPairs = grpPairsDf
       .orderBy(org.apache.spark.sql.functions.md5(
         concat_ws(":", col("doc_a"), col("doc_b"))))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val (grpBatches, grpStoreRows) = {
-      implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val memG = MemoryStream[(Long, Long)]
-      val qg = graft.streaming.GroupStream.groupsToSink(
-        memG.toDF().toDF("doc_a", "doc_b"), grpDir)
-      try {
-        grpPairs.grouped(math.max(1, grpPairs.length / chunks + 1)).foreach { chunk =>
-          memG.addData(chunk: _*)
-          qg.processAllAvailable()
-        }
-        val prog = qg.recentProgress.toSeq.filter(_.numInputRows > 0)
-        (prog.size, prog.map(p => p.stateOperators.map(_.numRowsTotal).sum).sum)
-      } finally qg.stop()
-    }
+    def pairStream(m: MemoryStream[(Long, Long)]) = m.toDF().toDF("doc_a", "doc_b")
+    val grpProg = feed(spark, chunks, grpPairs)(m =>
+      GroupStream.groupsToSink(pairStream(m), grpDir))
+    val grpBatches = grpProg.size
+    val grpStoreRows = grpProg.map(_.stateOperators.map(_.numRowsTotal).sum).sum
     check(grpStoreRows == 0,
       s"groupsToSink keeps $grpStoreRows state-store rows — state must live in the sink")
-    val grpGot = graft.streaming.GroupStream.sinkGroups(spark, grpDir)
+    val grpGot = GroupStream.sinkGroups(spark, grpDir)
     val grpExp = graft.operators.Dedup.connectedGroups(grpPairsDf)
     // set equality needs BOTH checks: distinct-union == expected rows
     // (no wrong rows) AND equal cardinality (no missing rows)
@@ -525,7 +502,7 @@ object StreamStateProbe {
       math.abs(grpGot.count() - grpExp.count())
     check(grpDiff == 0,
       s"groupsToSink mapping diverges from batch connectedGroups by $grpDiff rows")
-    val grpLog = spark.read.parquet(s"$grpDir/_state/roots")
+    val grpLog = grpRoots.read(spark)
     val grpLogRows = grpLog.count()
     val grpDocs = grpLog.select("doc_id").distinct().count()
     val grpMaxPerDoc = grpLog.groupBy("doc_id")
@@ -533,8 +510,7 @@ object StreamStateProbe {
       .agg(org.apache.spark.sql.functions.max("c")).collect().head.getLong(0)
     check(grpMaxPerDoc <= grpBatches,
       s"groupsToSink: a doc wrote $grpMaxPerDoc changelog rows > $grpBatches batches")
-    val grpDirs = Option(new java.io.File(s"$grpDir/_state/roots").listFiles())
-      .map(_.count(_.getName.startsWith("batch_id="))).getOrElse(0)
+    val grpDirs = grpRoots.batchIds(spark).size
     check(grpDirs == grpBatches,
       s"groupsToSink changelog has $grpDirs batch_id dirs != $grpBatches batches")
 
@@ -542,17 +518,16 @@ object StreamStateProbe {
     // re-verify — the mapping must be IDENTICAL, the dir count must
     // drop to baseline + newest, and the row count to ≤ docs + newest
     // batch's rows (min(root) per doc baseline).
-    graft.streaming.GroupStream.compact(spark, grpDir)
-    val grpGotC = graft.streaming.GroupStream.sinkGroups(spark, grpDir)
+    GroupStream.compact(spark, grpDir)
+    val grpGotC = GroupStream.sinkGroups(spark, grpDir)
     val grpDiffC = (grpGotC.unionByName(grpExp).distinct().count() - grpExp.count()) +
       math.abs(grpGotC.count() - grpExp.count())
     check(grpDiffC == 0,
       s"groupsToSink mapping diverges from batch CC by $grpDiffC rows AFTER compaction")
-    val grpDirsC = Option(new java.io.File(s"$grpDir/_state/roots").listFiles())
-      .map(_.count(_.getName.startsWith("batch_id="))).getOrElse(0)
+    val grpDirsC = grpRoots.batchIds(spark).size
     check(grpDirsC <= 2 || grpBatches <= 2,
       s"compaction left $grpDirsC batch_id dirs (want baseline + newest)")
-    val grpLogRowsC = spark.read.parquet(s"$grpDir/_state/roots").count()
+    val grpLogRowsC = grpRoots.read(spark).count()
     check(grpLogRowsC <= grpLogRows,
       s"compaction grew the changelog: $grpLogRows -> $grpLogRowsC rows")
 
@@ -560,26 +535,14 @@ object StreamStateProbe {
     // contract as 16c: the foreachBatch hook alone must bound the
     // changelog, and the final mapping must still equal batch CC.
     val gcadDir = java.nio.file.Files.createTempDirectory("probe_groups_cad").toString
-    val gcadBatches = {
-      implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val memG = MemoryStream[(Long, Long)]
-      val qg = graft.streaming.GroupStream.groupsToSink(
-        memG.toDF().toDF("doc_a", "doc_b"), gcadDir, compactEvery = cadEvery)
-      try {
-        grpPairs.grouped(math.max(1, grpPairs.length / chunks + 1)).foreach { chunk =>
-          memG.addData(chunk: _*)
-          qg.processAllAvailable()
-        }
-        qg.recentProgress.toSeq.count(_.numInputRows > 0)
-      } finally qg.stop()
-    }
-    val gcadDirs = Option(new java.io.File(s"$gcadDir/_state/roots").listFiles())
-      .map(_.count(_.getName.startsWith("batch_id="))).getOrElse(0)
+    val gcadBatches = feed(spark, chunks, grpPairs)(m =>
+      GroupStream.groupsToSink(pairStream(m), gcadDir, compactEvery = cadEvery)).size
+    val gcadDirs = GroupStream.roots(gcadDir).batchIds(spark).size
     check(gcadDirs <= 1 + cadEvery,
       s"cadenced groups left $gcadDirs batch_id dirs (> baseline + $cadEvery)")
     check(gcadBatches <= cadEvery || gcadDirs < gcadBatches,
       s"cadenced groups never compacted: $gcadDirs dirs over $gcadBatches batches")
-    val gcadGot = graft.streaming.GroupStream.sinkGroups(spark, gcadDir)
+    val gcadGot = GroupStream.sinkGroups(spark, gcadDir)
     val gcadDiff = (gcadGot.unionByName(grpExp).distinct().count() - grpExp.count()) +
       math.abs(gcadGot.count() - grpExp.count())
     check(gcadDiff == 0,

@@ -834,6 +834,15 @@ object Relational {
         |  AND l_quantity < 24""".stripMargin)
   }
 
+  /** Q17's scan-stat threshold, shared by both faces: past ~1 GB of
+    * fact bytes the per-partkey aggregate's broadcast build dominates
+    * the join it feeds (driver build + one copy per executor at
+    * cluster scale); below it the broadcast saves the probe-side
+    * shuffle outright.
+    */
+  private def q17ShuffleBuild(lineitem: DataFrame): Boolean =
+    lineitem.queryExecution.optimizedPlan.stats.sizeInBytes > (1L << 30)
+
   /** TPC-H Q17 shape: line revenue restricted to rows below half the
     * per-part average quantity, through the SQL FRONTEND as a genuine
     * CORRELATED scalar aggregate subquery. This is the query class
@@ -868,13 +877,7 @@ object Relational {
     val spark = lineitem.sparkSession
     part.createOrReplaceTempView("part")
     lineitem.createOrReplaceTempView("lineitem")
-    // scan-stat threshold: past ~1 GB of fact bytes the aggregate's
-    // broadcast build dominates the join it feeds (driver build + one
-    // copy per executor at cluster scale); below it the broadcast
-    // saves the probe-side shuffle outright
-    val factBytes = lineitem.queryExecution.optimizedPlan.stats.sizeInBytes
-    val hint =
-      if (factBytes > (1L << 30)) "/*+ SHUFFLE_HASH(l2) */ " else ""
+    val hint = if (q17ShuffleBuild(lineitem)) "/*+ SHUFFLE_HASH(l2) */ " else ""
     spark.sql(
       s"""SELECT p_brand, count(*) AS n_lines,
          |       round(sum(l_extendedprice), 2) AS total_price
@@ -904,11 +907,10 @@ object Relational {
     * and is kept byte-identical.
     */
   def belowHalfAvgQuantityRevenue(part: DataFrame, lineitem: DataFrame): DataFrame = {
-    val factBytes = lineitem.queryExecution.optimizedPlan.stats.sizeInBytes
     val halfAvg = lineitem
       .groupBy(col("l_partkey").as("agg_key"))
       .agg((avg("l_quantity") * 0.5).as("half_avg_qty"))
-    val build = if (factBytes > (1L << 30)) halfAvg.hint("shuffle_hash") else halfAvg
+    val build = if (q17ShuffleBuild(lineitem)) halfAvg.hint("shuffle_hash") else halfAvg
     lineitem
       .join(build, col("l_partkey") === col("agg_key"))
       .filter(col("l_quantity") < col("half_avg_qty"))

@@ -535,8 +535,9 @@ private[graft] trait DedupRegistry extends RegistryShared {
         |       round(1.0 - power(1.0 - power(jaccard, r), b), 6) AS p_candidate
         |FROM g ORDER BY b, jaccard""".stripMargin,
     // 3 unrolled peel rounds over the shared jaccard pair graph —
-    // the fixed-iteration convention of the pagerank oracle
-    "dedup_kcore" ->
+    // the fixed-iteration convention of the pagerank oracle; each round
+    // reads the last twice, so the chain is materialized
+    "dedup_kcore" -> materializeCtes(
       s"""WITH $jaccardPairsCte,
          |e AS (SELECT doc_a AS src, doc_b AS dst FROM pp
          |      UNION ALL SELECT doc_b, doc_a FROM pp),
@@ -561,7 +562,7 @@ private[graft] trait DedupRegistry extends RegistryShared {
          |  UNION ALL SELECT node, 2 FROM w2 WHERE deg < 2
          |  UNION ALL SELECT node, 3 FROM w3 WHERE deg < 2
          |  UNION ALL SELECT node, 0 FROM n3) t
-         |ORDER BY node""".stripMargin,
+         |ORDER BY node""".stripMargin),
     // the oracle-green minhash md5 pair chain + embedding cosine on
     // both pair ids (inner joins: pairs need vectors on both sides)
     "dedup_lex_vs_sem" ->

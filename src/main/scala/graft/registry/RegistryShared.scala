@@ -3,6 +3,16 @@ package graft
 /** Oracle-SQL CTE fragments shared by more than one domain registry. */
 private[graft] trait RegistryShared {
 
+  /** `sql` with every CTE declared `AS MATERIALIZED` (each `name AS (`
+    * or `name(cols) AS (` head that starts a line). DuckDB inlines every
+    * reference to a plain CTE, so a long chain whose CTEs are read more
+    * than once re-runs its whole prefix per reference and can exhaust
+    * memory; a materialized CTE runs once. Results do not change.
+    */
+  protected def materializeCtes(sql: String): String =
+    sql.replaceAll("""(?m)^(WITH (?:RECURSIVE\s+)?)?(\w+(?:\([^)]*\))?) AS \(""",
+      "$1$2 AS MATERIALIZED (")
+
   /** Shared CTE: 32-bit md5 SimHash per doc — mirrors
     * [[graft.operators.Dedup.simhashMd5]] (lowercased whitespace
     * tokens, h = first 8 hex chars of md5, per-bit votes, Σ 2^bit).

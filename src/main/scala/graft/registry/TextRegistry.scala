@@ -147,12 +147,13 @@ private[graft] trait TextRegistry extends RegistryShared {
     * keep-min → minhash banded pairs (≥ 0.5) → recursive-CTE closure
     * keep-min → modulo-eval decontamination → language-mix hash
     * resample → pack / shard layout counts — then one 1-row aggregate
-    * per stage, unioned.
+    * per stage, unioned. Each stage reads the one before it several
+    * times, so the chain is materialized.
     */
   private def curatePipelineOracle: String = {
     val stop = TextAnalysis.gopherStopwords.map(w => s"'$w'").mkString(", ")
     val tok = "CAST(coalesce(sum(len(string_split(text, ' '))), 0) AS BIGINT)"
-    s"""WITH RECURSIVE
+    materializeCtes(s"""WITH RECURSIVE
        |d0 AS (SELECT doc_id, source, lang, text FROM documents),
        |gw AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> length(x) > 0) AS ws FROM d0),
        |gs AS (SELECT doc_id, len(ws) AS n_words,
@@ -225,7 +226,7 @@ private[graft] trait TextRegistry extends RegistryShared {
        |UNION ALL SELECT 5, 'resample', count(*), count(*), $tok FROM d5
        |UNION ALL SELECT 6, 'pack', (SELECT count(*) FROM packs), n_docs, n_tokens FROM tot5
        |UNION ALL SELECT 7, 'shard', (SELECT count(*) FROM shards), n_docs, n_tokens FROM tot5
-       |ORDER BY stage_idx""".stripMargin
+       |ORDER BY stage_idx""".stripMargin)
   }
 
   protected def textOracles: Map[String, String] = Map(

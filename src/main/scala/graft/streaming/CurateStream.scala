@@ -2,10 +2,11 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 import graft.operators.{Curation, Dedup, Lsh, TextAnalysis}
+import graft.streaming.StateCompaction.Changelog
 
 /** Streaming ingest-to-sink curation: the continuously-ingesting face
   * of [[graft.operators.Curation.curatePipeline]]'s document stages —
@@ -37,20 +38,19 @@ import graft.operators.{Curation, Dedup, Lsh, TextAnalysis}
   *                  (seen ∪ batch) × batch band collisions with the
   *                  batch side BROADCAST (the band state never
   *                  shuffles) and no bucket cap;
-  *   4. sink      — survivors append to `outDir/docs/batch_id=<id>`,
-  *                  band + digest state to `outDir/_state/...`, and a
-  *                  per-batch shard-manifest DELTA (content-addressed
-  *                  shard assignment, [[Curation.shardId]] as in
+  *   4. sink      — survivors append to the `docs` changelog, band +
+  *                  digest state to theirs, and a per-batch
+  *                  shard-manifest DELTA (content-addressed shard
+  *                  assignment, [[Curation.shardId]] as in
   *                  [[graft.operators.Curation.curatePipeline]] stage
-  *                  7) to `outDir/manifest_delta/batch_id=<id>` — the
-  *                  current manifest is the nShards-row sum over
-  *                  deltas ([[sinkManifest]]), never a rescan of the
-  *                  corpus.
+  *                  7) to `manifestDelta` — the current manifest is
+  *                  the nShards-row sum over deltas ([[sinkManifest]]),
+  *                  never a rescan of the corpus.
   *
-  * Exactly-once on top of at-least-once replay: every write targets
-  * its own `batch_id=<id>` directory with `overwrite` (the standard
-  * idempotent-foreachBatch pattern), so a restarted batch replaces its
-  * own output — sink, state, and delta alike — instead of duplicating.
+  * Exactly-once on top of at-least-once replay: every write is one
+  * idempotent batch dir of a [[StateCompaction.Changelog]], so a
+  * restarted batch replaces its own output — sink, state, and delta
+  * alike — instead of duplicating.
   *
   * Replay pin (the spec's contract): under monotone doc_id ingest the
   * sink's survivor set equals the batch pipeline's post-near-dup
@@ -71,8 +71,8 @@ import graft.operators.{Curation, Dedup, Lsh, TextAnalysis}
   * Shape at 100 TB: per batch, the corpus-sized state tables are
   * scanned once each, map-only (both probes broadcast the batch
   * side); candidate scoring and CC run on batch-sized frames. A
-  * production deployment buckets `_state/bands` by band_key and
-  * `_state/digests` by digest so those scans partition-prune to the
+  * production deployment buckets the `bands` state by band_key and
+  * the `digests` state by digest so those scans partition-prune to the
   * buckets the batch actually touches; state growth is one row per
   * accepted digest and `bands` rows per screened doc — linear in the
   * corpus, spread across batch_id files (compact periodically, as any
@@ -83,66 +83,63 @@ import graft.operators.{Curation, Dedup, Lsh, TextAnalysis}
   */
 object CurateStream {
 
-  private val bandStateSchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("signature", ArrayType(LongType)),
-    StructField("band_idx", IntegerType),
-    StructField("band_key", StringType)))
+  /** The sink's four changelogs under `outDir`, each declared once. */
+  private[graft] final class SinkTables(outDir: String) {
+    /** The accepted corpus: data, not state, so never compacted. */
+    val docs = Changelog(s"$outDir/docs", StructType(Seq(
+      StructField("doc_id", LongType),
+      StructField("source", StringType),
+      StructField("lang", StringType),
+      StructField("text", StringType))))
 
-  private val digestStateSchema = StructType(Seq(
-    StructField("digest", StringType)))
+    /** Accepted digests. Set semantics: `distinct` over prior dirs is
+      * the same seen-set (a row's only meaning is membership).
+      */
+    val digests = Changelog(s"$outDir/_state/digests",
+      StructType(Seq(StructField("digest", StringType))),
+      Some(_.distinct()))
 
-  private val docsSchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("source", StringType),
-    StructField("lang", StringType),
-    StructField("text", StringType)))
+    /** Band signatures of every screened doc: one deterministic row per
+      * (doc_id, band_idx), and docs enter exactly one batch, so the
+      * union is already duplicate-free; the dropDuplicates is defensive.
+      */
+    val bands = Changelog(s"$outDir/_state/bands", StructType(Seq(
+        StructField("doc_id", LongType),
+        StructField("signature", ArrayType(LongType)),
+        StructField("band_idx", IntegerType),
+        StructField("band_key", StringType))),
+      Some(_.dropDuplicates("doc_id", "band_idx")))
 
-  private val manifestDeltaSchema = StructType(Seq(
-    StructField("shard_id", LongType),
-    StructField("n_docs", LongType),
-    StructField("n_chars", LongType)))
+    /** Per-batch shard-manifest deltas: sums over an abelian group, so
+      * per-shard partial sums replace the deltas they cover.
+      */
+    val manifestDelta = Changelog(s"$outDir/manifest_delta", StructType(Seq(
+        StructField("shard_id", LongType),
+        StructField("n_docs", LongType),
+        StructField("n_chars", LongType))),
+      Some(_.groupBy("shard_id").agg(sum("n_docs").as("n_docs"),
+        sum("n_chars").as("n_chars"))))
+
+    /** The compacted tables, in recovery and compaction order. */
+    val state: Seq[Changelog] = Seq(digests, bands, manifestDelta)
+  }
 
   /** Start the ingest-to-sink curation stream over `docs` (columns
     * doc_id, source, lang, text). See object scaladoc for semantics;
     * parameters mirror [[Dedup.minhashNearDupsMd5]]'s defaults so the
     * replay pin composes with `curatePipeline`'s stage 3.
+    * `compactEvery > 0` compacts the state after every `compactEvery`
+    * batches ([[StateCompaction.sinkStream]]).
     */
   def curateToSink(docs: DataFrame, outDir: String,
                    shingleK: Int = 5, numHashes: Int = 16, bands: Int = 4,
                    threshold: Double = 0.5, nShards: Int = 16,
-                   checkpointDir: Option[String] = None,
                    compactEvery: Int = 0): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      // DURABLE checkpoint, co-located with the sink by default: with
-      // a temp checkpoint a restarted stream resets batchId to 0, so
-      // the state reads' batch_id<batchId prune hides ALL prior state
-      // (duplicates re-admitted) and the batch_id=0 docs/state/
-      // manifest dirs are overwritten (silent loss). The per-batch
-      // idempotent-overwrite contract only gives exactly-once when
-      // batch ids are durable across restarts.
-      .option("checkpointLocation",
-        checkpointDir.getOrElse(s"$outDir/_checkpoint"))
-      // compactEvery > 0 opts into CADENCED state compaction — without
-      // it a 100 TB ingest accumulates one changelog dir per
-      // micro-batch until an operator remembers to run compact() by
-      // hand. Both hooks run INSIDE foreachBatch, i.e. between
-      // micro-batches with no concurrent readers — exactly compact()'s
-      // documented window: heal() first (a crash inside a previous
-      // in-batch compaction replays this batch, and recovery must land
-      // before the state reads), the compaction itself after the
-      // batch's own writes, so the just-written dir is the untouched
-      // newest and a replay of THIS batch still reads
-      // `batch_id < batchId` — the compacted baseline.
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (compactEvery > 0) heal(batch.sparkSession, outDir)
-        curateBatch(batch, batchId, outDir, shingleK, numHashes, bands,
-          threshold, nShards)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          compact(batch.sparkSession, outDir)
-      }
-      .start()
+    StateCompaction.sinkStream(docs, outDir, new SinkTables(outDir).state,
+        compactEvery) { (batch, batchId) =>
+      curateBatch(batch, batchId, outDir, shingleK, numHashes, bands,
+        threshold, nShards)
+    }
 
   /** One micro-batch of the funnel — package-visible so the replay
     * spec can also drive it directly against crafted batches.
@@ -152,6 +149,7 @@ object CurateStream {
                                  numHashes: Int, bands: Int,
                                  threshold: Double, nShards: Int): Unit = {
     val spark = batch.sparkSession
+    val sink = new SinkTables(outDir)
     val d0 = batch.select(col("doc_id"), col("source"), col("lang"), col("text"))
 
     // 1. quality gate (map-only); a null doc_id is dropped, as the
@@ -165,8 +163,7 @@ object CurateStream {
     val withDig = d1.withColumn("digest", md5(col("text")))
     val batchKeep = withDig.groupBy("digest").agg(min("doc_id").as("doc_id"))
       .localCheckpoint(false)
-    val seenDig = StateCompaction.readTable(spark, s"$outDir/_state/digests",
-      digestStateSchema, batchId)
+    val seenDig = sink.digests.read(spark, batchId)
     val digHits = seenDig
       .join(broadcast(batchKeep.select("digest")), Seq("digest"), "left_semi")
     val fresh = batchKeep.join(broadcast(digHits), Seq("digest"), "left_anti")
@@ -180,8 +177,7 @@ object CurateStream {
     val bb = Dedup.md5BandedSignatures(d2, shingleK, numHashes, bands)
       .select("doc_id", "signature", "band_idx", "band_key")
       .localCheckpoint(false)
-    val seenBands = StateCompaction.readTable(spark, s"$outDir/_state/bands",
-      bandStateSchema, batchId)
+    val seenBands = sink.bands.read(spark, batchId)
     val pairs = Lsh.bucketPairs(seenBands.unionByName(bb), broadcast(bb),
         Seq("band_idx", "band_key"), "doc_id", "signature", "est_jaccard",
         Lsh.agreement(_, _, numHashes), _ >= threshold)
@@ -191,81 +187,38 @@ object CurateStream {
       .localCheckpoint(false)
 
     // 4. sink + state + manifest delta, each idempotent per batch_id
-    d3.write.mode("overwrite").parquet(s"$outDir/docs/batch_id=$batchId")
-    fresh.select("digest").write.mode("overwrite")
-      .parquet(s"$outDir/_state/digests/batch_id=$batchId")
-    bb.write.mode("overwrite")
-      .parquet(s"$outDir/_state/bands/batch_id=$batchId")
-    d3.select(Curation.shardId(col("text"), nShards).as("shard_id"),
-        length(col("text")).cast("long").as("n_chars"))
-      .groupBy("shard_id")
-      .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("n_chars"))
-      .write.mode("overwrite")
-      .parquet(s"$outDir/manifest_delta/batch_id=$batchId")
-    ()
+    sink.docs.write(d3, batchId)
+    sink.digests.write(fresh.select("digest"), batchId)
+    sink.bands.write(bb, batchId)
+    sink.manifestDelta.write(
+      d3.select(Curation.shardId(col("text"), nShards).as("shard_id"),
+          length(col("text")).cast("long").as("n_chars"))
+        .groupBy("shard_id")
+        .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("n_chars")),
+      batchId)
   }
 
   /** The accepted corpus so far (doc_id, source, lang, text); empty
     * before the first micro-batch commits.
     */
   def sinkDocs(spark: SparkSession, outDir: String): DataFrame =
-    StateCompaction.readTable(spark, s"$outDir/docs", docsSchema)
+    new SinkTables(outDir).docs.read(spark)
 
   /** The current shard manifest: an nShards-row sum over the per-batch
     * deltas — reading it never rescans the corpus. Empty before the
     * first micro-batch commits.
     */
   def sinkManifest(spark: SparkSession, outDir: String): DataFrame =
-    StateCompaction.readTable(spark, s"$outDir/manifest_delta", manifestDeltaSchema)
+    new SinkTables(outDir).manifestDelta.read(spark)
       .groupBy("shard_id")
       .agg(sum("n_docs").as("n_docs"), sum("n_chars").as("n_chars"))
       .orderBy("shard_id")
 
-  /** Recovery-only sweep over the three state tables — finishes or
-    * discards any crashed compaction attempt without starting a new
-    * one. The cadenced stream calls this at the top of every
-    * micro-batch; cheap (a few existence checks) when there is nothing
-    * to heal.
+  /** Compact the three state changelogs by the crash-safe protocol of
+    * [[StateCompaction]], each through the reduce declared beside it in
+    * [[SinkTables]]. The `docs` sink itself is data, not state, and is
+    * never compacted.
     */
-  def heal(spark: SparkSession, outDir: String): Unit = {
-    StateCompaction.recoverTable(spark, s"$outDir/_state/digests")
-    StateCompaction.recoverTable(spark, s"$outDir/_state/bands")
-    StateCompaction.recoverTable(spark, s"$outDir/manifest_delta")
-  }
-
-  /** Compact the three per-batch state changelogs — the maintenance
-    * operation the object scaladoc prescribes ("compact periodically,
-    * as any streaming-state table"), made executable with the same
-    * crash-safe protocol as [[GroupStream.compact]]
-    * ([[StateCompaction]]: target id recorded with the committed tmp,
-    * in-progress marker fencing every read/write face, checked
-    * renames). All-but-newest `batch_id=<id>` dirs collapse to one
-    * baseline dir; the newest is never touched (it is the only batch
-    * Structured Streaming can replay, and its replay reads
-    * `batch_id < maxId` — exactly the baseline). Each table's reduce
-    * is subsumption-sound:
-    *   - `_state/digests`: set semantics — `distinct` over prior dirs
-    *     is the same seen-set (a digest row's only meaning is
-    *     membership);
-    *   - `_state/bands`: one deterministic row per (doc_id, band_idx)
-    *     — docs enter exactly one batch, so the union is already
-    *     duplicate-free and the dropDuplicates is defensive;
-    *   - `manifest_delta`: sums over an abelian group — per-shard
-    *     partial sums replace the deltas they cover.
-    * Run with the stream stopped (or between micro-batches) and no
-    * concurrent readers; a crashed compact is healed by the next call,
-    * and until then every state face throws instead of silently
-    * reading a half-deleted changelog. The `docs/` sink itself is data,
-    * not state, and is never compacted.
-    */
-  def compact(spark: SparkSession, outDir: String): Unit = {
-    StateCompaction.compactTable(spark, s"$outDir/_state/digests",
-      digestStateSchema, _.distinct())
-    StateCompaction.compactTable(spark, s"$outDir/_state/bands",
-      bandStateSchema, _.dropDuplicates("doc_id", "band_idx"))
-    StateCompaction.compactTable(spark, s"$outDir/manifest_delta",
-      manifestDeltaSchema,
-      _.groupBy("shard_id").agg(sum("n_docs").as("n_docs"),
-        sum("n_chars").as("n_chars")))
-  }
+  def compact(spark: SparkSession, outDir: String): Unit =
+    new SinkTables(outDir).state.foreach(_.compact(spark))
 }

@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Structured Streaming twins of the batch event operators
   * ([[graft.operators.EventOps]]): tumbling-window aggregation with
@@ -456,10 +457,10 @@ object EventStreams {
     * sink via `foreachBatch` — the escape hatch that hands each
     * finalized micro-batch to ordinary DataFrame writer code.
     *
-    * Exactly-once on top of at-least-once replay: each batch writes to
-    * its own `batch_id=<id>` directory with `overwrite`, so a restart
-    * that re-delivers a micro-batch replaces its output instead of
-    * appending duplicates (the standard idempotent-foreachBatch
+    * Exactly-once on top of at-least-once replay: each batch writes its
+    * own dir of a [[StateCompaction.Changelog]] with `overwrite`, so a
+    * restart that re-delivers a micro-batch replaces its output instead
+    * of appending duplicates (the standard idempotent-foreachBatch
     * pattern; on a cluster the same code targets an object-store
     * prefix and readers see it as one partitioned table).
     *
@@ -470,7 +471,9 @@ object EventStreams {
     */
   def dedupSessionizeToParquet(events: DataFrame, outDir: String,
                                gap: String = "30 minutes",
-                               watermark: String = "1 hour"): StreamingQuery =
+                               watermark: String = "1 hour"): StreamingQuery = {
+    val sessions = StateCompaction.Changelog(outDir, StructType(
+      Seq("user_id", "start_us", "end_us", "n_events").map(StructField(_, LongType))))
     events
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("event_id")
@@ -484,10 +487,10 @@ object EventStreams {
       .writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-        ()
+        sessions.write(batch, batchId)
       }
       .start()
+  }
 
   /** Convenience: wire a streaming query to an in-memory sink for
     * tests/demos. Caller stops the query.
@@ -783,8 +786,8 @@ object EventStreams {
     * full-precision twin — `STREAM_STATE_r11.json`): stored vectors
     * are affine-quantized, ~8× less state per admitted vector — the
     * difference between state that fits the store and state that
-    * spills at corpus scale. Pass `fullPrecisionState = true` for
-    * exact batch-score agreement ([[streamingSemanticDupFlagsFull]]):
+    * spills at corpus scale ([[quantizeInt8]]). Pass
+    * `fullPrecisionState = true` for exact batch-score agreement:
     * that exact agreement holds only under monotone-id ingest AND no
     * bucket exceeding `maxBucket` — under flood the stream emits
     * (admitted, non-admitted) pairs that the batch twin (which caps
@@ -795,11 +798,19 @@ object EventStreams {
   def streamingSemanticDupFlags(vecs: DataFrame, threshold: Double = 0.2,
                                 nTables: Int = 4, bitsPerTable: Int = 8,
                                 maxBucket: Int = 256,
-                                fullPrecisionState: Boolean = false): Dataset[SemanticDupFlag] =
+                                fullPrecisionState: Boolean = false): Dataset[SemanticDupFlag] = {
+    val spark = vecs.sparkSession
+    import spark.implicits._
     if (fullPrecisionState)
-      streamingSemanticDupFlagsFull(vecs, threshold, nTables, bitsPerTable, maxBucket)
+      semanticDupFlagsWith[(Long, Array[Double])](vecs, threshold, nTables,
+        bitsPerTable, maxBucket)(
+        d => (d.vec_id, d.v), e => (e._1, ArrayData.toArrayData(e._2)))
     else
-      streamingSemanticDupFlagsInt8(vecs, threshold, nTables, bitsPerTable, maxBucket)
+      semanticDupFlagsWith[(Long, Array[Byte], Double, Double)](vecs, threshold,
+        nTables, bitsPerTable, maxBucket)(
+        d => { val (q, mn, sc) = quantizeInt8(d.v); (d.vec_id, q, mn, sc) },
+        e => (e._1, dequantizeInt8(e._2, e._3, e._4)))
+  }
 
   /** A state-side cosine, HALF_UP-rounded to 6 places like the batch
     * column's `round(_, 6)`, through the kernel's own body
@@ -811,56 +822,9 @@ object EventStreams {
     BigDecimal(graft.functions.CosineSimilarity.compute(a, b))
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
-  /** Full-precision-state form of [[streamingSemanticDupFlags]] — the
-    * spec-reference twin (emitted cosines equal the batch column
-    * bit-for-bit: the same kernel body, same HALF_UP `round(_, 6)`,
-    * see `cosine6`). Opt-in via
-    * `fullPrecisionState = true`; the int8 path is the default since
-    * round 11.
-    */
-  private[graft] def streamingSemanticDupFlagsFull(
-      vecs: DataFrame, threshold: Double = 0.2,
-      nTables: Int = 4, bitsPerTable: Int = 8,
-      maxBucket: Int = 256): Dataset[SemanticDupFlag] = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    val bucketed = vecs
-      .select(col("vec_id"), col("v"),
-        posexplode(graft.functions.VectorFunctions.hyperplaneSig(col("v"),
-          nTables, bitsPerTable)).as(Seq("table_idx", "bucket")))
-      .select(col("table_idx"), col("bucket"), col("vec_id"), col("v"))
-      .as[BucketedVec]
-    bucketed
-      .groupByKey(d => (d.table_idx, d.bucket))
-      .flatMapGroupsWithState[Vector[(Long, Array[Double])], SemanticDupFlag](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: (Int, Long), it: Iterator[BucketedVec],
-         state: GroupState[Vector[(Long, Array[Double])]]) =>
-          var bucket = state.getOption.getOrElse(Vector.empty)
-          var scored = bucket.map { case (id, v) => (id, ArrayData.toArrayData(v)) }
-          val out = Vector.newBuilder[SemanticDupFlag]
-          it.toSeq.sortBy(_.vec_id).foreach { d =>
-            val v = ArrayData.toArrayData(d.v)
-            scored.foreach { case (prevId, prevV) =>
-              if (prevId != d.vec_id) {
-                val cs = cosine6(prevV, v)
-                if (cs >= threshold)
-                  out += SemanticDupFlag(d.vec_id, d.table_idx, prevId, cs)
-              }
-            }
-            if (bucket.size < maxBucket) {
-              bucket = bucket :+ (d.vec_id, d.v)
-              scored = scored :+ (d.vec_id, v)
-            }
-          }
-          state.update(bucket)
-          out.result().iterator
-      }
-  }
-
-  /** Int8-quantized-state form of [[streamingSemanticDupFlags]] (the
-    * DEFAULT since round 11) — the 100 TB form of the keyed state:
-    * each stored vector is the min/range affine quantization of
+  /** The int8 state encoding (the DEFAULT since round 11) — the 100 TB
+    * form of the keyed state: each stored vector is the min/range
+    * affine quantization of
     * [[graft.operators.Similarity.quantizeInt8Report]] (sc =
     * (max−min)/255, level = floor((x−mn)/sc), reconstruct = mn +
     * level·sc), so a 64-dim float64 entry shrinks from 512 B of
@@ -869,19 +833,52 @@ object EventStreams {
     * state store and state that spills at corpus scale.
     *
     * Cost: cosines are computed against RECONSTRUCTED vectors, so
-    * emitted scores deviate from the full-precision twin by at most
+    * emitted scores deviate from the full-precision encoding by at most
     * the reconstruction error the `sim_quantize_int8` report measures
     * per corpus (bin size sc per element), and pairs whose true cosine
     * sits within that band of `threshold` can flip in or out. The
     * replay spec pins both: pair recall/precision against the
-    * full-precision twin and the max cosine deviation against the
+    * full-precision encoding and the max cosine deviation against the
     * report's measured `max_err`. Incoming vectors compare at full
     * precision — only the STORED side is quantized, halving the error
     * vs quantizing both sides.
     */
-  def streamingSemanticDupFlagsInt8(vecs: DataFrame, threshold: Double = 0.2,
-                                    nTables: Int = 4, bitsPerTable: Int = 8,
-                                    maxBucket: Int = 256): Dataset[SemanticDupFlag] = {
+  private def quantizeInt8(v: Array[Double]): (Array[Byte], Double, Double) = {
+    var mn = Double.MaxValue; var mx = Double.MinValue
+    var i = 0
+    while (i < v.length) { if (v(i) < mn) mn = v(i); if (v(i) > mx) mx = v(i); i += 1 }
+    val sc = (mx - mn) / 255.0
+    val q = new Array[Byte](v.length)
+    if (sc > 0) {
+      i = 0
+      while (i < v.length) {
+        q(i) = (math.min(math.floor((v(i) - mn) / sc).toInt, 255) - 128).toByte
+        i += 1
+      }
+    }
+    (q, mn, sc)
+  }
+
+  private def dequantizeInt8(q: Array[Byte], mn: Double, sc: Double): ArrayData = {
+    val v = new Array[Double](q.length)
+    var i = 0
+    while (i < q.length) { v(i) = mn + (q(i) + 128) * sc; i += 1 }
+    ArrayData.toArrayData(v)
+  }
+
+  /** The one body of [[streamingSemanticDupFlags]], over a stored-entry
+    * encoding `E`: each bucket's keyed state is a `Vector[E]` of its
+    * admitted arrivals, `encode` turns an admitted arrival into its
+    * entry and `decode` gives an entry's (vec_id, vector) for scoring.
+    * The full-precision encoding's emitted cosines equal the batch
+    * column bit-for-bit (the same kernel body, same HALF_UP
+    * `round(_, 6)`, see `cosine6`).
+    */
+  private def semanticDupFlagsWith[E](vecs: DataFrame, threshold: Double,
+                                      nTables: Int, bitsPerTable: Int,
+                                      maxBucket: Int)(
+      encode: BucketedVec => E, decode: E => (Long, ArrayData))(
+      implicit stateEnc: Encoder[Vector[E]]): Dataset[SemanticDupFlag] = {
     val spark = vecs.sparkSession
     import spark.implicits._
     val bucketed = vecs
@@ -890,35 +887,13 @@ object EventStreams {
           nTables, bitsPerTable)).as(Seq("table_idx", "bucket")))
       .select(col("table_idx"), col("bucket"), col("vec_id"), col("v"))
       .as[BucketedVec]
-    def quantize(v: Array[Double]): (Array[Byte], Double, Double) = {
-      var mn = Double.MaxValue; var mx = Double.MinValue
-      var i = 0
-      while (i < v.length) { if (v(i) < mn) mn = v(i); if (v(i) > mx) mx = v(i); i += 1 }
-      val sc = (mx - mn) / 255.0
-      val q = new Array[Byte](v.length)
-      if (sc > 0) {
-        i = 0
-        while (i < v.length) {
-          q(i) = (math.min(math.floor((v(i) - mn) / sc).toInt, 255) - 128).toByte
-          i += 1
-        }
-      }
-      (q, mn, sc)
-    }
-    def dequantize(q: Array[Byte], mn: Double, sc: Double): ArrayData = {
-      val v = new Array[Double](q.length)
-      var i = 0
-      while (i < q.length) { v(i) = mn + (q(i) + 128) * sc; i += 1 }
-      ArrayData.toArrayData(v)
-    }
     bucketed
       .groupByKey(d => (d.table_idx, d.bucket))
-      .flatMapGroupsWithState[Vector[(Long, Array[Byte], Double, Double)], SemanticDupFlag](
+      .flatMapGroupsWithState[Vector[E], SemanticDupFlag](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: (Int, Long), it: Iterator[BucketedVec],
-         state: GroupState[Vector[(Long, Array[Byte], Double, Double)]]) =>
+        (_: (Int, Long), it: Iterator[BucketedVec], state: GroupState[Vector[E]]) =>
           var bucket = state.getOption.getOrElse(Vector.empty)
-          var scored = bucket.map { case (id, q, mn, sc) => (id, dequantize(q, mn, sc)) }
+          var scored = bucket.map(decode)
           val out = Vector.newBuilder[SemanticDupFlag]
           it.toSeq.sortBy(_.vec_id).foreach { d =>
             val v = ArrayData.toArrayData(d.v)
@@ -930,9 +905,9 @@ object EventStreams {
               }
             }
             if (bucket.size < maxBucket) {
-              val (q, mn, sc) = quantize(d.v)
-              bucket = bucket :+ ((d.vec_id, q, mn, sc))
-              scored = scored :+ ((d.vec_id, dequantize(q, mn, sc)))
+              val e = encode(d)
+              bucket = bucket :+ e
+              scored = scored :+ decode(e)
             }
           }
           state.update(bucket)

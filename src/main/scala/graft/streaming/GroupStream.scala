@@ -2,10 +2,11 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 import graft.operators.Dedup
+import graft.streaming.StateCompaction.Changelog
 
 /** Streaming connected components: the continuously-ingesting face of
   * [[Dedup.connectedGroups]] — near-dup candidate PAIRS arrive forever
@@ -20,7 +21,7 @@ import graft.operators.Dedup
   * with the corpus — the exact shape the repo keeps OUT of the state
   * store ([[CurateStream]] precedent: state stores hold bounded
   * per-key state; corpus-growing state lives in the parquet sink).
-  * The changelog at `outDir/_state/roots/batch_id=<id>` holds rows
+  * The changelog ([[roots]]) holds rows
   * `(doc_id, root)` written only when a doc's root CHANGES; because
   * roots are component minima and merges only ever lower them, a
   * doc's current root is `min(root)` over its rows — the read face
@@ -47,9 +48,9 @@ import graft.operators.Dedup
   *      life is the classic union-by-min bound — each doc rewrites
   *      only when its component's minimum drops;
   *   4. new nodes land with their resolved root; changed members and
-  *      new nodes append as `batch_id=<id>` (idempotent overwrite —
-  *      the [[CurateStream]] exactly-once contract, durable
-  *      checkpoint included).
+  *      new nodes append as the batch's own changelog dir (idempotent
+  *      overwrite — the [[CurateStream]] exactly-once contract,
+  *      durable checkpoint included).
   *
   * Order independence: unlike the admission twins, NO arrival-order
   * assumption is needed — union-find is confluent, so any pair
@@ -65,38 +66,29 @@ import graft.operators.Dedup
   */
 object GroupStream {
 
-  private val rootSchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("root", LongType)))
+  /** The doc→root changelog under `outDir`. Compaction keeps
+    * `min(root)` per doc, which is subsumption-sound because roots only
+    * ever decrease: min over prior rows IS the state as of the newest
+    * batch's start.
+    */
+  private[graft] def roots(outDir: String): Changelog =
+    Changelog(s"$outDir/_state/roots", StructType(Seq(
+        StructField("doc_id", LongType),
+        StructField("root", LongType))),
+      Some(_.groupBy("doc_id").agg(min("root").as("root"))))
 
   /** Start the incremental-CC stream over `pairs` (columns doc_a,
     * doc_b, read as longs) into `outDir`: each micro-batch runs the four
     * steps of the object scaladoc and appends one idempotent
-    * `_state/roots/batch_id=<id>` dir, so [[sinkGroups]] equals
-    * [[Dedup.connectedGroups]] over every pair seen so far.
-    * `compactEvery > 0` compacts the changelog after every
-    * `compactEvery` batches ([[compact]]); the checkpoint defaults to
-    * `outDir/_checkpoint`, durable beside the sink.
+    * [[roots]] dir, so [[sinkGroups]] equals [[Dedup.connectedGroups]]
+    * over every pair seen so far. `compactEvery > 0` compacts the
+    * changelog after every `compactEvery` batches
+    * ([[StateCompaction.sinkStream]]).
     */
   def groupsToSink(pairs: DataFrame, outDir: String,
-                   checkpointDir: Option[String] = None,
                    compactEvery: Int = 0): StreamingQuery =
-    pairs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation",
-        checkpointDir.getOrElse(s"$outDir/_checkpoint"))
-      // compactEvery > 0 opts into CADENCED changelog compaction (see
-      // [[CurateStream.curateToSink]] for the window/crash analysis:
-      // recovery before the state reads, compaction after the batch's
-      // writes — both between micro-batches by construction).
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        if (compactEvery > 0)
-          StateCompaction.recoverTable(batch.sparkSession, s"$outDir/_state/roots")
-        groupBatch(batch, batchId, outDir)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          compact(batch.sparkSession, outDir)
-      }
-      .start()
+    StateCompaction.sinkStream(pairs, outDir, Seq(roots(outDir)), compactEvery)(
+      groupBatch(_, _, outDir))
 
   /** One micro-batch of incremental union-find — package-visible so
     * the replay spec and state probe drive it directly.
@@ -104,6 +96,7 @@ object GroupStream {
   private[graft] def groupBatch(batch: Dataset[Row], batchId: Long,
                                 outDir: String): Unit = {
     val spark = batch.sparkSession
+    val changelog = roots(outDir)
     // every cut is eager: a lazy one is computed again by each
     // concurrent job that reads it before the first one finishes
     val e = batch
@@ -121,7 +114,7 @@ object GroupStream {
     // corpus-sized changelog (batch node set broadcast), then a
     // batch-sized aggregate — min(root) IS the latest root because
     // merges only ever lower a doc's root
-    val log = StateCompaction.readTable(spark, s"$outDir/_state/roots", rootSchema, batchId)
+    val log = changelog.read(spark, batchId)
     val touched = log.join(broadcast(nodes), Seq("doc_id"), "left_semi")
       .groupBy("doc_id").agg(min("root").as("root"))
       .localCheckpoint(true)
@@ -159,10 +152,7 @@ object GroupStream {
       .join(broadcast(remap), col("prov_root") === col("old_root"), "left")
       .select(col("doc_id"),
         coalesce(col("new_root"), col("prov_root")).as("root"))
-    memberRewrites.unionByName(newRows)
-      .write.mode("overwrite")
-      .parquet(s"$outDir/_state/roots/batch_id=$batchId")
-    ()
+    changelog.write(memberRewrites.unionByName(newRows), batchId)
   }
 
   /** The current doc→group mapping — same columns and keep-min
@@ -170,36 +160,17 @@ object GroupStream {
     * at read time (bucket the changelog by doc_id in production to
     * make it shuffle-free); roots only decrease, so min(root) is the
     * latest value without any batch_id tie-breaking. Empty before the
-    * first micro-batch commits ([[StateCompaction.readTable]]).
+    * first micro-batch commits.
     */
   def sinkGroups(spark: SparkSession, outDir: String): DataFrame =
-    StateCompaction.readTable(spark, s"$outDir/_state/roots", rootSchema)
+    roots(outDir).read(spark)
       .groupBy("doc_id").agg(min("root").as("group_id"))
 
-  /** Changelog compaction — the maintenance operation the object
-    * scaladoc prescribes, made executable: every batch dir STRICTLY
-    * BELOW the newest one collapses to `min(root)` per doc in a
-    * single baseline dir `batch_id=<maxId-1>`. Correctness rides the
-    * same monotonicity as every read: roots only ever decrease, so
-    * min-over-prior-rows IS the state as of the start of batch
-    * `maxId` — the state read of any future batch and
-    * [[sinkGroups]] read identical values before and after (the
-    * replay spec pins this). The newest dir is NEVER touched: it is
-    * the only batch Structured Streaming can replay after a crash
-    * (foreachBatch commits lag the sink write), and its replay reads
-    * `batch_id < maxId` — exactly the compacted baseline.
-    *
-    * Run while the stream is stopped (or between micro-batches) with
-    * NO concurrent readers: a read landing inside the delete-to-rename
-    * window would see only the newest dir, so the window is fenced by
-    * an in-progress marker that makes every read/write face throw
-    * instead ([[StateCompaction.assertReadable]]). Commit discipline,
-    * crash recovery (target id recorded with the committed tmp, rename
-    * results checked) and the full case analysis live in
-    * [[StateCompaction]] — min(root) per doc is subsumption-sound
-    * because roots only ever decrease.
+  /** Compact the [[roots]] changelog to `min(root)` per doc by the
+    * crash-safe protocol of [[StateCompaction]]; [[sinkGroups]] and
+    * every later batch's state read see identical values before and
+    * after (the replay spec pins this).
     */
   def compact(spark: SparkSession, outDir: String): Unit =
-    StateCompaction.compactTable(spark, s"$outDir/_state/roots", rootSchema,
-      _.groupBy("doc_id").agg(min("root").as("root")))
+    roots(outDir).compact(spark)
 }

@@ -1,12 +1,20 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
-/** Crash-safe compaction for the streaming sinks' partitioned state
-  * changelogs (`<table>/batch_id=<id>` dirs): every batch dir STRICTLY
+/** The changelog format of the parquet-sink streams ([[CurateStream]],
+  * [[GroupStream]]) and its crash-safe compaction. A changelog table
+  * ([[Changelog]]) is one `<table>/batch_id=<id>` dir per micro-batch,
+  * each written idempotently (a replayed batch overwrites its own dir);
+  * a batch reads state from `batch_id < id`. [[sinkStream]] runs a
+  * stream's micro-batches with the durable checkpoint and the
+  * recover → batch → compact cadence.
+  *
+  * Compaction: every batch dir STRICTLY
   * BELOW the newest collapses — through a caller-supplied `reduce` —
   * into a single baseline dir `batch_id=<maxId-1>`. The newest dir is
   * NEVER touched: it is the only batch Structured Streaming can replay
@@ -61,12 +69,82 @@ object StateCompaction {
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  private val batchPrefix = "batch_id="
+  private def batchDir(table: Path, id: Long) = new Path(table, s"$batchPrefix$id")
+
   private def batchIds(fs: FileSystem, table: Path): Seq[Long] =
     if (!fs.exists(table)) Seq.empty
     else fs.listStatus(table).toSeq.filter(_.isDirectory)
       .map(_.getPath.getName)
-      .collect { case n if n.startsWith("batch_id=") =>
-        n.drop("batch_id=".length).toLong }
+      .collect { case n if n.startsWith(batchPrefix) =>
+        n.drop(batchPrefix.length).toLong }
+
+  /** One changelog table, declared once by the stream that owns it:
+    * its path, the row schema every face reads it as, and — for a
+    * state table — the `reduce` that [[compactTable]] collapses old
+    * batches through (which must be subsumption-sound). A table with
+    * no `reduce` (a sink's data table) is never compacted.
+    */
+  final case class Changelog(path: String, schema: StructType,
+                             reduce: Option[DataFrame => DataFrame] = None) {
+    /** Rows of batches strictly below `beforeBatch` ([[readTable]]). */
+    def read(spark: SparkSession, beforeBatch: Long = Long.MaxValue): DataFrame =
+      readTable(spark, path, schema, beforeBatch)
+
+    /** Batch `batchId`'s rows, written with `overwrite` to the batch's
+      * own dir, so a replayed batch replaces its output instead of
+      * duplicating it.
+      */
+    def write(rows: DataFrame, batchId: Long): Unit =
+      rows.write.mode("overwrite").parquet(batchDir(new Path(path), batchId).toString)
+
+    /** The ids of the batch dirs present. */
+    def batchIds(spark: SparkSession): Seq[Long] = {
+      val table = new Path(path)
+      StateCompaction.batchIds(fsOf(spark, table), table)
+    }
+
+    def recover(spark: SparkSession): Unit = recoverTable(spark, path)
+
+    def compact(spark: SparkSession): Unit =
+      compactTable(spark, path, schema, reduce.getOrElse(
+        throw new IllegalStateException(s"changelog $path has no compaction reduce")))
+  }
+
+  /** Start `input`'s sink stream into `outDir`: `batch` runs each
+    * micro-batch, and with `compactEvery > 0` every `compactEvery`-th
+    * batch compacts the `state` changelogs.
+    */
+  def sinkStream(input: DataFrame, outDir: String, state: Seq[Changelog],
+                 compactEvery: Int)(batch: (Dataset[Row], Long) => Unit): StreamingQuery =
+    input.writeStream
+      .outputMode(OutputMode.Append())
+      // DURABLE checkpoint, co-located with the sink: with a temp
+      // checkpoint a restarted stream resets batchId to 0, so the state
+      // reads' batch_id < batchId prune hides ALL prior state
+      // (duplicates re-admitted) and batch 0's dirs are overwritten
+      // (silent loss). The per-batch idempotent-overwrite contract only
+      // gives exactly-once when batch ids are durable across restarts.
+      .option("checkpointLocation", s"$outDir/_checkpoint")
+      // compactEvery > 0 opts into CADENCED state compaction — without
+      // it a 100 TB ingest accumulates one changelog dir per
+      // micro-batch until an operator runs the owner's compact() by
+      // hand. Both hooks run INSIDE foreachBatch, i.e. between
+      // micro-batches with no concurrent readers — exactly
+      // compaction's documented window: recovery first (a crash inside
+      // a previous in-batch compaction replays this batch, and
+      // recovery must land before the state reads), the compaction
+      // itself after the batch's own writes, so the just-written dir is
+      // the untouched newest and a replay of THIS batch still reads
+      // `batch_id < batchId` — the compacted baseline.
+      .foreachBatch { (rows: Dataset[Row], batchId: Long) =>
+        val spark = rows.sparkSession
+        if (compactEvery > 0) state.foreach(_.recover(spark))
+        batch(rows, batchId)
+        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
+          state.foreach(_.compact(spark))
+      }
+      .start()
 
   /** `_TARGET` is THE commit point, so its own write must be atomic:
     * a crash mid-`create+write` would otherwise leave `_SUCCESS` next
@@ -139,8 +217,9 @@ object StateCompaction {
     * silently-empty frame — dedup disabled, duplicates admitted, no
     * error anywhere. Any other analysis error propagates.
     */
-  def readTable(spark: SparkSession, tablePath: String, schema: StructType,
-                beforeBatch: Long = Long.MaxValue): DataFrame = {
+  private[streaming] def readTable(spark: SparkSession, tablePath: String,
+                                   schema: StructType,
+                                   beforeBatch: Long = Long.MaxValue): DataFrame = {
     assertReadable(spark, tablePath)
     val table = new Path(tablePath)
     if (!fsOf(spark, table).exists(table))
@@ -153,16 +232,15 @@ object StateCompaction {
   }
 
   /** Recovery-only entry: finish or discard a prior crashed compaction
-    * of `tablePath` without starting a new one. The cadence-triggered
-    * sinks ([[CurateStream]]/[[GroupStream]] with `compactEvery > 0`)
-    * call this at the top of every micro-batch, so a crash inside an
+    * of `tablePath` without starting a new one. [[sinkStream]] with
+    * `compactEvery > 0` calls this at the top of every micro-batch, so a crash inside an
     * in-batch compaction heals automatically when the batch replays —
     * the stream never halts on [[assertReadable]] waiting for an
     * operator to run compact() by hand. Same concurrency contract as
     * [[compactTable]] (it runs inside foreachBatch, i.e. between
     * micro-batches with no concurrent readers).
     */
-  def recoverTable(spark: SparkSession, tablePath: String): Unit = {
+  private[streaming] def recoverTable(spark: SparkSession, tablePath: String): Unit = {
     val table = new Path(tablePath)
     val fs = fsOf(spark, table)
     if (fs.exists(table) || fs.exists(tmpDir(table)) || fs.exists(markerPath(table)))
@@ -176,9 +254,9 @@ object StateCompaction {
     * changelogs all qualify). No-op when the table is absent or has
     * fewer than three dirs (one baseline + newest: nothing to gain).
     */
-  def compactTable(spark: SparkSession, tablePath: String,
-                   schema: StructType,
-                   reduce: DataFrame => DataFrame): Unit = {
+  private[streaming] def compactTable(spark: SparkSession, tablePath: String,
+                                      schema: StructType,
+                                      reduce: DataFrame => DataFrame): Unit = {
     val table = new Path(tablePath)
     val fs = fsOf(spark, table)
     if (!fs.exists(table) && !fs.exists(tmpDir(table)) &&
@@ -192,10 +270,8 @@ object StateCompaction {
     baseline.write.mode("overwrite").parquet(tmp.toString)
     writeTarget(fs, tmp, maxId - 1) // commit point
     fs.create(markerPath(table), true).close()
-    ids.filter(_ < maxId).foreach { id =>
-      fs.delete(new Path(table, s"batch_id=$id"), true)
-    }
-    val dst = new Path(table, s"batch_id=${maxId - 1}")
+    ids.filter(_ < maxId).foreach(id => fs.delete(batchDir(table, id), true))
+    val dst = batchDir(table, maxId - 1)
     if (!fs.rename(tmp, dst))
       throw new java.io.IOException(
         s"compaction rename failed: $tmp -> $dst (committed baseline " +
@@ -220,10 +296,8 @@ object StateCompaction {
       else None
     if (targetOpt.isDefined) {
       val target = targetOpt.get
-      batchIds(fs, table).filter(_ <= target).foreach { id =>
-        fs.delete(new Path(table, s"batch_id=$id"), true)
-      }
-      val dst = new Path(table, s"batch_id=$target")
+      batchIds(fs, table).filter(_ <= target).foreach(id => fs.delete(batchDir(table, id), true))
+      val dst = batchDir(table, target)
       if (!fs.exists(table)) fs.mkdirs(table) // rename needs the parent
       if (!fs.rename(tmp, dst))
         throw new java.io.IOException(

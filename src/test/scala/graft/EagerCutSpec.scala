@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{Curation, Dedup}
-import graft.streaming.GroupStream
+import graft.streaming.{CurateStream, GroupStream}
 
 /** Checkpoint cuts that several jobs read are computed once: a lazy
   * `localCheckpoint` read by concurrent jobs is computed by each of
@@ -17,6 +17,12 @@ class EagerCutSpec extends SparkSpec {
     assert(pairs.length > 10, s"need real pairs, got ${pairs.length}")
     val (first, second) = pairs.splitAt(pairs.length / 2)
     val outDir = java.nio.file.Files.createTempDirectory("eager_cut_").toString
+    // curateBatch's cuts are lazy: pin that each is still computed once
+    // over two micro-batches, one per doc-id half of the corpus
+    val docs = Tables.documents(spark, sf0001).select("doc_id", "source", "lang", "text")
+    val ids = docs.select("doc_id").as[Long].collect().sorted
+    val mid = ids(ids.length / 2)
+    val curDir = java.nio.file.Files.createTempDirectory("eager_cut_curate_").toString
     var funnel = 0
     val twice = countLogs(e =>
       e.getLoggerName == "org.apache.spark.storage.BlockManager" &&
@@ -24,9 +30,12 @@ class EagerCutSpec extends SparkSpec {
       GroupStream.groupBatch(first.toDF("doc_a", "doc_b"), 0L, outDir)
       GroupStream.groupBatch(second.toDF("doc_a", "doc_b"), 1L, outDir)
       funnel = Curation.curatePipeline(Tables.documents(spark, sf0001)).collect().length
+      CurateStream.curateBatch(docs.filter($"doc_id" < mid), 0L, curDir, 5, 16, 4, 0.5, 16)
+      CurateStream.curateBatch(docs.filter($"doc_id" >= mid), 1L, curDir, 5, 16, 4, 0.5, 16)
     }
     assert(funnel == 8)
     assert(GroupStream.sinkGroups(spark, outDir).count() > 0)
+    assert(CurateStream.sinkDocs(spark, curDir).count() > 0)
     assert(twice === 0, "a checkpoint block was computed twice")
   }
 }

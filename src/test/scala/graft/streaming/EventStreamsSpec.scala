@@ -622,7 +622,7 @@ class EventStreamsSpec extends SparkSpec {
       } finally q.stop()
     }
     val (full, fullBytes) = runStream("semint8_ref",
-      df => EventStreams.streamingSemanticDupFlagsFull(df))
+      df => EventStreams.streamingSemanticDupFlags(df, fullPrecisionState = true))
     val (int8, int8Bytes) = runStream("semint8_test",
       df => EventStreams.streamingSemanticDupFlags(df)) // int8 IS the default
     // pair recall AND precision vs the full-precision twin

@@ -17,8 +17,15 @@ import pandas as pd
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
 
+def memory_limit():
+    """DuckDB's memory cap: a quarter of this machine's RAM, at least
+    1 GiB. DuckDB's own default (80% of RAM) would take most of a box
+    that other jobs share."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1 << 30, ram // 4) >> 20}MB"
+
 def main(sf_dir, out_dir):
-    con = duckdb.connect()
+    con = duckdb.connect(config={"memory_limit": memory_limit()})
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
