@@ -7,21 +7,33 @@ import org.apache.spark.sql.SparkSession
   * projections/aggregations aren't pruned away the way a bare count()
   * would allow). Prints ONE JSON line.
   *
-  * Round structure (round-9 reorder — the driver kills this process at
-  * a fixed wall deadline, and three rounds running the full-set round
-  * FIRST left `iters_completed: 1` with no warm min/median in any
-  * driver artifact):
+  * Round order (the headline artifact is banked before anything long
+  * starts, and re-emitted after every round, so a kill mid-way leaves
+  * the last complete round's parseable line behind):
   *   1. warm the HEADLINE keys only (concurrent, sf0.001) — cheap;
   *   1.5 UNTIMED prebuild of the headline keys at the bench SF, so
-  *      the shared memo builds are paid before any timed round (the
-  *      round-14 driver artifact was one 166 s cold round);
-  *   2. run ≥2 timed headline rounds and emit after each — the warm
-  *      min/median artifact is banked within ~2 min no matter what
-  *      happens later;
+  *      the shared memo builds are paid before any timed round;
+  *   2. two timed headline rounds, emitting after each;
   *   3. warm the remaining keys (concurrent, sf0.001);
-  *   4. attempt ONE full-set round if the budget plausibly holds it
-  *      (full per-query detail → /tmp/bench_full.json);
-  *   5. more headline rounds until the time box closes.
+  *   4. up to SPARK_GRAFT_BENCH_FULL_ITERS full-set rounds (full
+  *      per-query detail → /tmp/bench_full.json);
+  *   4.5 the fresh-JVM isolated pass over the
+  *      SPARK_GRAFT_BENCH_ISOLATE_TOP costliest keys;
+  *   5. more headline rounds, up to SPARK_GRAFT_BENCH_ITERS in all.
+  *
+  * Schedule: every timed start after the first headline round passes
+  * [[admits]] with an estimate this process measured — the last
+  * completed round of the same kind, or for an isolated key its suite
+  * minimum × reps plus a JVM start. The first full round has no such
+  * estimate; the guard in front of phase 3 (under 0.6 of the budget)
+  * admits it, so the budget is soft for that round: one that starts
+  * near 0.6 of the budget and runs longer than the rest ends past it
+  * (any round that ends past the budget is logged). The prebuild stops
+  * at half the budget. Nothing is read from an earlier process, so how
+  * many rounds fit depends only on the inputs and this run's own
+  * timings. A scale run sizes SPARK_GRAFT_BENCH_BUDGET_S to hold its
+  * full rounds: when a full round is refused, the log names the
+  * [[budgetToAdmit]] that would have started it.
   *
   * Heap sizing (`SPARK_DRIVER_MEM`, default 8 g): sufficient for the
   * sf0.1 driver contract; size scale-decade suites at 24-48 g — the
@@ -47,6 +59,83 @@ object Bench {
     "ev_heavy_hitters", "mm_decode_features",
     "dedup_prefix_pairs", "dedup_cluster_best", "dedup_source_matrix")
 
+  /** Runs per key in the fresh-JVM isolated pass. */
+  private val isolateReps = 2
+  /** JVM and session start of one isolated child, in seconds. */
+  private val isolateJvmStartS = 40.0
+
+  /** The one admission rule: a phase estimated to take `estimateS`
+    * starts at `elapsedS` only if 1.2 × the estimate still ends before
+    * 0.95 of the budget.
+    */
+  def admits(elapsedS: Double, estimateS: Double, budgetS: Double): Boolean =
+    elapsedS + 1.2 * estimateS < 0.95 * budgetS
+
+  /** The budget above which [[admits]] starts that phase. */
+  def budgetToAdmit(elapsedS: Double, estimateS: Double): Double =
+    (elapsedS + 1.2 * estimateS) / 0.95
+
+  /** The compact line, the full JSON and the keys whose
+    * minimum rests on one in-suite sample with no isolated pass.
+    */
+  final case class Report(compact: String, full: String, lowSampleKeys: Seq[String])
+
+  // True median: for an even sample count average the middle pair —
+  // s(len/2) alone would report the MAX of 2 samples and bias the
+  // headline high against odd-iteration baselines.
+  private def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.length % 2 == 1) s(s.length / 2)
+    else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
+  }
+  private def jsonMap(kvs: Seq[(String, Double)]): String =
+    kvs.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
+
+  /** Renders the timed `runs` (one `(key, seconds)` list per round),
+    * the fresh-JVM `isolated` minima, the `failed` keys, the SF dir
+    * and the requested iteration count.
+    *
+    * The harness captures only the TAIL of the process output, so a
+    * single JSON line carrying all per-query medians (~4 KB) gets
+    * its head truncated and fails to parse (round-4 lesson:
+    * BENCH_r04.json "parsed": null). So the report is split: full
+    * per-query detail (median + min) is the full JSON; the compact
+    * (<2 KB) headline JSON always fits the tail window intact.
+    */
+  def report(runs: Seq[Seq[(String, Double)]], isolated: Seq[(String, Double)],
+             failed: Seq[String], sfDir: String, iters: Int): Report = {
+    val itersCompleted = runs.length
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val byName = runs.flatten.map(_._1).distinct.sorted
+      .map(n => n -> runs.flatMap(_.toMap.get(n)))
+    val med = byName.map { case (n, xs) => n -> median(xs) }
+    // queries_min folds the fresh-JVM isolated pass in (when run):
+    // min(in-suite, isolated) is the key's honest warm cost, free of
+    // run-order heap/page-state inflation
+    val isoMap = isolated.toMap
+    val mins = byName.map { case (n, xs) =>
+      n -> isoMap.get(n).fold(xs.min)(math.min(xs.min, _)) }
+    val total = med.map(_._2).sum
+    val totalMin = mins.map(_._2).sum
+    val isoJson = jsonMap(isolated)
+    // Banking guard (round-16 q_except incident: a single warm sample
+    // produced a spurious 13.2x decade flag): keys whose minimum rests
+    // on ONE in-suite sample and no isolated pass are listed so the
+    // decade gate can refuse to bank them. Additive field in the full
+    // JSON only — the compact line is unchanged.
+    val lowSample = byName.collect { case (n, xs) if xs.length < 2 && !isoMap.contains(n) => n }
+    val lowSampleJson = lowSample.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val full =
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${jsonMap(med)},"queries_min":${jsonMap(mins)},"isolated":$isoJson,"low_sample_keys":$lowSampleJson,"total_min":$totalMin%.3f,"failed":$failedJson,"sf":"$sfDir","iters":$iters,"iters_completed":$itersCompleted}"""
+    val minMap = mins.toMap
+    val headSet = headline.toSet
+    val headKvs = med.filter(kv => headSet.contains(kv._1))
+    val headMinKvs = headline.flatMap(n => minMap.get(n).map(n -> _))
+    val compact =
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${jsonMap(headKvs)},"queries_min":${jsonMap(headMinKvs)},"total_min":$totalMin%.3f,"n_queries":${byName.length},"full":"/tmp/bench_full.json","failed":$failedJson,"sf":"$sfDir","iters":$iters,"iters_completed":$itersCompleted}"""
+    Report(compact, full, lowSample)
+  }
+
   def main(args: Array[String]): Unit = {
     val wallStart = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -58,16 +147,10 @@ object Bench {
     // planning/janino, which parallelizes across Spark's FIFO
     // scheduler) and warmup timings are never reported — only the
     // codegen/JIT side effect matters.
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
+    val warmDir = "/root/testdata/sf0.001"
     val qmap: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
       SparkEntry.queries
-    // Warmup phases are also TIMED: the head-warmup vs rest-warmup
-    // wall ratio is the cheapest available proxy for the full-round /
-    // headline-round cost ratio (same key mix, same concurrency
-    // distortion on both sides, so the distortion cancels) — it feeds
-    // the full-round estimator below.
-    def warm(names: Seq[String]): Double = {
-      val t0 = System.nanoTime()
+    def warm(names: Seq[String]): Unit = {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutor(pool)
@@ -82,32 +165,13 @@ object Bench {
       scala.concurrent.Await.result(
         scala.concurrent.Future.sequence(futs), scala.concurrent.duration.Duration.Inf)
       pool.shutdown()
-      (System.nanoTime() - t0) / 1e9
     }
-    // Sidecar carrying the last COMPLETED full-round wall time for this
-    // exact data dir (key count changes rarely; a round's fixes can
-    // shift the time, so the cap below carries 1.3x slack). This is the
-    // round-11 verdict fix: the naive scale-by-count estimate
-    // over-predicts ~3x (headline keys skew expensive), which starved
-    // the driver artifact of its full round — a MEASURED prior full
-    // round is the best estimate that exists, and the driver box keeps
-    // /tmp across rounds so local round_bench runs seed it.
-    val fullSidecar = java.nio.file.Paths.get("/tmp/bench_lastfull_" +
-      org.apache.commons.codec.digest.DigestUtils.md5Hex(
-        sfDir + "|" + qmap.size).take(12) + ".txt")
-    def readLastFullS: Option[Double] =
-      try Some(new String(java.nio.file.Files.readAllBytes(fullSidecar), "UTF-8").trim.toDouble)
-      catch { case _: Throwable => None }
-    def writeLastFullS(s: Double): Unit =
-      try java.nio.file.Files.write(fullSidecar, f"$s%.1f".getBytes("UTF-8"))
-      catch { case _: Throwable => () }
-    // The whole loop is TIME-BOXED (r5: rc=124, no JSON, parsed null).
-    // Defenses: rounds only start when predicted to fit, and the
-    // compact JSON line is rewritten AFTER EVERY ROUND so a mid-round
-    // kill leaves the last complete round's parseable line behind.
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "4").toInt
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "420").toDouble
+    val fullIters = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL_ITERS", "1").toInt
+    val isolateTop = sys.env.getOrElse("SPARK_GRAFT_BENCH_ISOLATE_TOP", "0").toInt
     def elapsedS: Double = (System.nanoTime() - wallStart) / 1e9
+    def fits(estimateS: Double): Boolean = admits(elapsedS, estimateS, budgetS)
     val allNames = qmap.keys.toSeq.sorted
     val headSet = headline.toSet
     val runs = scala.collection.mutable.ArrayBuffer.empty[Seq[(String, Double)]]
@@ -138,6 +202,8 @@ object Bench {
           None
         }
       }
+      if (elapsedS > budgetS)
+        System.err.println(f"[bench] round ${runs.length} ended at $elapsedS%.1f s, past the $budgetS%.0f s budget")
       (System.nanoTime() - r0) / 1e9
     }
 
@@ -154,9 +220,8 @@ object Bench {
     // isolated map is emitted alongside for transparency. Only one
     // Spark is WORKING at a time (this JVM is idle while the child
     // runs), so the numbers aren't cross-inflated.
-    val isolateTop = sys.env.getOrElse("SPARK_GRAFT_BENCH_ISOLATE_TOP", "0").toInt
     val isolated = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    def runIsolated(): Unit = if (isolateTop > 0 && runs.nonEmpty) {
+    def runIsolated(): Unit = {
       val byMin = allNames.map(n => n -> runs.toSeq.flatMap(_.toMap.get(n)))
         .filter(_._2.nonEmpty).map { case (n, xs) => n -> xs.min }
       val top = byMin.sortBy(-_._2).take(isolateTop)
@@ -167,14 +232,12 @@ object Bench {
         java.lang.management.ManagementFactory.getRuntimeMXBean
           .getInputArguments.asScala.toSeq
       }
-      val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_ISOLATE_REPS", "2").toInt
       for ((name, suiteMin) <- top) {
-        // fit check: JVM+session startup ~25 s plus reps runs at the
-        // suite price (an upper bound — isolation only shrinks it)
-        if (elapsedS + suiteMin * reps + 40 < budgetS) {
+        // the suite price is an upper bound — isolation only shrinks it
+        if (fits(suiteMin * isolateReps + isolateJvmStartS)) {
           val cmd = Seq(javaBin) ++ jvmArgs ++ Seq(
             "-cp", sys.props("java.class.path"),
-            "graft.RunQuery", name, sfDir, reps.toString)
+            "graft.RunQuery", name, sfDir, isolateReps.toString)
           try {
             val pb = new ProcessBuilder(cmd: _*)
             pb.redirectErrorStream(true)
@@ -197,82 +260,38 @@ object Bench {
       }
     }
 
-    // True median: for an even sample count average the middle pair —
-    // s(len/2) alone would report the MAX of 2 samples and bias the
-    // headline high against odd-iteration baselines.
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.length % 2 == 1) s(s.length / 2)
-      else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
-    }
-    def jsonMap(kvs: Seq[(String, Double)]): String =
-      kvs.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
-
-    // The harness captures only the TAIL of the process output, so a
-    // single JSON line carrying all per-query medians (~4 KB) gets
-    // its head truncated and fails to parse (round-4 lesson:
-    // BENCH_r04.json "parsed": null). Split the report: full per-query
-    // detail (median + min) goes to /tmp/bench_full.json; the line
-    // printed is a compact (<2 KB) headline JSON that always fits the
-    // tail window intact.
-    def emit(last: Boolean): String = {
-      val itersCompleted = runs.length
-      val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val byName = allNames.map(n => n -> runs.toSeq.flatMap(_.toMap.get(n)))
-        .filter(_._2.nonEmpty)
-      val med = byName.map { case (n, xs) => n -> median(xs) }
-      // queries_min folds the fresh-JVM isolated pass in (when run):
-      // min(in-suite, isolated) is the key's honest warm cost, free of
-      // run-order heap/page-state inflation
-      val mins = byName.map { case (n, xs) =>
-        n -> isolated.get(n).fold(xs.min)(math.min(xs.min, _)) }
-      val total = med.map(_._2).sum
-      val totalMin = mins.map(_._2).sum
-      val isoJson = jsonMap(isolated.toSeq)
-      // Banking guard (round-16 q_except incident: a single warm sample
-      // produced a spurious 13.2x decade flag): keys whose minimum rests
-      // on ONE in-suite sample and no isolated pass are listed so the
-      // decade gate can refuse to bank them. Additive field in the full
-      // JSON only — the compact driver line is unchanged.
-      val lowSampleJson = byName
-        .collect { case (n, xs) if xs.length < 2 && !isolated.contains(n) => "\"" + n + "\"" }
-        .mkString("[", ",", "]")
-      val full =
-        f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${jsonMap(med)},"queries_min":${jsonMap(mins)},"isolated":$isoJson,"low_sample_keys":$lowSampleJson,"total_min":$totalMin%.3f,"failed":$failedJson,"sf":"$sfDir","iters":$iters,"iters_completed":$itersCompleted}"""
-      try {
-        java.nio.file.Files.write(java.nio.file.Paths.get("/tmp/bench_full.json"),
-          (full + "\n").getBytes("UTF-8"))
-      } catch { case _: Throwable => () }
-      val minMap = mins.toMap
-      val headKvs = med.filter(kv => headSet.contains(kv._1))
-      val headMinKvs = headline.flatMap(n => minMap.get(n).map(n -> _))
-      val json =
-        f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${jsonMap(headKvs)},"queries_min":${jsonMap(headMinKvs)},"total_min":$totalMin%.3f,"n_queries":${byName.length},"full":"/tmp/bench_full.json","failed":$failedJson,"sf":"$sfDir","iters":$iters,"iters_completed":$itersCompleted}"""
-      try {
-        java.nio.file.Files.write(java.nio.file.Paths.get("/tmp/bench.json"),
-          (json + "\n").getBytes("UTF-8"))
-      } catch { case _: Throwable => () }
-      if (!last) { println(json); System.err.println(json) }
-      json
+    // Writes both reports after every round; prints the compact line
+    // unless this is the last call (main prints that one after
+    // spark.stop()).
+    def emit(last: Boolean): Report = {
+      val r = report(runs.toSeq, isolated.toSeq, failed.toSeq, sfDir, iters)
+      // one try per file: a failed write of one must not skip the other
+      try java.nio.file.Files.write(java.nio.file.Paths.get("/tmp/bench_full.json"),
+        (r.full + "\n").getBytes("UTF-8"))
+      catch { case _: Throwable => () }
+      try java.nio.file.Files.write(java.nio.file.Paths.get("/tmp/bench.json"),
+        (r.compact + "\n").getBytes("UTF-8"))
+      catch { case _: Throwable => () }
+      if (!last) { println(r.compact); System.err.println(r.compact) }
+      r
     }
 
-    // Phase 1-2: headline warmup + ≥2 timed headline rounds. This is
+    // Phase 1-2: headline warmup + 2 timed headline rounds. This is
     // the part that MUST land — it produces iters_completed ≥ 2 and a
     // queries_min that differs from queries (real warm evidence) even
     // if the time box closes during everything after it.
-    val headWarmS = warm(headline)
+    warm(headline)
     System.err.println(f"[bench] headline warmup done at $elapsedS%.1f s")
     // Phase 1.5: UNTIMED prebuild of the headline keys at the BENCH
     // SF. The sf0.001 warmup warms codegen, not data — the shared
     // memo tables (pair graphs, CC closures) build on first
     // consumption at sfDir, and letting timed round 1 pay them turned
     // the round-14 driver artifact into one 166 s cold round whose
-    // inflated time failed every later round's fit predicate
-    // (iters_completed: 1, no warm evidence). Prebuilding here makes
-    // every TIMED round warm: the driver's 420 s box fits ≥3 rounds
-    // and min/median are build-free by construction.
+    // inflated time failed every later round's admission (no warm
+    // evidence). Prebuilding here makes every TIMED round warm, so
+    // min/median are build-free by construction.
     // The prebuild is BUDGET-BOUNDED: if the bench-SF memo builds hang
-    // or balloon, an unbounded loop could eat the whole driver box and
+    // or balloon, an unbounded loop could eat the whole budget and
     // bank NO artifact at all — worse than the cold round it replaces.
     // Past half the budget, remaining prebuilds are skipped (timed
     // round 1 then pays those builds cold, which the min/median over
@@ -296,68 +315,32 @@ object Bench {
     System.err.println(f"[bench] headline round 1 done at $elapsedS%.1f s (round $lastHeadS%.1f s, budget $budgetS%.0f s)")
     emit(last = false)
     var i = 1
-    while (i < 2 && elapsedS + lastHeadS * 1.2 < budgetS * 0.95) {
+    while (i < 2 && fits(lastHeadS)) {
       lastHeadS = runRound(headline)
       i += 1
       System.err.println(f"[bench] headline round $i done at $elapsedS%.1f s (round $lastHeadS%.1f s)")
       emit(last = false)
     }
-    // Phase 3-4: warm the rest, then ONE full-set round if the budget
-    // plausibly holds it. A mid-round kill costs nothing (the artifact
-    // above is already banked and re-emitted after every round) while
-    // a completed full round buys per-query coverage for all keys.
-    // SPARK_GRAFT_BENCH_FULL_ITERS (default 1) exists for the local
-    // multi-iteration artifact (BENCH_LOCAL_*): with a wide budget it
-    // repeats the full-set round so EVERY key gets a warm median, not
-    // just the headline subset. The driver's 420 s box fits one.
-    val fullIters = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL_ITERS", "1").toInt
-    // Full-round estimate = the MINIMUM of three independent bounds
-    // (round-12 rework; the old naive-only estimate over-predicted ~3×
-    // — headline keys skew expensive — and starved the round-11 driver
-    // artifact of its full round):
-    //   naive:     last headline round × key-count ratio (upper bound);
-    //   warm-ratio: last headline round × (head+rest warmup wall) /
-    //              (head warmup wall) — same key mix and the warmup
-    //              concurrency distortion cancels in the ratio;
-    //   sidecar:   1.3 × the last COMPLETED full-round wall time for
-    //              this data dir, when one exists (the only measured
-    //              number; written after every completed full round).
-    // SPARK_GRAFT_BENCH_FORCE_FULL=1 still skips the gate entirely for
-    // wide-budget local scale runs; the wall budget bounds phase 5.
-    val forceFull = sys.env.get("SPARK_GRAFT_BENCH_FORCE_FULL").contains("1")
+    // Phase 3-4: warm the rest, then the full-set rounds. The first
+    // has no measured estimate, so the guard here admits it; each
+    // later one is admitted on the round before it. A mid-round kill
+    // costs nothing (the artifact above is already banked and
+    // re-emitted after every round) while a completed full round buys
+    // per-query coverage for all keys.
     if (elapsedS < budgetS * 0.6) {
-      val restWarmS = warm(allNames.filterNot(headSet.contains))
+      warm(allNames.filterNot(headSet.contains))
       System.err.println(f"[bench] full warmup done at $elapsedS%.1f s")
-      val naiveEst = lastHeadS * allNames.length.toDouble / headline.length
-      val ratioEst =
-        if (headWarmS > 0) lastHeadS * (headWarmS + restWarmS) / headWarmS
-        else naiveEst
-      val sidecarEst = readLastFullS.map(_ * 1.3)
-      // A MEASURED prior full round beats both models when one exists:
-      // r12 observed the warm-ratio model under-predicting 2.5× (65.9 s
-      // predicted, 169.5 s actual — warmup walls are janino-bound, not
-      // data-bound), and an under-estimate near the budget edge starts
-      // a full round that gets killed mid-flight. With no sidecar the
-      // min of the two models still errs toward starting (the whole
-      // point of the r12 fix — the naive bound alone over-predicted 3×
-      // and starved driver artifacts), and emit-after-every-round means
-      // a mid-round kill costs only that round.
-      var fullEst = sidecarEst.getOrElse(math.min(naiveEst, ratioEst))
-      System.err.println(
-        f"[bench] full-round estimates: naive $naiveEst%.1f s, warm-ratio $ratioEst%.1f s" +
-          sidecarEst.map(s => f", sidecar $s%.1f s").getOrElse("") +
-          f" -> using $fullEst%.1f s")
+      var lastFullS: Option[Double] = None
       var j = 0
-      while (j < fullIters && (forceFull || elapsedS + fullEst < budgetS - 10)) {
-        val fullS = runRound(allNames)
+      while (j < fullIters && lastFullS.forall(fits)) {
+        lastFullS = Some(runRound(allNames))
         j += 1
-        System.err.println(f"[bench] full round $j/$fullIters done at $elapsedS%.1f s (round $fullS%.1f s)")
+        System.err.println(f"[bench] full round $j/$fullIters done at $elapsedS%.1f s (round ${lastFullS.get}%.1f s)")
         emit(last = false)
-        writeLastFullS(fullS)
-        fullEst = fullS * 1.1
       }
       if (j < fullIters)
-        System.err.println(f"[bench] stopping full rounds at $j/$fullIters (est $fullEst%.1f s won't fit at $elapsedS%.1f s)")
+        System.err.println(f"[bench] stopping full rounds at $j/$fullIters (round ${lastFullS.get}%.1f s won't fit at $elapsedS%.1f s; " +
+          f"SPARK_GRAFT_BENCH_BUDGET_S > ${budgetToAdmit(elapsedS, lastFullS.get)}%.0f would start it)")
     }
     // Phase 4.5: fresh-JVM isolated pass over the top-N most expensive
     // keys (off unless SPARK_GRAFT_BENCH_ISOLATE_TOP > 0). Runs before
@@ -367,26 +350,24 @@ object Bench {
       runIsolated()
       emit(last = false)
     }
-    // Phase 5: more headline rounds until the box closes.
-    while (i < iters && elapsedS + lastHeadS * 1.2 < budgetS * 0.95) {
+    // Phase 5: more headline rounds until the budget closes.
+    while (i < iters && fits(lastHeadS)) {
       lastHeadS = runRound(headline)
       i += 1
       System.err.println(f"[bench] headline round $i/$iters done at $elapsedS%.1f s (round $lastHeadS%.1f s)")
       emit(last = false)
     }
-    val json = emit(last = true)
+    val last = emit(last = true)
     // surface the banking guard loudly: a min resting on one in-suite
-    // sample is not bankable evidence (see low_sample_keys in the full
-    // JSON; the decade gate refuses artifacts that carry any)
-    val oneSample = allNames.map(n => n -> runs.toSeq.flatMap(_.toMap.get(n)))
-      .collect { case (n, xs) if xs.nonEmpty && xs.length < 2 && !isolated.contains(n) => n }
-    if (oneSample.nonEmpty)
-      System.err.println(s"[bench] WARNING: ${oneSample.length} key(s) have a " +
-        s"single warm sample (not bankable as minima): ${oneSample.take(8).mkString(",")}...")
+    // sample is not bankable evidence (the decade gate refuses
+    // artifacts whose low_sample_keys is non-empty)
+    if (last.lowSampleKeys.nonEmpty)
+      System.err.println(s"[bench] WARNING: ${last.lowSampleKeys.length} key(s) have a " +
+        s"single warm sample (not bankable as minima): ${last.lowSampleKeys.take(8).mkString(",")}...")
     spark.stop()
     // Emit the parseable line LAST so no later output (Spark shutdown
     // logs, sbt's "[success]") can push it out of the tail window.
-    println(json)
-    System.err.println(json)
+    println(last.compact)
+    System.err.println(last.compact)
   }
 }

@@ -1,19 +1,19 @@
 package graft
 
-/** Debug main: run one named SparkEntry query `reps` times, print row
-  * count and per-rep wall time (rep drift exposes JVM-state leaks).
+/** Debug main: run one named SparkEntry query `reps` times and print
+  * each rep's wall time (rep drift exposes JVM-state leaks).
   * `runMain graft.RunQuery <name> [sfDir] [reps]`
   *
-  * ACTION PARITY: the default action is the same noop-sink write
-  * Bench times — `count()` (the pre-round-12 default, kept via
-  * `SPARK_GRAFT_RUNQUERY_ACTION=count`) lets the optimizer DELETE the
-  * final presentation sort and every column the count doesn't need
-  * (`EliminateSorts` + pruning through the last aggregate), which
-  * round 12 measured as a 30× blind spot: ev_interval_join
-  * "reproduced" at 1.2 s under count() while the bench's noop write
-  * of the same query ran 36 s (the range sort's sampling pass
-  * re-executing the window pipeline). Adjudicating a bench number
-  * with a count() is comparing different plans.
+  * ACTION PARITY: the action is the same noop-sink write Bench times.
+  * A `count()` lets the optimizer DELETE the final presentation sort
+  * and every column the count doesn't need (`EliminateSorts` +
+  * pruning through the last aggregate), which round 12 measured as a
+  * 30× blind spot: ev_interval_join "reproduced" at 1.2 s under
+  * count() while the bench's noop write of the same query ran 36 s
+  * (the range sort's sampling pass re-executing the window
+  * pipeline). Adjudicating a bench number with a count() is
+  * comparing different plans. Bench's isolated pass parses the
+  * `time=` field of each rep line.
   *
   * Heap sizing (`SPARK_DRIVER_MEM`, default 8 g — in local mode the
   * driver IS the executor): the 8 g default covers the verify (sf0.01)
@@ -28,21 +28,14 @@ object RunQuery {
     val reps = if (args.length > 2) args(2).toInt else 1
     val spark = GraftSession.local()
     val fn = SparkEntry.queries(name)
-    val useCount = sys.env.get("SPARK_GRAFT_RUNQUERY_ACTION").contains("count")
     // SPARK_GRAFT_RUNQUERY_EXPLAIN=1: dump the formatted physical plan
     // once before the timed reps (plan inspection without a spec)
     if (sys.env.get("SPARK_GRAFT_RUNQUERY_EXPLAIN").contains("1"))
       fn(spark, sfDir).explain("formatted")
     for (r <- 1 to reps) {
       val t0 = System.nanoTime()
-      val df = fn(spark, sfDir)
-      val rows =
-        if (useCount) df.count().toString
-        else {
-          df.write.format("noop").mode("overwrite").save()
-          "n/a" // noop action never counts; a -1 sentinel reads as a row count
-        }
-      println(f"[runquery] $name rep=$r rows=$rows time=${(System.nanoTime() - t0) / 1e9}%.2fs")
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      println(f"[runquery] $name rep=$r time=${(System.nanoTime() - t0) / 1e9}%.2fs")
     }
     spark.stop()
   }

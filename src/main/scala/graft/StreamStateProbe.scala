@@ -376,6 +376,12 @@ object StreamStateProbe {
     }.mkString(",") + ","
     } // twinsBody
 
+    // 16-17c write their sinks under four temp dirs, deleted in the
+    // finally that closes sinkBody — also when a section throws.
+    val Seq(curDir, cadDir, grpDir, gcadDir) =
+      Seq("probe_curate", "probe_curate_cad", "probe_groups", "probe_groups_cad")
+        .map(java.nio.file.Files.createTempDirectory(_).toString)
+    val sinkBody: String = try {
     // 16. curateToSink: the ingest-to-sink funnel keeps NO state-store
     // state at all — corpus-growing dedup state lives in the parquet
     // sink's digest and band changelogs, partitioned by batch_id so
@@ -387,7 +393,6 @@ object StreamStateProbe {
     //     the fresh-digest docs);
     //   - one batch_id directory per micro-batch (the partition-prune
     //     unit the batch_id < batchId state filter relies on).
-    val curDir = java.nio.file.Files.createTempDirectory("probe_curate").toString
     val cur = new CurateStream.SinkTables(curDir)
     def docStream(m: MemoryStream[(Long, String, String, String)]) =
       m.toDF().toDF("doc_id", "source", "lang", "text")
@@ -451,7 +456,6 @@ object StreamStateProbe {
     //   - every read face identical to the uncadenced run's: digest
     //     count, accepted docs, shard manifest.
     val cadEvery = 3
-    val cadDir = java.nio.file.Files.createTempDirectory("probe_curate_cad").toString
     val cad = new CurateStream.SinkTables(cadDir)
     val cadBatches = feed(spark, chunks, docRows)(m =>
       CurateStream.curateToSink(docStream(m), cadDir, compactEvery = cadEvery)).size
@@ -479,7 +483,6 @@ object StreamStateProbe {
     //     its root CHANGES, and a root changes at most once per
     //     batch — the union-by-min rewrite amortization, observed);
     //   - one batch_id directory per micro-batch.
-    val grpDir = java.nio.file.Files.createTempDirectory("probe_groups").toString
     val grpRoots = GroupStream.roots(grpDir)
     val grpPairsDf = graft.operators.Dedup.minhashNearDupsMd5(docsDf)
       .select("doc_a", "doc_b")
@@ -534,7 +537,6 @@ object StreamStateProbe {
     // 17c. CADENCED changelog compaction for the CC sink — same
     // contract as 16c: the foreachBatch hook alone must bound the
     // changelog, and the final mapping must still equal batch CC.
-    val gcadDir = java.nio.file.Files.createTempDirectory("probe_groups_cad").toString
     val gcadBatches = feed(spark, chunks, grpPairs)(m =>
       GroupStream.groupsToSink(pairStream(m), gcadDir, compactEvery = cadEvery)).size
     val gcadDirs = GroupStream.roots(gcadDir).batchIds(spark).size
@@ -566,7 +568,10 @@ object StreamStateProbe {
         s""""mapping_diff_after_compact":$grpDiffC,""" +
         s""""cadence_every":$cadEvery,"cadence_batches":$gcadBatches,""" +
         s""""cadence_dirs":$gcadDirs,"cadence_mapping_diff":$gcadDiff}"""
-    println(s"""{"metric":"stream_state","sf":"$sfDir","chunks":$chunks,$twinsBody$curBody,$grpBody}""")
+    s"$curBody,$grpBody"
+    } finally Seq(curDir, cadDir, grpDir, gcadDir).foreach(d =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
+    println(s"""{"metric":"stream_state","sf":"$sfDir","chunks":$chunks,$twinsBody$sinkBody}""")
     failures.foreach(f => println(s"BOUND VIOLATED: $f"))
     spark.stop()
     if (failures.nonEmpty) sys.exit(1)

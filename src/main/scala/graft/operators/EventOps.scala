@@ -1948,6 +1948,38 @@ object EventOps {
     pmod(conv(substring(md5(col("user_id").cast("string")), 1, 4), 16, 10)
       .cast("long"), lit(2L))
 
+  /** The per-user A/B metric `m`, aggregated per `user_id`: the
+    * user's purchase value, rounded to 6 so both engines sum
+    * identical numbers.
+    */
+  private def abMetric: Column =
+    round(sum(when(col("event_type") === "purchase", col("value"))
+      .otherwise(0.0)), 6).as("m")
+
+  /** Per-arm size and raw sums Σm, Σm² over rows carrying `m` and the
+    * arm `grp` — the inputs of every raw-sums identity below.
+    */
+  private def abArmSums: Seq[Column] = Seq(
+    count(when(col("grp") === 0, lit(1))).as("n_a"),
+    count(when(col("grp") === 1, lit(1))).as("n_b"),
+    sum(when(col("grp") === 0, col("m")).otherwise(0.0)).as("sx_a"),
+    sum(when(col("grp") === 1, col("m")).otherwise(0.0)).as("sx_b"),
+    sum(when(col("grp") === 0, col("m") * col("m")).otherwise(0.0)).as("sx2_a"),
+    sum(when(col("grp") === 1, col("m") * col("m")).otherwise(0.0)).as("sx2_b"))
+
+  /** Sample variance of arm `arm` ("a" or "b") from [[abArmSums]]. */
+  private def abWelchVar(arm: String): Column =
+    (col(s"sx2_$arm") - col(s"sx_$arm") * col(s"sx_$arm") / col(s"n_$arm")) /
+      (col(s"n_$arm") - 1)
+
+  /** Welch's t between the arms from [[abArmSums]], rounded to 4;
+    * null when an arm has ≤ 1 user.
+    */
+  private def abWelchT: Column =
+    when(col("n_a") > 1 && col("n_b") > 1,
+      round((col("sx_a") / col("n_a") - col("sx_b") / col("n_b")) /
+        sqrt(abWelchVar("a") / col("n_a") + abWelchVar("b") / col("n_b")), 4)).as("welch_t")
+
   /** A/B experiment readout over a deterministic 50/50 hash split of
     * users (md5 arithmetic, the [[TextAnalysis.hashSample]]
     * primitive — reproducible on any cluster, no RNG): per-arm n,
@@ -1964,26 +1996,14 @@ object EventOps {
     * conditional aggregation — no window, no join.
     */
   def abTest(events: DataFrame): DataFrame = {
-    val perUser = events.groupBy("user_id")
-      .agg(round(sum(when(col("event_type") === "purchase", col("value"))
-        .otherwise(0.0)), 6).as("m"))
+    val perUser = events.groupBy("user_id").agg(abMetric)
       .select(col("m"), abArm.as("grp"))
-    val wide = perUser.agg(
-      count(when(col("grp") === 0, lit(1))).as("n_a"),
-      count(when(col("grp") === 1, lit(1))).as("n_b"),
-      sum(when(col("grp") === 0, col("m")).otherwise(0.0)).as("sx_a"),
-      sum(when(col("grp") === 1, col("m")).otherwise(0.0)).as("sx_b"),
-      sum(when(col("grp") === 0, col("m") * col("m")).otherwise(0.0)).as("sx2_a"),
-      sum(when(col("grp") === 1, col("m") * col("m")).otherwise(0.0)).as("sx2_b"))
-    val varA = (col("sx2_a") - col("sx_a") * col("sx_a") / col("n_a")) / (col("n_a") - 1)
-    val varB = (col("sx2_b") - col("sx_b") * col("sx_b") / col("n_b")) / (col("n_b") - 1)
+    val wide = perUser.agg(abArmSums.head, abArmSums.tail: _*)
     wide.select(
       col("n_a"), col("n_b"),
       round(col("sx_a") / col("n_a"), 6).as("mean_a"),
       round(col("sx_b") / col("n_b"), 6).as("mean_b"),
-      when(col("n_a") > 1 && col("n_b") > 1,
-        round((col("sx_a") / col("n_a") - col("sx_b") / col("n_b")) /
-          sqrt(varA / col("n_a") + varB / col("n_b")), 4)).as("welch_t"),
+      abWelchT,
       when(col("n_a") + col("n_b") > 0,
         round(((col("n_a") - col("n_b")) * (col("n_a") - col("n_b")))
           .cast("double") / (col("n_a") + col("n_b")), 6)).as("srm_chi2"))
@@ -2006,9 +2026,7 @@ object EventOps {
     * TakeOrdered over that bounded table.
     */
   def abKsStatistic(events: DataFrame, nBins: Int = 20): DataFrame = {
-    val perUser = events.groupBy("user_id")
-      .agg(round(sum(when(col("event_type") === "purchase", col("value"))
-        .otherwise(0.0)), 6).as("m"))
+    val perUser = events.groupBy("user_id").agg(abMetric)
       .select(col("m"), abArm.as("grp"))
     val grid = perUser.agg(percentile(col("m"),
       array((1 until nBins).map(i => lit(i.toDouble / nBins)): _*)).as("thr"))
@@ -2149,27 +2167,17 @@ object EventOps {
   def powerAnalysis(events: DataFrame): DataFrame = {
     val zSum = 2.801585
     val perUser = events.groupBy("user_id")
-      .agg(round(sum(when(col("event_type") === "purchase", col("value"))
-        .otherwise(0.0)), 6).as("m"),
+      .agg(abMetric,
         max(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("conv"))
       .select(col("m"), col("conv"), abArm.as("grp"))
-    val s = perUser.agg(
-      count(when(col("grp") === 0, lit(1))).as("n_a"),
-      count(when(col("grp") === 1, lit(1))).as("n_b"),
-      sum(when(col("grp") === 0, col("m")).otherwise(0.0)).as("sx_a"),
-      sum(when(col("grp") === 1, col("m")).otherwise(0.0)).as("sx_b"),
-      sum(when(col("grp") === 0, col("m") * col("m")).otherwise(0.0)).as("sx2_a"),
-      sum(when(col("grp") === 1, col("m") * col("m")).otherwise(0.0)).as("sx2_b"),
-      sum("conv").as("c"))
-    val varA = (col("sx2_a") - col("sx_a") * col("sx_a") / col("n_a")) / (col("n_a") - 1)
-    val varB = (col("sx2_b") - col("sx_b") * col("sx_b") / col("n_b")) / (col("n_b") - 1)
+    val s = perUser.agg(abArmSums.head, abArmSums.tail :+ sum("conv").as("c"): _*)
     val p = col("c") / (col("n_a") + col("n_b"))
     s.select(col("n_a"), col("n_b"),
       round((col("sx_a") + col("sx_b")) / (col("n_a") + col("n_b")), 6)
         .as("baseline_value"),
       round(p, 6).as("baseline_rate"),
       when(col("n_a") > 1 && col("n_b") > 1,
-        round(lit(zSum) * sqrt(varA / col("n_a") + varB / col("n_b")), 6))
+        round(lit(zSum) * sqrt(abWelchVar("a") / col("n_a") + abWelchVar("b") / col("n_b")), 6))
         .as("mde_value"),
       when(p > 0 && p < 1,
         round(lit(zSum) * sqrt(p * (lit(1.0) - p) *
@@ -2281,9 +2289,7 @@ object EventOps {
     */
   def abHeterogeneous(events: DataFrame, nSegments: Int = 3): DataFrame = {
     val perUser = events.groupBy("user_id")
-      .agg(count(lit(1)).as("n_events"),
-        round(sum(when(col("event_type") === "purchase", col("value"))
-          .otherwise(0.0)), 6).as("m"))
+      .agg(count(lit(1)).as("n_events"), abMetric)
       .select(col("n_events"), col("m"), abArm.as("grp"))
     val thr = perUser.agg(percentile(col("n_events").cast("double"),
       array((1 until nSegments).map(i => lit(i.toDouble / nSegments)): _*))
@@ -2291,22 +2297,12 @@ object EventOps {
     val seg = perUser.crossJoin(broadcast(thr))
       .select(col("m"), col("grp"),
         size(filter(col("thr"), t => t < col("n_events"))).as("segment"))
-    val wide = seg.groupBy("segment").agg(
-      count(when(col("grp") === 0, lit(1))).as("n_a"),
-      count(when(col("grp") === 1, lit(1))).as("n_b"),
-      sum(when(col("grp") === 0, col("m")).otherwise(0.0)).as("sx_a"),
-      sum(when(col("grp") === 1, col("m")).otherwise(0.0)).as("sx_b"),
-      sum(when(col("grp") === 0, col("m") * col("m")).otherwise(0.0)).as("sx2_a"),
-      sum(when(col("grp") === 1, col("m") * col("m")).otherwise(0.0)).as("sx2_b"))
-    val varA = (col("sx2_a") - col("sx_a") * col("sx_a") / col("n_a")) / (col("n_a") - 1)
-    val varB = (col("sx2_b") - col("sx_b") * col("sx_b") / col("n_b")) / (col("n_b") - 1)
+    val wide = seg.groupBy("segment").agg(abArmSums.head, abArmSums.tail: _*)
     wide.select(col("segment"), col("n_a"), col("n_b"),
       round(col("sx_a") / col("n_a"), 6).as("mean_a"),
       round(col("sx_b") / col("n_b"), 6).as("mean_b"),
       round(col("sx_a") / col("n_a") - col("sx_b") / col("n_b"), 6).as("effect"),
-      when(col("n_a") > 1 && col("n_b") > 1,
-        round((col("sx_a") / col("n_a") - col("sx_b") / col("n_b")) /
-          sqrt(varA / col("n_a") + varB / col("n_b")), 4)).as("welch_t"))
+      abWelchT)
       .orderBy("segment")
   }
 

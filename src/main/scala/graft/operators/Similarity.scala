@@ -277,7 +277,8 @@ object Similarity {
 
   /** Nearest-centroid assignment against an explicit centroid frame:
     * broadcast the (tiny) centroids, score map-only, keep the argmax
-    * per vector. Shared by index build, probe, and k-means rounds.
+    * per vector as (vec_id, cell_id, v, sim). Shared by index build,
+    * probe, cell reports and k-means rounds.
     */
   private def assignToCells(embeddings: DataFrame, cents: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -288,7 +289,28 @@ object Similarity {
         VectorFunctions.cosineSim(col("v"), col("centroid")).as("sim"))
     val w = Window.partitionBy("vec_id").orderBy(col("sim").desc, col("cell_id"))
     scored.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(col("vec_id"), col("cell_id"), col("v"))
+      .select(col("vec_id"), col("cell_id"), col("v"), col("sim"))
+  }
+
+  /** IVF probe ranking: the query frame (the first `nQueries` vectors
+    * as `qid`, `qv`) and, per query, its `nProbe` cells whose
+    * centroids are most cosine-similar, ranked `probe_rn` by
+    * (csim desc, cell_id) against the broadcast centroids. Shared by
+    * [[ivfTopK]] and [[ivfProbeSweep]].
+    */
+  private def rankedProbes(embeddings: DataFrame, cents: DataFrame, nQueries: Int,
+                           nProbe: Int): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.expressions.Window
+    val queries = embeddings.filter(col("vec_id") < nQueries)
+      .select(col("vec_id").as("qid"), asDouble(col("embedding")).as("qv"))
+    val wProbe = Window.partitionBy("qid").orderBy(col("csim").desc, col("cell_id"))
+    val probes = queries.crossJoin(broadcast(cents))
+      .select(col("qid"), col("qv"), col("cell_id"),
+        VectorFunctions.cosineSim(col("qv"), col("centroid")).as("csim"))
+      .withColumn("probe_rn", row_number().over(wProbe))
+      .filter(col("probe_rn") <= nProbe)
+      .select("qid", "qv", "cell_id", "probe_rn")
+    (queries, probes)
   }
 
   /** Distributed spherical k-means for IVF centroids: `iters` rounds
@@ -336,9 +358,9 @@ object Similarity {
       trainCentroids(embeddings, nCells, iters).toDF("cell_id", "centroid")
     }
 
-  /** Cell assignment: nearest centroid per vector (broadcast
-    * centroids, map-only). Persist/bucket this at scale — it is the
-    * "index build".
+  /** Cell assignment: nearest centroid per vector, with its cosine
+    * `sim` (broadcast centroids, map-only). Persist/bucket this at
+    * scale — it is the "index build".
     */
   def ivfAssign(embeddings: DataFrame, nCells: Int = 16, iters: Int = 0): DataFrame =
     assignToCells(embeddings, centroids(embeddings, nCells, iters))
@@ -350,16 +372,9 @@ object Similarity {
     */
   def ivfTopK(embeddings: DataFrame, k: Int = 5, nQueries: Int = 10,
               nCells: Int = 16, nProbe: Int = 4, iters: Int = 0): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val cents = centroids(embeddings, nCells, iters)
     val assigned = assignToCells(embeddings, cents)
-    val queries = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), asDouble(col("embedding")).as("qv"))
-    val wProbe = Window.partitionBy("qid").orderBy(col("csim").desc, col("cell_id"))
-    val probes = queries.crossJoin(broadcast(cents))
-      .select(col("qid"), col("qv"), col("cell_id"), VectorFunctions.cosineSim(col("qv"), col("centroid")).as("csim"))
-      .withColumn("rn", row_number().over(wProbe)).filter(col("rn") <= nProbe)
-      .select("qid", "qv", "cell_id")
+    val (_, probes) = rankedProbes(embeddings, cents, nQueries, nProbe)
     val scored = probes.join(assigned, "cell_id")
       .filter(col("qid") =!= col("vec_id"))
       .select(col("qid"), col("vec_id").as("cid"),
@@ -652,15 +667,7 @@ object Similarity {
     import spark.implicits._
     val cents = seedCentroids(embeddings, nCells)
     val assigned = assignToCells(embeddings, cents)
-    val queries = embeddings.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), asDouble(col("embedding")).as("qv"))
-    val wProbe = Window.partitionBy("qid").orderBy(col("csim").desc, col("cell_id"))
-    val probeRanked = queries.crossJoin(broadcast(cents))
-      .select(col("qid"), col("qv"), col("cell_id"),
-        VectorFunctions.cosineSim(col("qv"), col("centroid")).as("csim"))
-      .withColumn("probe_rn", row_number().over(wProbe))
-      .filter(col("probe_rn") <= levels.max)
-      .select("qid", "qv", "cell_id", "probe_rn")
+    val (queries, probeRanked) = rankedProbes(embeddings, cents, nQueries, levels.max)
     val scored = probeRanked.join(assigned, "cell_id")
       .filter(col("qid") =!= col("vec_id"))
       .select(col("qid"), col("vec_id").as("cid"), col("probe_rn"),
@@ -714,14 +721,7 @@ object Similarity {
     * every IVF op; the report agg is nCells keys.
     */
   def ivfCellCohesion(embeddings: DataFrame, nCells: Int = 16): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val scored = embeddings
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .crossJoin(broadcast(seedCentroids(embeddings, nCells)))
-      .select(col("vec_id"), col("cell_id"),
-        VectorFunctions.cosineSim(col("v"), col("centroid")).as("sim"))
-    val w = Window.partitionBy("vec_id").orderBy(col("sim").desc, col("cell_id"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+    assignToCells(embeddings, seedCentroids(embeddings, nCells))
       .groupBy("cell_id")
       .agg(count(lit(1)).as("n_vectors"),
         round(avg("sim"), 6).as("mean_sim"),

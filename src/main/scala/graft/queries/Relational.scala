@@ -1123,6 +1123,16 @@ object Relational {
       .join(po.select(col("okey"), col("part").as("part_b")).hint("shuffle_hash"), Seq("okey"))
       .filter(col("part_a") < col("part_b"))
       .groupBy("part_a", "part_b").agg(count(lit(1)).as("n_ab"))
+    liftTopK(pairCnt, partCnt, nOrders, minPairs, k)
+  }
+
+  /** The lift finisher both co-purchase keys share: keep pairs seen in
+    * ≥ `minPairs` orders, join both parts' order counts, divide by the
+    * 1-row broadcast order count, and take the top `k` by pair count
+    * (ties by part ids).
+    */
+  private def liftTopK(pairCnt: DataFrame, partCnt: DataFrame, nOrders: DataFrame,
+                       minPairs: Int, k: Int): DataFrame =
     pairCnt.filter(col("n_ab") >= minPairs)
       .join(partCnt.select(col("part").as("part_a"), col("n_p").as("n_a")), Seq("part_a"))
       .join(partCnt.select(col("part").as("part_b"), col("n_p").as("n_b")), Seq("part_b"))
@@ -1133,7 +1143,6 @@ object Relational {
             (col("n_b").cast("double") / col("n_orders"))), 6).as("lift"))
       .orderBy(col("n_ab").desc, col("part_a"), col("part_b"))
       .limit(k)
-  }
 
   /** The capped (okey, parts-array) basket table behind
     * [[copurchaseLiftCapped]] — the memo unit. The cap changes the
@@ -1190,16 +1199,7 @@ object Relational {
           "struct(least(x, y) AS part_a, greatest(x, y) AS part_b))))")).as("p"))
       .select(col("p.part_a").as("part_a"), col("p.part_b").as("part_b"))
       .groupBy("part_a", "part_b").agg(count(lit(1)).as("n_ab"))
-    pairCnt.filter(col("n_ab") >= minPairs)
-      .join(partCnt.select(col("part").as("part_a"), col("n_p").as("n_a")), Seq("part_a"))
-      .join(partCnt.select(col("part").as("part_b"), col("n_p").as("n_b")), Seq("part_b"))
-      .crossJoin(broadcast(nOrders))
-      .select(col("part_a"), col("part_b"), col("n_ab"),
-        round((col("n_ab").cast("double") / col("n_orders")) /
-          ((col("n_a").cast("double") / col("n_orders")) *
-            (col("n_b").cast("double") / col("n_orders"))), 6).as("lift"))
-      .orderBy(col("n_ab").desc, col("part_a"), col("part_b"))
-      .limit(k)
+    liftTopK(pairCnt, partCnt, nOrders, minPairs, k)
   }
 
   /** Snapshot diff: the added / deleted / changed rows between the

@@ -1,9 +1,11 @@
 package graft
 
+import graft.TempDirs.withTempDir
+import org.scalatest.{Args, Status}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import scala.sys.process._
 
 /** Puts the bench drift gate itself under `sbt test`, so the gate's
@@ -24,7 +26,15 @@ class DriftGateSpec extends AnyFunSuite {
   private val tool = new java.io.File("tools/check_drift.py").getAbsolutePath
   assume(new java.io.File(tool).isFile, s"missing $tool")
   private val python = Seq("python3", "-c", "print(1)").!(ProcessLogger(_ => ())) == 0
-  private val dir = Files.createTempDirectory("graft_drift_spec")
+  // the suite's artifacts share one temp dir, deleted when the suite ends
+  private var dir: Path = _
+  override def run(testName: Option[String], args: Args): Status =
+    withTempDir("graft_drift_spec") { d =>
+      dir = Paths.get(d)
+      val status = super.run(testName, args)
+      status.waitUntilCompleted()
+      status
+    }
 
   private def artifact(name: String, queries: Map[String, Double],
                        failed: Seq[String] = Nil,

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.Files
+import graft.TempDirs.withTempDir
 import scala.sys.process._
 
 /** Runs the real `tools/jfr_top.py` on a JFR recording made in this
@@ -41,17 +41,19 @@ class JfrTopSpec extends AnyFunSuite {
     busy.start()
     busy.join()
     rec.stop()
-    val file = Files.createTempFile("jfr_top_spec", ".jfr")
-    rec.dump(file)
-    rec.close()
+    withTempDir("jfr_top_spec") { dir =>
+      val file = java.nio.file.Paths.get(dir, "recording.jfr")
+      rec.dump(file)
+      rec.close()
 
-    val (code, out) = run(file.toString, "--thread", "executor", "--top", "3")
-    assert(code == 0, out)
-    assert(!out.contains("[main]") && !out.contains("[other]"), out)
-    val header = """\[executor\] (\d+) samples""".r.findFirstMatchIn(out)
-    assert(header.exists(_.group(1).toInt > 0), out)
-    // every sample of the busy thread has Thread.run at its root
-    assert(out.linesIterator.exists(l => l.contains("100.0%") && l.endsWith("java.lang.Thread.run")), out)
+      val (code, out) = run(file.toString, "--thread", "executor", "--top", "3")
+      assert(code == 0, out)
+      assert(!out.contains("[main]") && !out.contains("[other]"), out)
+      val header = """\[executor\] (\d+) samples""".r.findFirstMatchIn(out)
+      assert(header.exists(_.group(1).toInt > 0), out)
+      // every sample of the busy thread has Thread.run at its root
+      assert(out.linesIterator.exists(l => l.contains("100.0%") && l.endsWith("java.lang.Thread.run")), out)
+    }
   }
 
   test("jfr_top refuses a missing recording without a traceback") {

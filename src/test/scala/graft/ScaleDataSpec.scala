@@ -1,6 +1,8 @@
 package graft
 
+import graft.TempDirs.withTempDir
 import org.apache.spark.sql.functions._
+import org.scalatest.{Args, Status}
 
 /** Pins the scale-corpus generator's contract — the 10× timing corpus
   * is itself measurement apparatus, and its first version skewed a
@@ -13,11 +15,20 @@ import org.apache.spark.sql.functions._
   */
 class ScaleDataSpec extends SparkSpec {
 
+  // the generated corpus is shared by the suite's tests and deleted
+  // when the suite ends
+  private var root: String = _
   private lazy val out = {
-    val dir = java.nio.file.Files.createTempDirectory("scaledata_spec").toString
-    graft.ScaleData.generate(spark, sf0001, dir, 3)
-    dir
+    graft.ScaleData.generate(spark, sf0001, root, 3)
+    root
   }
+  override def run(testName: Option[String], args: Args): Status =
+    withTempDir("scaledata_spec") { d =>
+      root = d
+      val status = super.run(testName, args)
+      status.waitUntilCompleted()
+      status
+    }
 
   test("fact tables replicate with striding; dims stay fixed") {
     val docs = spark.read.parquet(s"$out/documents.parquet")

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
+import graft.TempDirs.withTempDir
 
 /** Z-order clustering: bit-level correctness of the interleave and
   * the layout property that justifies it — each z-ordered output file
@@ -36,34 +36,36 @@ class ClusteringSpec extends SparkSpec {
         expr(s"ts_us div $hourUs").bitwiseAND(lit(0xFFL)).as("y"))
     val nFiles = 16
 
-    val zDir = Files.createTempDirectory("zorder").toString
-    Clustering.zOrderWrite(base, col("x"), col("y"), zDir, nFiles)
-    val linDir = Files.createTempDirectory("linear").toString
-    base.repartitionByRange(nFiles, col("x")).sortWithinPartitions("x")
-      .write.mode("overwrite").parquet(linDir)
+    withTempDir("zorder") { zDir =>
+      Clustering.zOrderWrite(base, col("x"), col("y"), zDir, nFiles)
+      withTempDir("linear") { linDir =>
+        base.repartitionByRange(nFiles, col("x")).sortWithinPartitions("x")
+          .write.mode("overwrite").parquet(linDir)
 
-    // average per-file span of each dimension, from the data each
-    // file actually holds — the proxy for its parquet min/max stats
-    def spans(dir: String): (Double, Double) = {
-      val rows = spark.read.parquet(dir)
-        .groupBy(input_file_name())
-        .agg((max("x") - min("x")).as("sx"), (max("y") - min("y")).as("sy"))
-        .collect()
-      (rows.map(_.getAs[Long]("sx")).sum.toDouble / rows.length,
-        rows.map(_.getAs[Long]("sy")).sum.toDouble / rows.length)
+        // average per-file span of each dimension, from the data each
+        // file actually holds — the proxy for its parquet min/max stats
+        def spans(dir: String): (Double, Double) = {
+          val rows = spark.read.parquet(dir)
+            .groupBy(input_file_name())
+            .agg((max("x") - min("x")).as("sx"), (max("y") - min("y")).as("sy"))
+            .collect()
+          (rows.map(_.getAs[Long]("sx")).sum.toDouble / rows.length,
+            rows.map(_.getAs[Long]("sy")).sum.toDouble / rows.length)
+        }
+        val (zx, zy) = spans(zDir)
+        val (lx, ly) = spans(linDir)
+        val (globalX, globalY) = {
+          val r = base.agg(max("x") - min("x"), max("y") - min("y")).collect()(0)
+          (r.getLong(0).toDouble, r.getLong(1).toDouble)
+        }
+        // 1-D sort: x tight, y essentially unlocalized
+        assert(lx < globalX * 0.25, s"linear layout should localize x: $lx vs $globalX")
+        // z-order: BOTH dims materially tighter than the unclustered span,
+        // and y at least 2× tighter than the 1-D layout manages
+        assert(zx < globalX * 0.5, s"z-order failed to localize x: $zx vs $globalX")
+        assert(zy < globalY * 0.5, s"z-order failed to localize y: $zy vs $globalY")
+        assert(zy < ly * 0.5, s"z-order y-span $zy not better than linear's $ly")
+      }
     }
-    val (zx, zy) = spans(zDir)
-    val (lx, ly) = spans(linDir)
-    val (globalX, globalY) = {
-      val r = base.agg(max("x") - min("x"), max("y") - min("y")).collect()(0)
-      (r.getLong(0).toDouble, r.getLong(1).toDouble)
-    }
-    // 1-D sort: x tight, y essentially unlocalized
-    assert(lx < globalX * 0.25, s"linear layout should localize x: $lx vs $globalX")
-    // z-order: BOTH dims materially tighter than the unclustered span,
-    // and y at least 2× tighter than the 1-D layout manages
-    assert(zx < globalX * 0.5, s"z-order failed to localize x: $zx vs $globalX")
-    assert(zy < globalY * 0.5, s"z-order failed to localize y: $zy vs $globalY")
-    assert(zy < ly * 0.5, s"z-order y-span $zy not better than linear's $ly")
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.TempDirs.withTempDir
 import org.apache.spark.sql.functions._
 
 class MultimodalSpec extends SparkSpec {
@@ -93,22 +94,24 @@ class MultimodalSpec extends SparkSpec {
     // binaryFile source reads (path, modificationTime, length, content)
     // — the ingestion edge that turns a bucket of images into the
     // payload+meta convention without a custom reader.
-    val dir = java.nio.file.Files.createTempDirectory("blobs")
-    val blobs = Seq("img_0" -> "fake-image-bytes", "img_1" -> "more-bytes")
-    blobs.foreach { case (name, content) =>
-      java.nio.file.Files.write(dir.resolve(s"$name.bin"), content.getBytes("UTF-8"))
+    withTempDir("blobs") { dir =>
+      val blobs = Seq("img_0" -> "fake-image-bytes", "img_1" -> "more-bytes")
+      blobs.foreach { case (name, content) =>
+        java.nio.file.Files.write(java.nio.file.Paths.get(dir, s"$name.bin"),
+          content.getBytes("UTF-8"))
+      }
+      val ingested = spark.read.format("binaryFile").load(dir)
+        .select(
+          regexp_extract(col("path"), "([^/]+)\\.bin$", 1).as("blob_id"),
+          col("content").as("payload"),
+          struct(lit("image").as("media_type"), col("length").as("n_bytes")).as("meta"))
+      val rows = ingested.orderBy("blob_id").collect()
+      assert(rows.length == blobs.length)
+      assert(rows.map(r => new String(r.getAs[Array[Byte]]("payload"), "UTF-8")).toSeq ==
+        blobs.map(_._2))
+      assert(rows.map(_.getAs[org.apache.spark.sql.Row]("meta").getAs[Long]("n_bytes")).toSeq ==
+        blobs.map(_._2.length.toLong))
     }
-    val ingested = spark.read.format("binaryFile").load(dir.toString)
-      .select(
-        regexp_extract(col("path"), "([^/]+)\\.bin$", 1).as("blob_id"),
-        col("content").as("payload"),
-        struct(lit("image").as("media_type"), col("length").as("n_bytes")).as("meta"))
-    val rows = ingested.orderBy("blob_id").collect()
-    assert(rows.length == blobs.length)
-    assert(rows.map(r => new String(r.getAs[Array[Byte]]("payload"), "UTF-8")).toSeq ==
-      blobs.map(_._2))
-    assert(rows.map(_.getAs[org.apache.spark.sql.Row]("meta").getAs[Long]("n_bytes")).toSeq ==
-      blobs.map(_._2.length.toLong))
   }
 
   test("decodeStub: checksum is md5 hex of payload; dims carved from hex chunks") {

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.{SparkSpec, Tables}
+import graft.TempDirs.withTempDir
 import graft.operators.{Curation, Dedup, TextAnalysis}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -45,158 +46,161 @@ class CurateStreamSpec extends SparkSpec {
 
   test("streamed curation sink equals the batch funnel's survivor set and manifest") {
     implicit val sq = spark.sqlContext
-    val outDir = java.nio.file.Files.createTempDirectory("curate_stream_").toString
+    withTempDir("curate_stream_") { outDir =>
 
-    val docs = Tables.documents(spark, sf0001)
-      .select("doc_id", "source", "lang", "text")
-      .orderBy("doc_id")
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3)))
-    assert(docs.length > 30, s"need a real corpus, got ${docs.length} docs")
-    val chunks = docs.grouped((docs.length + 2) / 3).toSeq
-    assert(chunks.length == 3)
+      val docs = Tables.documents(spark, sf0001)
+        .select("doc_id", "source", "lang", "text")
+        .orderBy("doc_id")
+        .collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3)))
+      assert(docs.length > 30, s"need a real corpus, got ${docs.length} docs")
+      val chunks = docs.grouped((docs.length + 2) / 3).toSeq
+      assert(chunks.length == 3)
 
-    val mem = MemoryStream[(Long, String, String, String)]
-    val stream = mem.toDF().toDF("doc_id", "source", "lang", "text")
-    val q = CurateStream.curateToSink(stream, outDir)
-    try {
-      chunks.foreach { c =>
-        mem.addData(c: _*)
-        q.processAllAvailable()
+      val mem = MemoryStream[(Long, String, String, String)]
+      val stream = mem.toDF().toDF("doc_id", "source", "lang", "text")
+      val q = CurateStream.curateToSink(stream, outDir)
+      try {
+        chunks.foreach { c =>
+          mem.addData(c: _*)
+          q.processAllAvailable()
+        }
+      } finally q.stop()
+
+      val batchDf = Tables.documents(spark, sf0001)
+      val expected = expectedSurvivors(batchDf)
+      val expIds = expected.select("doc_id").collect().map(_.getLong(0)).toSet
+      val gotIds = CurateStream.sinkDocs(spark, outDir)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      assert(gotIds == expIds,
+        s"streamed ${gotIds.size} vs batch ${expIds.size}; " +
+          s"stream-only=${(gotIds -- expIds).take(5)} batch-only=${(expIds -- gotIds).take(5)}")
+
+      // survivors must be a strict subset of the corpus (the funnel dropped rows)
+      assert(gotIds.size < docs.length)
+
+      // manifest: nShards-row delta sum == batch arithmetic over survivors
+      val streamed = CurateStream.sinkManifest(spark, outDir)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      val batchMan = manifestOf(expected)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      assert(streamed == batchMan)
+      assert(streamed.map(_._2).sum == expIds.size.toLong)
+
+      // idempotent replay: re-running a middle batch's foreachBatch body
+      // overwrites its own batch_id dirs — sink totals are unchanged
+      val replayBatch = chunks(1).toSeq.toDF("doc_id", "source", "lang", "text")
+      CurateStream.curateBatch(replayBatch, 1L, outDir, 5, 16, 4, 0.5, 16)
+      val afterReplay = CurateStream.sinkDocs(spark, outDir)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      assert(afterReplay == expIds)
+
+      // --- compaction (round-14 verdict item 2: the executable form of
+      // the scaladoc's "compact periodically"). All three state tables
+      // collapse to baseline + newest; every read face must be IDENTICAL
+      // pre/post, the newest batch must replay correctly against the
+      // baseline, and — the data-loss check — a re-send of the ENTIRE
+      // corpus must be rejected wholesale by the compacted digest/band
+      // state, while a genuinely novel doc is still admitted.
+      def stateDirs(sub: String) = java.nio.file.Files
+        .list(java.nio.file.Paths.get(outDir, sub.split("/"): _*))
+        .toArray.map(_.toString).filter(_.contains("batch_id=")).sorted.toSeq
+      assert(stateDirs("_state/digests").size == 3)
+      CurateStream.compact(spark, outDir)
+      Seq("_state/digests", "_state/bands", "manifest_delta").foreach { t =>
+        assert(stateDirs(t).size == 2, s"$t: ${stateDirs(t)}")
       }
-    } finally q.stop()
-
-    val batchDf = Tables.documents(spark, sf0001)
-    val expected = expectedSurvivors(batchDf)
-    val expIds = expected.select("doc_id").collect().map(_.getLong(0)).toSet
-    val gotIds = CurateStream.sinkDocs(spark, outDir)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(gotIds == expIds,
-      s"streamed ${gotIds.size} vs batch ${expIds.size}; " +
-        s"stream-only=${(gotIds -- expIds).take(5)} batch-only=${(expIds -- gotIds).take(5)}")
-
-    // survivors must be a strict subset of the corpus (the funnel dropped rows)
-    assert(gotIds.size < docs.length)
-
-    // manifest: nShards-row delta sum == batch arithmetic over survivors
-    val streamed = CurateStream.sinkManifest(spark, outDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val batchMan = manifestOf(expected)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(streamed == batchMan)
-    assert(streamed.map(_._2).sum == expIds.size.toLong)
-
-    // idempotent replay: re-running a middle batch's foreachBatch body
-    // overwrites its own batch_id dirs — sink totals are unchanged
-    val replayBatch = chunks(1).toSeq.toDF("doc_id", "source", "lang", "text")
-    CurateStream.curateBatch(replayBatch, 1L, outDir, 5, 16, 4, 0.5, 16)
-    val afterReplay = CurateStream.sinkDocs(spark, outDir)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(afterReplay == expIds)
-
-    // --- compaction (round-14 verdict item 2: the executable form of
-    // the scaladoc's "compact periodically"). All three state tables
-    // collapse to baseline + newest; every read face must be IDENTICAL
-    // pre/post, the newest batch must replay correctly against the
-    // baseline, and — the data-loss check — a re-send of the ENTIRE
-    // corpus must be rejected wholesale by the compacted digest/band
-    // state, while a genuinely novel doc is still admitted.
-    def stateDirs(sub: String) = java.nio.file.Files
-      .list(java.nio.file.Paths.get(outDir, sub.split("/"): _*))
-      .toArray.map(_.toString).filter(_.contains("batch_id=")).sorted.toSeq
-    assert(stateDirs("_state/digests").size == 3)
-    CurateStream.compact(spark, outDir)
-    Seq("_state/digests", "_state/bands", "manifest_delta").foreach { t =>
-      assert(stateDirs(t).size == 2, s"$t: ${stateDirs(t)}")
+      assert(CurateStream.sinkDocs(spark, outDir)
+        .select("doc_id").collect().map(_.getLong(0)).toSet == expIds)
+      assert(CurateStream.sinkManifest(spark, outDir)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+        == batchMan)
+      // replay of the newest (only replayable) batch reads batch_id < 2
+      // — exactly the compacted baseline
+      CurateStream.curateBatch(chunks(2).toSeq.toDF("doc_id", "source", "lang", "text"),
+        2L, outDir, 5, 16, 4, 0.5, 16)
+      assert(CurateStream.sinkDocs(spark, outDir)
+        .select("doc_id").collect().map(_.getLong(0)).toSet == expIds)
+      // a new batch re-sending EVERY original doc: the compacted digest
+      // state must reject all of them (lost state would re-admit dupes)
+      CurateStream.curateBatch(docs.toSeq.toDF("doc_id", "source", "lang", "text"),
+        3L, outDir, 5, 16, 4, 0.5, 16)
+      assert(CurateStream.sinkDocs(spark, outDir)
+        .select("doc_id").collect().map(_.getLong(0)).toSet == expIds)
+      assert(CurateStream.sinkManifest(spark, outDir)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+        == batchMan)
+      // ... while a novel doc still lands: reversing a survivor's word
+      // order preserves every gopherRules stat (they are word-multiset
+      // invariants) but yields a fresh digest and an unrelated 5-shingle
+      // set, so the funnel must admit it through the compacted state
+      val survivor = docs.find(d => expIds.contains(d._1)).get
+      val novelId = docs.map(_._1).max + 1000L
+      val novel = (novelId, survivor._2, survivor._3,
+        survivor._4.split(" ").reverse.mkString(" "))
+      CurateStream.curateBatch(Seq(novel).toDF("doc_id", "source", "lang", "text"),
+        4L, outDir, 5, 16, 4, 0.5, 16)
+      assert(CurateStream.sinkDocs(spark, outDir)
+        .select("doc_id").collect().map(_.getLong(0)).toSet == expIds + novelId)
     }
-    assert(CurateStream.sinkDocs(spark, outDir)
-      .select("doc_id").collect().map(_.getLong(0)).toSet == expIds)
-    assert(CurateStream.sinkManifest(spark, outDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-      == batchMan)
-    // replay of the newest (only replayable) batch reads batch_id < 2
-    // — exactly the compacted baseline
-    CurateStream.curateBatch(chunks(2).toSeq.toDF("doc_id", "source", "lang", "text"),
-      2L, outDir, 5, 16, 4, 0.5, 16)
-    assert(CurateStream.sinkDocs(spark, outDir)
-      .select("doc_id").collect().map(_.getLong(0)).toSet == expIds)
-    // a new batch re-sending EVERY original doc: the compacted digest
-    // state must reject all of them (lost state would re-admit dupes)
-    CurateStream.curateBatch(docs.toSeq.toDF("doc_id", "source", "lang", "text"),
-      3L, outDir, 5, 16, 4, 0.5, 16)
-    assert(CurateStream.sinkDocs(spark, outDir)
-      .select("doc_id").collect().map(_.getLong(0)).toSet == expIds)
-    assert(CurateStream.sinkManifest(spark, outDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-      == batchMan)
-    // ... while a novel doc still lands: reversing a survivor's word
-    // order preserves every gopherRules stat (they are word-multiset
-    // invariants) but yields a fresh digest and an unrelated 5-shingle
-    // set, so the funnel must admit it through the compacted state
-    val survivor = docs.find(d => expIds.contains(d._1)).get
-    val novelId = docs.map(_._1).max + 1000L
-    val novel = (novelId, survivor._2, survivor._3,
-      survivor._4.split(" ").reverse.mkString(" "))
-    CurateStream.curateBatch(Seq(novel).toDF("doc_id", "source", "lang", "text"),
-      4L, outDir, 5, 16, 4, 0.5, 16)
-    assert(CurateStream.sinkDocs(spark, outDir)
-      .select("doc_id").collect().map(_.getLong(0)).toSet == expIds + novelId)
   }
 
   test("cadenced compaction (compactEvery) bounds all three state changelogs mid-stream with survivors and manifest unchanged") {
     implicit val sq = spark.sqlContext
-    val outDir = java.nio.file.Files.createTempDirectory("curate_stream_cadence_").toString
-    val docs = Tables.documents(spark, sf0001)
-      .select("doc_id", "source", "lang", "text")
-      .orderBy("doc_id")
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3)))
-    // n >= 17 guarantees ceil-division yields exactly 5 chunks, so the
-    // cadence fires twice (after batches 1 and 3)
-    assert(docs.length >= 17, s"need >=17 docs for 5 batches, got ${docs.length}")
-    val chunks = docs.grouped((docs.length + 4) / 5).toSeq
-    assert(chunks.length == 5)
+    withTempDir("curate_stream_cadence_") { outDir =>
+      val docs = Tables.documents(spark, sf0001)
+        .select("doc_id", "source", "lang", "text")
+        .orderBy("doc_id")
+        .collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3)))
+      // n >= 17 guarantees ceil-division yields exactly 5 chunks, so the
+      // cadence fires twice (after batches 1 and 3)
+      assert(docs.length >= 17, s"need >=17 docs for 5 batches, got ${docs.length}")
+      val chunks = docs.grouped((docs.length + 4) / 5).toSeq
+      assert(chunks.length == 5)
 
-    val mem = MemoryStream[(Long, String, String, String)]
-    val q = CurateStream.curateToSink(
-      mem.toDF().toDF("doc_id", "source", "lang", "text"), outDir,
-      compactEvery = 2)
-    try {
-      chunks.foreach { c =>
-        mem.addData(c: _*)
-        q.processAllAvailable()
+      val mem = MemoryStream[(Long, String, String, String)]
+      val q = CurateStream.curateToSink(
+        mem.toDF().toDF("doc_id", "source", "lang", "text"), outDir,
+        compactEvery = 2)
+      try {
+        chunks.foreach { c =>
+          mem.addData(c: _*)
+          q.processAllAvailable()
+        }
+      } finally q.stop()
+
+      // after-batch-3 compaction collapsed dirs 0..2 into baseline
+      // batch_id=2; five ingested batches leave baseline + two newer
+      // dirs in EVERY state table — never one dir per batch
+      def stateDirs(sub: String) = java.nio.file.Files
+        .list(java.nio.file.Paths.get(outDir, sub.split("/"): _*))
+        .toArray.map(_.toString).filter(_.contains("batch_id=")).sorted.toSeq
+      Seq("_state/digests", "_state/bands", "manifest_delta").foreach { t =>
+        assert(stateDirs(t).size == 3, s"$t not cadence-bounded: ${stateDirs(t)}")
       }
-    } finally q.stop()
-
-    // after-batch-3 compaction collapsed dirs 0..2 into baseline
-    // batch_id=2; five ingested batches leave baseline + two newer
-    // dirs in EVERY state table — never one dir per batch
-    def stateDirs(sub: String) = java.nio.file.Files
-      .list(java.nio.file.Paths.get(outDir, sub.split("/"): _*))
-      .toArray.map(_.toString).filter(_.contains("batch_id=")).sorted.toSeq
-    Seq("_state/digests", "_state/bands", "manifest_delta").foreach { t =>
-      assert(stateDirs(t).size == 3, s"$t not cadence-bounded: ${stateDirs(t)}")
+      val expected = expectedSurvivors(Tables.documents(spark, sf0001))
+      val expIds = expected.select("doc_id").collect().map(_.getLong(0)).toSet
+      val gotIds = CurateStream.sinkDocs(spark, outDir)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+      assert(gotIds == expIds,
+        s"cadenced stream drifted: stream-only=${(gotIds -- expIds).take(5)} " +
+          s"batch-only=${(expIds -- gotIds).take(5)}")
+      assert(CurateStream.sinkManifest(spark, outDir)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+        == manifestOf(expected)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
     }
-    val expected = expectedSurvivors(Tables.documents(spark, sf0001))
-    val expIds = expected.select("doc_id").collect().map(_.getLong(0)).toSet
-    val gotIds = CurateStream.sinkDocs(spark, outDir)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(gotIds == expIds,
-      s"cadenced stream drifted: stream-only=${(gotIds -- expIds).take(5)} " +
-        s"batch-only=${(expIds -- gotIds).take(5)}")
-    assert(CurateStream.sinkManifest(spark, outDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-      == manifestOf(expected)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
   }
 
   test("sinkDocs and sinkManifest before any committed batch return empty frames, not errors") {
-    val fresh = java.nio.file.Files.createTempDirectory("curate_stream_empty_").toString
-    val docs = CurateStream.sinkDocs(spark, fresh)
-    assert(docs.columns.toSeq == Seq("doc_id", "source", "lang", "text"))
-    assert(docs.count() == 0)
-    val manifest = CurateStream.sinkManifest(spark, fresh)
-    assert(manifest.columns.toSeq == Seq("shard_id", "n_docs", "n_chars"))
-    assert(manifest.count() == 0)
+    withTempDir("curate_stream_empty_") { fresh =>
+      val docs = CurateStream.sinkDocs(spark, fresh)
+      assert(docs.columns.toSeq == Seq("doc_id", "source", "lang", "text"))
+      assert(docs.count() == 0)
+      val manifest = CurateStream.sinkManifest(spark, fresh)
+      assert(manifest.columns.toSeq == Seq("shard_id", "n_docs", "n_chars"))
+      assert(manifest.count() == 0)
+    }
   }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.TempDirs.withTempDir
 import graft.operators.EventOps
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -97,55 +98,57 @@ class EventStreamsSpec extends SparkSpec {
   }
 
   test("file-source streaming: parquet events dir drives the hourly agg") {
-    val src = java.nio.file.Files.createTempDirectory("graft_stream_src").toString
-    // stage the real events parquet as a streaming source directory
-    val batchDf = graft.Tables.events(spark, sf0001)
-    batchDf.write.mode("overwrite").parquet(src)
-    // schema-dispatched staging (Long nanos / NTZ / LTZ) shared with
-    // the batch path, so a testdata ts re-encode breaks neither
-    val streamDf = EventOps.withTsTimestamp(
-      spark.readStream.schema(batchDf.schema).parquet(src))
-    val q = EventStreams.toMemorySink(
-      EventStreams.hourlyCounts(streamDf),
-      "file_hourly_test", org.apache.spark.sql.streaming.OutputMode.Complete())
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("file_hourly_test")
-        .agg(sum("n")).collect().head.getLong(0)
-      assert(streamed == batchDf.count())
-    } finally q.stop()
+    withTempDir("graft_stream_src") { src =>
+      // stage the real events parquet as a streaming source directory
+      val batchDf = graft.Tables.events(spark, sf0001)
+      batchDf.write.mode("overwrite").parquet(src)
+      // schema-dispatched staging (Long nanos / NTZ / LTZ) shared with
+      // the batch path, so a testdata ts re-encode breaks neither
+      val streamDf = EventOps.withTsTimestamp(
+        spark.readStream.schema(batchDf.schema).parquet(src))
+      val q = EventStreams.toMemorySink(
+        EventStreams.hourlyCounts(streamDf),
+        "file_hourly_test", org.apache.spark.sql.streaming.OutputMode.Complete())
+      try {
+        q.processAllAvailable()
+        val streamed = spark.table("file_hourly_test")
+          .agg(sum("n")).collect().head.getLong(0)
+        assert(streamed == batchDf.count())
+      } finally q.stop()
+    }
   }
 
   test("streaming hourly distinct-user sketches match exact batch counts per window") {
-    val src = java.nio.file.Files.createTempDirectory("graft_stream_hll").toString
-    val batchDf = graft.Tables.events(spark, sf0001)
-    // multiple files → multiple micro-batches, so window state actually
-    // merges partial sketches across batches (the path under test)
-    batchDf.repartition(4).write.mode("overwrite").parquet(src)
-    val streamDf = EventOps.withTsTimestamp(spark.readStream.schema(
-      spark.read.parquet(src).schema).option("maxFilesPerTrigger", 1).parquet(src))
-    val q = EventStreams.toMemorySink(
-      EventStreams.hourlyDistinctUsersSketch(streamDf),
-      "hll_window_test", org.apache.spark.sql.streaming.OutputMode.Complete())
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("hll_window_test")
-        .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
-      // floor-division bucketing (tsBucket), not `div` — window() floors,
-      // and truncation would diverge on any pre-1970 fixture event
-      val exact = graft.operators.EventOps.withTsUs(batchDf)
-        .select((graft.operators.EventOps.tsBucket(3600000000L) * 3600000000L).as("hour_us"),
-          col("event_type"), col("user_id"))
-        .groupBy("hour_us", "event_type")
-        .agg(countDistinct("user_id").as("n"))
-        .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
-      assert(streamed.keySet == exact.keySet)
-      exact.foreach { case (k, n) =>
-        val est = streamed(k).toDouble
-        assert(math.abs(est - n) <= math.max(0.05 * n, 1.0),
-          s"$k: sketch estimate $est vs exact $n outside tolerance")
-      }
-    } finally q.stop()
+    withTempDir("graft_stream_hll") { src =>
+      val batchDf = graft.Tables.events(spark, sf0001)
+      // multiple files → multiple micro-batches, so window state actually
+      // merges partial sketches across batches (the path under test)
+      batchDf.repartition(4).write.mode("overwrite").parquet(src)
+      val streamDf = EventOps.withTsTimestamp(spark.readStream.schema(
+        spark.read.parquet(src).schema).option("maxFilesPerTrigger", 1).parquet(src))
+      val q = EventStreams.toMemorySink(
+        EventStreams.hourlyDistinctUsersSketch(streamDf),
+        "hll_window_test", org.apache.spark.sql.streaming.OutputMode.Complete())
+      try {
+        q.processAllAvailable()
+        val streamed = spark.table("hll_window_test")
+          .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
+        // floor-division bucketing (tsBucket), not `div` — window() floors,
+        // and truncation would diverge on any pre-1970 fixture event
+        val exact = graft.operators.EventOps.withTsUs(batchDf)
+          .select((graft.operators.EventOps.tsBucket(3600000000L) * 3600000000L).as("hour_us"),
+            col("event_type"), col("user_id"))
+          .groupBy("hour_us", "event_type")
+          .agg(countDistinct("user_id").as("n"))
+          .collect().map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
+        assert(streamed.keySet == exact.keySet)
+        exact.foreach { case (k, n) =>
+          val est = streamed(k).toDouble
+          assert(math.abs(est - n) <= math.max(0.05 * n, 1.0),
+            s"$k: sketch estimate $est vs exact $n outside tolerance")
+        }
+      } finally q.stop()
+    }
   }
 
   test("replayed sf0.01 events through streaming hourlyCounts equals the oracle-green batch rows") {
@@ -154,47 +157,49 @@ class EventStreamsSpec extends SparkSpec {
     // streaming operator — the strongest check available for a path no
     // SQL engine can replay.
     val sf001 = "/root/testdata/sf0.01"
-    val src = java.nio.file.Files.createTempDirectory("graft_stream_parity").toString
-    val batchDf = graft.Tables.events(spark, sf001)
-    // multiple files → multiple micro-batches (real incremental replay)
-    batchDf.repartition(4).write.mode("overwrite").parquet(src)
-    val streamDf = EventOps.withTsTimestamp(spark.readStream.schema(
-      spark.read.parquet(src).schema).option("maxFilesPerTrigger", 1).parquet(src))
-    val q = EventStreams.toMemorySink(
-      EventStreams.hourlyCounts(streamDf),
-      "parity_hourly_test", org.apache.spark.sql.streaming.OutputMode.Complete())
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("parity_hourly_test")
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
-      val batch = EventOps.hourlyCounts(batchDf)
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
-      assert(streamed == batch)
-      assert(streamed.nonEmpty)
-    } finally q.stop()
+    withTempDir("graft_stream_parity") { src =>
+      val batchDf = graft.Tables.events(spark, sf001)
+      // multiple files → multiple micro-batches (real incremental replay)
+      batchDf.repartition(4).write.mode("overwrite").parquet(src)
+      val streamDf = EventOps.withTsTimestamp(spark.readStream.schema(
+        spark.read.parquet(src).schema).option("maxFilesPerTrigger", 1).parquet(src))
+      val q = EventStreams.toMemorySink(
+        EventStreams.hourlyCounts(streamDf),
+        "parity_hourly_test", org.apache.spark.sql.streaming.OutputMode.Complete())
+      try {
+        q.processAllAvailable()
+        val streamed = spark.table("parity_hourly_test")
+          .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
+        val batch = EventOps.hourlyCounts(batchDf)
+          .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
+        assert(streamed == batch)
+        assert(streamed.nonEmpty)
+      } finally q.stop()
+    }
   }
 
   test("replayed sf0.01 events through streaming errorRateHourly equals the oracle-green batch rows") {
     val sf001 = "/root/testdata/sf0.01"
-    val src = java.nio.file.Files.createTempDirectory("graft_stream_errrate").toString
-    val batchDf = graft.Tables.events(spark, sf001)
-    batchDf.repartition(4).write.mode("overwrite").parquet(src)
-    val streamDf = EventOps.withTsTimestamp(spark.readStream.schema(
-      spark.read.parquet(src).schema).option("maxFilesPerTrigger", 1).parquet(src))
-    val q = EventStreams.toMemorySink(
-      EventStreams.errorRateHourly(streamDf),
-      "parity_errrate_test", org.apache.spark.sql.streaming.OutputMode.Complete())
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("parity_errrate_test")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-      val batch = EventOps.errorRateHourly(batchDf)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-      assert(streamed == batch)
-      assert(streamed.nonEmpty)
-      // the series is non-degenerate: some hours have errors, none is all-errors
-      assert(streamed.exists(_._3 > 0) && streamed.forall(r => r._3 < r._2))
-    } finally q.stop()
+    withTempDir("graft_stream_errrate") { src =>
+      val batchDf = graft.Tables.events(spark, sf001)
+      batchDf.repartition(4).write.mode("overwrite").parquet(src)
+      val streamDf = EventOps.withTsTimestamp(spark.readStream.schema(
+        spark.read.parquet(src).schema).option("maxFilesPerTrigger", 1).parquet(src))
+      val q = EventStreams.toMemorySink(
+        EventStreams.errorRateHourly(streamDf),
+        "parity_errrate_test", org.apache.spark.sql.streaming.OutputMode.Complete())
+      try {
+        q.processAllAvailable()
+        val streamed = spark.table("parity_errrate_test")
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
+        val batch = EventOps.errorRateHourly(batchDf)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
+        assert(streamed == batch)
+        assert(streamed.nonEmpty)
+        // the series is non-degenerate: some hours have errors, none is all-errors
+        assert(streamed.exists(_._3 > 0) && streamed.forall(r => r._3 < r._2))
+      } finally q.stop()
+    }
   }
 
   test("foreachBatch pipeline: replayed dedup+sessionize parquet equals the batch twins") {
@@ -204,46 +209,47 @@ class EventStreamsSpec extends SparkSpec {
     // (dedup_exact + ev_sessionize) are oracle-green, so row-set
     // equality transitively oracle-checks the whole pipeline.
     implicit val sq = spark.sqlContext
-    val outDir = java.nio.file.Files.createTempDirectory("graft_febatch_out").toString
-    val gapUs = 30L * 60 * 1000000
-    val batchDf = graft.Tables.events(spark, sf0001)
-    // ts_us via the schema-dispatched normalizer (events.ts may be
-    // Long nanos, NTZ, or LTZ depending on the testdata encoding)
-    val rows = EventOps.withTsUs(batchDf).select("event_id", "ts_us", "user_id")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._2)
-    def toTs(us: Long) = Timestamp.from(java.time.Instant.ofEpochSecond(
-      Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L))
-    val chunks = rows.grouped((rows.length + 2) / 3).toSeq
-    val mem = MemoryStream[(Long, Timestamp, Long)]
-    val events = mem.toDF().toDF("event_id", "ts", "user_id")
-    val q = EventStreams.dedupSessionizeToParquet(events, outDir)
-    try {
-      chunks.foreach { c =>
-        val base = c.map { case (id, us, uid) => (id, toTs(us), uid) }
-        val dups = base.grouped(10).map(_.head).toSeq // every 10th row again
-        mem.addData(base ++ dups: _*)
+    withTempDir("graft_febatch_out") { outDir =>
+      val gapUs = 30L * 60 * 1000000
+      val batchDf = graft.Tables.events(spark, sf0001)
+      // ts_us via the schema-dispatched normalizer (events.ts may be
+      // Long nanos, NTZ, or LTZ depending on the testdata encoding)
+      val rows = EventOps.withTsUs(batchDf).select("event_id", "ts_us", "user_id")
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        .sortBy(_._2)
+      def toTs(us: Long) = Timestamp.from(java.time.Instant.ofEpochSecond(
+        Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L))
+      val chunks = rows.grouped((rows.length + 2) / 3).toSeq
+      val mem = MemoryStream[(Long, Timestamp, Long)]
+      val events = mem.toDF().toDF("event_id", "ts", "user_id")
+      val q = EventStreams.dedupSessionizeToParquet(events, outDir)
+      try {
+        chunks.foreach { c =>
+          val base = c.map { case (id, us, uid) => (id, toTs(us), uid) }
+          val dups = base.grouped(10).map(_.head).toSeq // every 10th row again
+          mem.addData(base ++ dups: _*)
+          q.processAllAvailable()
+        }
+        // sentinel far past every session end flushes the watermark so
+        // append mode emits all real sessions; its own (unclosed)
+        // session never reaches the sink
+        mem.addData((-1L, toTs(rows.last._2 + 30L * 86400 * 1000000L), -1L))
         q.processAllAvailable()
-      }
-      // sentinel far past every session end flushes the watermark so
-      // append mode emits all real sessions; its own (unclosed)
-      // session never reaches the sink
-      mem.addData((-1L, toTs(rows.last._2 + 30L * 86400 * 1000000L), -1L))
-      q.processAllAvailable()
-      val streamed = spark.read.parquet(outDir)
-        .filter(col("user_id") >= 0)
-        .collect()
-        .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("start_us"),
-          r.getAs[Long]("end_us") - gapUs, r.getAs[Long]("n_events")))
-        .toSet
-      val batch = EventOps.sessionize(batchDf)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(3), r.getLong(4), r.getLong(2)))
-        .toSet
-      assert(streamed == batch)
-      assert(streamed.nonEmpty)
-    } finally q.stop()
+        val streamed = spark.read.parquet(outDir)
+          .filter(col("user_id") >= 0)
+          .collect()
+          .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("start_us"),
+            r.getAs[Long]("end_us") - gapUs, r.getAs[Long]("n_events")))
+          .toSet
+        val batch = EventOps.sessionize(batchDf)
+          .collect()
+          .map(r => (r.getLong(0), r.getLong(3), r.getLong(4), r.getLong(2)))
+          .toSet
+        assert(streamed == batch)
+        assert(streamed.nonEmpty)
+      } finally q.stop()
+    }
   }
 
   test("stream-static join enriches streaming events with the customer dim") {

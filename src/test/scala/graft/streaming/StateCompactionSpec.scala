@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.TempDirs.withTempDir
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -21,19 +22,21 @@ class StateCompactionSpec extends SparkSpec {
   private def reduce(df: org.apache.spark.sql.DataFrame) =
     df.groupBy("doc_id").agg(min("root").as("root"))
 
-  /** Three batch dirs whose min-root union is `expected`. */
-  private def freshTable(): (String, Map[Long, Long]) = {
-    val dir = java.nio.file.Files.createTempDirectory("state_compact_").toString
-    val table = s"$dir/roots"
-    Seq(Seq((1L, 1L), (2L, 2L), (3L, 3L)),           // batch 0: nodes land
-        Seq((2L, 1L), (3L, 2L)),                     // batch 1: merges lower roots
-        Seq((3L, 1L), (4L, 4L)))                     // batch 2 (newest)
-      .zipWithIndex.foreach { case (rows, id) =>
-        rows.toDF("doc_id", "root").write.mode("overwrite")
-          .parquet(s"$table/batch_id=$id")
-      }
-    (table, Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L))
-  }
+  /** Runs `body` on a temp table of three batch dirs whose min-root
+    * union is `expected`, then deletes it.
+    */
+  private def withFreshTable[A](body: (String, Map[Long, Long]) => A): A =
+    withTempDir("state_compact_") { dir =>
+      val table = s"$dir/roots"
+      Seq(Seq((1L, 1L), (2L, 2L), (3L, 3L)),           // batch 0: nodes land
+          Seq((2L, 1L), (3L, 2L)),                     // batch 1: merges lower roots
+          Seq((3L, 1L), (4L, 4L)))                     // batch 2 (newest)
+        .zipWithIndex.foreach { case (rows, id) =>
+          rows.toDF("doc_id", "root").write.mode("overwrite")
+            .parquet(s"$table/batch_id=$id")
+        }
+      body(table, Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L))
+    }
 
   private def currentState(table: String): Map[Long, Long] =
     reduce(spark.read.schema(schema.add(StructField("batch_id", LongType)))
@@ -60,98 +63,103 @@ class StateCompactionSpec extends SparkSpec {
   }
 
   test("crash between deletes and rename: marker fences every read, recovery finishes from the recorded target") {
-    val (table, expected) = freshTable()
-    simulateCrashBeforeRename(table)
-    // the fence: reading now would see only batch 2 — fail loudly instead
-    val e = intercept[IllegalStateException](
-      StateCompaction.assertReadable(spark, table))
-    assert(e.getMessage.contains("unfinished compaction"))
-    // recovery is the first step of any compact call
-    StateCompaction.compactTable(spark, table, schema, reduce)
-    StateCompaction.assertReadable(spark, table)
-    assert(currentState(table) == expected)
-    assert(!fs.exists(new Path(s"${table}_compact_tmp")))
-    assert(!fs.exists(new Path(s"${table}_compact_inprogress")))
+    withFreshTable { (table, expected) =>
+      simulateCrashBeforeRename(table)
+      // the fence: reading now would see only batch 2 — fail loudly instead
+      val e = intercept[IllegalStateException](
+        StateCompaction.assertReadable(spark, table))
+      assert(e.getMessage.contains("unfinished compaction"))
+      // recovery is the first step of any compact call
+      StateCompaction.compactTable(spark, table, schema, reduce)
+      StateCompaction.assertReadable(spark, table)
+      assert(currentState(table) == expected)
+      assert(!fs.exists(new Path(s"${table}_compact_tmp")))
+      assert(!fs.exists(new Path(s"${table}_compact_inprogress")))
+    }
   }
 
   test("crash after commit before marker, later batches landed: recovery targets the RECORDED id, not current max-1") {
-    val (table, expected) = freshTable()
-    // committed tmp over batches <2, target recorded as 1, but the
-    // crash hit before the marker/deletes — the stream restarted and
-    // two MORE batches landed, so current max-1 (=3) is the WRONG
-    // target; only the recorded id is sound
-    val tmp = s"${table}_compact_tmp"
-    reduce(spark.read.schema(schema.add(StructField("batch_id", LongType)))
-        .parquet(table).filter(col("batch_id") < 2).select("doc_id", "root"))
-      .write.mode("overwrite").parquet(tmp)
-    val out = fs.create(new Path(tmp, "_TARGET"), true)
-    out.write("1".getBytes("UTF-8")); out.close()
-    Seq((4L, 1L)).toDF("doc_id", "root").write.parquet(s"$table/batch_id=3")
-    Seq((5L, 5L)).toDF("doc_id", "root").write.parquet(s"$table/batch_id=4")
-    val expected2 = expected + (4L -> 1L) + (5L -> 5L)
-    StateCompaction.compactTable(spark, table, schema, reduce)
-    assert(currentState(table) == expected2)
-    assert(!fs.exists(new Path(s"${table}_compact_tmp")))
-    assert(!fs.exists(new Path(s"${table}_compact_inprogress")))
+    withFreshTable { (table, expected) =>
+      // committed tmp over batches <2, target recorded as 1, but the
+      // crash hit before the marker/deletes — the stream restarted and
+      // two MORE batches landed, so current max-1 (=3) is the WRONG
+      // target; only the recorded id is sound
+      val tmp = s"${table}_compact_tmp"
+      reduce(spark.read.schema(schema.add(StructField("batch_id", LongType)))
+          .parquet(table).filter(col("batch_id") < 2).select("doc_id", "root"))
+        .write.mode("overwrite").parquet(tmp)
+      val out = fs.create(new Path(tmp, "_TARGET"), true)
+      out.write("1".getBytes("UTF-8")); out.close()
+      Seq((4L, 1L)).toDF("doc_id", "root").write.parquet(s"$table/batch_id=3")
+      Seq((5L, 5L)).toDF("doc_id", "root").write.parquet(s"$table/batch_id=4")
+      val expected2 = expected + (4L -> 1L) + (5L -> 5L)
+      StateCompaction.compactTable(spark, table, schema, reduce)
+      assert(currentState(table) == expected2)
+      assert(!fs.exists(new Path(s"${table}_compact_tmp")))
+      assert(!fs.exists(new Path(s"${table}_compact_inprogress")))
+    }
   }
 
   test("marker without a committed tmp (crash after rename, before marker removal) self-heals on the read face; uncommitted tmp is discarded") {
-    val (table, expected) = freshTable()
-    fs.create(new Path(s"${table}_compact_inprogress"), true).close()
-    // marker-without-tmp means the rename FINISHED — the table is
-    // whole, so the read face clears the orphan marker itself instead
-    // of halting a healthy stream (round-15 ADVICE)
-    StateCompaction.assertReadable(spark, table)
-    assert(!fs.exists(new Path(s"${table}_compact_inprogress")))
-    assert(currentState(table) == expected)
-    // an uncommitted tmp (no _TARGET) from a crash mid-write DOES
-    // fence reads (state genuinely mid-compaction), and compact
-    // discards it
-    fs.mkdirs(new Path(s"${table}_compact_tmp/partial"))
-    fs.create(new Path(s"${table}_compact_inprogress"), true).close()
-    intercept[IllegalStateException](
-      StateCompaction.assertReadable(spark, table))
-    StateCompaction.compactTable(spark, table, schema, reduce)
-    StateCompaction.assertReadable(spark, table)
-    assert(currentState(table) == expected)
-    assert(!fs.exists(new Path(s"${table}_compact_tmp")))
+    withFreshTable { (table, expected) =>
+      fs.create(new Path(s"${table}_compact_inprogress"), true).close()
+      // marker-without-tmp means the rename FINISHED — the table is
+      // whole, so the read face clears the orphan marker itself instead
+      // of halting a healthy stream (round-15 ADVICE)
+      StateCompaction.assertReadable(spark, table)
+      assert(!fs.exists(new Path(s"${table}_compact_inprogress")))
+      assert(currentState(table) == expected)
+      // an uncommitted tmp (no _TARGET) from a crash mid-write DOES
+      // fence reads (state genuinely mid-compaction), and compact
+      // discards it
+      fs.mkdirs(new Path(s"${table}_compact_tmp/partial"))
+      fs.create(new Path(s"${table}_compact_inprogress"), true).close()
+      intercept[IllegalStateException](
+        StateCompaction.assertReadable(spark, table))
+      StateCompaction.compactTable(spark, table, schema, reduce)
+      StateCompaction.assertReadable(spark, table)
+      assert(currentState(table) == expected)
+      assert(!fs.exists(new Path(s"${table}_compact_tmp")))
+    }
   }
 
   test("unparsable _TARGET next to _SUCCESS is demoted to uncommitted garbage, never a stuck loop") {
-    val (table, expected) = freshTable()
-    // cannot arise from the protocol itself post-round-16 (the commit
-    // point is rename-published), so this simulates external
-    // corruption: data-complete tmp, garbage commit record
-    val tmp = s"${table}_compact_tmp"
-    reduce(spark.read.schema(schema.add(StructField("batch_id", LongType)))
-        .parquet(table).filter(col("batch_id") < 2).select("doc_id", "root"))
-      .write.mode("overwrite").parquet(tmp)
-    val out = fs.create(new Path(tmp, "_TARGET"), true)
-    out.write("not-a-long".getBytes("UTF-8")); out.close()
-    // recovery must DISCARD the tmp (no trustworthy target) and leave
-    // the untouched table compactable — not throw forever
-    StateCompaction.compactTable(spark, table, schema, reduce)
-    StateCompaction.assertReadable(spark, table)
-    assert(currentState(table) == expected)
-    assert(!fs.exists(new Path(s"${table}_compact_tmp")))
-    assert(!fs.exists(new Path(s"${table}_compact_inprogress")))
+    withFreshTable { (table, expected) =>
+      // cannot arise from the protocol itself post-round-16 (the commit
+      // point is rename-published), so this simulates external
+      // corruption: data-complete tmp, garbage commit record
+      val tmp = s"${table}_compact_tmp"
+      reduce(spark.read.schema(schema.add(StructField("batch_id", LongType)))
+          .parquet(table).filter(col("batch_id") < 2).select("doc_id", "root"))
+        .write.mode("overwrite").parquet(tmp)
+      val out = fs.create(new Path(tmp, "_TARGET"), true)
+      out.write("not-a-long".getBytes("UTF-8")); out.close()
+      // recovery must DISCARD the tmp (no trustworthy target) and leave
+      // the untouched table compactable — not throw forever
+      StateCompaction.compactTable(spark, table, schema, reduce)
+      StateCompaction.assertReadable(spark, table)
+      assert(currentState(table) == expected)
+      assert(!fs.exists(new Path(s"${table}_compact_tmp")))
+      assert(!fs.exists(new Path(s"${table}_compact_inprogress")))
+    }
   }
 
   test("recoverTable finishes a crashed attempt without starting a new compaction") {
-    val (table, expected) = freshTable()
-    simulateCrashBeforeRename(table)
-    StateCompaction.recoverTable(spark, table)
-    StateCompaction.assertReadable(spark, table)
-    assert(currentState(table) == expected)
-    assert(!fs.exists(new Path(s"${table}_compact_tmp")))
-    assert(!fs.exists(new Path(s"${table}_compact_inprogress")))
-    // recovery left baseline(=1) + newest(=2): exactly 2 dirs — proof
-    // it did NOT run a fresh compaction on top
-    val dirs = fs.listStatus(new Path(table)).map(_.getPath.getName)
-      .filter(_.startsWith("batch_id=")).sorted.toSeq
-    assert(dirs == Seq("batch_id=1", "batch_id=2"), dirs.toString)
-    // no-op on a table with nothing to heal
-    StateCompaction.recoverTable(spark, table)
-    assert(currentState(table) == expected)
+    withFreshTable { (table, expected) =>
+      simulateCrashBeforeRename(table)
+      StateCompaction.recoverTable(spark, table)
+      StateCompaction.assertReadable(spark, table)
+      assert(currentState(table) == expected)
+      assert(!fs.exists(new Path(s"${table}_compact_tmp")))
+      assert(!fs.exists(new Path(s"${table}_compact_inprogress")))
+      // recovery left baseline(=1) + newest(=2): exactly 2 dirs — proof
+      // it did NOT run a fresh compaction on top
+      val dirs = fs.listStatus(new Path(table)).map(_.getPath.getName)
+        .filter(_.startsWith("batch_id=")).sorted.toSeq
+      assert(dirs == Seq("batch_id=1", "batch_id=2"), dirs.toString)
+      // no-op on a table with nothing to heal
+      StateCompaction.recoverTable(spark, table)
+      assert(currentState(table) == expected)
+    }
   }
 }
