@@ -15,16 +15,19 @@ import org.apache.spark.sql.SparkSession
   *      the shared memo builds are paid before any timed round;
   *   2. two timed headline rounds, emitting after each;
   *   3. warm the remaining keys (concurrent, sf0.001);
-  *   4. up to SPARK_GRAFT_BENCH_FULL_ITERS full-set rounds (full
-  *      per-query detail → /tmp/bench_full.json);
-  *   4.5 the fresh-JVM isolated pass over the
-  *      SPARK_GRAFT_BENCH_ISOLATE_TOP costliest keys;
+  *   4. up to SPARK_GRAFT_BENCH_FULL_ITERS (default 2) full-set rounds
+  *      (full per-query detail → /tmp/bench_full.json);
   *   5. more headline rounds, up to SPARK_GRAFT_BENCH_ITERS in all.
   *
+  * A key's minimum comes from its in-suite samples only. Each round
+  * shuffles its key order, so neighbor effects land on different keys
+  * in different rounds; a minimum over one sample is not bankable and
+  * the key is listed in `low_sample_keys`. Two full rounds give every
+  * key two samples; [[admits]] still gates the second.
+  *
   * Schedule: every timed start after the first headline round passes
-  * [[admits]] with an estimate this process measured — the last
-  * completed round of the same kind, or for an isolated key its suite
-  * minimum × reps plus a JVM start. The first full round has no such
+  * [[admits]] with an estimate this process measured, the last
+  * completed round of the same kind. The first full round has no such
   * estimate; the guard in front of phase 3 (under 0.6 of the budget)
   * admits it, so the budget is soft for that round: one that starts
   * near 0.6 of the budget and runs longer than the rest ends past it
@@ -36,8 +39,9 @@ import org.apache.spark.sql.SparkSession
   * [[budgetToAdmit]] that would have started it.
   *
   * Heap sizing (`SPARK_DRIVER_MEM`, default 8 g): sufficient for the
-  * sf0.1 driver contract; size scale-decade suites at 24-48 g — the
-  * measured table lives in SCALING.md "Round-11 memory contract".
+  * sf0.1 driver contract. On a 4-core, 15 GB box every suite runs at
+  * 12 g or less (ROADMAP item 3); the 24-48 g table in SCALING.md
+  * "Round-11 memory contract" was measured on a larger host.
   */
 object Bench {
   /** Representative headline subset: one key per major operator
@@ -59,11 +63,6 @@ object Bench {
     "ev_heavy_hitters", "mm_decode_features",
     "dedup_prefix_pairs", "dedup_cluster_best", "dedup_source_matrix")
 
-  /** Runs per key in the fresh-JVM isolated pass. */
-  private val isolateReps = 2
-  /** JVM and session start of one isolated child, in seconds. */
-  private val isolateJvmStartS = 40.0
-
   /** The one admission rule: a phase estimated to take `estimateS`
     * starts at `elapsedS` only if 1.2 × the estimate still ends before
     * 0.95 of the budget.
@@ -76,7 +75,7 @@ object Bench {
     (elapsedS + 1.2 * estimateS) / 0.95
 
   /** The compact line, the full JSON and the keys whose
-    * minimum rests on one in-suite sample with no isolated pass.
+    * minimum rests on one in-suite sample.
     */
   final case class Report(compact: String, full: String, lowSampleKeys: Seq[String])
 
@@ -92,8 +91,7 @@ object Bench {
     kvs.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
 
   /** Renders the timed `runs` (one `(key, seconds)` list per round),
-    * the fresh-JVM `isolated` minima, the `failed` keys, the SF dir
-    * and the requested iteration count.
+    * the `failed` keys, the SF dir and the requested iteration count.
     *
     * The harness captures only the TAIL of the process output, so a
     * single JSON line carrying all per-query medians (~4 KB) gets
@@ -102,31 +100,24 @@ object Bench {
     * per-query detail (median + min) is the full JSON; the compact
     * (<2 KB) headline JSON always fits the tail window intact.
     */
-  def report(runs: Seq[Seq[(String, Double)]], isolated: Seq[(String, Double)],
-             failed: Seq[String], sfDir: String, iters: Int): Report = {
+  def report(runs: Seq[Seq[(String, Double)]], failed: Seq[String], sfDir: String,
+             iters: Int): Report = {
     val itersCompleted = runs.length
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val byName = runs.flatten.map(_._1).distinct.sorted
       .map(n => n -> runs.flatMap(_.toMap.get(n)))
     val med = byName.map { case (n, xs) => n -> median(xs) }
-    // queries_min folds the fresh-JVM isolated pass in (when run):
-    // min(in-suite, isolated) is the key's honest warm cost, free of
-    // run-order heap/page-state inflation
-    val isoMap = isolated.toMap
-    val mins = byName.map { case (n, xs) =>
-      n -> isoMap.get(n).fold(xs.min)(math.min(xs.min, _)) }
+    val mins = byName.map { case (n, xs) => n -> xs.min }
     val total = med.map(_._2).sum
     val totalMin = mins.map(_._2).sum
-    val isoJson = jsonMap(isolated)
     // Banking guard (round-16 q_except incident: a single warm sample
     // produced a spurious 13.2x decade flag): keys whose minimum rests
-    // on ONE in-suite sample and no isolated pass are listed so the
-    // decade gate can refuse to bank them. Additive field in the full
-    // JSON only — the compact line is unchanged.
-    val lowSample = byName.collect { case (n, xs) if xs.length < 2 && !isoMap.contains(n) => n }
+    // on ONE in-suite sample are listed so the drift gate can refuse
+    // to bank them. Full JSON only — the compact line is unchanged.
+    val lowSample = byName.collect { case (n, xs) if xs.length < 2 => n }
     val lowSampleJson = lowSample.map("\"" + _ + "\"").mkString("[", ",", "]")
     val full =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${jsonMap(med)},"queries_min":${jsonMap(mins)},"isolated":$isoJson,"low_sample_keys":$lowSampleJson,"total_min":$totalMin%.3f,"failed":$failedJson,"sf":"$sfDir","iters":$iters,"iters_completed":$itersCompleted}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${jsonMap(med)},"queries_min":${jsonMap(mins)},"low_sample_keys":$lowSampleJson,"total_min":$totalMin%.3f,"failed":$failedJson,"sf":"$sfDir","iters":$iters,"iters_completed":$itersCompleted}"""
     val minMap = mins.toMap
     val headSet = headline.toSet
     val headKvs = med.filter(kv => headSet.contains(kv._1))
@@ -168,8 +159,7 @@ object Bench {
     }
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "4").toInt
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "420").toDouble
-    val fullIters = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL_ITERS", "1").toInt
-    val isolateTop = sys.env.getOrElse("SPARK_GRAFT_BENCH_ISOLATE_TOP", "0").toInt
+    val fullIters = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL_ITERS", "2").toInt
     def elapsedS: Double = (System.nanoTime() - wallStart) / 1e9
     def fits(estimateS: Double): Boolean = admits(elapsedS, estimateS, budgetS)
     val allNames = qmap.keys.toSeq.sorted
@@ -207,71 +197,19 @@ object Bench {
       (System.nanoTime() - r0) / 1e9
     }
 
-    // Fresh-JVM isolated pass (SPARK_GRAFT_BENCH_ISOLATE_TOP=N, default
-    // off): after the suite rounds, re-time the N most expensive keys
-    // one per SUBPROCESS JVM — same heap, same module flags, same
-    // classpath as this forked run JVM — and fold the isolated minimum
-    // into queries_min. In-suite numbers inherit whatever heap/page
-    // state the previous keys left behind; round 15's decade gate saw
-    // two keys inflate 1.5-2x in-suite while plan-identical isolated
-    // runs were flat, forcing manual worktree bisects. A fresh JVM per
-    // key is the same evidence the bisects produced, made part of the
-    // artifact: queries_min becomes min(in-suite, isolated) and the
-    // isolated map is emitted alongside for transparency. Only one
-    // Spark is WORKING at a time (this JVM is idle while the child
-    // runs), so the numbers aren't cross-inflated.
-    val isolated = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    def runIsolated(): Unit = {
-      val byMin = allNames.map(n => n -> runs.toSeq.flatMap(_.toMap.get(n)))
-        .filter(_._2.nonEmpty).map { case (n, xs) => n -> xs.min }
-      val top = byMin.sortBy(-_._2).take(isolateTop)
-      val javaBin = java.nio.file.Paths.get(
-        sys.props("java.home"), "bin", "java").toString
-      val jvmArgs = {
-        import scala.jdk.CollectionConverters._
-        java.lang.management.ManagementFactory.getRuntimeMXBean
-          .getInputArguments.asScala.toSeq
-      }
-      for ((name, suiteMin) <- top) {
-        // the suite price is an upper bound — isolation only shrinks it
-        if (fits(suiteMin * isolateReps + isolateJvmStartS)) {
-          val cmd = Seq(javaBin) ++ jvmArgs ++ Seq(
-            "-cp", sys.props("java.class.path"),
-            "graft.RunQuery", name, sfDir, isolateReps.toString)
-          try {
-            val pb = new ProcessBuilder(cmd: _*)
-            pb.redirectErrorStream(true)
-            val p = pb.start()
-            val out = scala.io.Source.fromInputStream(p.getInputStream, "UTF-8").mkString
-            val rc = p.waitFor()
-            val times = "time=([0-9.]+)s".r
-              .findAllMatchIn(out).map(_.group(1).toDouble).toSeq
-            if (rc == 0 && times.nonEmpty) {
-              isolated(name) = times.min
-              System.err.println(
-                f"[bench] isolated $name min=${times.min}%.2f s (suite $suiteMin%.2f s) at $elapsedS%.1f s")
-            } else System.err.println(
-              s"[bench] isolated $name failed rc=$rc: ${out.linesIterator.take(3).mkString(" | ")}")
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] isolated $name spawn failed: ${e.getMessage}")
-          }
-        } else System.err.println(
-          f"[bench] isolated $name skipped (won't fit at $elapsedS%.1f s of $budgetS%.0f s)")
-      }
-    }
-
     // Writes both reports after every round; prints the compact line
     // unless this is the last call (main prints that one after
     // spark.stop()).
     def emit(last: Boolean): Report = {
-      val r = report(runs.toSeq, isolated.toSeq, failed.toSeq, sfDir, iters)
+      val r = report(runs.toSeq, failed.toSeq, sfDir, iters)
       // one try per file: a failed write of one must not skip the other
-      try java.nio.file.Files.write(java.nio.file.Paths.get("/tmp/bench_full.json"),
-        (r.full + "\n").getBytes("UTF-8"))
-      catch { case _: Throwable => () }
-      try java.nio.file.Files.write(java.nio.file.Paths.get("/tmp/bench.json"),
-        (r.compact + "\n").getBytes("UTF-8"))
-      catch { case _: Throwable => () }
+      def write(path: String, line: String): Unit =
+        try java.nio.file.Files.write(java.nio.file.Paths.get(path), (line + "\n").getBytes("UTF-8"))
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] writing $path failed: ${e.getMessage}")
+        }
+      write("/tmp/bench_full.json", r.full)
+      write("/tmp/bench.json", r.compact)
       if (!last) { println(r.compact); System.err.println(r.compact) }
       r
     }
@@ -342,14 +280,6 @@ object Bench {
         System.err.println(f"[bench] stopping full rounds at $j/$fullIters (round ${lastFullS.get}%.1f s won't fit at $elapsedS%.1f s; " +
           f"SPARK_GRAFT_BENCH_BUDGET_S > ${budgetToAdmit(elapsedS, lastFullS.get)}%.0f would start it)")
     }
-    // Phase 4.5: fresh-JVM isolated pass over the top-N most expensive
-    // keys (off unless SPARK_GRAFT_BENCH_ISOLATE_TOP > 0). Runs before
-    // the filler headline rounds so it gets budget priority — it is
-    // gate evidence; extra headline rounds are not.
-    if (isolateTop > 0) {
-      runIsolated()
-      emit(last = false)
-    }
     // Phase 5: more headline rounds until the budget closes.
     while (i < iters && fits(lastHeadS)) {
       lastHeadS = runRound(headline)
@@ -359,7 +289,7 @@ object Bench {
     }
     val last = emit(last = true)
     // surface the banking guard loudly: a min resting on one in-suite
-    // sample is not bankable evidence (the decade gate refuses
+    // sample is not bankable evidence (the drift gate refuses
     // artifacts whose low_sample_keys is non-empty)
     if (last.lowSampleKeys.nonEmpty)
       System.err.println(s"[bench] WARNING: ${last.lowSampleKeys.length} key(s) have a " +

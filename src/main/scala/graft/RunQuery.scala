@@ -12,14 +12,14 @@ package graft
   * count() while the bench's noop write of the same query ran 36 s
   * (the range sort's sampling pass re-executing the window
   * pipeline). Adjudicating a bench number with a count() is
-  * comparing different plans. Bench's isolated pass parses the
-  * `time=` field of each rep line.
+  * comparing different plans.
   *
   * Heap sizing (`SPARK_DRIVER_MEM`, default 8 g — in local mode the
   * driver IS the executor): the 8 g default covers the verify (sf0.01)
   * and bench (sf0.1) gates and, post-round-11, every individually
-  * measured sf10 key; run full scale-decade SUITES at 24-48 g for
-  * headroom. Measured table: SCALING.md "Round-11 memory contract".
+  * measured sf10 key. On a 4-core, 15 GB box every suite runs at 12 g
+  * or less (ROADMAP item 3); the 24-48 g table in SCALING.md
+  * "Round-11 memory contract" was measured on a larger host.
   */
 object RunQuery {
   def main(args: Array[String]): Unit = {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress}
 import org.apache.spark.sql.functions.{col, concat_ws, lit}
-import graft.operators.EventOps
+import graft.operators.{EventOps, Lsh}
 import graft.streaming.{CurateStream, EventStreams, GroupStream}
 
 /** Measures Structured Streaming STATE-STORE size for the heaviest
@@ -318,24 +318,17 @@ object StreamStateProbe {
     // 14. streamingNearDupFlags: state keys are the OBSERVED
     // (band_idx, band_bits) buckets (capped content inside each) —
     // the exact key count is computable in batch from the same
-    // banding expressions, so the bound is an equality, not a ≤
-    val nBuckets = {
-      val bandBits = 16
-      val bandStructs = (0 until 4).map { bIdx =>
-        org.apache.spark.sql.functions.struct(
-          org.apache.spark.sql.functions.lit(bIdx).as("band_idx"),
-          org.apache.spark.sql.functions.shiftrightunsigned(col("fp"), bIdx * bandBits)
-            .bitwiseAND(org.apache.spark.sql.functions.lit((1L << bandBits) - 1))
-            .as("band_bits"))
-      }
+    // banding rule at the same maxDist, so the bound is an equality,
+    // not a ≤
+    val ndMaxDist = 3
+    val nBuckets =
       docsDf.select(graft.functions.VectorFunctions.simhash64(col("text")).as("fp"))
         .select(org.apache.spark.sql.functions.explode(
-          org.apache.spark.sql.functions.array(bandStructs: _*)).as("band"))
+          Lsh.pigeonholeBands(col("fp"), 64, ndMaxDist)).as("band"))
         .select("band.band_idx", "band.band_bits").distinct().count()
-    }
     val pNd = run[(Long, String, String, String)](spark, "probe_neardup", chunks, docRows,
       m => EventStreams.streamingNearDupFlags(
-          m.toDF().toDF("doc_id", "source", "lang", "text")).toDF()
+          m.toDF().toDF("doc_id", "source", "lang", "text"), maxDist = ndMaxDist).toDF()
         .writeStream.format("memory").outputMode("append"))
     check(pNd.rows.last == nBuckets,
       s"streamingNearDupFlags state ${pNd.rows.last} != observed band buckets $nBuckets")

@@ -182,25 +182,18 @@ object Dedup {
 
   /** SimHash near-duplicate pairs with Hamming distance ≤ `maxDist`.
     *
-    * Pigeonhole banding: split the 64-bit fingerprint into
-    * `maxDist + 1` bands — any pair within maxDist bits must agree on
-    * at least one full band, so candidates come from the capped
-    * (band_idx, band_bits) bucket join ([[Lsh]]) and the exact Hamming
+    * Pigeonhole banding ([[Lsh.pigeonholeBands]]): split the 64-bit
+    * fingerprint into `maxDist + 1` bands — any pair within maxDist
+    * bits must agree on at least one full band, so candidates come
+    * from the capped (band_idx, band_bits) bucket join and the exact Hamming
     * check (`bit_count(xor)`, codegen'd) runs only within buckets.
     */
   def simhashNearDups(documents: DataFrame, maxDist: Int = 3,
                       maxBucket: Int = 256): DataFrame = {
-    val nBands = maxDist + 1
-    val bandBits = 64 / nBands
     val sigs = simhash(documents)
-    val bandStructs = (0 until nBands).map { bIdx =>
-      struct(lit(bIdx).as("band_idx"),
-        shiftrightunsigned(col("simhash"), bIdx * bandBits)
-          .bitwiseAND(lit((1L << bandBits) - 1)).as("band_bits"))
-    }
     val bucket = Seq("band_idx", "band_bits")
     val banded = Lsh.capBuckets(sigs.select(col("doc_id"), col("simhash"),
-      explode(array(bandStructs: _*)).as("band"))
+      explode(Lsh.pigeonholeBands(col("simhash"), 64, maxDist)).as("band"))
       .select(col("doc_id"), col("simhash"),
         col("band.band_idx").as("band_idx"), col("band.band_bits").as("band_bits")),
       bucket, "doc_id", maxBucket)
@@ -854,9 +847,9 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** Oracle twin of [[simhashNearDups]]: pigeonhole banding over the
-    * 32-bit md5 fingerprint — maxDist+1 bands, any pair within
-    * maxDist bits agrees on ≥1 band.
+  /** Oracle twin of [[simhashNearDups]]: pigeonhole banding
+    * ([[Lsh.pigeonholeBands]]) over the 32-bit md5 fingerprint —
+    * maxDist+1 bands, any pair within maxDist bits agrees on ≥1 band.
     *
     * The cap matters more here: a 32-bit fingerprint with 8-bit bands
     * has only 256 buckets per band, so uncapped the self-join
@@ -870,18 +863,11 @@ object Dedup {
     */
   def simhashMd5NearDups(documents: DataFrame, maxDist: Int = 3,
                          maxBucket: Int = 256): DataFrame = {
-    val nBands = maxDist + 1
-    require(32 % nBands == 0, "maxDist+1 must divide 32")
-    val bandBits = 32 / nBands
+    require(32 % (maxDist + 1) == 0, "maxDist+1 must divide 32")
     val sigs = simhashMd5Unsorted(documents)
-    val bandStructs = (0 until nBands).map { bIdx =>
-      struct(lit(bIdx).as("band_idx"),
-        shiftrightunsigned(col("simhash32"), bIdx * bandBits)
-          .bitwiseAND(lit((1L << bandBits) - 1)).as("band_bits"))
-    }
     val bucket = Seq("band_idx", "band_bits")
     val banded = Lsh.capBuckets(sigs.select(col("doc_id"), col("simhash32"),
-      explode(array(bandStructs: _*)).as("band"))
+      explode(Lsh.pigeonholeBands(col("simhash32"), 32, maxDist)).as("band"))
       .select(col("doc_id"), col("simhash32"),
         col("band.band_idx").as("band_idx"), col("band.band_bits").as("band_bits")),
       bucket, "doc_id", maxBucket)

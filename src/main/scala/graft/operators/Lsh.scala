@@ -6,10 +6,11 @@ import org.apache.spark.sql.functions._
 
 /** The LSH candidate-pair rule every banded near-dup operator shares:
   * cap each bucket, self-join on the bucket key, orient pairs
-  * `a < b`, score and filter, then dedup the pairs. Callers keep what
-  * is their own: the banding (how a signature becomes bucket rows),
-  * the score and its threshold, the output names and types, and the
-  * final sort.
+  * `a < b`, score and filter, then dedup the pairs. The SimHash
+  * operators, batch and streaming, also share one banding rule
+  * ([[pigeonholeBands]]). Callers keep what is their own: the MinHash
+  * banding, the score and its threshold, the output names and types,
+  * and the final sort.
   *
   * Why a cap, and why the lowest ids: a bucket of n rows costs n²
   * candidate pairs, so one template-spam or near-uniform bucket is
@@ -24,6 +25,25 @@ import org.apache.spark.sql.functions._
   * the dedup shuffle carry 3 scalars instead of two signature arrays.
   */
 private[graft] object Lsh {
+
+  /** Pigeonhole banding of a `width`-bit fingerprint `fp` (a long)
+    * for Hamming distance ≤ `maxDist`: `maxDist + 1` disjoint bands of
+    * `width / (maxDist + 1)` bits each, band `i` starting at bit
+    * `i × bandBits`, as `array(struct(band_idx, band_bits))`. A pair
+    * within `maxDist` bits differs in at most `maxDist` bands, so it
+    * agrees on at least one and meets in that (band_idx, band_bits)
+    * bucket.
+    */
+  def pigeonholeBands(fp: Column, width: Int, maxDist: Int): Column = {
+    val bandBits = width / (maxDist + 1)
+    // a shift by 64 is a shift by 0 on the JVM, so one 64-bit band
+    // needs its mask spelled out
+    val mask = if (bandBits == 64) -1L else (1L << bandBits) - 1
+    array((0 to maxDist).map { bIdx =>
+      struct(lit(bIdx).as("band_idx"),
+        shiftrightunsigned(fp, bIdx * bandBits).bitwiseAND(lit(mask)).as("band_bits"))
+    }: _*)
+  }
 
   /** `rows` with each `bucket` group cut to its `maxBucket` lowest `id`s. */
   def capBuckets(rows: DataFrame, bucket: Seq[String], id: String,

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.operators.Lsh
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
@@ -540,7 +541,8 @@ object EventStreams {
     * the batch [[graft.operators.Dedup.simhashNearDups]]: as documents
     * arrive, each is fingerprinted map-only (the same codegen
     * [[graft.functions.SimHash64]] expression — no aggregation, so it
-    * streams), banded by the same pigeonhole split (maxDist+1 bands ⇒
+    * streams), banded by the same pigeonhole split
+    * ([[Lsh.pigeonholeBands]]: maxDist+1 bands ⇒
     * any pair within maxDist matches exactly in ≥1 band), and checked
     * against the KEYED STATE of fingerprints previously seen in that
     * band bucket. A hit emits (doc_id, dup_of, hamming) immediately —
@@ -560,17 +562,11 @@ object EventStreams {
                             maxBucket: Int = 256): Dataset[NearDupFlag] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val nBands = maxDist + 1
-    val bandBits = 64 / nBands
-    val bandStructs = (0 until nBands).map { bIdx =>
-      struct(lit(bIdx).as("band_idx"),
-        shiftrightunsigned(col("fp"), bIdx * bandBits)
-          .bitwiseAND(lit((1L << bandBits) - 1)).as("band_bits"))
-    }
     val banded = docs
       .select(col("doc_id"),
         graft.functions.VectorFunctions.simhash64(col("text")).as("fp"))
-      .select(col("doc_id"), col("fp"), explode(array(bandStructs: _*)).as("band"))
+      .select(col("doc_id"), col("fp"),
+        explode(Lsh.pigeonholeBands(col("fp"), 64, maxDist)).as("band"))
       .select(col("band.band_idx").as("band_idx"), col("band.band_bits").as("band_bits"),
         col("doc_id"), col("fp"))
       .as[BandedDoc]

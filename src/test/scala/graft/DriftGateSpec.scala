@@ -14,8 +14,9 @@ import scala.sys.process._
   * (a key in the artifact's "failed" list vanishes from the shared-key
   * set, which an earlier version of the gate reported as OK), must
   * report baseline keys missing from the current run, must print usage
-  * instead of an IndexError when run bare, and must gate scale DECADES
-  * (sf1 vs sf10) at a looser ratio in `--decade` mode.
+  * instead of an IndexError when run bare, must gate scale DECADES
+  * (sf1 vs sf10) at a looser ratio in `--decade` mode, and must refuse
+  * in both modes an artifact whose `low_sample_keys` is non-empty.
   *
   * Runs the real `tools/check_drift.py` under the host python3 against
   * synthetic artifacts written to a temp dir — no Spark session, no
@@ -38,14 +39,16 @@ class DriftGateSpec extends AnyFunSuite {
 
   private def artifact(name: String, queries: Map[String, Double],
                        failed: Seq[String] = Nil,
-                       min: Map[String, Double] = Map.empty): Path = {
+                       min: Map[String, Double] = Map.empty,
+                       lowSample: Seq[String] = Nil): Path = {
     val q = queries.map { case (k, v) => s""""$k":$v""" }.mkString(",")
     val m =
       if (min.isEmpty) ""
       else min.map { case (k, v) => s""""$k":$v""" }.mkString(""","queries_min":{""", ",", "}")
     val f = failed.map(k => s""""$k"""").mkString(""","failed":[""", ",", "]")
+    val l = lowSample.map(k => s""""$k"""").mkString(""","low_sample_keys":[""", ",", "]")
     val p = dir.resolve(name)
-    Files.write(p, s"""{"metric":"total","queries":{$q}$m$f}""".getBytes(StandardCharsets.UTF_8))
+    Files.write(p, s"""{"metric":"total","queries":{$q}$m$f$l}""".getBytes(StandardCharsets.UTF_8))
     p
   }
 
@@ -116,6 +119,20 @@ class DriftGateSpec extends AnyFunSuite {
     val cur2 = artifact("c7.json", Map("q_traded" -> 2.0, "q_acc" -> 2.0))
     val (badCode, badOut) = run("--allow", "q_traded", base.toString, cur2.toString)
     assert(badCode === 1 && badOut.contains("REGRESSED q_acc"), badOut)
+  }
+
+  test("round mode refuses a current artifact whose minima rest on one sample") {
+    assume(python, "no host python3")
+    // steady numbers, but q_b's minimum is a single warm sample: not
+    // bankable, so the gate refuses instead of passing
+    val base = artifact("b6.json", Map("q_a" -> 1.0, "q_b" -> 2.0))
+    val cur = artifact("c8.json", Map("q_a" -> 1.0, "q_b" -> 2.0), lowSample = Seq("q_b"))
+    val (code, out) = run(base.toString, cur.toString)
+    assert(code === 1, out)
+    assert(out.contains("DRIFT GATE REFUSED: 1 key(s)") && out.contains("q_b"), out)
+    assert(!out.contains("DRIFT GATE OK"), out)
+    val (decCode, decOut) = run("--decade", base.toString, cur.toString)
+    assert(decCode === 1 && decOut.contains("DECADE GATE REFUSED: 1 key(s)"), decOut)
   }
 
   test("warm medians (queries_min) are preferred over cold queries") {

@@ -21,8 +21,10 @@ term or a parallelism collapse. The median per-key growth is printed
 
 Both modes also fail when the CURRENT artifact carries a non-empty
 "failed" list (a query that regressed from working to throwing would
-otherwise silently vanish from the shared-key set) and loudly report
-baseline keys missing from the current run.
+otherwise silently vanish from the shared-key set), refuse a current
+artifact with a non-empty "low_sample_keys" list (a minimum over one
+warm sample is not bankable), and loudly report baseline keys missing
+from the current run.
 
 --allow k1,k2 waives named keys: a documented, deliberate trade
 (e.g. a constant-factor cost bought for density-robustness at scale)
@@ -105,14 +107,15 @@ def main():
         print("DRIFT GATE ERROR: no shared keys between artifacts")
         return 1
     failed = cur.get("failed") or []
-    # Banking guard (r16 q_except incident): a scale-decade artifact whose
-    # minima include single-warm-sample keys is not bankable evidence —
-    # Bench emits low_sample_keys for exactly this; refuse the gate.
+    # Banking guard (r16 q_except incident): an artifact whose minima
+    # include single-warm-sample keys is not bankable evidence — Bench
+    # emits low_sample_keys for exactly this. Both modes compare the same
+    # queries_min, so both refuse the gate.
     low = cur.get("low_sample_keys") or []
-    if decade and low:
-        print(f"DECADE GATE REFUSED: {len(low)} key(s) in the current artifact "
-              f"rest on a single warm sample (re-run with more full rounds): "
-              f"{','.join(low[:8])}...")
+    if low:
+        print(f"{'DECADE' if decade else 'DRIFT'} GATE REFUSED: {len(low)} key(s) "
+              f"in the current artifact rest on a single warm sample (re-run "
+              f"with more full rounds): {','.join(low[:8])}...")
         return 1
     missing = sorted(set(bq) - set(cq) - set(failed))
     regressions, waived, improved, ratios = [], [], [], []

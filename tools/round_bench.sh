@@ -4,8 +4,10 @@
 #   tools/round_bench.sh <round>            e.g. tools/round_bench.sh r10
 #   tools/round_bench.sh <round> <baseline> e.g. tools/round_bench.sh r10 BENCH_LOCAL_r09b.json
 #
-# Runs the 8-round local bench (headline warm rounds + 3 full rounds),
-# banks BENCH_LOCAL_<round>.json from the per-query detail, and runs
+# Runs the local bench on sf0.1 with a 1200 s budget, up to 5 timed
+# headline rounds and up to 3 full rounds (each a default the env
+# overrides; Bench admits a round only if it fits the budget), banks
+# BENCH_LOCAL_<round>.json from the per-query detail, and runs
 # the drift gate against the newest previous BENCH_LOCAL_*.json (or an
 # explicit baseline). Exits non-zero when the gate fails, so the recipe
 # cannot silently skip it. SPARK_GRAFT_CPUS passes through when set;
