@@ -51,7 +51,10 @@ import graft.streaming.{CurateStream, EventStreams, GroupStream}
   *     lives in the parquet sink; final mapping equals batch
   *     connectedGroups exactly, per-doc rows ≤ batches (roots change
   *     at most once per batch)
-  * Prints one JSON line; exits 1 when a bound is violated.
+  * Prints one JSON line; exits 1 when a bound is violated. The
+  * `state_scan_ms_*` timings and the `mem_peak_bytes` of `perUserQuota`
+  * and `runningUserTotalsTws` vary from run to run of the same code
+  * (see the twins table below); every other field is reproducible.
   */
 object StreamStateProbe {
 
@@ -345,6 +348,11 @@ object StreamStateProbe {
     check(pHh.rows.last == 1,
       s"streamingHeavyHitters state ${pHh.rows.last} != 1 global summary row")
 
+    // mem_peak_bytes is the store's own memoryUsedBytes. For the two
+    // RocksDB-backed twins (perUserQuota, runningUserTotalsTws) it is
+    // run-to-run noise: two runs of one tree printed 79216 and 79232,
+    // and 86368 and 86400. A comparison with another tree's JSON sets
+    // those two fields aside; no bound reads them.
     val twins = Seq(
       ("sessionGaps", pSess, s""""bound_users":$nUsers"""),
       ("errorRateHourly", pEr, s""""bound_hours":$nHours"""),

@@ -263,7 +263,7 @@ object Relational {
     customer.createOrReplaceTempView("customer")
     spark.sql(
       """WITH RECURSIVE walk(key, anc, d) AS (
-        |  SELECT c_custkey, c_custkey, 0 FROM customer
+        |  SELECT c_custkey AS key, c_custkey AS anc, 0 AS d FROM customer
         |  UNION ALL
         |  SELECT key, CAST(floor(anc / 2) AS BIGINT), d + 1 FROM walk WHERE anc > 1
         |)

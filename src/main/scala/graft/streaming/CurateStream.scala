@@ -45,7 +45,9 @@ import graft.streaming.StateCompaction.Changelog
   *                  [[graft.operators.Curation.curatePipeline]] stage
   *                  7) to `manifestDelta` — the current manifest is
   *                  the nShards-row sum over deltas ([[sinkManifest]]),
-  *                  never a rescan of the corpus.
+  *                  never a rescan of the corpus. The four writes
+  *                  commit concurrently ([[StateCompaction.writeBatch]])
+  *                  and all of them end before the batch returns.
   *
   * Exactly-once on top of at-least-once replay: every write is one
   * idempotent batch dir of a [[StateCompaction.Changelog]], so a
@@ -183,19 +185,24 @@ object CurateStream {
         Lsh.agreement(_, _, numHashes), _ >= threshold)
       .select("doc_a", "doc_b")
     val drops = Dedup.nonRepresentatives(pairs)
+    // eager: two of the concurrent writes below read d3, and a lazy cut
+    // read by concurrent jobs is computed by each of them. `fresh` and
+    // `bb` stay lazy: each feeds one write, and computing d3 (through d2
+    // and the pairs' broadcast) has already stored both.
     val d3 = d2.join(drops, Seq("doc_id"), "left_anti")
-      .localCheckpoint(false)
+      .localCheckpoint(true)
 
-    // 4. sink + state + manifest delta, each idempotent per batch_id
-    sink.docs.write(d3, batchId)
-    sink.digests.write(fresh.select("digest"), batchId)
-    sink.bands.write(bb, batchId)
-    sink.manifestDelta.write(
-      d3.select(Curation.shardId(col("text"), nShards).as("shard_id"),
+    // 4. sink + state + manifest delta, each idempotent per batch_id,
+    // committed concurrently; all four end before the batch returns
+    StateCompaction.writeBatch(batchId,
+      sink.docs -> d3,
+      sink.digests -> fresh.select("digest"),
+      sink.bands -> bb,
+      sink.manifestDelta -> d3
+        .select(Curation.shardId(col("text"), nShards).as("shard_id"),
           length(col("text")).cast("long").as("n_chars"))
         .groupBy("shard_id")
-        .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("n_chars")),
-      batchId)
+        .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("n_chars")))
   }
 
   /** The accepted corpus so far (doc_id, source, lang, text); empty

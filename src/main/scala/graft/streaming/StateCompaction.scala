@@ -12,7 +12,8 @@ import org.apache.spark.sql.types._
   * each written idempotently (a replayed batch overwrites its own dir);
   * a batch reads state from `batch_id < id`. [[sinkStream]] runs a
   * stream's micro-batches with the durable checkpoint and the
-  * recover → batch → compact cadence.
+  * recover → batch → compact cadence; [[writeBatch]] commits one
+  * batch's writes to several changelogs concurrently.
   *
   * Compaction: every batch dir STRICTLY
   * BELOW the newest collapses — through a caller-supplied `reduce` —
@@ -109,6 +110,43 @@ object StateCompaction {
     def compact(spark: SparkSession): Unit =
       compactTable(spark, path, schema, reduce.getOrElse(
         throw new IllegalStateException(s"changelog $path has no compaction reduce")))
+  }
+
+  /** Commit one micro-batch: each `(table, rows)` is written as
+    * `table.write(rows, batchId)` on its own thread, so the writes'
+    * Spark jobs run at once instead of one after another. The threads
+    * are made for this one call, on the calling thread, so they inherit
+    * its Spark local properties: the stream's job group (which
+    * `StreamingQuery.stop()` cancels) and the SQL execution context.
+    *
+    * Returns only once EVERY write has ended, failed or not: a write
+    * still running after `foreachBatch` returned or threw could race a
+    * replay's overwrite of the same `batch_id` dir. Then it rethrows
+    * the first failed write's error (in `writes` order) with the other
+    * failures suppressed; an interrupt of the caller while it waits
+    * is rethrown as an `InterruptedException` once the writes end.
+    */
+  def writeBatch(batchId: Long, writes: (Changelog, DataFrame)*): Unit = {
+    val failures = new Array[Throwable](writes.size)
+    val threads = writes.zipWithIndex.map { case ((table, rows), i) =>
+      new Thread(() =>
+        try table.write(rows, batchId)
+        catch { case t: Throwable => failures(i) = t },
+        s"changelog-write-$batchId-${new Path(table.path).getName}")
+    }
+    var interrupted = false
+    try threads.foreach(_.start())
+    finally threads.foreach { t =>
+      while (t.isAlive)
+        try t.join() catch { case _: InterruptedException => interrupted = true }
+    }
+    val failed = Option.when(interrupted)(new InterruptedException(
+      s"interrupted while batch $batchId's changelog writes ran")).toSeq ++
+      failures.filter(_ != null)
+    failed.headOption.foreach { first =>
+      failed.tail.foreach(first.addSuppressed)
+      throw first
+    }
   }
 
   /** Start `input`'s sink stream into `outDir`: `batch` runs each

@@ -18,8 +18,10 @@ class EagerCutSpec extends SparkSpec {
     assert(pairs.length > 10, s"need real pairs, got ${pairs.length}")
     val (first, second) = pairs.splitAt(pairs.length / 2)
     withTempDir("eager_cut_") { outDir =>
-      // curateBatch's cuts are lazy: pin that each is still computed once
-      // over two micro-batches, one per doc-id half of the corpus
+      // curateBatch has three lazy cuts and one eager one (d3, which two
+      // of its concurrent sink writes read): pin that each is still
+      // computed once over two micro-batches, one per doc-id half of the
+      // corpus
       val docs = Tables.documents(spark, sf0001).select("doc_id", "source", "lang", "text")
       val ids = docs.select("doc_id").as[Long].collect().sorted
       val mid = ids(ids.length / 2)

@@ -1,10 +1,15 @@
 package graft.streaming
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 import graft.TempDirs.withTempDir
 import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.streaming.StateCompaction.Changelog
 
 /** Crash-window pins for [[StateCompaction]] — the round-14 ADVICE
   * scenarios, each constructed literally on disk and recovered through
@@ -12,7 +17,8 @@ import org.apache.spark.sql.types._
   * min-root shape (the simplest subsumption-sound reduce); every
   * window asserts the same invariant: after recovery, min(root) per
   * doc over the table equals the uncompacted union's, and no tmp or
-  * marker survives.
+  * marker survives. The last two tests pin [[StateCompaction.writeBatch]],
+  * the concurrent commit of one batch's writes.
   */
 class StateCompactionSpec extends SparkSpec {
   import spark.implicits._
@@ -161,5 +167,56 @@ class StateCompactionSpec extends SparkSpec {
       StateCompaction.recoverTable(spark, table)
       assert(currentState(table) == expected)
     }
+  }
+
+  private val idSchema = StructType(Seq(StructField("id", LongType)))
+
+  /** Three writes of 200k ids, to changelogs under `dir`. */
+  private def goodWrites(dir: String) = {
+    val rows = spark.range(0, 200000, 1, 8).toDF("id")
+    Seq("a", "b", "c").map(n => Changelog(s"$dir/$n", idSchema) -> rows)
+  }
+
+  test("writeBatch waits for every write, then throws the failed write's error") {
+    withTempDir("write_batch_") { dir =>
+      // a regular file where the table dir must go: this write fails
+      // in job setup, before the others can finish
+      val bad = Changelog(s"$dir/bad", idSchema)
+      fs.create(new Path(bad.path), true).close()
+      val good = goodWrites(dir)
+      val e = intercept[Exception](
+        StateCompaction.writeBatch(0L, (bad -> spark.range(1).toDF("id")) +: good: _*))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains(s"$dir/bad")), e.toString)
+      good.foreach { case (t, _) =>
+        assert(fs.exists(new Path(t.path, "batch_id=0/_SUCCESS")), t.path) }
+      assert(!Thread.getAllStackTraces.keySet.asScala
+        .exists(t => t.getName.startsWith("changelog-write-") && t.isAlive))
+    }
+  }
+
+  test("writeBatch's jobs carry the calling thread's job group") {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    try withTempDir("write_batch_group_") { dir =>
+      sc.setJobGroup("write-batch-spec", "writeBatch", interruptOnCancel = true)
+      try StateCompaction.writeBatch(0L, goodWrites(dir): _*)
+      finally sc.clearJobGroup()
+      // the bus delivers events in order: once a later job's start
+      // arrives, every write job's start has arrived before it
+      sc.setJobGroup("write-batch-spec-marker", "marker")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!groups.contains("write-batch-spec-marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      val writeJobs = groups.asScala.toSeq.takeWhile(_ != "write-batch-spec-marker")
+      assert(writeJobs.size >= 3, writeJobs.toString)
+      assert(writeJobs.forall(_ == "write-batch-spec"), writeJobs.toString)
+    } finally sc.removeSparkListener(listener)
   }
 }
