@@ -444,14 +444,14 @@ object StreamStateProbe {
     check(curManPost == curManPre, "curate compaction changed the shard manifest")
     val curDirsC = cur.state.map(_.batchIds(spark).size)
     check(curDirsC.forall(d => d <= 2 || curBatches <= 2),
-      s"curate compaction left $curDirsC batch_id dirs (want baseline + newest)")
+      s"curate compaction left $curDirsC batches (want baseline + newest)")
 
     // 16c. CADENCED curate compaction (round 16): the same ingest run
     // with compactEvery set — nothing calls compact() by hand; the
     // foreachBatch hook must bound the changelog ON ITS OWN (the
     // round-15 verdict's "a 100 TB ingest accumulates one batch dir
     // per micro-batch until an operator remembers" gap). Bounds:
-    //   - batch_id dirs ≤ baseline + compactEvery (the residual
+    //   - batches ≤ baseline + compactEvery (the residual
     //     window since the last cadence firing), and strictly fewer
     //     than one-per-batch when the run spans a firing;
     //   - every read face identical to the uncadenced run's: digest
@@ -462,7 +462,7 @@ object StreamStateProbe {
       CurateStream.curateToSink(docStream(m), cadDir, compactEvery = cadEvery)).size
     val cadDirs = cad.state.map(_.batchIds(spark).size)
     check(cadDirs.forall(_ <= 1 + cadEvery),
-      s"cadenced curate left $cadDirs batch_id dirs (> baseline + $cadEvery)")
+      s"cadenced curate left $cadDirs batches (> baseline + $cadEvery)")
     check(cadBatches <= cadEvery || cadDirs.forall(_ < cadBatches),
       s"cadenced curate never compacted: $cadDirs dirs over $cadBatches batches")
     check(cad.digests.read(spark).count() == expDig,
@@ -519,7 +519,7 @@ object StreamStateProbe {
       s"groupsToSink changelog has $grpDirs batch_id dirs != $grpBatches batches")
 
     // 17b. compaction at scale (round 14): collapse the changelog and
-    // re-verify — the mapping must be IDENTICAL, the dir count must
+    // re-verify — the mapping must be IDENTICAL, the batch count must
     // drop to baseline + newest, and the row count to ≤ docs + newest
     // batch's rows (min(root) per doc baseline).
     GroupStream.compact(spark, grpDir)
@@ -530,7 +530,7 @@ object StreamStateProbe {
       s"groupsToSink mapping diverges from batch CC by $grpDiffC rows AFTER compaction")
     val grpDirsC = grpRoots.batchIds(spark).size
     check(grpDirsC <= 2 || grpBatches <= 2,
-      s"compaction left $grpDirsC batch_id dirs (want baseline + newest)")
+      s"compaction left $grpDirsC batches (want baseline + newest)")
     val grpLogRowsC = grpRoots.read(spark).count()
     check(grpLogRowsC <= grpLogRows,
       s"compaction grew the changelog: $grpLogRows -> $grpLogRowsC rows")
@@ -542,7 +542,7 @@ object StreamStateProbe {
       GroupStream.groupsToSink(pairStream(m), gcadDir, compactEvery = cadEvery)).size
     val gcadDirs = GroupStream.roots(gcadDir).batchIds(spark).size
     check(gcadDirs <= 1 + cadEvery,
-      s"cadenced groups left $gcadDirs batch_id dirs (> baseline + $cadEvery)")
+      s"cadenced groups left $gcadDirs batches (> baseline + $cadEvery)")
     check(gcadBatches <= cadEvery || gcadDirs < gcadBatches,
       s"cadenced groups never compacted: $gcadDirs dirs over $gcadBatches batches")
     val gcadGot = GroupStream.sinkGroups(spark, gcadDir)

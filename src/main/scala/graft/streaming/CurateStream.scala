@@ -122,7 +122,7 @@ object CurateStream {
       Some(_.groupBy("shard_id").agg(sum("n_docs").as("n_docs"),
         sum("n_chars").as("n_chars"))))
 
-    /** The compacted tables, in recovery and compaction order. */
+    /** The compacted tables, in compaction order. */
     val state: Seq[Changelog] = Seq(digests, bands, manifestDelta)
   }
 
@@ -221,9 +221,9 @@ object CurateStream {
       .agg(sum("n_docs").as("n_docs"), sum("n_chars").as("n_chars"))
       .orderBy("shard_id")
 
-  /** Compact the three state changelogs by the crash-safe protocol of
-    * [[StateCompaction]], each through the reduce declared beside it in
-    * [[SinkTables]]. The `docs` sink itself is data, not state, and is
+  /** Compact the three state changelogs by [[StateCompaction]]'s
+    * snapshot-then-collect protocol, each through the reduce declared
+    * beside it in [[SinkTables]]. The `docs` sink itself is data, not state, and is
     * never compacted.
     */
   def compact(spark: SparkSession, outDir: String): Unit =

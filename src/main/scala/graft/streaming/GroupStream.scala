@@ -166,10 +166,10 @@ object GroupStream {
     roots(outDir).read(spark)
       .groupBy("doc_id").agg(min("root").as("group_id"))
 
-  /** Compact the [[roots]] changelog to `min(root)` per doc by the
-    * crash-safe protocol of [[StateCompaction]]; [[sinkGroups]] and
-    * every later batch's state read see identical values before and
-    * after (the replay spec pins this).
+  /** Compact the [[roots]] changelog to `min(root)` per doc by
+    * [[StateCompaction]]'s snapshot-then-collect protocol;
+    * [[sinkGroups]] and every later batch's state read see identical
+    * values before and after (the replay spec pins this).
     */
   def compact(spark: SparkSession, outDir: String): Unit =
     roots(outDir).compact(spark)

@@ -3,6 +3,7 @@ package graft.streaming
 import graft.{SparkSpec, Tables}
 import graft.TempDirs.withTempDir
 import graft.operators.{Curation, Dedup, TextAnalysis}
+import graft.streaming.StateCompactionSpec.batchDirsOnDisk
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -102,13 +103,14 @@ class CurateStreamSpec extends SparkSpec {
       // baseline, and — the data-loss check — a re-send of the ENTIRE
       // corpus must be rejected wholesale by the compacted digest/band
       // state, while a genuinely novel doc is still admitted.
-      def stateDirs(sub: String) = java.nio.file.Files
-        .list(java.nio.file.Paths.get(outDir, sub.split("/"): _*))
-        .toArray.map(_.toString).filter(_.contains("batch_id=")).sorted.toSeq
-      assert(stateDirs("_state/digests").size == 3)
+      val sink = new CurateStream.SinkTables(outDir)
+      assert(sink.digests.batchIds(spark).size == 3)
       CurateStream.compact(spark, outDir)
-      Seq("_state/digests", "_state/bands", "manifest_delta").foreach { t =>
-        assert(stateDirs(t).size == 2, s"$t: ${stateDirs(t)}")
+      sink.state.foreach { t =>
+        val ids = t.batchIds(spark)
+        assert(ids.size == 2, s"${t.path}: $ids")
+        // no dir the baseline subsumes is left in the table
+        assert(batchDirsOnDisk(t) == ids.tail, s"${t.path}: ${batchDirsOnDisk(t)}")
       }
       assert(CurateStream.sinkDocs(spark, outDir)
         .select("doc_id").collect().map(_.getLong(0)).toSet == expIds)
@@ -170,14 +172,13 @@ class CurateStreamSpec extends SparkSpec {
         }
       } finally q.stop()
 
-      // after-batch-3 compaction collapsed dirs 0..2 into baseline
-      // batch_id=2; five ingested batches leave baseline + two newer
-      // dirs in EVERY state table — never one dir per batch
-      def stateDirs(sub: String) = java.nio.file.Files
-        .list(java.nio.file.Paths.get(outDir, sub.split("/"): _*))
-        .toArray.map(_.toString).filter(_.contains("batch_id=")).sorted.toSeq
-      Seq("_state/digests", "_state/bands", "manifest_delta").foreach { t =>
-        assert(stateDirs(t).size == 3, s"$t not cadence-bounded: ${stateDirs(t)}")
+      // after-batch-3 compaction collapsed batches 0..2 into the
+      // baseline upto=2; five ingested batches leave baseline + two
+      // newer dirs in EVERY state table — never one dir per batch
+      new CurateStream.SinkTables(outDir).state.foreach { t =>
+        val ids = t.batchIds(spark)
+        assert(ids.size == 3, s"${t.path} not cadence-bounded: $ids")
+        assert(batchDirsOnDisk(t) == ids.tail, s"${t.path}: ${batchDirsOnDisk(t)}")
       }
       val expected = expectedSurvivors(Tables.documents(spark, sf0001))
       val expIds = expected.select("doc_id").collect().map(_.getLong(0)).toSet

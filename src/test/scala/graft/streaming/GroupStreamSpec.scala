@@ -3,6 +3,7 @@ package graft.streaming
 import graft.{SparkSpec, Tables}
 import graft.TempDirs.withTempDir
 import graft.operators.Dedup
+import graft.streaming.StateCompactionSpec.batchDirsOnDisk
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -67,12 +68,13 @@ class GroupStreamSpec extends SparkSpec {
       // shrink to baseline + newest, and the stream must keep working —
       // both a replay of the newest batch (reads state < maxId = exactly
       // the baseline) and a brand-new batch on top.
-      val rootsDir = java.nio.file.Paths.get(outDir, "_state", "roots")
-      def batchDirs = java.nio.file.Files.list(rootsDir).toArray.map(_.toString)
-        .filter(_.contains("batch_id=")).sorted.toSeq
-      assert(batchDirs.size == 3, batchDirs.toString)
+      val roots = GroupStream.roots(outDir)
+      assert(roots.batchIds(spark).size == 3, roots.batchIds(spark).toString)
       GroupStream.compact(spark, outDir)
-      assert(batchDirs.size == 2, batchDirs.toString)
+      val ids = roots.batchIds(spark)
+      assert(ids.size == 2, ids.toString)
+      // no dir the baseline subsumes is left in the table
+      assert(batchDirsOnDisk(roots) == ids.tail, batchDirsOnDisk(roots).toString)
       val afterCompact = GroupStream.sinkGroups(spark, outDir)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       assert(afterCompact == expected, "compaction changed the mapping")
@@ -126,12 +128,12 @@ class GroupStreamSpec extends SparkSpec {
       } finally q.stop()
 
       // compactEvery=2 fires after batches 1 and 3 (after-3 collapses
-      // 0..2 into baseline batch_id=2), so five ingested batches leave
+      // 0..2 into the baseline upto=2), so five ingested batches leave
       // at most baseline + two newer dirs — never one dir per batch
-      val rootsDir = java.nio.file.Paths.get(outDir, "_state", "roots")
-      val batchDirs = java.nio.file.Files.list(rootsDir).toArray.map(_.toString)
-        .filter(_.contains("batch_id=")).sorted.toSeq
-      assert(batchDirs.size == 3, s"expected cadence to bound dirs, got $batchDirs")
+      val roots = GroupStream.roots(outDir)
+      val ids = roots.batchIds(spark)
+      assert(ids.size == 3, s"expected cadence to bound dirs, got $ids")
+      assert(batchDirsOnDisk(roots) == ids.tail, batchDirsOnDisk(roots).toString)
       val expected = Dedup.connectedGroups(pairsDf)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       val got = GroupStream.sinkGroups(spark, outDir)

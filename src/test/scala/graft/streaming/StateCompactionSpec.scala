@@ -10,162 +10,156 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.streaming.StateCompaction.Changelog
+import graft.streaming.StateCompactionSpec.batchDirsOnDisk
 
-/** Crash-window pins for [[StateCompaction]] — the round-14 ADVICE
-  * scenarios, each constructed literally on disk and recovered through
-  * the public API. The changelog under test is the [[GroupStream]]
-  * min-root shape (the simplest subsumption-sound reduce); every
-  * window asserts the same invariant: after recovery, min(root) per
-  * doc over the table equals the uncompacted union's, and no tmp or
-  * marker survives. The last two tests pin [[StateCompaction.writeBatch]],
-  * the concurrent commit of one batch's writes.
+/** Crash-model pins for [[StateCompaction]]'s snapshot-then-collect
+  * compaction. Each test builds on disk a state a crash can leave: a
+  * baseline snapshot without `_SUCCESS`, or a committed one beside all
+  * or some of the batch dirs it subsumes. The changelog under test sums
+  * per key, shaped like [[CurateStream]]'s `manifestDelta`, so a batch
+  * read twice or lost shows as a wrong sum. The last two tests pin
+  * [[StateCompaction.writeBatch]], the concurrent commit of one
+  * batch's writes.
   */
 class StateCompactionSpec extends SparkSpec {
   import spark.implicits._
 
-  private val schema = StructType(Seq(
-    StructField("doc_id", LongType), StructField("root", LongType)))
+  private val schema = StructType(Seq(StructField("shard_id", LongType),
+    StructField("n_docs", LongType), StructField("n_chars", LongType)))
   private def reduce(df: org.apache.spark.sql.DataFrame) =
-    df.groupBy("doc_id").agg(min("root").as("root"))
+    df.groupBy("shard_id").agg(sum("n_docs").as("n_docs"), sum("n_chars").as("n_chars"))
 
-  /** Runs `body` on a temp table of three batch dirs whose min-root
-    * union is `expected`, then deletes it.
+  /** Batch `id`'s (shard_id, n_docs, n_chars) rows: every batch touches
+    * shard 0, so any double read or lost batch moves its sum.
     */
-  private def withFreshTable[A](body: (String, Map[Long, Long]) => A): A =
-    withTempDir("state_compact_") { dir =>
-      val table = s"$dir/roots"
-      Seq(Seq((1L, 1L), (2L, 2L), (3L, 3L)),           // batch 0: nodes land
-          Seq((2L, 1L), (3L, 2L)),                     // batch 1: merges lower roots
-          Seq((3L, 1L), (4L, 4L)))                     // batch 2 (newest)
-        .zipWithIndex.foreach { case (rows, id) =>
-          rows.toDF("doc_id", "root").write.mode("overwrite")
-            .parquet(s"$table/batch_id=$id")
-        }
-      body(table, Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L))
-    }
+  private def rowsOf(id: Long) = Seq((0L, 1L, 10L * (id + 1)), (id + 1, 2L, id + 5))
 
-  private def currentState(table: String): Map[Long, Long] =
-    reduce(spark.read.schema(schema.add(StructField("batch_id", LongType)))
-        .parquet(table).select("doc_id", "root"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  private def write(table: Changelog, ids: Long*): Unit =
+    ids.foreach(id => table.write(rowsOf(id).toDF("shard_id", "n_docs", "n_chars"), id))
+
+  /** The summed state of batches `ids`, computed without Spark. */
+  private def expected(ids: Long*): Map[Long, (Long, Long)] =
+    ids.flatMap(rowsOf).groupBy(_._1).map { case (k, rs) =>
+      k -> ((rs.map(_._2).sum, rs.map(_._3).sum)) }
+
+  private def state(table: Changelog, before: Long = Long.MaxValue) =
+    reduce(table.read(spark, before)).collect()
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
 
   private def fs = new Path("/").getFileSystem(
     spark.sparkContext.hadoopConfiguration)
 
-  /** Replicate compact's on-disk steps up to (not including) the final
-    * rename: committed tmp with `_TARGET`, marker up, subsumed dirs
-    * deleted — the exact crash window the round-14 ADVICE flagged.
+  private def baselineDirs(table: Changelog): Seq[String] =
+    fs.listStatus(new Path(s"${table.path}_baseline")).map(_.getPath.getName).sorted.toSeq
+
+  /** Runs `body` on a temp sum changelog holding batches `ids`. */
+  private def withTable[A](ids: Long*)(body: Changelog => A): A =
+    withTempDir("state_compact_") { dir =>
+      val table = Changelog(s"$dir/manifest_delta", schema, Some(reduce))
+      write(table, ids: _*)
+      body(table)
+    }
+
+  /** Compaction's first step alone, as a crash right after it leaves
+    * it: batches `<= k` reduced into the snapshot `upto=<k>`, committed
+    * by its `_SUCCESS`. With `committed = false`, the crash cut the
+    * write short: the dir holds batches `< k` only, and no `_SUCCESS`.
     */
-  private def simulateCrashBeforeRename(table: String): Unit = {
-    val tmp = s"${table}_compact_tmp"
-    reduce(spark.read.schema(schema.add(StructField("batch_id", LongType)))
-        .parquet(table).filter(col("batch_id") < 2).select("doc_id", "root"))
-      .write.mode("overwrite").parquet(tmp)
-    val out = fs.create(new Path(tmp, "_TARGET"), true)
-    out.write("1".getBytes("UTF-8")); out.close()
-    fs.create(new Path(s"${table}_compact_inprogress"), true).close()
-    fs.delete(new Path(table, "batch_id=0"), true)
-    fs.delete(new Path(table, "batch_id=1"), true)
+  private def snapshot(table: Changelog, k: Long, committed: Boolean = true): Unit = {
+    val dir = s"${table.path}_baseline/upto=$k"
+    reduce(table.read(spark, if (committed) k + 1 else k))
+      .write.mode("overwrite").parquet(dir)
+    if (!committed) assert(fs.delete(new Path(dir, "_SUCCESS"), false))
   }
 
-  test("crash between deletes and rename: marker fences every read, recovery finishes from the recorded target") {
-    withFreshTable { (table, expected) =>
-      simulateCrashBeforeRename(table)
-      // the fence: reading now would see only batch 2 — fail loudly instead
-      val e = intercept[IllegalStateException](
-        StateCompaction.assertReadable(spark, table))
-      assert(e.getMessage.contains("unfinished compaction"))
-      // recovery is the first step of any compact call
-      StateCompaction.compactTable(spark, table, schema, reduce)
-      StateCompaction.assertReadable(spark, table)
-      assert(currentState(table) == expected)
-      assert(!fs.exists(new Path(s"${table}_compact_tmp")))
-      assert(!fs.exists(new Path(s"${table}_compact_inprogress")))
+  test("compact snapshots the batches below the newest, then collects them") {
+    withTable(0, 1, 2) { table =>
+      table.compact(spark)
+      assert(batchDirsOnDisk(table) == Seq(2L))
+      assert(baselineDirs(table) == Seq("upto=1"))
+      assert(table.batchIds(spark) == Seq(1L, 2L))
+      assert(state(table) == expected(0, 1, 2))
+      assert(state(table, 2) == expected(0, 1))
+      // one baseline and the newest: nothing to gain, nothing written
+      table.compact(spark)
+      assert(baselineDirs(table) == Seq("upto=1"))
+      assert(state(table) == expected(0, 1, 2))
     }
   }
 
-  test("crash after commit before marker, later batches landed: recovery targets the RECORDED id, not current max-1") {
-    withFreshTable { (table, expected) =>
-      // committed tmp over batches <2, target recorded as 1, but the
-      // crash hit before the marker/deletes — the stream restarted and
-      // two MORE batches landed, so current max-1 (=3) is the WRONG
-      // target; only the recorded id is sound
-      val tmp = s"${table}_compact_tmp"
-      reduce(spark.read.schema(schema.add(StructField("batch_id", LongType)))
-          .parquet(table).filter(col("batch_id") < 2).select("doc_id", "root"))
-        .write.mode("overwrite").parquet(tmp)
-      val out = fs.create(new Path(tmp, "_TARGET"), true)
-      out.write("1".getBytes("UTF-8")); out.close()
-      Seq((4L, 1L)).toDF("doc_id", "root").write.parquet(s"$table/batch_id=3")
-      Seq((5L, 5L)).toDF("doc_id", "root").write.parquet(s"$table/batch_id=4")
-      val expected2 = expected + (4L -> 1L) + (5L -> 5L)
-      StateCompaction.compactTable(spark, table, schema, reduce)
-      assert(currentState(table) == expected2)
-      assert(!fs.exists(new Path(s"${table}_compact_tmp")))
-      assert(!fs.exists(new Path(s"${table}_compact_inprogress")))
+  test("crash before _SUCCESS: reads ignore the uncommitted baseline and the next compact removes it") {
+    withTable(0, 1, 2) { table =>
+      snapshot(table, 1, committed = false)
+      write(table, 3)
+      assert(state(table) == expected(0, 1, 2, 3))
+      assert(table.batchIds(spark) == Seq(0L, 1L, 2L, 3L))
+      table.compact(spark)
+      assert(baselineDirs(table) == Seq("upto=2"))
+      assert(batchDirsOnDisk(table) == Seq(3L))
+      assert(state(table) == expected(0, 1, 2, 3))
     }
   }
 
-  test("marker without a committed tmp (crash after rename, before marker removal) self-heals on the read face; uncommitted tmp is discarded") {
-    withFreshTable { (table, expected) =>
-      fs.create(new Path(s"${table}_compact_inprogress"), true).close()
-      // marker-without-tmp means the rename FINISHED — the table is
-      // whole, so the read face clears the orphan marker itself instead
-      // of halting a healthy stream (round-15 ADVICE)
-      StateCompaction.assertReadable(spark, table)
-      assert(!fs.exists(new Path(s"${table}_compact_inprogress")))
-      assert(currentState(table) == expected)
-      // an uncommitted tmp (no _TARGET) from a crash mid-write DOES
-      // fence reads (state genuinely mid-compaction), and compact
-      // discards it
-      fs.mkdirs(new Path(s"${table}_compact_tmp/partial"))
-      fs.create(new Path(s"${table}_compact_inprogress"), true).close()
-      intercept[IllegalStateException](
-        StateCompaction.assertReadable(spark, table))
-      StateCompaction.compactTable(spark, table, schema, reduce)
-      StateCompaction.assertReadable(spark, table)
-      assert(currentState(table) == expected)
-      assert(!fs.exists(new Path(s"${table}_compact_tmp")))
+  test("crash before collection: a committed baseline beside every dir it subsumes reads each batch once") {
+    withTable(0, 1, 2) { table =>
+      snapshot(table, 1)
+      assert(batchDirsOnDisk(table) == Seq(0L, 1L, 2L))
+      assert(state(table) == expected(0, 1, 2))
+      assert(state(table, 2) == expected(0, 1))
+      assert(table.batchIds(spark) == Seq(1L, 2L))
     }
   }
 
-  test("unparsable _TARGET next to _SUCCESS is demoted to uncommitted garbage, never a stuck loop") {
-    withFreshTable { (table, expected) =>
-      // cannot arise from the protocol itself post-round-16 (the commit
-      // point is rename-published), so this simulates external
-      // corruption: data-complete tmp, garbage commit record
-      val tmp = s"${table}_compact_tmp"
-      reduce(spark.read.schema(schema.add(StructField("batch_id", LongType)))
-          .parquet(table).filter(col("batch_id") < 2).select("doc_id", "root"))
-        .write.mode("overwrite").parquet(tmp)
-      val out = fs.create(new Path(tmp, "_TARGET"), true)
-      out.write("not-a-long".getBytes("UTF-8")); out.close()
-      // recovery must DISCARD the tmp (no trustworthy target) and leave
-      // the untouched table compactable — not throw forever
-      StateCompaction.compactTable(spark, table, schema, reduce)
-      StateCompaction.assertReadable(spark, table)
-      assert(currentState(table) == expected)
-      assert(!fs.exists(new Path(s"${table}_compact_tmp")))
-      assert(!fs.exists(new Path(s"${table}_compact_inprogress")))
+  test("crash during collection: a committed baseline beside some of the dirs it subsumes reads each batch once") {
+    withTable(0, 1, 2) { table =>
+      snapshot(table, 1)
+      fs.delete(new Path(table.path, "batch_id=0"), true)
+      assert(state(table) == expected(0, 1, 2))
+      assert(state(table, 2) == expected(0, 1))
+      assert(table.batchIds(spark) == Seq(1L, 2L))
     }
   }
 
-  test("recoverTable finishes a crashed attempt without starting a new compaction") {
-    withFreshTable { (table, expected) =>
-      simulateCrashBeforeRename(table)
-      StateCompaction.recoverTable(spark, table)
-      StateCompaction.assertReadable(spark, table)
-      assert(currentState(table) == expected)
-      assert(!fs.exists(new Path(s"${table}_compact_tmp")))
-      assert(!fs.exists(new Path(s"${table}_compact_inprogress")))
-      // recovery left baseline(=1) + newest(=2): exactly 2 dirs — proof
-      // it did NOT run a fresh compaction on top
-      val dirs = fs.listStatus(new Path(table)).map(_.getPath.getName)
-        .filter(_.startsWith("batch_id=")).sorted.toSeq
-      assert(dirs == Seq("batch_id=1", "batch_id=2"), dirs.toString)
-      // no-op on a table with nothing to heal
-      StateCompaction.recoverTable(spark, table)
-      assert(currentState(table) == expected)
+  test("batches written after a crash are read once, and the next compact collects the leftovers") {
+    withTable(0, 1, 2) { table =>
+      snapshot(table, 1)
+      write(table, 3, 4)
+      assert(state(table) == expected(0, 1, 2, 3, 4))
+      assert(state(table, 4) == expected(0, 1, 2, 3))
+      assert(table.batchIds(spark) == Seq(1L, 2L, 3L, 4L))
+      table.compact(spark)
+      assert(batchDirsOnDisk(table) == Seq(4L))
+      assert(baselineDirs(table) == Seq("upto=3"))
+      assert(table.batchIds(spark) == Seq(3L, 4L))
+      assert(state(table) == expected(0, 1, 2, 3, 4))
+    }
+  }
+
+  test("a read from below a committed baseline throws") {
+    withTable(0, 1, 2) { table =>
+      snapshot(table, 1)
+      Seq(0L, 1L).foreach { before =>
+        val e = intercept[IllegalStateException](table.read(spark, before))
+        assert(e.getMessage.contains("compacted through batch 1"), e.getMessage)
+      }
+    }
+  }
+
+  test("a changelog compacted in place, its baseline a batch_id=K dir, reads and compacts as before") {
+    withTempDir("state_compact_in_place_") { dir =>
+      val table = Changelog(s"$dir/manifest_delta", schema, Some(reduce))
+      // the in-place layout: batches 0 and 1 reduced into batch_id=1
+      reduce(Seq(0L, 1L).flatMap(rowsOf).toDF("shard_id", "n_docs", "n_chars"))
+        .write.parquet(s"${table.path}/batch_id=1")
+      write(table, 2)
+      assert(state(table) == expected(0, 1, 2))
+      assert(state(table, 2) == expected(0, 1))
+      assert(table.batchIds(spark) == Seq(1L, 2L))
+      write(table, 3)
+      table.compact(spark)
+      assert(batchDirsOnDisk(table) == Seq(3L))
+      assert(table.batchIds(spark) == Seq(2L, 3L))
+      assert(state(table) == expected(0, 1, 2, 3))
     }
   }
 
@@ -219,4 +213,15 @@ class StateCompactionSpec extends SparkSpec {
       assert(writeJobs.forall(_ == "write-batch-spec"), writeJobs.toString)
     } finally sc.removeSparkListener(listener)
   }
+}
+
+object StateCompactionSpec {
+  /** The ids of the `batch_id=<id>` dirs on disk in `table`, ascending:
+    * after a compaction, exactly the batch ids above its baseline.
+    */
+  def batchDirsOnDisk(table: Changelog): Seq[Long] =
+    java.nio.file.Files.list(java.nio.file.Paths.get(table.path)).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+      .collect { case n if n.startsWith("batch_id=") => n.stripPrefix("batch_id=").toLong }
+      .sorted
 }
